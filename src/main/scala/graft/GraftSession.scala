@@ -11,55 +11,63 @@ import org.apache.spark.sql.SparkSession
   * so date semantics match the DuckDB oracle.
   */
 object GraftSession {
+
+  /** The settings [[local]] applies, in order. */
+  def settings(cores: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> cores.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // cached plans keep AQE re-optimization (coalescing, SMJ->BHJ): the
+    // default false pins a cached join at the full shuffle-partition count
+    // (merge's s2.cache() measured as 32 near-empty tasks per stage at r12)
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    // legacy NANOS parquet support belongs at session build, not inside a
+    // table loader: Tables.events handles both the nanos-as-long and the
+    // native MICROS fixture layouts, and a loader silently toggling a
+    // session-global legacy flag would be a trap for any other NANOS
+    // parquet read in the same session
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // zstd shuffle blocks measured ~2x smaller than lz4 on the vector/
+    // posting exchanges at lower cpu (r12 guide-§2.3 measurement)
+    "spark.io.compression.codec" -> "zstd",
+    // AQE coalescing's 1 MiB minimum partition floor under-parallelizes
+    // CPU-dense work at low byte volume (r13 guide-§2.2 measurement: the
+    // w14 range sort coalesced to ~6 partitions and wall rose 25% while
+    // byte volume was 6.6 MB; at 256 KiB the sort spreads and both wall
+    // AND cpu beat the pinned-width plan). Production-safe: at corpus
+    // scale the advisory target dominates and the floor is irrelevant.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+      sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "256k"),
+    // ObjectHashAggregate (collect_list/collect_set) falls back to
+    // SORT-BASED aggregation after just 128 distinct keys by default,
+    // which silently turns every per-doc/per-user list aggregation into a
+    // full sort of its input — measured at the 100x doc decade as ALL of
+    // d17's 1.7 GB spill and ~2x its aggregate-stage CPU. Every grouped
+    // list in this engine is bounded by construction (doc length, a
+    // user's calendar days), so the hash map's VALUES are small; 2M keys
+    // per partition is the regime the partition sizing already assumes.
+    //
+    // CONTRACT for new queries: this setting is SESSION-GLOBAL, so every
+    // collect_list/collect_set added to the engine must keep its
+    // per-group values bounded by construction (cap, slice, or window the
+    // group first) — an unbounded-values list agg would have lost its
+    // sort-based spill fallback and can OOM an executor instead of
+    // spilling. If you cannot bound the values, aggregate under a
+    // dedicated session (or reset this conf around the call).
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> (1 << 21).toString,
+    // Dataset.observe metrics ride accumulators, which a speculative
+    // duplicate task attempt can inflate, and the engine takes counts from
+    // them (ManifestStore segment stats).
+    // GraftSessionSpec fails if this is ever turned on.
+    "spark.speculation" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cores]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // cached plans keep AQE re-optimization (coalescing, SMJ->BHJ): the
-      // default false pins a cached join at the full shuffle-partition count
-      // (merge's s2.cache() measured as 32 near-empty tasks per stage at r12)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // legacy NANOS parquet support belongs at session build, not inside a
-      // table loader: Tables.events handles both the nanos-as-long and the
-      // native MICROS fixture layouts, and a loader silently toggling a
-      // session-global legacy flag would be a trap for any other NANOS
-      // parquet read in the same session
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // zstd shuffle blocks measured ~2x smaller than lz4 on the vector/
-      // posting exchanges at lower cpu (r12 guide-§2.3 measurement)
-      .config("spark.io.compression.codec", "zstd")
-      // AQE coalescing's 1 MiB minimum partition floor under-parallelizes
-      // CPU-dense work at low byte volume (r13 guide-§2.2 measurement: the
-      // w14 range sort coalesced to ~6 partitions and wall rose 25% while
-      // byte volume was 6.6 MB; at 256 KiB the sort spreads and both wall
-      // AND cpu beat the pinned-width plan). Production-safe: at corpus
-      // scale the advisory target dominates and the floor is irrelevant.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "256k"))
-      // ObjectHashAggregate (collect_list/collect_set) falls back to
-      // SORT-BASED aggregation after just 128 distinct keys by default,
-      // which silently turns every per-doc/per-user list aggregation into a
-      // full sort of its input — measured at the 100x doc decade as ALL of
-      // d17's 1.7 GB spill and ~2x its aggregate-stage CPU. Every grouped
-      // list in this engine is bounded by construction (doc length, a
-      // user's calendar days), so the hash map's VALUES are small; 2M keys
-      // per partition is the regime the partition sizing already assumes.
-      //
-      // CONTRACT for new queries: this setting is SESSION-GLOBAL, so every
-      // collect_list/collect_set added to the engine must keep its
-      // per-group values bounded by construction (cap, slice, or window the
-      // group first) — an unbounded-values list agg would have lost its
-      // sort-based spill fallback and can OOM an executor instead of
-      // spilling. If you cannot bound the values, aggregate under a
-      // dedicated session (or reset this conf around the call).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 21).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = SparkSession.builder().master(s"local[$cores]").appName("graft")
+    val spark = settings(cores)
+      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -2805,6 +2805,7 @@ object ExtensionQueries {
         // t) — the old plan shipped the token stream through a posting
         // exchange and then paid a doc_id join to re-attach the tokens.
         val held = sp.where(col("doc_id") % 10 =!= 0)
+          .where(col("t").isNotNull) // as t13: explode() dropped null-array docs
           .selectExpr(Seq("doc_id", "lang", "t") ++ funnelStatExprs: _*)
           .withColumn("pass", expr(
             "NOT ((ntok < 30 OR ntok > 80) OR (nalpha * 10 < ntok * 42 OR nalpha > ntok * 10) " +

@@ -169,11 +169,15 @@ object GraphOps {
     // recomputed `deg` from the raw edge blocks inside EVERY round's 3-way
     // join (one aggregation + one extra join + one edge-block re-read per
     // iteration). The degree join runs once, here.
+    // eager: verts + every round's update read it, and its lineage must be
+    // cut before e0's blocks are released below (a local checkpoint has no
+    // lineage to fall back on)
     val deg = e0.groupBy("src").agg(count(lit(1)).as("__d"))
-      .localCheckpoint(eager = false) // verts + every round's update read it
+      .localCheckpoint(eager = true)
     val e = e0.join(deg, "src").select(col("src"), col("dst"), col("__d"))
       .localCheckpoint(true)
-    // the raw edge blocks are dead once the degree-annotated copy exists
+    // the raw edge blocks are dead once deg and the degree-annotated copy
+    // are both materialized
     e0.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(false))

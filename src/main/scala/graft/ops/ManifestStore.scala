@@ -507,7 +507,9 @@ object ManifestStore {
     * was a whole job per commit). Values are identical by construction:
     * the identical aggregate expressions over the identical rows, computed
     * before the parquet round-trip instead of after it (min/max/count are
-    * deterministic and insensitive to partitioning).
+    * deterministic and insensitive to partitioning). The row and null
+    * counts assume no speculative task attempts: GraftSession pins
+    * spark.speculation off.
     */
   private def statsAggs(schema: StructType, statsCols: Seq[String]): Seq[Column] = {
     val fields = statsCols.map(c => schema.fields.find(_.name == c).getOrElse(
@@ -613,7 +615,9 @@ object ManifestStore {
     // so the old dedicated post-write stats job (a full re-read of the
     // just-written segment, one extra Spark job per commit across the whole
     // serial protocol) disappears. The observed row count also replaces the
-    // read-back emptiness probe for statless commits.
+    // read-back emptiness probe for statless commits. The counts assume
+    // spark.speculation off (GraftSession pins it): observed metrics ride
+    // accumulators, which a duplicate task attempt can inflate.
     val obs = org.apache.spark.sql.Observation(s"segstats-$seg")
     val aggs = statsAggs(pdf.schema, pStats)
     val observed = pdf.observe(obs, aggs.head, aggs.tail: _*)

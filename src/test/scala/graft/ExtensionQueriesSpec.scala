@@ -109,6 +109,23 @@ class ExtensionQueriesSpec extends SparkSpec {
       "thresholds drop nothing — the funnel gates no rule")
   }
 
+  test("x3_quality_lane: a null-text document is excluded, as t13 and the oracle exclude it") {
+    val dir = tmpDir("x3null")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    // a held-out doc (doc_id % 10 != 0) whose text is null
+    docs.unionByName(docs.limit(1).selectExpr("CAST(1000001 AS BIGINT) AS doc_id",
+        "CAST(NULL AS STRING) AS text", "lang", "source", "n_chars"))
+      .write.parquet(s"$dir/documents.parquet")
+    def x3(d: String) = Registry.byName("x3_quality_lane").fn(spark, d).collect().toSeq
+    // without ANSI, size(NULL) is -1, so an unguarded null doc would land
+    // in the dropped tranche with negative token mass
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try Seq("false", "true").foreach { mode =>
+      spark.conf.set("spark.sql.ansi.enabled", mode)
+      assert(x3(dir) == x3(sf), s"ansi=$mode: the null-text doc changed x3")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
   test("d10_dup_ngram_mass: exact-duplicate docs are heavy by construction") {
     val rows = Registry.byName("d10_dup_ngram_mass").fn(spark, sf).collect()
     assert(rows.nonEmpty)

@@ -111,6 +111,60 @@ class GoldWriterSpec extends SparkSpec {
       s"pruned scan must read a strict subset: $filesRead of $allFiles")
   }
 
+  /** Descriptions of the jobs `body` launches. Listener events arrive in
+    * order on one queue, so once a sentinel job's start is seen, every job
+    * of `body` has been seen too.
+    */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = e.properties.getProperty("spark.jobGroup.id")
+        if (g == group)
+          seen.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
+        else if (g == sentinel) done.countDown()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("upsertBucketed job budget: no listing jobs, pinned job ceiling, exact insert counts") {
+    val path = tmpDir("goldjobs") + "/gold"
+    // every one of the 64 buckets holds files, so a read through
+    // spark.read.parquet would list more directories than the
+    // parallel-discovery threshold (32) and start a listing job
+    GoldWriter.upsertBucketed(spark,
+      (1 to 2000).map(i => (s"c$i", i)).toDF("crash_record_id", "v"), path)
+    // a weekly-sized batch: 77 new keys, 6 existing ones, one null
+    val batch = ((1995 to 2000).map(i => (s"c$i", -i)) ++
+      (1 to 77).map(i => (s"n$i", i)) :+ ((null: String), 0))
+      .toDF("crash_record_id", "v")
+    val (r, jobs) = jobsOf(GoldWriter.upsertBucketed(spark, batch, path))
+    assert(r == GoldWriter.IntegrityReport(2077L, 0L, 0L, 77L), r.toString)
+    val (replay, replayJobs) = jobsOf(GoldWriter.upsertBucketed(spark, batch, path))
+    assert(replay == GoldWriter.IntegrityReport(2077L, 0L, 0L, 0L), replay.toString)
+
+    val listing = (jobs ++ replayJobs).filter(_.startsWith("Listing leaf files"))
+    assert(listing.isEmpty, s"Gold reads must not start listing jobs: $listing")
+    // 11 each when pinned: the dedup and touched-bucket collect, the
+    // broadcast conflict scan, the append, the integrity scan and the count
+    assert(jobs.size <= 12 && replayJobs.size <= 12,
+      s"job budget: upsert ran ${jobs.size}, replay ${replayJobs.size}")
+  }
+
   test("withTableLock serializes: a second acquirer waits until the holder releases") {
     val path = tmpDir("goldlock") + "/gold"
     val started = new java.util.concurrent.CountDownLatch(1)

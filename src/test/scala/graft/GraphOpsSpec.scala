@@ -102,6 +102,33 @@ class GraphOpsSpec extends SparkSpec {
     assert(ranks(ring.repartition(7)) == ringRanks, "repartition must not change ranks")
   }
 
+  test("pageRankInt: the returned plan never reaches the released raw-edge checkpoint") {
+    val star = (1 to 5).flatMap(i => Seq((0L, i.toLong), (i.toLong, 0L))).toDF("src", "dst")
+    // a broadcast degree join happens to materialize deg in a job of its
+    // own; a shuffled one does not, so both plans are checked
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try Seq(threshold, "-1").foreach { t =>
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", t)
+      val pr = GraphOps.pageRankInt(star, iterations = 2)
+      // every RDD the result's plan can recompute from; a checkpointed
+      // RDD's only dependency is its checkpoint data
+      val seen = scala.collection.mutable.LinkedHashMap.empty[Int, org.apache.spark.rdd.RDD[_]]
+      def walk(r: org.apache.spark.rdd.RDD[_]): Unit =
+        if (!seen.contains(r.id)) { seen(r.id) = r; r.dependencies.foreach(d => walk(d.rdd)) }
+      pr.queryExecution.analyzed.foreach {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => walk(lr.rdd)
+        case _ =>
+      }
+      // e0 is unpersisted inside pageRankInt: a path to it means a cut
+      // (deg's) was not materialized before the release
+      val released = seen.values.filter(r =>
+        r.isCheckpointed && r.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      assert(released.isEmpty,
+        s"broadcast threshold $t: lineage reaches released checkpoints ${released.map(_.id)}")
+      assert(pr.count() == 6L)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+  }
+
   test("triangleCount: closed forms and a skewed random graph vs brute force") {
     def cnt(edges: Seq[(Long, Long)]): Long =
       GraphOps.triangleCount(edges.toDF("a", "b"))
