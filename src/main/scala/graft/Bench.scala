@@ -1,12 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the machine's cores (the driver environment is local[32]);
-    // SPARK_GRAFT_CPUS still overrides.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = GraftSession.defaultCores
     // Noise robustness: each query runs `repeats` times and the headline
     // per-query number is the MINIMUM — the run least polluted by ambient
     // CPU contention on a shared box. Recorded round-2 history: the same
@@ -16,41 +12,7 @@ object Bench {
     // converges to the quiet-box number; honest wall time is reported
     // separately as "walltime" and every individual timing as "runs".
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE convert a sort-merge join back to the faster shuffled-hash
-      // form when post-shuffle stats prove the per-partition build fits --
-      // the corpus-scale joins hint("merge") for spill-safety and rely on
-      // this for the small-scale fast path (forced SHUFFLE_HASH OOMs at the
-      // 100x decade: SCALE.md session-8 notes)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      // cached plans keep AQE re-optimization (coalescing, SMJ->BHJ): the
-      // default false pins a cached join at the full shuffle-partition count
-      // (merge's s2.cache() measured as 32 near-empty tasks per stage at r12)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // grouped-list aggs are bounded by construction; the 128-key default
-      // fallback turns them into full-input sorts (GraftSession rationale)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 21).toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // measured r12 (guide §2.3): zstd shuffle blocks are ~2.2x smaller
-      // than lz4 on the vector/posting exchanges (n7 42->19 MB) at no
-      // wall-time cost; SPARK_GRAFT_IO_CODEC overrides for re-measurement
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
-      // AQE coalescing's 1 MiB minimum partition floor under-parallelizes
-      // CPU-dense work at low byte volume (r13 guide-§2.2 measurement: the
-      // w14 range sort coalesced to ~6 partitions and wall rose 25% while
-      // byte volume was 6.6 MB; at 256 KiB the sort spreads and both wall
-      // AND cpu beat the pinned-width plan). Production-safe: at corpus
-      // scale the advisory target dominates and the floor is irrelevant.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "256k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     val listener = new graft.ops.QueryMetricsListener
     spark.sparkContext.addSparkListener(listener)
     // Warm the JIT/codegen and file-listing caches so the first measured
@@ -110,15 +72,9 @@ object Bench {
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the sweep to named queries —
     // for scaling probes (SCALE.md's per-family exponent tables) that
     // re-measure a handful of heavy queries on an alternate dataset dir.
+    // A typo'd name fails the probe loudly (the bench's broken-query discipline).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd name must fail the probe loudly, not silently shrink the
-    // sweep to a green empty run (the bench's broken-query discipline)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.mkString(", ")}")
-      require(names.nonEmpty, "SPARK_GRAFT_BENCH_ONLY is set but empty")
-    }
+      .map(analytics.Registry.select(_).map(_.name).toSet)
     def sweepOnce() = {
       val calibBefore = Seq.fill(3)(calibrate())
       val wall0 = System.nanoTime()
@@ -131,26 +87,14 @@ object Bench {
         val times = scala.collection.mutable.ArrayBuffer.empty[Double]
         var i = 0
         while (i < repeats && err.isEmpty) {
-          // Snapshot what was pinned BEFORE the run so only the blocks THIS
-          // run created are released below — a blanket unpersist would also
-          // evict any future cross-query cached state (localCheckpoint RDDs
-          // are unrecoverable once unpersisted).
-          val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-          val t0 = System.nanoTime()
-          try fn(spark, sfDir).count()
-          catch { case e: Throwable => err = Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}") }
-          times += (System.nanoTime() - t0) / 1e9
-          // Release the blocks this run pinned (localCheckpoint storage):
-          // every fn() call builds FRESH checkpoint RDDs, so without this a
-          // 3-repeat, 158-query sweep accumulates hundreds of dead signature
-          // checkpoints in the block manager — measured at sf0.1 in the 8g
-          // driver as broad >1.5x inflation of UNRELATED queries running
-          // after the dedup family (storage squeezing execution memory).
-          // A long-lived production session does the same between jobs.
-          spark.sparkContext.getPersistentRDDs
-            .foreach { case (id, rdd) =>
-              if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = false)
-            }
+          // every fn() call builds FRESH checkpoint RDDs; release them so a
+          // 3-repeat sweep does not accumulate hundreds of dead ones
+          GraftSession.releasingPinned(spark) {
+            val t0 = System.nanoTime()
+            try fn(spark, sfDir).count()
+            catch { case e: Throwable => err = Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}") }
+            times += (System.nanoTime() - t0) / 1e9
+          }
           i += 1
         }
         val delta = listener.quiesce().diff(before)

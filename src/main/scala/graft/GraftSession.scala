@@ -2,13 +2,21 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's standard tuning.
+/** Session factory with the engine's standard tuning: the one place a
+  * session is built and its configuration written down. Bench, Verify,
+  * every `graft.tools` main and the test suite run this config, so the
+  * oracle, the bench and the specs all exercise the same engine.
   *
   * Scale design: on a real cluster these settings come from spark-submit; the
   * important ones we pin here are AQE (runtime re-planning: skew-join splitting,
   * partition coalescing), a shuffle-partition count matched to local cores
-  * (overridable — at 100 TB this should be ~2-3x total executor cores), and UTC
-  * so date semantics match the DuckDB oracle.
+  * (at 100 TB this should be ~2-3x total executor cores), and UTC so date
+  * semantics match the DuckDB oracle.
+  *
+  * No setting has an env override. To re-measure a `spark.sql.*` setting,
+  * set it on the running session, e.g.
+  * `spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")`;
+  * core settings such as the codec only take effect in a new SparkContext.
   */
 object GraftSession {
 
@@ -18,6 +26,12 @@ object GraftSession {
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // let AQE convert a sort-merge join back to the faster shuffled-hash
+    // form when post-shuffle stats prove the per-partition build fits --
+    // the corpus-scale joins hint("merge") for spill-safety and rely on
+    // this for the small-scale fast path (forced SHUFFLE_HASH OOMs at the
+    // 100x decade: SCALE.md session-8 notes)
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "64m",
     // cached plans keep AQE re-optimization (coalescing, SMJ->BHJ): the
     // default false pins a cached join at the full shuffle-partition count
     // (merge's s2.cache() measured as 32 near-empty tasks per stage at r12)
@@ -37,8 +51,7 @@ object GraftSession {
     // byte volume was 6.6 MB; at 256 KiB the sort spreads and both wall
     // AND cpu beat the pinned-width plan). Production-safe: at corpus
     // scale the advisory target dominates and the floor is irrelevant.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
-      sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "256k"),
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "256k",
     // ObjectHashAggregate (collect_list/collect_set) falls back to
     // SORT-BASED aggregation after just 128 distinct keys by default,
     // which silently turns every per-doc/per-user list aggregation into a
@@ -64,12 +77,35 @@ object GraftSession {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** Cores a session gets when the caller names none: `SPARK_GRAFT_CPUS`
+    * if set, otherwise every available processor.
+    */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def local(cores: Int = defaultCores): SparkSession = {
     val builder = SparkSession.builder().master(s"local[$cores]").appName("graft")
     val spark = settings(cores)
       .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Runs `body`, then unpersists every RDD left persisted since it began.
+    * Query functions return DataFrames whose localCheckpoint/cache blocks
+    * stay pinned in executor storage; a loop over queries that never frees
+    * them squeezes execution memory (measured at sf0.1 in the 8g driver as
+    * broad >1.5x inflation of unrelated queries after the dedup family).
+    * Only RDDs created during `body` are released: a blanket unpersist
+    * would also evict cross-call cached state, and localCheckpoint RDDs are
+    * unrecoverable once unpersisted.
+    */
+  def releasingPinned[T](spark: SparkSession)(body: => T): T = {
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = false)
+    }
   }
 }

@@ -1,72 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Default to the machine's cores (the driver environment is local[32]);
-    // SPARK_GRAFT_CPUS still overrides.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE convert a sort-merge join back to the faster shuffled-hash
-      // form when post-shuffle stats prove the per-partition build fits --
-      // the corpus-scale joins hint("merge") for spill-safety and rely on
-      // this for the small-scale fast path (forced SHUFFLE_HASH OOMs at the
-      // 100x decade: SCALE.md session-8 notes)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      // cached plans keep AQE re-optimization (coalescing, SMJ->BHJ): the
-      // default false pins a cached join at the full shuffle-partition count
-      // (merge's s2.cache() measured as 32 near-empty tasks per stage at r12)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // grouped-list aggs are bounded by construction; the 128-key default
-      // fallback turns them into full-input sorts (GraftSession rationale)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 21).toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // zstd shuffle blocks measured ~2x smaller than lz4 on the vector/
-      // posting exchanges at lower cpu (r12 guide-§2.3 measurement)
-      .config("spark.io.compression.codec", "zstd")
-      // AQE coalescing's 1 MiB minimum partition floor under-parallelizes
-      // CPU-dense work at low byte volume (r13 guide-§2.2 measurement: the
-      // w14 range sort coalesced to ~6 partitions and wall rose 25% while
-      // byte volume was 6.6 MB; at 256 KiB the sort spreads and both wall
-      // AND cpu beat the pinned-width plan). Production-safe: at corpus
-      // scale the advisory target dominates and the floor is irrelevant.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "256k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q1,q2 restricts the dump to named queries
     // (local iteration; the driver leaves it unset and dumps everything).
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
-      case None        => SparkEntry.queries
-    }
+    val selected = analytics.Registry.select(sys.env.getOrElse("SPARK_GRAFT_VERIFY_ONLY", "ALL"))
+      .map(q => q.name -> q.fn).toMap
     selected.foreach { case (name, fn) =>
-      // snapshot first: release only the blocks THIS query pinned (a blanket
-      // unpersist would evict any future cross-query cached state too)
-      val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // drop the query's checkpoint/cache blocks — a 158-query dump would
-      // otherwise hold every dead signature checkpoint in the block manager
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) =>
-          if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = false)
+      GraftSession.releasingPinned(spark) {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -29,4 +29,18 @@ object Registry {
     require(m.size == all.size, "duplicate query names in registry")
     m
   }
+
+  /** The queries a comma-separated name list selects, `ALL` for every one.
+    * An unknown name fails loudly instead of silently shrinking the
+    * selection to a green, smaller run.
+    */
+  def select(names: String): Seq[Q] =
+    if (names == "ALL") all
+    else {
+      val sel = names.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      val unknown = sel.filterNot(byName.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+      require(sel.nonEmpty, s"no query named in '$names'")
+      sel.map(byName)
+    }
 }

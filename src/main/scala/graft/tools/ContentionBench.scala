@@ -3,9 +3,9 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ops.ManifestStore
 
 /** Multi-writer CONTENTION decade for the manifest commit protocol — the
@@ -45,12 +45,7 @@ object ContentionBench {
 
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "artifacts/contention_r12.json"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val commitsPerWriter = 6
     val prims = Seq(

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ops.{ManifestRead, ManifestStore}
 
 /** Decade measurement for the MANIFEST's own driver-side coefficients —
@@ -26,12 +26,7 @@ import graft.ops.{ManifestRead, ManifestStore}
 object ManifestDecade {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "artifacts/manifest_decade_r11.json"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     def minOf5(body: => Unit): Double = (1 to 5).map { _ =>

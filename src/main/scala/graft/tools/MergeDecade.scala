@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ops.ManifestStore
 
 /** Decade measurement for [[ManifestStore.merge]]'s copy-on-write claim:
@@ -19,13 +19,7 @@ object MergeDecade {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val segments = if (args.length > 1) args(1).toInt else 16
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val ev = graft.analytics.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ops.ManifestStore
 
 /** Before/after for the round-12 native DSv2 read path: the same wide
@@ -22,12 +23,7 @@ object NativeReadBench {
     val out = if (args.nonEmpty) args(0) else "artifacts/native_read_r12.json"
     val nRows = if (args.length > 1) args(1).toLong else 2000000L
     val nCols = if (args.length > 2) args(2).toInt else 16
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val path = java.nio.file.Files.createTempDirectory("graft-nrb-").toString + "/t"
     val wide = (1 to nCols).foldLeft(spark.range(nRows).toDF("k")) {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** IVFPQ quality probe: recall@k of the quantized index against exact
@@ -20,13 +20,7 @@ object PqRecallProbe {
     val dir = args(0)
     val nQueries = if (args.length > 1) args(1).toInt else 100
     val k = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     graft.functions.GraftFunctions.register(spark)
 
     val emb = graft.analytics.Tables.embeddings(spark, dir)

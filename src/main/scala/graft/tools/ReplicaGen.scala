@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Scaling-probe dataset builder: replicates a driver testdata dir's
@@ -125,13 +125,7 @@ object ReplicaGen {
       case Array(a, b, c, d, e) => (a, b, c.toInt, d.toInt, e.toInt)
       case _ => sys.error("usage: ReplicaGen <sfDir> <outDir> <docFactor> <vecFactor> [eventFactor]")
     }
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     replicateDocs(spark.read.parquet(s"$sfDir/documents.parquet"), fd)
       .repartition(32)

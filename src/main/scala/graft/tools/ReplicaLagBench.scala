@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ops.ManifestStore
 
 /** Measured replica lag for the change-feed lane (primary commits →
@@ -28,12 +28,7 @@ import graft.ops.ManifestStore
 object ReplicaLagBench {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "artifacts/replica_lag_r11.json"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val base = java.nio.file.Files.createTempDirectory("graft-replag-").toString

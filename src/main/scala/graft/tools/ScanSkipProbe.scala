@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ops.{ManifestRead, ManifestStore}
 
 /** Decade measurement for planner-level manifest skipping
@@ -21,13 +21,7 @@ object ScanSkipProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val segments = if (args.length > 1) args(1).toInt else 32
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     CountingFs.install(spark)
 
     val ev = graft.analytics.Tables.events(spark, dir)

@@ -3,21 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite (lazy), UTC, small shuffle
-  * fan-out.
+/** Shared local session for specs — one per suite (lazy), built by the
+  * engine's own factory so the suite runs the config the engine ships.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    // mirror Bench/Verify: AQE may convert merge-hinted joins to shuffled
-    // hash when the local map fits (plan pins accept either shuffle form)
-    .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
