@@ -82,6 +82,7 @@ object Bench {
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .map { case (name, fn) =>
         val before = listener.quiesce()
+        val compiledBefore = GraftSession.codegenClasses
         listener.resetPeak()
         var err: Option[String] = None
         val times = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -98,6 +99,9 @@ object Bench {
           i += 1
         }
         val delta = listener.quiesce().diff(before)
+        // generated-code cache misses over the timed runs: a query that
+        // recompiles on every repeat shows a count that grows with repeats
+        val compiled = GraftSession.codegenClasses - compiledBefore
         // per-query ambient-load sample (round-11 self-adjudication): one
         // calibration run right after this query's repeats, so a 2x-slow
         // per-query flag in the driver tail is classifiable from the bench
@@ -106,7 +110,7 @@ object Bench {
         // referenced to the fully-warm floor (early queries may read a
         // touch high while the calibration path finishes JIT-ing).
         val qLoad = calibrate() / calibQuietAfter
-        (name, times.toSeq, err, delta, qLoad)
+        (name, times.toSeq, err, delta, qLoad, compiled)
       }
       val walltime = (System.nanoTime() - wall0) / 1e9
       val calibAfter = Seq.fill(3)(calibrate())
@@ -133,23 +137,24 @@ object Bench {
     val (results, walltime, calibBefore, calibAfter, loadFactor) = best
     val calibRuns = calibBefore ++ calibAfter
     def fmt(d: Double): String = BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (k, ts, _, _, _) => s"\"" + k + "\":" + fmt(ts.min) }
+    val qs = results.map { case (k, ts, _, _, _, _) => s"\"" + k + "\":" + fmt(ts.min) }
       .mkString("{", ",", "}")
-    val runsJson = results.map { case (k, ts, _, _, _) =>
+    val runsJson = results.map { case (k, ts, _, _, _, _) =>
       s"\"" + k + "\":" + ts.map(fmt).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val loadJson = results.map { case (k, _, _, _, ql) =>
+    val loadJson = results.map { case (k, _, _, _, ql, _) =>
       s"\"" + k + "\":" + fmt(ql)
     }.mkString("{", ",", "}")
     // Per-query operator metrics (the Prometheus-surface analog): totals over
     // this query's repeats, scaled to a per-run average so numbers are
-    // comparable regardless of the repeat count.
-    val metricsJson = results.map { case (k, ts, _, d, _) =>
+    // comparable regardless of the repeat count -- except codegen_classes,
+    // the classes compiled over all repeats.
+    val metricsJson = results.map { case (k, ts, _, d, _, cg) =>
       val n = math.max(1, ts.length)
       def mb(b: Long): String = fmt(b / 1048576.0 / n)
-      s"\"" + k + "\":" + s"""{"tasks":${d.tasks / n},"task_time_sec":${fmt(d.taskTimeMs / 1000.0 / n)},"cpu_sec":${fmt(d.cpuTimeMs / 1000.0 / n)},"gc_sec":${fmt(d.gcTimeMs / 1000.0 / n)},"shuffle_read_mb":${mb(d.shuffleReadBytes)},"shuffle_write_mb":${mb(d.shuffleWriteBytes)},"spill_mb":${mb(d.spillBytes)},"input_mb":${mb(d.inputBytes)},"peak_mem_mb":${fmt(d.peakExecutionMemory / 1048576.0)}}"""
+      s"\"" + k + "\":" + s"""{"tasks":${d.tasks / n},"task_time_sec":${fmt(d.taskTimeMs / 1000.0 / n)},"cpu_sec":${fmt(d.cpuTimeMs / 1000.0 / n)},"gc_sec":${fmt(d.gcTimeMs / 1000.0 / n)},"shuffle_read_mb":${mb(d.shuffleReadBytes)},"shuffle_write_mb":${mb(d.shuffleWriteBytes)},"spill_mb":${mb(d.spillBytes)},"input_mb":${mb(d.inputBytes)},"peak_mem_mb":${fmt(d.peakExecutionMemory / 1048576.0)},"codegen_classes":$cg}"""
     }.mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, Some(e), _, _) =>
+    val errs = results.collect { case (k, _, Some(e), _, _, _) =>
       "\"" + k + "\":\"" + e.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", " ") + "\""
     }.mkString("{", ",", "}")
     val total = results.map(_._2.min).sum
@@ -176,11 +181,11 @@ object Bench {
     // Contention-insensitive secondary headline: total executor CPU seconds
     // per run (task CPU is work the engine did regardless of how the
     // scheduler interleaved it with a noisy neighbor).
-    val cpuTotal = results.map { case (_, ts, _, d, _) =>
+    val cpuTotal = results.map { case (_, ts, _, d, _, _) =>
       d.cpuTimeMs / 1000.0 / math.max(1, ts.length)
     }.sum
     val calibJson = s"""{"before_min":${fmt(calibBefore.min)},"after_min":${fmt(calibAfter.min)},"quiet_ref_before":${fmt(calibQuietBefore)},"quiet_ref_after":${fmt(calibQuietAfter)},"cpus":$cpus,"runs":${calibRuns.map(fmt).mkString("[", ",", "]")}}"""
-    results.foreach { case (k, _, err, _, _) =>
+    results.foreach { case (k, _, err, _, _, _) =>
       err.foreach(e => System.err.println(s"BENCH FAILURE $k: $e"))
     }
     val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_norm":${fmt(totalNorm)},"query_total":${fmt(queryTotal)},"protocol_total":${fmt(protocolTotal)},"queries":$qs,"runs":$runsJson,"query_load":$loadJson,"walltime":${fmt(walltime)},"cpu_total":${fmt(cpuTotal)},"load_factor":${fmt(loadFactor)},"calibration":$calibJson,"metrics":$metricsJson,"errors":$errs,"sf":"$sfDir"}"""
@@ -201,10 +206,10 @@ object Bench {
     // contention while that query ran
     val slowest5 = results.sortBy(-_._2.min).take(5)
     val slowest = slowest5
-      .map { case (k, ts, _, _, _) => s"\"" + k + "\":" + fmt(ts.min) }
+      .map { case (k, ts, _, _, _, _) => s"\"" + k + "\":" + fmt(ts.min) }
       .mkString("{", ",", "}")
     val slowestDetail = slowest5
-      .map { case (k, ts, _, _, ql) =>
+      .map { case (k, ts, _, _, ql, _) =>
         val med = ts.sorted.apply(ts.length / 2)
         s"\"" + k + "\":" + s"""{"min":${fmt(ts.min)},"med":${fmt(med)},"load":${fmt(ql)}}"""
       }

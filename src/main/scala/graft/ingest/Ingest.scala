@@ -3,6 +3,7 @@ package graft.ingest
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 import graft.model.JobSpec
@@ -89,15 +90,19 @@ object Ingest {
       .json(s"$base/$alias")
   }
 
-  /** Partition-pruned Bronze read for one run (reference:
-    * transformer/transformer.py:185-199 key filtering — here the filter is a
-    * partition predicate, so non-matching runs are never read).
+  /** Bronze read for one run (reference: transformer/transformer.py:185-199
+    * key filtering). The path globs this run's `year=<y>/corr=<id>` directories,
+    * so listing and JSON schema inference touch only its files: a filter on
+    * the `corr` column would prune the scan, but inference would still read
+    * every run ever landed, and the schema would carry fields of other runs.
+    * The id is escaped the way the partitioned write names its directory,
+    * which also escapes every glob metacharacter. Fails if the run landed no
+    * Bronze.
     */
   def readBronze(spark: SparkSession, base: String, alias: String, corr: String): DataFrame =
     spark.read
-      .option("recursiveFileLookup", "false")
-      .json(s"$base/$alias")
-      .where(col("corr") === corr)
+      .option("basePath", s"$base/$alias")
+      .json(s"$base/$alias/year=*/corr=${ExternalCatalogUtils.escapePathName(corr)}")
       .drop("year", "corr")
 
   /** The enrich fetch: keep only enrich rows whose key appears in the primary

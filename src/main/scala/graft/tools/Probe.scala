@@ -28,7 +28,9 @@ import graft.analytics.{Q, Registry}
   *    when a decade measurement shows a query's shuffle growing
   *    superlinearly. One untimed warm-up run comes first: cold-JIT CPU
   *    otherwise dominates the attribution (r12: a stage reading 0.5 MB
-  *    showed 13 cpu-s cold, ~2 warm).
+  *    showed 13 cpu-s cold, ~2 warm). The header line carries the measured
+  *    run's `codegen_classes`, the classes it compiled after the warm-up:
+  *    a non-zero count is per-run compile cost, not warm-up.
   *  - `plan <sfDir> <q,...>`: node counts of the executed plan (join
   *    strategies, shuffle exchanges, windows, codegen spans), the
   *    command-line sibling of PlanAuditSpec.
@@ -118,13 +120,15 @@ object Probe {
       try body finally sc.clearJobGroup()
     }
     sc.addSparkListener(listener)
+    val compiledBefore = GraftSession.codegenClasses
     val t0 = System.nanoTime()
-    val (n, sec) = try {
+    val (n, sec, compiled) = try {
       val n = inGroup(group)(q.fn(spark, dir).collect().length)
       val sec = (System.nanoTime() - t0) / 1e9
+      val compiled = GraftSession.codegenClasses - compiledBefore
       inGroup("probe-sentinel")(sc.parallelize(Seq(1), 1).count())
       require(drained.await(60, TimeUnit.SECONDS), "listener bus stalled")
-      (n, sec)
+      (n, sec, compiled)
     } finally sc.removeSparkListener(listener)
     val rows = done.asScala.toSeq.map { s =>
       val m = s.taskMetrics
@@ -132,7 +136,7 @@ object Probe {
         m.inputMetrics.bytesRead / 1e6, (m.memoryBytesSpilled + m.diskBytesSpilled) / 1e6, s.numTasks,
         m.executorRunTime / 1e3, m.executorCpuTime / 1e9, s.name.takeWhile(_ != '\n').take(120))
     }.sortBy(-_._7)
-    println(f"PROBE stages ${q.name} rows=$n sec=$sec%.2f")
+    println(f"PROBE stages ${q.name} rows=$n sec=$sec%.2f codegen_classes=$compiled")
     println(f"${"stage"}%6s ${"shufW_mb"}%9s ${"shufR_mb"}%9s ${"input_mb"}%9s ${"spill_mb"}%9s ${"tasks"}%6s ${"run_s"}%8s ${"cpu_s"}%8s  name")
     rows.foreach { case (id, sw, sr, in, sp, tk, rt, ct, nm) =>
       println(f"$id%6d $sw%9.1f $sr%9.1f $in%9.1f $sp%9.1f $tk%6d $rt%8.1f $ct%8.1f  $nm")

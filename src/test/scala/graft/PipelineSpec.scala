@@ -66,6 +66,53 @@ class PipelineSpec extends SparkSpec {
     assert(res2.silverRows == 0)
   }
 
+  private val backfillJson =
+    """{
+      |  "mode": "backfill", "join_key": "crash_record_id",
+      |  "date_range": { "field": "crash_date",
+      |    "start": "2024-01-01T00:00:00", "end": "2024-02-01T00:00:00" },
+      |  "primary": { "id": "85ca-t3if", "alias": "crashes", "select": "*" },
+      |  "enrich": [
+      |    { "id": "v", "alias": "vehicles", "select": "crash_record_id,make" },
+      |    { "id": "p", "alias": "people", "select": "crash_record_id,person_type" }
+      |  ]
+      |}""".stripMargin
+
+  test("Bronze read-back infers its schema from its own run only, not from earlier runs") {
+    val base = tmpDir("bronze-own")
+    val job = JobSpec.parse(backfillJson)
+    val now = java.time.LocalDate.parse("2024-02-01")
+    Pipeline.run(spark, job, rawData, base, "run-1", now)
+    // the new run's source no longer carries crash_type
+    val later = rawData.updated("crashes", Seq(("c4", "2024-01-28T08:00:00", "41.88", "-87.62"))
+      .toDF("crash_record_id", "crash_date", "latitude", "longitude"))
+    val res = Pipeline.run(spark, job, later, base, "run-2", now)
+    val cols = graft.ingest.Ingest.readBronze(spark, base, "crashes", "run-2").columns.toSet
+    assert(cols == Set("crash_record_id", "crash_date", "latitude", "longitude"), cols)
+    assert(res.silverRows == 1)
+    assert(res.report.insertedRows == 1 && res.report.totalRows == 3)
+    val gold = spark.read.parquet(s"$base/gold")
+    assert(gold.select("crash_record_id").as[String].collect().toSet == Set("c1", "c2", "c4"))
+    assert(gold.where(col("crash_record_id") === "c1").select("corr_id").as[String].head() == "run-1")
+
+    // a glob metacharacter in a run id selects that run, not a pattern
+    graft.ingest.Ingest.writeBronze(later("crashes"), base, "crashes", "run*")
+    assert(graft.ingest.Ingest.readBronze(spark, base, "crashes", "run*")
+      .select("crash_record_id").as[String].collect().toSeq == Seq("c4"))
+  }
+
+  test("a repeated plan shape reuses its generated classes instead of recompiling them") {
+    val job = JobSpec.parse(backfillJson)
+    val now = java.time.LocalDate.parse("2024-02-01")
+    val compiled = (1 to 3).map { i =>
+      val before = GraftSession.codegenClasses
+      val res = Pipeline.run(spark, job, rawData, tmpDir(s"codegen-$i"), "run-1", now)
+      assert(res.report.insertedRows == 2)
+      GraftSession.codegenClasses - before
+    }
+    assert(compiled(2) <= 10, s"classes compiled per run: ${compiled.mkString("/")}")
+  }
+
   test("schema drift: a run whose source lacks several expected columns still lands Gold (SURVEY §7.4)") {
     val base = tmpDir("drift")
     // Minimal select list — most of the 22 Gold inputs absent entirely.

@@ -35,7 +35,7 @@ class ProbeSpec extends SparkSpec {
 
   test("stages prints a row for each stage of the measured run") {
     val lines = probe("stages", sf, q)
-    assert(lines.exists(_.startsWith(s"PROBE stages $q rows=")), lines)
+    assert(lines.exists(_.matches(s"PROBE stages $q rows=\\d+ sec=\\d+\\.\\d+ codegen_classes=\\d+")), lines)
     val rows = lines.filter(_.matches("\\s*\\d+ +\\d+\\.\\d .*"))
     assert(rows.nonEmpty, lines)
     val total = lines.find(_.startsWith("TOTAL ")).get
