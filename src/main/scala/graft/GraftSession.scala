@@ -108,6 +108,21 @@ object GraftSession {
     */
   def codegenClasses: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
+  private val JobDescription = "spark.job.description"
+
+  /** Runs `body` with `label` as the description of every job it starts
+    * (the `spark.job.description` local property, which event logs and
+    * listeners see), then restores the previous description. Job groups are
+    * left alone: a caller such as a benchmark harness may own them.
+    */
+  def labelled[T](label: String)(body: => T): T = {
+    val sc = SparkSession.active.sparkContext
+    val before = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(label)
+    try body
+    finally sc.setLocalProperty(JobDescription, before)
+  }
+
   /** Runs `body`, then unpersists every RDD left persisted since it began.
     * Query functions return DataFrames whose localCheckpoint/cache blocks
     * stay pinned in executor storage; a loop over queries that never frees

@@ -540,8 +540,8 @@ object Similarity {
     * degree), SemDeDup-style cluster pruning, and kNN classification.
     *
     * Scale: candidate volume is bounded by `maxBucket` × `bands` per node —
-    * oversized buckets (a bounded key set: bands × 2^(bits/bands)) are
-    * dropped as driver-literal filters before the exchange, so a collapsed
+    * oversized buckets are dropped before the exchange (as driver-literal
+    * filters up to `knnLiteralBound` keys, else by broadcast joins), so a collapsed
     * signature distribution cannot go quadratic. The candidate-pair stream
     * itself never crosses an exchange: a multi-band collision scores once
     * (first-shared-kept-band predicate replaces the old distinct), and the
@@ -552,7 +552,17 @@ object Similarity {
     * is k entries (partial aggregation, no Window).
     */
   def knnGraph(prepared: DataFrame, k: Int,
-      bits: Int = 16, bands: Int = 4, maxBucket: Int = 1 << 20): DataFrame = {
+      bits: Int = 16, bands: Int = 4, maxBucket: Int = 1 << 20): DataFrame =
+    knnGraph(prepared, k, bits, bands, maxBucket, knnLiteralBound)
+
+  /** Oversized-bucket keys knnGraph drops through `isin` literals; above this
+    * many it marks them with broadcast joins instead, so neither the driver
+    * nor the plan holds a corpus-sized key list.
+    */
+  private[graft] val knnLiteralBound = 2048
+
+  private[graft] def knnGraph(prepared: DataFrame, k: Int, bits: Int, bands: Int,
+      maxBucket: Int, literalBound: Int): DataFrame = {
     val spark = prepared.sparkSession
     GraftFunctions.register(spark)
     // r13 shape (guide §2.3/§2.4, the §8 "move heavy bytes once" rule in
@@ -569,30 +579,42 @@ object Similarity {
     // Dedup without the distinct: a pair colliding in several bands must
     // score once, so each row keeps the flat band keys (+ per-band
     // kept-bucket flags) and the join accepts a pair only in its FIRST
-    // shared kept band. Oversized-bucket keys are bounded by the band key
-    // space (bands x 2^(bits/bands)), so collecting them to the driver is
-    // the capBuckets broadcast in literal form — same dropped buckets,
-    // zero join.
+    // shared kept band.
+    //
+    // Oversized-bucket keys number at most n / maxBucket per band. Up to
+    // `literalBound` of them are collected and dropped as `isin` literals —
+    // the capBuckets broadcast in literal form, same dropped buckets, zero
+    // join. Above the bound each band gets a broadcast join that marks its
+    // oversized keys, so the driver never collects more than bound + 1 keys.
     val sig = prepared.selectExpr(
       Seq("id", "v", "nrm") ++ signBandExprs(bits, bands): _*)
     val stackAll = s"stack($bands, ${(0 until bands)
       .map(b => s"$b, band$b").mkString(", ")}) AS (band, bkey)"
-    val oversized = sig
+    val oversizedKeys = sig
       .selectExpr(stackAll)
       .groupBy("band", "bkey").agg(count(lit(1)).as("__n"))
       .where(col("__n") > maxBucket)
       .select("band", "bkey")
-      .collect()
+    val oversized = oversizedKeys.limit(literalBound + 1).collect()
       .map(r => (r.getInt(0), r.getString(1)))
-    val overByBand = oversized.groupBy(_._1).map { case (b, ks) => b -> ks.map(_._2).toSet }
-    def keptExpr(b: Int): Column = overByBand.get(b) match {
-      case None => lit(true)
-      case Some(keys) => !col(s"band$b").isin(keys.toSeq: _*)
-    }
-    val withKept = sig.select(
-      col("id") +: col("v") +: col("nrm") +:
-        ((0 until bands).map(b => col(s"band$b")) ++
-          (0 until bands).map(b => keptExpr(b).as(s"kept$b"))): _*)
+    val bandCols = (0 until bands).map(b => col(s"band$b"))
+    val withKept =
+      if (oversized.length <= literalBound) {
+        val overByBand = oversized.groupBy(_._1).map { case (b, ks) => b -> ks.map(_._2).toSet }
+        def keptExpr(b: Int): Column = overByBand.get(b) match {
+          case None => lit(true)
+          case Some(keys) => !col(s"band$b").isin(keys.toSeq: _*)
+        }
+        sig.select(col("id") +: col("v") +: col("nrm") +:
+          (bandCols ++ (0 until bands).map(b => keptExpr(b).as(s"kept$b"))): _*)
+      } else {
+        val marked = (0 until bands).foldLeft(sig) { (df, b) =>
+          df.join(broadcast(oversizedKeys.where(col("band") === b)
+            .select(col("bkey").as(s"band$b"), lit(true).as(s"over$b"))), Seq(s"band$b"), "left")
+        }
+        marked.select(col("id") +: col("v") +: col("nrm") +:
+          (bandCols ++ (0 until bands).map(b => col(s"over$b").isNull.as(s"kept$b"))): _*)
+      }
     val stacked = withKept.selectExpr(
       Seq("id", "v", "nrm") ++
         (0 until bands).map(b => s"band$b") ++

@@ -1,7 +1,8 @@
 package graft.gold
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType, TimestampType}
 
 /** The Gold cleaning chain — a pure DataFrame -> DataFrame column-expression
   * program replicating the reference's pandas rules *including* their null
@@ -16,9 +17,11 @@ import org.apache.spark.sql.functions._
   *  - hour_bin of a null hour is null until categorical imputation turns it
   *    into 'OTHER'.
   *
-  * All rules are native Column expressions (no UDFs) — the whole chain stays
-  * inside one whole-stage-codegen'd projection; the only extra job is the
-  * exact-median computation for imputation.
+  * All rules are native Column expressions (no UDFs), built as one
+  * projection per rule phase. The exact medians for imputation cost one
+  * aggregate query (two jobs); they and the run timestamp join in as one-row
+  * local frames (a cartesian product, no exchange and no job), so a new
+  * batch reuses the generated code of the last one.
   */
 object Cleaner {
 
@@ -116,69 +119,79 @@ object Cleaner {
     * the streaming 3-entity path uses it so enrich columns survive into Gold.
     */
   def cleanData(silver: DataFrame, passthrough: Seq[String] = Nil): DataFrame = {
-    // P5: keep-list + missing-column null patch (cleaning_rules.py:31-51).
+    // P5: keep-list + missing-column null patch (cleaning_rules.py:31-51),
+    // with the numeric casts (the pandas cleaner receives CSV-inferred
+    // numerics). Column order: present, passthrough, patched.
+    val numericDouble = Set(
+      "beat_of_occurrence", "crash_day_of_week", "crash_hour", "num_units",
+      "injuries_total", "latitude", "longitude", "posted_speed_limit")
     val present = reqCols.filter(silver.columns.contains)
     val absent  = reqCols.filterNot(silver.columns.contains)
     val pass    = passthrough.filter(silver.columns.contains).filterNot(reqCols.contains)
-    val kept = absent.foldLeft(silver.select((present ++ pass).map(col): _*)) {
-      (df, c) => df.withColumn(c, lit(null).cast("string"))
-    }
+    def typedCol(c: String, src: Column): Column =
+      (if (numericDouble(c)) src.cast("double") else src).as(c)
+    val typed = silver.select(
+      present.map(c => typedCol(c, col(c))) ++ pass.map(col) ++
+        absent.map(c => typedCol(c, lit(null).cast("string"))): _*)
 
-    // Numeric casts (the pandas cleaner receives CSV-inferred numerics).
-    val numericDouble = Seq(
-      "beat_of_occurrence", "crash_day_of_week", "crash_hour", "num_units",
-      "injuries_total", "latitude", "longitude", "posted_speed_limit")
-    val typed = numericDouble.foldLeft(kept)((df, c) =>
-      df.withColumn(c, col(c).cast("double")))
-
+    // P6-F9a in one projection over the typed, pre-imputation values:
+    // F2 booleans, F3 is_weekend, F4 hour_bin, F5 midnight date, F6 bins,
+    // F7 grid id ("nan" replicates pandas str(NaN)), F8 whitelist recodes
+    // (null -> OTHER), F9a injuries_total -> 0. The filters drop null dates
+    // (P6, before and after normalization) and apply the bbox (P7, null
+    // passthrough); the projection is deterministic, so filtering after it
+    // keeps the same rows.
+    val latBin = round(col("latitude"), 2)
+    val lngBin = round(col("longitude"), 2)
+    val rules: Map[String, Column] =
+      boolCols.map(c => c -> standardizeBoolean(col(c))).toMap ++ Map(
+        "crash_date" -> to_date(to_timestamp(col("crash_date"))),
+        "roadway_surface_cond" -> whitelistRecode(col("roadway_surface_cond"), validRoadway),
+        "lighting_condition" -> whitelistRecode(col("lighting_condition"), validLighting),
+        "weather_condition" -> weatherRecode(col("weather_condition")),
+        "traffic_control_device" -> whitelistRecode(col("traffic_control_device"), validTraffic),
+        "crash_type" -> whitelistRecode(col("crash_type"), validCrashType),
+        "injuries_total" -> coalesce(col("injuries_total"), lit(0.0)))
+    val added = Seq(
+      "is_weekend" -> isWeekend(col("crash_day_of_week")),
+      "hour_bin" -> hourBin(col("crash_hour")),
+      "lat_bin" -> latBin,
+      "lng_bin" -> lngBin,
+      "grid_id" -> concat(
+        coalesce(latBin.cast("string"), lit("nan")), lit("_"),
+        coalesce(lngBin.cast("string"), lit("nan"))))
     val derived = typed
-      // F2 booleans (+ int64 cast)
-      .withColumns(boolCols.map(c => c -> standardizeBoolean(col(c))).toMap)
-      // F3 is_weekend, F4 hour_bin — from pre-imputation values
-      .withColumn("is_weekend", isWeekend(col("crash_day_of_week")))
-      .withColumn("hour_bin", hourBin(col("crash_hour")))
-      // P6 + F5: drop null dates, normalize to midnight date
       .where(col("crash_date").isNotNull)
-      .withColumn("crash_date", to_date(to_timestamp(col("crash_date"))))
-      .where(col("crash_date").isNotNull)
-      // P7 bbox (null passthrough)
-      .where(validCoords(col("latitude"), col("longitude")))
-      // F6 bins + F7 grid id ("nan" replicates pandas str(NaN))
-      .withColumn("lat_bin", round(col("latitude"), 2))
-      .withColumn("lng_bin", round(col("longitude"), 2))
-      .withColumn("grid_id", concat(
-        coalesce(col("lat_bin").cast("string"), lit("nan")),
-        lit("_"),
-        coalesce(col("lng_bin").cast("string"), lit("nan"))))
-      // F8 whitelist recodes (null -> OTHER)
-      .withColumn("roadway_surface_cond", whitelistRecode(col("roadway_surface_cond"), validRoadway))
-      .withColumn("lighting_condition", whitelistRecode(col("lighting_condition"), validLighting))
-      .withColumn("weather_condition", weatherRecode(col("weather_condition")))
-      .withColumn("traffic_control_device", whitelistRecode(col("traffic_control_device"), validTraffic))
-      .withColumn("crash_type", whitelistRecode(col("crash_type"), validCrashType))
-      // F9a: injuries_total -> 0
-      .withColumn("injuries_total", coalesce(col("injuries_total"), lit(0.0)))
+      .select(typed.columns.map(c => rules.getOrElse(c, col(c)).as(c)).toSeq ++
+        added.map { case (c, e) => e.as(c) }: _*)
+      .where(col("crash_date").isNotNull && validCoords(col("latitude"), col("longitude")))
 
     // F9b: exact-median imputation (pandas interpolating median — SURVEY §7.4
-    // warns against approxQuantile). Computed by ScaleOps.exactQuantiles:
-    // all nine columns share each histogram-refinement pass, executor state
-    // stays O(bins) — the scale-safe form of `percentile(c, 0.5)`, same
-    // interpolation bit-for-bit. All-null columns are absent from the map and
-    // left unfilled (matching percentile's null).
+    // warns against approxQuantile). Computed by ScaleOps.exactQuantiles in
+    // one aggregate pass over all nine columns (a column with more than its
+    // collect bound of values refines by histogram), the same interpolation
+    // as `percentile(c, 0.5)` bit-for-bit. The medians join in as a one-row
+    // local frame, not as literals: generated code inlines double literals,
+    // so literal medians would recompile the fused stage for every batch.
+    // An all-null column has a null median and stays unfilled (matching
+    // percentile's null).
     val medians = graft.ops.ScaleOps.exactQuantiles(derived, medianCols, 0.5)
-    val medianFilled = medianCols.foldLeft(derived) { (df, c) =>
-      medians.get(c) match {
-        case Some(m) => df.withColumn(c, coalesce(col(c), lit(m)))
-        case None    => df
-      }
-    }
+    val medianRow = derived.sparkSession.createDataFrame(
+      java.util.List.of(Row.fromSeq(medianCols.map(c => medians.getOrElse(c, null)))),
+      StructType(medianCols.map(c => StructField(s"__median_$c", DoubleType))))
+    def filled(c: String): Column =
+      if (medianCols.contains(c)) coalesce(col(c), col(s"__median_$c")) else col(c)
 
-    // F9c: categorical fill + F10 caps.
-    medianFilled
-      .withColumns(categoricalFillCols.map(c =>
-        c -> coalesce(col(c).cast("string"), lit("OTHER"))).toMap)
-      .withColumn("num_units", least(col("num_units"), lit(10.0)))
-      .withColumn("posted_speed_limit", least(col("posted_speed_limit"), lit(75.0)))
+    // F9b + F9c categorical fill + F10 caps. The hint plans the join as a
+    // cartesian product, which needs no exchange; a broadcast of the one row
+    // would cost a job.
+    val caps = Map("num_units" -> 10.0, "posted_speed_limit" -> 75.0)
+    derived.crossJoin(medianRow.hint("shuffle_replicate_nl")).select(derived.columns.map { c =>
+      val v =
+        if (categoricalFillCols.contains(c)) coalesce(col(c).cast("string"), lit("OTHER"))
+        else caps.get(c).fold(filled(c))(cap => least(filled(c), lit(cap)))
+      v.as(c)
+    }.toSeq: _*)
   }
 
   /** Cast the cleaned frame to the declared Gold column types and attach run
@@ -187,18 +200,21 @@ object Cleaner {
     */
   def toGold(cleaned: DataFrame, corrId: String, now: java.sql.Timestamp,
       passthrough: Seq[String] = Nil): DataFrame = {
-    val intCols = Seq(
+    val intCols = Set(
       "crash_day_of_week", "crash_hour", "is_weekend", "beat_of_occurrence",
       "num_units", "posted_speed_limit", "hit_and_run_i",
       "intersection_related_i", "work_zone_i", "private_property_i")
-    val casted = intCols.foldLeft(cleaned)((df, c) =>
-      df.withColumn(c, col(c).cast("int")))
-    val withMeta = casted
-      .withColumn("corr_id", lit(corrId))
-      .withColumn("inserted_at", lit(now))
-      .withColumn("updated_at", lit(now))
+    // The run's timestamp joins in as a one-row local frame for the same
+    // reason as the medians: a timestamp literal would be inlined into
+    // generated code, one compile per run.
+    val stamp = cleaned.sparkSession.createDataFrame(
+      java.util.List.of(Row(now)), StructType(Seq(StructField("__now", TimestampType))))
+    val meta = Map(
+      "corr_id" -> lit(corrId), "inserted_at" -> col("__now"), "updated_at" -> col("__now"))
     val declared = graft.model.Schemas.gold.fieldNames.toSeq
-    val extras = passthrough.filter(withMeta.columns.contains).filterNot(declared.contains)
-    withMeta.select((declared ++ extras).map(col): _*)
+    val extras = passthrough.filter(cleaned.columns.contains).filterNot(declared.contains)
+    cleaned.crossJoin(stamp.hint("shuffle_replicate_nl")).select((declared ++ extras).map { c =>
+      meta.getOrElse(c, if (intCols(c)) col(c).cast("int") else col(c)).as(c)
+    }: _*)
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.model.JobSpec
 
@@ -92,25 +93,78 @@ object Ingest {
 
   /** Bronze read for one run (reference: transformer/transformer.py:185-199
     * key filtering). The path globs this run's `year=<y>/corr=<id>` directories,
-    * so listing and JSON schema inference touch only its files: a filter on
-    * the `corr` column would prune the scan, but inference would still read
-    * every run ever landed, and the schema would carry fields of other runs.
-    * The id is escaped the way the partitioned write names its directory,
-    * which also escapes every glob metacharacter. Fails if the run landed no
-    * Bronze.
+    * so listing touches only its files. The id is escaped the way the
+    * partitioned write names its directory, which also escapes every glob
+    * metacharacter. Fails if the run landed no Bronze.
+    *
+    * `schema` is the landed frame's schema as [[inferredSchema]] gives it:
+    * with it the read runs no inference job. Without it, JSON inference
+    * reads this run's files only (a filter on the `corr` column would prune
+    * the scan, but inference would still read every run ever landed). The
+    * two reads differ in one way: a column that is null in every row is
+    * absent from the written JSON, so inference drops it, while the schema
+    * read keeps it as a null column.
     */
-  def readBronze(spark: SparkSession, base: String, alias: String, corr: String): DataFrame =
-    spark.read
-      .option("basePath", s"$base/$alias")
+  def readBronze(spark: SparkSession, base: String, alias: String, corr: String,
+      schema: Option[StructType] = None): DataFrame =
+    schema.foldLeft(spark.read.option("basePath", s"$base/$alias"))(_.schema(_))
       .json(s"$base/$alias/year=*/corr=${ExternalCatalogUtils.escapePathName(corr)}")
       .drop("year", "corr")
 
+  /** The schema JSON inference gives a frame after a JSON write and
+    * read-back: fields in name order, all nullable, integral numbers as long,
+    * other numbers as double, dates, timestamps and binary as strings. Maps
+    * keep their type (inference would make them structs of the keys seen).
+    */
+  def inferredSchema(written: StructType): StructType =
+    StructType(written.fields.sortBy(_.name).map(f => StructField(f.name, inferredType(f.dataType))))
+
+  private def inferredType(t: DataType): DataType = t match {
+    case s: StructType => inferredSchema(s)
+    case ArrayType(e, _) => ArrayType(inferredType(e))
+    case ByteType | ShortType | IntegerType | LongType => LongType
+    case FloatType | DoubleType | _: DecimalType => DoubleType
+    case BooleanType | _: MapType => t
+    case _ => StringType
+  }
+
+  /** Whether a write left rows under `dir`, decided on the driver. A write
+    * that kept no rows leaves `_SUCCESS` and at most empty part files (an
+    * empty gzip stream is 20 bytes), so the first byte of each part tells.
+    */
+  def landed(dir: String): Boolean = children(Paths.get(dir)).exists { f =>
+    val name = f.getFileName.toString
+    !name.startsWith("_") && !name.startsWith(".") && Files.size(f) > 0 && {
+      val raw = Files.newInputStream(f)
+      val in = if (name.endsWith(".gz")) new java.util.zip.GZIPInputStream(raw) else raw
+      try in.read() >= 0 finally in.close()
+    }
+  }
+
+  /** Whether [[writeBronze]] landed rows of run `corr` under any year. */
+  def landedBronze(base: String, alias: String, corr: String): Boolean = {
+    val runDir = s"corr=${ExternalCatalogUtils.escapePathName(corr)}"
+    children(Paths.get(s"$base/$alias"))
+      .exists(y => y.getFileName.toString.startsWith("year=") && landed(y.resolve(runDir).toString))
+  }
+
+  private def children(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val files = Files.list(dir)
+      try { import scala.jdk.CollectionConverters._; files.iterator.asScala.toList }
+      finally files.close()
+    }
+
   /** The enrich fetch: keep only enrich rows whose key appears in the primary
     * page — the extractor's dedup+sort+IN-list worker pool as one broadcast
-    * left-semi join (reference: extractor/main.go:654-683,814-910).
+    * left-semi join (reference: extractor/main.go:654-683,814-910). The
+    * build side is not deduplicated: a left-semi join emits each probe row
+    * at most once whatever the duplicates, so a `distinct` would only add a
+    * shuffle.
     */
   def semiJoinEnrich(enrich: DataFrame, primaryIds: DataFrame, key: String): DataFrame =
-    enrich.join(broadcast(primaryIds.select(key).distinct()), Seq(key), "left_semi")
+    enrich.join(broadcast(primaryIds.select(key)), Seq(key), "left_semi")
 
   // ---- run state (driver-side, tiny) --------------------------------------
 

@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -147,7 +149,10 @@ object ScaleOps {
   // narrows to the bucket holding the target rank, and recursion stops when
   // the bucket collapses to a single value or its population fits
   // `collectThreshold` (then one bounded sorted fetch finishes the job).
-  // Passes are O(log_bins(n)); executor state is O(bins) throughout.
+  // Passes are O(log_bins(n)); executor state is O(bins) throughout. The
+  // grouped forms also collect up to collectThreshold + 1 values per group
+  // in their first (stats) pass, so a group that fits resolves in that one
+  // query.
   //
   // The result is EXACT and interpolates identically to DuckDB
   // `quantile_cont` / Spark `percentile` / pandas' interpolating median
@@ -163,6 +168,40 @@ object ScaleOps {
     */
   private final case class QRange(
       kLo: Long, kHi: Long, base: Long, lo: Double, hi: Double, cnt: Long)
+
+  /** Buffer of [[HeldValues]]: the first `n` slots of `vs` hold values. */
+  private[ops] final case class Held(var n: Int, var vs: Array[Double])
+
+  /** A group's values, sorted, while the group holds at most `cap` of them.
+    * A larger group keeps only `cap + 1` values and finishes empty, so state
+    * stays bounded at `cap + 1` doubles per group and partition. Appends
+    * double the array (amortized O(1)); BoundedRank's sorted-list insert
+    * would be quadratic at cap = 65536.
+    */
+  private final class HeldValues(cap: Int) extends Aggregator[Double, Held, Array[Double]] {
+    override def zero: Held = Held(0, new Array[Double](math.min(16, cap + 1)))
+    private def add(b: Held, v: Double): Unit = if (b.n <= cap) {
+      if (b.n == b.vs.length)
+        b.vs = java.util.Arrays.copyOf(b.vs, math.min(cap + 1, math.max(16, 2 * b.n)))
+      b.vs(b.n) = v
+      b.n += 1
+    }
+    override def reduce(b: Held, v: Double): Held = { add(b, v); b }
+    override def merge(a: Held, b: Held): Held = {
+      var i = 0
+      while (i < b.n && a.n <= cap) { add(a, b.vs(i)); i += 1 }
+      a
+    }
+    override def finish(b: Held): Array[Double] =
+      if (b.n > cap) Array.emptyDoubleArray
+      else {
+        val out = java.util.Arrays.copyOf(b.vs, b.n)
+        java.util.Arrays.sort(out)
+        out
+      }
+    override def bufferEncoder: Encoder[Held] = ExpressionEncoder[Held]()
+    override def outputEncoder: Encoder[Array[Double]] = ExpressionEncoder[Array[Double]]()
+  }
 
   /** Exact q-quantile of one column. None when the column is empty/all-null. */
   def exactQuantile(df: DataFrame, valueCol: String, q: Double,
@@ -719,36 +758,44 @@ object ScaleOps {
   private def quantileOfPairs(pairsRaw: DataFrame, qFor: String => Double, bins: Int,
       collectThreshold: Long): Map[String, Double] = {
     require(bins >= 2, "need at least 2 bins")
+    val valid = pairsRaw.where(col("v").isNotNull && !isnan(col("v")))
+    // One pass gives every group's count and range, and the sorted values
+    // of each group that holds at most collectThreshold of them: those
+    // resolve here, and only larger groups refine.
+    val held = udaf(new HeldValues(collectThreshold.min(Int.MaxValue - 1L).toInt))
+    val stats = valid.groupBy("g")
+      .agg(count(lit(1)).as("n"), min("v").as("mn"), max("v").as("mx"),
+        held(col("v")).as("vs"))
+      .collect()
+
+    // h, kLo, kHi per group; resolvedLo/Hi accumulate the exact rank values.
+    var hOf = Map.empty[String, (Double, Long, Long)]
+    var resolvedLo = Map.empty[String, Double]
+    var resolvedHi = Map.empty[String, Double]
+    var states = Map.empty[String, QRange]
+    stats.foreach { r =>
+      val g = r.getString(0)
+      val n = r.getLong(1)
+      val q = qFor(g)
+      require(q >= 0.0 && q <= 1.0, s"quantile out of range: $q")
+      val h = q * (n - 1).toDouble
+      val kLo = math.floor(h).toLong
+      val kHi = math.ceil(h).toLong
+      hOf += g -> ((h, kLo, kHi))
+      val mn = r.getDouble(2); val mx = r.getDouble(3)
+      if (n <= collectThreshold) {
+        val vs = r.getSeq[Double](4)
+        resolvedLo += g -> vs(kLo.toInt); resolvedHi += g -> vs(kHi.toInt)
+      } else if (mn == mx) { resolvedLo += g -> mn; resolvedHi += g -> mn }
+      else states += g -> QRange(kLo, kHi, 0L, mn, mx, n)
+    }
+
     // The refinement re-scans the pair projection O(log n) times; persist the
     // narrow (g, v) projection so upstream plans (e.g. the Gold clean chain)
-    // compute once. At cluster scale this spills to local disk — still a
-    // narrow two-column cache, never aggregation state.
-    val pairs = pairsRaw.where(col("v").isNotNull && !isnan(col("v")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // compute once more, not once per pass. At cluster scale this spills to
+    // local disk — still a narrow two-column cache, never aggregation state.
+    val pairs = if (states.isEmpty) valid else valid.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val stats = pairs.groupBy("g")
-        .agg(count(lit(1)).as("n"), min("v").as("mn"), max("v").as("mx"))
-        .collect()
-
-      // h, kLo, kHi per group; resolvedLo/Hi accumulate the exact rank values.
-      var hOf = Map.empty[String, (Double, Long, Long)]
-      var resolvedLo = Map.empty[String, Double]
-      var resolvedHi = Map.empty[String, Double]
-      var states = Map.empty[String, QRange]
-      stats.foreach { r =>
-        val g = r.getString(0)
-        val n = r.getLong(1)
-        val q = qFor(g)
-        require(q >= 0.0 && q <= 1.0, s"quantile out of range: $q")
-        val h = q * (n - 1).toDouble
-        val kLo = math.floor(h).toLong
-        val kHi = math.ceil(h).toLong
-        hOf += g -> ((h, kLo, kHi))
-        val mn = r.getDouble(2); val mx = r.getDouble(3)
-        if (mn == mx) { resolvedLo += g -> mn; resolvedHi += g -> mn }
-        else states += g -> QRange(kLo, kHi, 0L, mn, mx, n)
-      }
-
       var toCollect = Map.empty[String, QRange]
       var passes = 0
       val maxPasses = 64 // backstop; the range shrinks ~bins-fold per pass

@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
   *
   * Scale: the roll-up is a partial-aggregating hash agg on the join key, so
   * the subsequent joins see one row per key — the reference's explicit
-  * aggregate-before-join rewrite (SURVEY §4) expressed in the plan. Both
-  * joins shuffle on the same key; Catalyst broadcast the aggregate side when
-  * it is small, or co-partitions both sides once otherwise.
+  * aggregate-before-join rewrite (SURVEY §4) expressed in the plan. The
+  * merge shuffles each entity once, by key: the full-row distinct, the
+  * roll-up, both left joins (merge-hinted, so nothing is broadcast) and the
+  * dedup window all run on that one hash partitioning.
   */
 object Transformer {
 
@@ -66,16 +67,24 @@ object Transformer {
   /** The full merge (reference: transformer/transformer.py:221-258):
     * standardize all three, roll up vehicles/people, left-join both onto
     * crashes, dedup crashes on the key.
+    *
+    * Each entity shuffles once, by key, before its distinct: that hash
+    * partitioning also satisfies the roll-up and the dedup window, so
+    * neither adds an exchange.
     */
   def mergeCrashVehiclesPeople(
       crashes: DataFrame,
       vehicles: DataFrame,
       people: DataFrame,
       idCol: String): DataFrame = {
-    val c = standardize(crashes)
-    val v = standardize(vehicles)
-    val p = standardize(people)
     val id = idCol.toLowerCase
+    def byKey(df: DataFrame): DataFrame = {
+      val named = df.toDF(df.columns.map(_.trim.toLowerCase): _*)
+      (if (named.columns.contains(id)) named.repartition(col(id)) else named).distinct()
+    }
+    val c = byKey(crashes)
+    val v = byKey(vehicles)
+    val p = byKey(people)
 
     require(c.columns.contains(id), s"crashes missing join key $id")
 
@@ -85,7 +94,7 @@ object Transformer {
       if (p.columns.contains(id)) Some(aggregateManyToOne(p, id, "ppl")) else None
 
     val joined = Seq(vehAgg, pplAgg).flatten
-      .foldLeft(c)((acc, agg) => acc.join(agg, Seq(id), "left"))
+      .foldLeft(c)((acc, agg) => acc.join(agg.hint("merge"), Seq(id), "left"))
 
     // Deterministic "first": order by the remaining crash columns.
     val tiebreak = joined.columns.filter(_ != id).sorted.map(col).toSeq
@@ -94,13 +103,14 @@ object Transformer {
 
   /** Nested (array/struct) columns -> JSON strings renamed `{col}_json`, so
     * the frame is CSV-safe (reference: transformer/transformer.py:263-305).
+    * One projection: flat columns in order, then the `_json` columns.
     */
-  def makeCsvSafe(df: DataFrame): DataFrame =
-    df.schema.fields.foldLeft(df) { (acc, f) =>
-      f.dataType match {
-        case _: ArrayType | _: StructType =>
-          acc.withColumn(s"${f.name}_json", to_json(col(f.name))).drop(f.name)
-        case _ => acc
-      }
-    }
+  def makeCsvSafe(df: DataFrame): DataFrame = {
+    val (nested, flat) = df.schema.fields.toSeq.partition(f => f.dataType match {
+      case _: ArrayType | _: StructType => true
+      case _ => false
+    })
+    df.select(flat.map(f => col(f.name)) ++
+      nested.map(f => to_json(col(f.name)).as(s"${f.name}_json")): _*)
+  }
 }

@@ -111,36 +111,6 @@ class GoldWriterSpec extends SparkSpec {
       s"pruned scan must read a strict subset: $filesRead of $allFiles")
   }
 
-  /** Descriptions of the jobs `body` launches. Listener events arrive in
-    * order on one queue, so once a sentinel job's start is seen, every job
-    * of `body` has been seen too.
-    */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val sentinel = s"$group-sentinel"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = e.properties.getProperty("spark.jobGroup.id")
-        if (g == group)
-          seen.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
-        else if (g == sentinel) done.countDown()
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
-      import scala.jdk.CollectionConverters._
-      (out, seen.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("upsertBucketed job budget: no listing jobs, pinned job ceiling, exact insert counts") {
     val path = tmpDir("goldjobs") + "/gold"
     // every one of the 64 buckets holds files, so a read through

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.model.JobSpec
 
@@ -111,6 +111,208 @@ class PipelineSpec extends SparkSpec {
       GraftSession.codegenClasses - before
     }
     assert(compiled(2) <= 10, s"classes compiled per run: ${compiled.mkString("/")}")
+  }
+
+  // ---- weekly streaming ops over crash-shaped, all-string raw entities --
+
+  private val weekFmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss")
+  private val week0 = java.time.LocalDateTime.parse("2000-01-01T00:00:00")
+
+  /** `weeks` weeks of `perWeek` crashes from 2000-01-01, with 1-3 vehicles
+    * and 1-2 people each; values drawn from `seed`, so every week has its
+    * own medians.
+    */
+  private def weekly(weeks: Int, perWeek: Int, seed: Int): Map[String, Seq[Seq[String]]] = {
+    val rnd = new scala.util.Random(seed)
+    def pick(xs: String*): String = xs(rnd.nextInt(xs.size))
+    def num(lo: Int, hi: Int): String = (lo + rnd.nextInt(hi - lo + 1)).toString
+    def maybe(v: => String): String = if (rnd.nextInt(10) == 0) null else v
+    val crashes = for (w <- 0 until weeks; i <- 0 until perWeek) yield {
+      val t = week0.plusDays(7L * w).plusMinutes(rnd.nextInt(7 * 24 * 60).toLong)
+      Seq(f"w$w%02dc$i%03d", t.format(weekFmt),
+        pick("NO INJURY / DRIVE AWAY", "INJURY AND / OR TOW DUE TO CRASH"),
+        maybe(pick("20", "30", "35", "45", "90")), maybe(pick("CLEAR", "RAIN", "SLEET/HAIL", "FOG")),
+        num(1, 4), pick("Y", "N", null), maybe(num(100, 2500)), maybe(num(1, 12)),
+        maybe(num(0, 3)), maybe(num(0, 23)), maybe(num(1, 7)),
+        maybe(f"${41.65 + rnd.nextDouble() * 0.4}%.6f"), maybe(f"${-87.9 + rnd.nextDouble() * 0.35}%.6f"),
+        pick("NO CONTROLS", "TRAFFIC SIGNAL", "YIELD"), pick("N", "Y"), null,
+        pick("N", "1"), maybe(pick("DAYLIGHT", "DUSK", "DARKNESS")), maybe(pick("NO DEFECTS", "RUT")),
+        pick("DRY", "WET", "ICE", "SAND"), maybe(pick("N", "S", "E", "W")),
+        maybe(pick("ONE-WAY", "DIVIDED")), pick("Y", "N"))
+    }
+    val vehicles = crashes.flatMap { c =>
+      (1 to 1 + rnd.nextInt(3)).map(u => Seq(c.head, u.toString, s"${c.head}v$u",
+        pick("DRIVER", "PARKED"), pick("FORD", "TOYOTA", null), pick("SEDAN", "VAN"),
+        num(1990, 2001), pick("N", "S"), pick("STRAIGHT", "TURNING"), pick("FRONT", "REAR"),
+        pick("NONE", "BRAKES"), pick("PERSONAL", "TAXI"), pick("N", "Y")))
+    }
+    val people = crashes.flatMap { c =>
+      (1 to 1 + rnd.nextInt(2)).map(n => Seq(c.head, s"${c.head}p$n", pick("DRIVER", "PASSENGER"),
+        num(16, 80), pick("M", "F", null), num(1, 3), pick("NO INDICATION OF INJURY", "NONINCAPACITATING"),
+        pick("USAGE UNKNOWN", "SAFETY BELT USED"), pick("NOT DEPLOYED", "DEPLOYED"), pick("NONE", "TOTALLY")))
+    }
+    Map("crashes" -> crashes, "vehicles" -> vehicles, "people" -> people)
+  }
+
+  private def frame(rows: Seq[Seq[String]], schema: org.apache.spark.sql.types.StructType) =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map(r => org.apache.spark.sql.Row.fromSeq(r)), 1), schema)
+
+  /** The raw entities as landed before `end` (crashes only; enrich rows are
+    * all present, the semi-join picks them).
+    */
+  private def rawBefore(data: Map[String, Seq[Seq[String]]], end: java.time.LocalDateTime) = {
+    import graft.model.Schemas
+    Map(
+      "crashes" -> frame(data("crashes").filter(r => r(1) < end.format(weekFmt)), Schemas.bronzeCrashes),
+      "vehicles" -> frame(data("vehicles"), Schemas.bronzeVehicles),
+      "people" -> frame(data("people"), Schemas.bronzePeople))
+  }
+
+  private lazy val streamingJob = {
+    import graft.model.Schemas
+    JobSpec.parse(s"""{"mode":"streaming","join_key":"crash_record_id",
+      |"primary":{"id":"85ca-t3if","alias":"crashes","select":"${Schemas.crashColumns.mkString(",")}",
+      |  "where_by":{"since_days":7}},
+      |"enrich":[
+      |{"id":"68nd-jvt3","alias":"vehicles","select":"${Schemas.vehicleColumns.mkString(",")}"},
+      |{"id":"u6pd-qa9d","alias":"people","select":"${Schemas.peopleColumns.mkString(",")}"}]}""".stripMargin)
+  }
+
+  /** Streaming op `w` lands week `w` (the first by since_days, later ones
+    * by watermark).
+    */
+  private def streamWeek(data: Map[String, Seq[Seq[String]]], base: String, w: Int): Pipeline.RunResult = {
+    val end = week0.plusDays(7L * (w + 1))
+    Pipeline.run(spark, streamingJob, rawBefore(data, end), base, s"op$w", end.toLocalDate)
+  }
+
+  test("a warm streaming op stays inside its per-layer job budget, every job labelled") {
+    val data = weekly(weeks = 3, perWeek = 60, seed = 11)
+    val base = tmpDir("budget")
+    (0 to 1).foreach(w => assert(streamWeek(data, base, w).report.insertedRows == 60))
+    val (res, jobs) = jobsOf(streamWeek(data, base, 2))
+    assert(res.report.insertedRows == 60 && res.silverRows == 60)
+    val byLayer = jobs.groupBy(_.split(":").take(2).mkString(":")).map { case (k, v) => k -> v.size }
+    info(s"jobs per layer: $byLayer")
+    // ingest: Bronze write, 2 per enrich (id broadcast, write), watermark 2;
+    // silver: one exchange per entity, the CSV write, the count 2;
+    // gold_clean: the one-pass medians; gold_write: the bucketed upsert
+    val budget = Map("pipeline:ingest" -> 7, "pipeline:silver" -> 6,
+      "pipeline:gold_clean" -> 2, "pipeline:gold_write" -> 11)
+    assert(byLayer.keySet.subsetOf(budget.keySet), s"unlabelled or unknown jobs: $byLayer")
+    budget.foreach { case (layer, max) =>
+      assert(byLayer.getOrElse(layer, 0) <= max, s"$layer ran ${byLayer(layer)} jobs: $byLayer")
+    }
+    assert(jobs.size <= 26, s"${jobs.size} jobs: $byLayer")
+  }
+
+  test("a new week's medians and timestamps reuse the cleaner's generated classes") {
+    val data = weekly(weeks = 3, perWeek = 60, seed = 12)
+    val base = tmpDir("recompile")
+    (0 to 1).foreach(w => streamWeek(data, base, w))
+    val before = GraftSession.codegenClasses
+    assert(streamWeek(data, base, 2).report.insertedRows == 60)
+    val compiled = GraftSession.codegenClasses - before
+    info(s"classes compiled: $compiled")
+    // 10 when medians and run timestamps were literals; stages that still
+    // inline per-batch literals (the batch predicate, the upsert's touched
+    // buckets) account for the rest
+    assert(compiled <= 5, s"a warm op over a new week compiled $compiled classes")
+  }
+
+  /** `Pipeline.run`'s steps as composed when every read-back inferred its
+    * schema: the call order medbench's traced pass mirrors.
+    */
+  private def inferenceRun(job: JobSpec, raw: Map[String, org.apache.spark.sql.DataFrame],
+      base: String, corrId: String, now: java.time.LocalDate): Unit = {
+    import graft.gold.{Cleaner, GoldWriter}
+    import graft.ingest.Ingest
+    import graft.silver.Transformer
+    val primary = Ingest.applyJob(raw("crashes"), job, None, now)
+    Ingest.writeBronze(primary, base, "crashes", corrId)
+    job.enrich.foreach { e =>
+      val alias = e.alias.get
+      val enriched = Ingest.semiJoinEnrich(raw(alias), primary.select(job.joinKey), job.joinKey)
+      enriched.select(e.select.get.split(",").map(col).toSeq: _*)
+        .write.mode("append").option("compression", "gzip").json(s"$base/$alias/corr=$corrId")
+    }
+    def readEnrich(a: String) =
+      try spark.read.json(s"$base/$a/corr=$corrId")
+      catch { case _: org.apache.spark.sql.AnalysisException => spark.emptyDataFrame }
+    Transformer.makeCsvSafe(Transformer.mergeCrashVehiclesPeople(
+      Ingest.readBronze(spark, base, "crashes", corrId), readEnrich("vehicles"),
+      readEnrich("people"), job.joinKey))
+      .write.mode("overwrite").option("header", "true").csv(s"$base/silver/corr=$corrId")
+    val silverBack = spark.read.option("header", "true").csv(s"$base/silver/corr=$corrId")
+    GoldWriter.upsertBucketed(spark, Cleaner.toGold(Cleaner.cleanData(silverBack), corrId,
+      java.sql.Timestamp.valueOf(now.atStartOfDay())), s"$base/gold")
+  }
+
+  /** Silver and Gold (without run metadata) of `Pipeline.run` and of
+    * [[inferenceRun]] over the same input.
+    */
+  private def bothWays(raw: Map[String, org.apache.spark.sql.DataFrame], name: String) = {
+    val job = JobSpec.parse(
+      """{"mode":"backfill","join_key":"crash_record_id",
+        |"date_range":{"field":"crash_date","start":"2024-01-01T00:00:00","end":"2024-02-01T00:00:00"},
+        |"primary":{"id":"c","alias":"crashes","select":"*"},
+        |"enrich":[
+        |{"id":"v","alias":"vehicles","select":"crash_record_id,make,vehicle_year"},
+        |{"id":"p","alias":"people","select":"crash_record_id,person_type"}]}""".stripMargin)
+    val now = java.time.LocalDate.parse("2024-02-01")
+    val (a, b) = (tmpDir(s"$name-run"), tmpDir(s"$name-inferred"))
+    Pipeline.run(spark, job, raw, a, "r1", now)
+    inferenceRun(job, raw, b, "r1", now)
+    def silver(base: String) = spark.read.option("header", "true").csv(s"$base/silver/corr=r1")
+    def gold(base: String) = {
+      val g = spark.read.parquet(s"$base/gold")
+        .drop("corr_id", "inserted_at", "updated_at", graft.gold.GoldWriter.bucketCol)
+      g.select(g.columns.sorted.map(col).toSeq: _*)
+    }
+    (silver(a), silver(b), gold(a), gold(b))
+  }
+
+  private def sameRows(x: org.apache.spark.sql.DataFrame, y: org.apache.spark.sql.DataFrame): Boolean =
+    x.columns.toSeq == y.columns.toSeq && x.count() == y.count() &&
+      x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty
+
+  private lazy val equivalenceRaw = Map(
+    // typed raw columns; c1 lands twice, so the semi-join's build side holds
+    // a duplicate key
+    "crashes" -> Seq(
+      ("c1", "2024-01-20T10:00:00", 41.85, -87.65, 10, 2L, "CLEAR"),
+      ("c1", "2024-01-20T10:00:00", 41.86, -87.65, 10, 3L, "CLEAR"),
+      ("c2", "2024-01-25T22:00:00", 41.90, -87.70, 22, 1L, "snow"),
+      ("c3", "2024-01-26T07:30:00", 41.80, -87.60, 7, 12L, "RAIN"),
+      ("c4", "2024-01-27T13:00:00", 41.95, -87.75, 13, 4L, "FOG"))
+      .toDF("crash_record_id", "crash_date", "latitude", "longitude", "crash_hour",
+        "num_units", "weather_condition"),
+    // duplicate enrich keys and a duplicate row
+    "vehicles" -> Seq(("c1", "FORD", 1999), ("c1", "FORD", 1999), ("c1", "AUDI", 2001),
+      ("c2", "FORD", 1995), ("zz", "BMW", 2000)).toDF("crash_record_id", "make", "vehicle_year"),
+    // no key matches: the semi-join keeps nothing and only _SUCCESS lands
+    "people" -> Seq(("zz", "DRIVER"), ("yy", "PASSENGER")).toDF("crash_record_id", "person_type"))
+
+  test("schema read-backs give the Silver and Gold of inference reads: typed columns, duplicate keys, an empty enrich") {
+    val (silver, silverInferred, gold, goldInferred) = bothWays(equivalenceRaw, "equiv")
+    assert(silver.columns.exists(_.startsWith("veh_")) && !silver.columns.exists(_.startsWith("ppl_")))
+    assert(silver.count() == 4)
+    assert(sameRows(silver, silverInferred))
+    assert(sameRows(gold, goldInferred) && gold.count() == 4)
+  }
+
+  test("a column null in every row reads back as a null column, not an absent one; Gold is unchanged") {
+    val raw = equivalenceRaw.updated("crashes",
+      equivalenceRaw("crashes").withColumn("road_defect", lit(null).cast("string")))
+    val (silver, silverInferred, gold, goldInferred) = bothWays(raw, "allnull")
+    // inference never sees the column (the JSON writer omits nulls); the
+    // schema read keeps it, null in every row
+    assert(!silverInferred.columns.contains("road_defect"))
+    assert(silver.where(col("road_defect").isNotNull).isEmpty)
+    assert(sameRows(silver.drop("road_defect"), silverInferred))
+    assert(sameRows(gold, goldInferred))
+    assert(gold.select("road_defect").distinct().collect().map(_.getString(0)).toSeq == Seq("OTHER"))
   }
 
   test("schema drift: a run whose source lacks several expected columns still lands Gold (SURVEY §7.4)") {

@@ -94,6 +94,30 @@ class ScaleOpsSpec extends SparkSpec {
     assert(!got.contains("c"), "all-null column yields no quantile (percentile-null analog)")
   }
 
+  test("exactQuantiles: groups within the collect bound resolve in one aggregate query, equal to percentile") {
+    val rnd = new scala.util.Random(7)
+    // duplicates (a draws from 40 values), nulls, NaN and an all-null column
+    val rows = (1 to 2001).map { i =>
+      (rnd.nextInt(40) * 0.25 - 3.0,
+        if (i % 7 == 0) None else Some(rnd.nextGaussian() * 100),
+        if (i % 11 == 0) Double.NaN else rnd.nextDouble(),
+        None: Option[Double])
+    }
+    val df = rows.toDF("a", "b", "c", "d").repartition(4)
+    val cols = Seq("a", "b", "c", "d")
+    val (got, queries) = sqlExecutionsOf(ScaleOps.exactQuantiles(df, cols, 0.5))
+    assert(queries == 1, s"$queries SQL executions")
+    cols.foreach { c =>
+      val want = df.where(col(c).isNotNull && !isnan(col(c)))
+        .agg(percentile(col(c), lit(0.5))).head()
+      if (want.isNullAt(0)) assert(!got.contains(c), s"$c is all null")
+      else assert(got(c) == want.getDouble(0), s"$c: ${got(c)} vs ${want.getDouble(0)}")
+    }
+    // a bound below the group sizes refines by histogram to the same values
+    val refined = ScaleOps.exactQuantiles(df, cols, 0.5, bins = 8, collectThreshold = 100)
+    assert(refined == got)
+  }
+
   test("bucketed tables join with zero shuffle exchanges") {
     val db = "graft_test"
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")

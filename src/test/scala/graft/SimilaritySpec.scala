@@ -372,6 +372,38 @@ class SimilaritySpec extends SparkSpec {
     assert(top0.sameElements(Array(19L)), s"planted dup must rank first: ${top0.toSeq}")
   }
 
+  test("knnGraph past the literal bound marks oversized buckets by join, same graph as the literals") {
+    // 64-bit signatures in 4 bands of 16 bits. 2100 triples share a sign
+    // pattern, so each fills one bucket of 3 in every band: 2100 buckets per
+    // band over maxBucket = 2, more than the literal bound (a literal list
+    // per band would hold all 2100). 150 pairs share a pattern too; their
+    // buckets of 2 survive and give the graph its edges.
+    val rnd = new scala.util.Random(5)
+    def pattern(): Array[Float] = Array.fill(64)(if (rnd.nextBoolean()) 1f else -1f)
+    val triples = (0 until 2100).flatMap { g =>
+      val p = pattern()
+      (0 until 3).map(m => (g * 3L + m, p.map(_ * (1f + 0.1f * m)).toSeq))
+    }
+    val pairs = (0 until 150).flatMap { g =>
+      val p = pattern()
+      (0 until 2).map(m => (10000L + g * 2 + m, p.map(x => x * (1f + rnd.nextFloat())).toSeq))
+    }
+    val corpus = Similarity.prepare((triples ++ pairs).toDF("vec_id", "embedding"), "vec_id", "embedding")
+    assert(2100 > Similarity.knnLiteralBound)
+    val graph = Similarity.knnGraph(corpus, k = 2, bits = 64, bands = 4, maxBucket = 2)
+    val inLists = graph.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case in: org.apache.spark.sql.catalyst.expressions.In => in.list.size
+      case in: org.apache.spark.sql.catalyst.expressions.InSet => in.hset.size
+    }))
+    assert(inLists.forall(_ <= Similarity.knnLiteralBound), s"IN lists of sizes $inLists")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
+    val got = rows(graph)
+    assert(got.size >= 300, s"every planted pair links: ${got.size} edges")
+    assert(got.forall { case (q, _, id, _) => q >= 10000L && id >= 10000L }, "triples are dropped")
+    assert(got == rows(Similarity.knnGraph(corpus, 2, 64, 4, 2, literalBound = Int.MaxValue - 1)))
+  }
+
   test("knnGraph: wider bands shrink the candidate volume (the key-space scaling knob)") {
     // SCALE.md's n7 reading: with every node a query, candidate volume at a
     // FIXED band width grows ~(n/buckets)^2 — the mitigation is scaling the

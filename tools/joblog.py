@@ -1,19 +1,23 @@
 #!/usr/bin/env python3
-"""Summarize an uncompressed Spark event log by job group.
+"""Summarize an uncompressed Spark event log by job group or job description.
 
 For each job group (the `spark.jobGroup.id` local property; jobs without one
 fall under "-") it prints the number of jobs, the tasks those jobs ran, how
 many of the jobs were parallel file-listing jobs ("Listing leaf files ..."),
 the tasks of those, and the summed job time (submission to completion).
+With `--by description` the rows are job descriptions instead (the
+`spark.job.description` local property): `Pipeline.run` labels its jobs
+`pipeline:<layer>:<step>`, so an untraced medbench run splits by layer.
 
-    python3 tools/joblog.py EVENT_LOG [--depth N]
+    python3 tools/joblog.py EVENT_LOG [--by group|description] [--depth N]
 
 EVENT_LOG is a log file, or a rolling log's `eventlog_v2_*` directory (Spark
 4's default), whose `events_<n>_*` files are read in order.
 
-`--depth N` keeps only the first N `|`-separated fields of each group id, so
-medbench's `mb|<layer>|<call>|<n>` groups roll up per layer with `--depth 2`
-or per call with `--depth 3`.
+`--depth N` keeps only the first N fields of each key, split on `|` for
+groups and `:` for descriptions. So medbench's `mb|<layer>|<call>|<n>` groups
+roll up per layer with `--depth 2` or per call with `--depth 3`, and
+`pipeline:<layer>:<step>` descriptions per layer with `--depth 2`.
 """
 import argparse
 import json
@@ -24,8 +28,10 @@ from pathlib import Path
 LISTING = "Listing leaf files"
 
 
-def summarize(lines, depth=None):
-    """Rows of (group, jobs, tasks, listing jobs, listing tasks, job seconds)."""
+def summarize(lines, depth=None, by="group"):
+    """Rows of (key, jobs, tasks, listing jobs, listing tasks, job seconds)."""
+    prop, sep = {"group": ("spark.jobGroup.id", "|"),
+                 "description": ("spark.job.description", ":")}[by]
     job_group, job_listing, job_start = {}, {}, {}
     stage_job = {}
     job_tasks = defaultdict(int)
@@ -38,9 +44,9 @@ def summarize(lines, depth=None):
         if kind == "SparkListenerJobStart":
             job = ev["Job ID"]
             props = ev.get("Properties") or {}
-            group = props.get("spark.jobGroup.id") or "-"
+            group = props.get(prop) or "-"
             if depth:
-                group = "|".join(group.split("|")[:depth])
+                group = sep.join(group.split(sep)[:depth])
             job_group[job] = group
             job_listing[job] = (props.get("spark.job.description") or "").startswith(LISTING)
             job_start[job] = ev.get("Submission Time", 0)
@@ -81,11 +87,13 @@ def log_lines(path):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("log", help="uncompressed event log file or rolling-log directory")
+    ap.add_argument("--by", choices=("group", "description"), default="group",
+                    help="key jobs by job group (default) or job description")
     ap.add_argument("--depth", type=int, default=None,
-                    help="keep the first N '|'-separated fields of each group id")
+                    help="keep the first N fields of each key ('|' for groups, ':' for descriptions)")
     args = ap.parse_args()
-    rows = summarize(log_lines(args.log), args.depth)
-    head = ("group", "jobs", "tasks", "listing_jobs", "listing_tasks", "job_s")
+    rows = summarize(log_lines(args.log), args.depth, args.by)
+    head = (args.by, "jobs", "tasks", "listing_jobs", "listing_tasks", "job_s")
     width = max([len(head[0])] + [len(r[0]) for r in rows])
     fmt = f"{{:<{width}}} {{:>6}} {{:>7}} {{:>12}} {{:>13}} {{:>9}}"
     print(fmt.format(*head))
