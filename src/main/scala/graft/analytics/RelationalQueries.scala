@@ -2642,7 +2642,7 @@ object RelationalQueries {
         "scratch manifest table, get z-order clustered into 4 key-range " +
         "slices with stats, and are read back through the custom " +
         "FileIndex with a PLAIN where() — the manifest's min/max prune " +
-        "segments inside Catalyst (ScanSkipProbe measures 1-of-32 files " +
+        "segments inside Catalyst (SCALE.md records 1-of-32 files " +
         "opened at the 100x decade), Spark's vectorized parquet reader " +
         "does the rest. The oracle replays filter + aggregate in SQL, so " +
         "the pruned physical path must agree with the declarative " +

@@ -7,7 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
   BoundReference, Expression, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
   PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
@@ -24,14 +27,14 @@ import graft.silver.Transformer
   * what makes the at-least-once delivery safe (ST4).
   *
   * WRITER CONCURRENCY (the contract, stated once and permanently): plain
-  * [[upsert]]/[[upsertBucketed]] are SINGLE-WRITER per table path — the
+  * [[upsertBucketed]] is SINGLE-WRITER per table path — the
   * conflict check (anti join) and the append are two steps, so two
   * uncoordinated writers racing the same keys can both observe "absent" and
   * both insert (GoldWriterSpec pins the serialized interleaving that
   * prevents this). That matches the reference deployment exactly (its
   * PK-enforced DuckDB writer sits behind a prefetch-1 queue consumer — one
   * writer by construction). Deployments that DO need concurrent upserts use
-  * [[lockedUpsert]]/[[lockedUpsertBucketed]]: an advisory filesystem mutex
+  * [[lockedUpsertBucketed]]: an advisory filesystem mutex
   * (atomic exclusive-create of `_graft_gold.lock`, stale-takeover on crash)
   * serializes cooperating writers on filesystems with atomic
   * create-no-overwrite (local, HDFS). Object stores without atomic
@@ -41,7 +44,7 @@ import graft.silver.Transformer
   * transactional answer is [[graft.ops.ManifestStore]]: manifest-resolved
   * tables get lock-free first-write-wins upserts (optimistic CAS publish)
   * and crash-atomic rewrites — use it when the table is born under this
-  * engine; the path-based writers here remain for plain parquet layouts
+  * engine; the path-based writer here remains for a plain parquet layout
   * any external reader can scan directly.
   *
   * Scale: the anti join ships only the key column of the existing table
@@ -61,34 +64,6 @@ object GoldWriter {
       nullKeys: Long,
       insertedRows: Long)
 
-  /** Dedup the incoming batch (deterministic keep-first by full-row order),
-    * skip keys already present, append the rest.
-    */
-  def upsert(spark: SparkSession, batch: DataFrame, path: String,
-      key: String = "crash_record_id"): IntegrityReport = {
-    val tiebreak = batch.columns.filter(_ != key).sorted.map(col).toSeq
-    val deduped = Transformer.dedupKeepFirst(batch.where(col(key).isNotNull), key, tiebreak)
-
-    val exists = tableExists(spark, path)
-    if (exists) requireLayout(spark, path, bucketed = false)
-    val toInsert =
-      if (exists) {
-        val existingKeys = spark.read.parquet(path).select(key)
-        deduped.join(existingKeys, Seq(key), "left_anti")
-      } else deduped
-
-    // Materialize the insert count before appending (the plan reads `path`).
-    val inserted = toInsert.cache()
-    val nInserted = inserted.count()
-    if (nInserted > 0) inserted.write.mode(SaveMode.Append).parquet(path)
-    inserted.unpersist()
-
-    // A first batch can legitimately insert nothing (every key null); the
-    // table then still doesn't exist and the report scan would throw.
-    if (!exists && nInserted == 0L) IntegrityReport(0L, 0L, 0L, 0L)
-    else integrityCheck(spark, path, key, nInserted)
-  }
-
   /** The partition column of the bucketed Gold layout. Derived from the KEY
     * (not an attribute like crash_date), so a given key can only ever live in
     * one partition directory — which is what makes pruning the conflict scan
@@ -97,14 +72,13 @@ object GoldWriter {
   val bucketCol = "__key_bucket"
   private val bucketSchema = new StructType().add(bucketCol, IntegerType)
 
-  /** Scale path for a growing Gold table ([[upsert]]'s existing-keys scan
-    * reads the full key column per micro-batch — the streaming loop's scale
-    * ceiling once Gold reaches 100 TB). Gold is laid out as parquet
+  /** Dedup the incoming batch (deterministic keep-first by full-row order),
+    * skip keys already present, append the rest (reference:
+    * cleaner/duckdb_writer.py:141-207). Gold is laid out as parquet
     * partitioned by `__key_bucket = pmod(xxhash64(key), buckets)`; each batch
     * anti-joins only against the bucket directories its own keys hash to, so
     * per-batch conflict-scan IO is `(touched buckets / buckets) * table`,
-    * independent of total table size for small batches. Same first-write-wins
-    * semantics as [[upsert]] (reference: cleaner/duckdb_writer.py:141-207).
+    * independent of total table size for small batches.
     *
     * Integrity (A13/A14) is likewise scoped to the touched buckets: a
     * duplicate or null this batch could introduce necessarily lives in a
@@ -114,12 +88,12 @@ object GoldWriter {
     *
     * Every Gold read is planned from bucket directories listed on the
     * driver, with the key schema known: no Spark job goes to file listing
-    * (which `spark.read.parquet` runs as a job once a table spans more than
+    * (which a path-based parquet read runs as a job once a table spans more than
     * 32 directories) or to footer schema inference, and the insert count
     * comes from the integrity scan instead of a cached count. In medbench
     * `incremental` (77-key weeks into a 19k-row, 64-bucket Gold on
     * local[4]) an upsert runs 11 jobs and 32-35 tasks, where reading Gold
-    * through `spark.read.parquet` ran 18-20 jobs and 231-295 tasks.
+    * through a path-based parquet read ran 18-20 jobs and 231-295 tasks.
     */
   def upsertBucketed(spark: SparkSession, batch: DataFrame, path: String,
       key: String = "crash_record_id", buckets: Int = 64): IntegrityReport = {
@@ -135,7 +109,7 @@ object GoldWriter {
     val keyField = deduped.schema(key).copy(nullable = true)
 
     val exists = tableExists(spark, path)
-    if (exists) requireLayout(spark, path, bucketed = true)
+    if (exists) requireLayout(spark, path)
     val before =
       if (exists) listBuckets(spark, path, Some(touched))
       else Map.empty[Int, Array[FileStatus]]
@@ -167,16 +141,8 @@ object GoldWriter {
       .map(_.getPath.getName).filterNot(old).distinct
     // one relation over the post-write listing serves both checks
     val gold = keyScan(spark, path, keyField, after)
-    val perKey = gold.where(col(bucketCol).isin(touched: _*))
-      .groupBy(key).agg(count(lit(1)).as("cnt"),
-        count(when(col("_metadata.file_name").isin(added: _*), 1)).as("added"))
-    val r = perKey.agg(
-      sum(when(col("cnt") > 1, 1).otherwise(0)).as("dups"),
-      sum(when(col(key).isNull, col("cnt")).otherwise(0L)).as("nulls"),
-      sum(col("added")).as("inserted"))
-      .collect()(0)
-    def orZero(i: Int) = Option(r.get(i)).map(_.toString.toLong).getOrElse(0L)
-    IntegrityReport(gold.count(), orZero(0), orZero(1), orZero(2))
+    keyChecks(gold.where(col(bucketCol).isin(touched: _*)), key, added)
+      .copy(totalRows = gold.count())
   }
 
   /** The pruned conflict scan as [[upsertBucketed]] plans it, for a string
@@ -250,30 +216,24 @@ object GoldWriter {
     }
   }
 
-  /** Fail fast when an upsert targets a table written by the other layout:
-    * a flat append onto a bucketed table (or vice versa) would silently break
-    * the pruning invariant (a key could then live outside its bucket
-    * directory, and the pruned conflict scan would miss it — duplicate keys
-    * with no error). Layout is decided by the presence of the
-    * `__key_bucket=N` partition directories, a listing-only probe.
+  /** Fail fast when the path holds a flat parquet table: a bucketed append
+    * onto it would silently break the pruning invariant (its keys live
+    * outside their bucket directories, so the pruned conflict scan would
+    * miss them — duplicate keys with no error). Layout is decided by the
+    * presence of the `__key_bucket=N` partition directories, a listing-only
+    * probe.
     */
-  private def requireLayout(spark: SparkSession, path: String, bucketed: Boolean): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
+  private def requireLayout(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val isBucketed = fs.listStatus(p).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith(s"$bucketCol="))
-    if (isBucketed != bucketed) {
-      val (found, wanted) =
-        if (isBucketed) ("bucketed (__key_bucket=N partitions)", "upsertBucketed")
-        else ("flat", "upsert")
+    if (!fs.listStatus(p).exists(s => s.isDirectory && s.getPath.getName.startsWith(s"$bucketCol=")))
       throw new IllegalStateException(
-        s"Gold table at $path has a $found layout; use GoldWriter.$wanted " +
-          "for this table (mixing layouts on one path breaks the bucket-pruned " +
-          "conflict scan and can admit duplicate keys).")
-    }
+        s"Gold table at $path has a flat layout; GoldWriter writes only the bucketed " +
+          "layout (__key_bucket=N partitions), and appending one onto the other " +
+          "breaks the bucket-pruned conflict scan and can admit duplicate keys.")
   }
 
-  /** The advisory writer mutex behind [[lockedUpsert]]: acquire via
+  /** The advisory writer mutex behind [[lockedUpsertBucketed]]: acquire via
     * exclusive-create of `<path parent>/<name>.lock`, run the body, release
     * in finally. Exclusive-create is atomic on HDFS and on `file://` here
     * (local paths go through `java.nio` `CREATE_NEW`, an O_EXCL open —
@@ -381,16 +341,11 @@ object GoldWriter {
     }
   }
 
-  /** [[upsert]] serialized through [[withTableLock]] — the multi-writer
-    * entry: concurrent cooperating writers upserting overlapping keys get
-    * first-write-wins with zero duplicate keys (GoldWriterSpec pins the
-    * contended interleaving).
+  /** [[upsertBucketed]] serialized through [[withTableLock]] — the
+    * multi-writer entry: concurrent cooperating writers upserting
+    * overlapping keys get first-write-wins with zero duplicate keys
+    * (GoldWriterSpec pins the contended interleaving).
     */
-  def lockedUpsert(spark: SparkSession, batch: DataFrame, path: String,
-      key: String = "crash_record_id"): IntegrityReport =
-    withTableLock(spark, path)(upsert(spark, batch, path, key))
-
-  /** [[upsertBucketed]] under the same advisory writer mutex. */
   def lockedUpsertBucketed(spark: SparkSession, batch: DataFrame, path: String,
       key: String = "crash_record_id", buckets: Int = 64): IntegrityReport =
     withTableLock(spark, path)(upsertBucketed(spark, batch, path, key, buckets))
@@ -410,26 +365,40 @@ object GoldWriter {
   }
 
   /** Post-write checks mirrored from the reference: duplicate-PK grouping and
-    * null-PK count (reference: cleaner/duckdb_writer.py:228-288 A13/A14).
-    * One aggregation pass over the key column only — this runs per
-    * micro-batch in the streaming path, so it must not cost three full-table
-    * scans.
+    * null-PK count (reference: cleaner/duckdb_writer.py:228-288 A13/A14)
+    * over the whole table, with `inserted` passed through. Planned like
+    * [[upsertBucketed]]'s reads: every bucket directory listed on the driver
+    * and the key's type read from one file footer there, so no job lists
+    * files or infers a schema, and one aggregation over the key column
+    * answers all three counts.
     */
   def integrityCheck(spark: SparkSession, path: String, key: String,
       inserted: Long): IntegrityReport = {
-    val perKey = spark.read.parquet(path)
-      .select(key)
-      .groupBy(key)
-      .agg(count(lit(1)).as("cnt"))
-    val r = perKey.agg(
-      sum(col("cnt")).as("total"),
-      sum(when(col("cnt") > 1, 1).otherwise(0)).as("dups"),
-      sum(when(col(key).isNull, col("cnt")).otherwise(0L)).as("nulls"))
+    requireLayout(spark, path)
+    val files = listBuckets(spark, path, None)
+    if (files.isEmpty) return IntegrityReport(0L, 0L, 0L, inserted)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(files.head._2.head, spark.sparkContext.hadoopConfiguration),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val keyField = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(footer.getFileMetaData.getSchema)(key).copy(nullable = true)
+    keyChecks(keyScan(spark, path, keyField, files), key, Nil).copy(insertedRows = inserted)
+  }
+
+  /** Rows, duplicated keys, null-key rows and rows of the `added` files among
+    * `rows` (a [[keyScan]]), in one aggregation over the key column.
+    */
+  private def keyChecks(rows: DataFrame, key: String, added: Seq[String]): IntegrityReport = {
+    val r = rows.groupBy(key)
+      .agg(count(lit(1)).as("cnt"),
+        count(when(col("_metadata.file_name").isin(added: _*), 1)).as("added"))
+      .agg(
+        sum(col("cnt")),
+        sum(when(col("cnt") > 1, 1).otherwise(0)),
+        sum(when(col(key).isNull, col("cnt")).otherwise(0L)),
+        sum(col("added")))
       .collect()(0)
-    IntegrityReport(
-      Option(r.get(0)).map(_.toString.toLong).getOrElse(0L),
-      Option(r.get(1)).map(_.toString.toLong).getOrElse(0L),
-      Option(r.get(2)).map(_.toString.toLong).getOrElse(0L),
-      inserted)
+    def orZero(i: Int) = Option(r.get(i)).map(_.toString.toLong).getOrElse(0L)
+    IntegrityReport(orZero(0), orZero(1), orZero(2), orZero(3))
   }
 }

@@ -92,10 +92,11 @@ object Ingest {
   }
 
   /** Bronze read for one run (reference: transformer/transformer.py:185-199
-    * key filtering). The path globs this run's `year=<y>/corr=<id>` directories,
-    * so listing touches only its files. The id is escaped the way the
-    * partitioned write names its directory, which also escapes every glob
-    * metacharacter. Fails if the run landed no Bronze.
+    * key filtering). It reads this run's `year=<y>/corr=<id>` directories as
+    * [[runDirs]] lists them on the driver, so listing touches only its files
+    * and every path it hands Spark exists (a glob path would be probed
+    * literally for a streaming sink's metadata, which logs a warning).
+    * Fails if the run landed no Bronze.
     *
     * `schema` is the landed frame's schema as [[inferredSchema]] gives it:
     * with it the read runs no inference job. Without it, JSON inference
@@ -106,10 +107,14 @@ object Ingest {
     * read keeps it as a null column.
     */
   def readBronze(spark: SparkSession, base: String, alias: String, corr: String,
-      schema: Option[StructType] = None): DataFrame =
+      schema: Option[StructType] = None): DataFrame = {
+    val dirs = runDirs(base, alias, corr)
+    if (dirs.isEmpty)
+      throw new java.io.FileNotFoundException(s"run $corr landed no Bronze under $base/$alias")
     schema.foldLeft(spark.read.option("basePath", s"$base/$alias"))(_.schema(_))
-      .json(s"$base/$alias/year=*/corr=${ExternalCatalogUtils.escapePathName(corr)}")
+      .json(dirs.map(_.toString): _*)
       .drop("year", "corr")
+  }
 
   /** The schema JSON inference gives a frame after a JSON write and
     * read-back: fields in name order, all nullable, integral numbers as long,
@@ -142,10 +147,19 @@ object Ingest {
   }
 
   /** Whether [[writeBronze]] landed rows of run `corr` under any year. */
-  def landedBronze(base: String, alias: String, corr: String): Boolean = {
+  def landedBronze(base: String, alias: String, corr: String): Boolean =
+    runDirs(base, alias, corr).exists(d => landed(d.toString))
+
+  /** The `year=<y>/corr=<id>` directories of run `corr`, listed on the
+    * driver. The id is escaped the way the partitioned write names its
+    * directory.
+    */
+  private def runDirs(base: String, alias: String, corr: String): Seq[java.nio.file.Path] = {
     val runDir = s"corr=${ExternalCatalogUtils.escapePathName(corr)}"
-    children(Paths.get(s"$base/$alias"))
-      .exists(y => y.getFileName.toString.startsWith("year=") && landed(y.resolve(runDir).toString))
+    children(Paths.get(s"$base/$alias")).collect {
+      case y if y.getFileName.toString.startsWith("year=") && Files.isDirectory(y.resolve(runDir)) =>
+        y.resolve(runDir)
+    }
   }
 
   private def children(dir: java.nio.file.Path): Seq[java.nio.file.Path] =

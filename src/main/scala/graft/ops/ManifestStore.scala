@@ -58,8 +58,8 @@ import org.apache.spark.sql.types._
   *    columns) are NEVER pruned — skipping is always conservative.
   *
   * Scale notes: a manifest is O(segments) lines of text — compaction keeps
-  * it short, and the coefficient is MEASURED (SCALE.md session-13,
-  * `tools/ManifestDecade`): at 10 000 live segments the manifest is
+  * it short, and the coefficient is MEASURED (SCALE.md session-13): at
+  * 10 000 live segments the manifest is
   * ~2 MB, `current()` parses it in ~16 ms, planning stays flat (~40 ms,
   * zero data-tree FS calls with v5 recorded file lists) and commit
   * latency is dominated by the segment write, not the manifest rewrite —

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Shuffle-management utilities for the 100 TB deployment shapes the rest of
-  * the engine assumes (SCALE.md): skew salting and bucketed co-located joins.
+  * the engine assumes (SCALE.md): skew salting and join routing.
   * These are result-transparent — each helper produces exactly the rows of
   * its naive counterpart, only the physical exchange pattern changes.
   */
@@ -116,26 +116,6 @@ object ScaleOps {
     }
     (joined, r)
   }
-
-  /** Write a DataFrame as a bucketed+sorted managed table: both sides of a
-    * recurring join bucketed by the same key and count join with NO exchange
-    * (each bucket pair joins locally) — the pre-shuffle trade the reference's
-    * year-partitioned layout gestures at, done properly for join keys.
-    */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write
-      .mode("overwrite")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Join two same-bucketed tables; with matching bucket specs Catalyst plans
-    * a sort-merge join with zero shuffle exchanges.
-    */
-  def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-      key: String): DataFrame =
-    spark.table(leftTable).hint("merge").join(spark.table(rightTable), Seq(key))
 
   // ------------------------------------------------------------------------
   // Exact interpolated quantiles in O(1) executor memory.

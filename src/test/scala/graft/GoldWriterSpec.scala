@@ -11,25 +11,25 @@ class GoldWriterSpec extends SparkSpec {
   test("upsert inserts new keys, skips existing, drops null keys, dedups within batch") {
     val path = tmpDir("gold") + "/gold"
     val b1 = Seq(("c1", 1), ("c2", 2)).toDF("crash_record_id", "v")
-    val r1 = GoldWriter.upsert(spark, b1, path)
+    val r1 = GoldWriter.upsertBucketed(spark, b1, path)
     assert(r1.insertedRows == 2 && r1.totalRows == 2)
 
     val b2 = Seq(("c2", 99), ("c3", 3), ("c3", 3), (null, 4))
       .toDF("crash_record_id", "v")
-    val r2 = GoldWriter.upsert(spark, b2, path)
+    val r2 = GoldWriter.upsertBucketed(spark, b2, path)
     assert(r2.insertedRows == 1, "only c3 is new; c2 conflict-skipped, dup+null dropped")
     assert(r2.totalRows == 3 && r2.duplicateKeys == 0 && r2.nullKeys == 0)
 
     // first-write-wins: c2 keeps its original value
     val c2 = spark.read.parquet(path).where($"crash_record_id" === "c2").collect()(0)
-    assert(c2.getInt(1) == 2)
+    assert(c2.getAs[Int]("v") == 2)
   }
 
   test("upsert is idempotent: replaying the same batch is a no-op (ST4 at-least-once safety)") {
     val path = tmpDir("gold2") + "/gold"
     val b = Seq(("c1", 1), ("c2", 2)).toDF("crash_record_id", "v")
-    GoldWriter.upsert(spark, b, path)
-    val replay = GoldWriter.upsert(spark, b, path)
+    GoldWriter.upsertBucketed(spark, b, path)
+    val replay = GoldWriter.upsertBucketed(spark, b, path)
     assert(replay.insertedRows == 0 && replay.totalRows == 2)
   }
 
@@ -57,27 +57,22 @@ class GoldWriterSpec extends SparkSpec {
     // key is null, so nothing is written and the table never comes into
     // existence — the post-write report scan must not read the absent path.
     val nulls = Seq((null: String, 1), (null: String, 2)).toDF("crash_record_id", "v")
-    val rFlat = GoldWriter.upsert(spark, nulls, tmpDir("goldnf") + "/gold")
-    assert(rFlat == GoldWriter.IntegrityReport(0L, 0L, 0L, 0L))
-    val rBuck = GoldWriter.upsertBucketed(spark, nulls, tmpDir("goldnb") + "/gold")
-    assert(rBuck == GoldWriter.IntegrityReport(0L, 0L, 0L, 0L))
+    val r = GoldWriter.upsertBucketed(spark, nulls, tmpDir("goldnb") + "/gold")
+    assert(r == GoldWriter.IntegrityReport(0L, 0L, 0L, 0L))
   }
 
   test("layout mismatch on one path fails fast instead of corrupting the bucket invariant") {
     val path = tmpDir("goldmix") + "/gold"
-    val b = Seq(("c1", 1)).toDF("crash_record_id", "v")
-    GoldWriter.upsert(spark, b, path) // flat layout
-    val e1 = intercept[IllegalStateException] {
+    Seq(("c1", 1)).toDF("crash_record_id", "v").write.parquet(path) // flat layout
+    val e = intercept[IllegalStateException] {
       GoldWriter.upsertBucketed(spark, Seq(("c2", 2)).toDF("crash_record_id", "v"), path)
     }
-    assert(e1.getMessage.contains("flat"))
-
-    val pathB = tmpDir("goldmix2") + "/gold"
-    GoldWriter.upsertBucketed(spark, b, pathB) // bucketed layout
-    val e2 = intercept[IllegalStateException] {
-      GoldWriter.upsert(spark, Seq(("c2", 2)).toDF("crash_record_id", "v"), pathB)
-    }
-    assert(e2.getMessage.contains("bucketed"))
+    assert(e.getMessage.contains("flat"))
+    // the integrity report refuses it too, rather than reading it as empty
+    assert(intercept[IllegalStateException] {
+      GoldWriter.integrityCheck(spark, path, "crash_record_id", 0L)
+    }.getMessage.contains("flat"))
+    assert(spark.read.parquet(path).count() == 1L, "the flat table is left as it was")
   }
 
   test("upsertBucketed conflict scan reads a strict subset of Gold files (partition pruning)") {
@@ -156,10 +151,10 @@ class GoldWriterSpec extends SparkSpec {
     assert(waitedMs >= 300, s"contender must block until release, waited only ${waitedMs}ms")
   }
 
-  test("lockedUpsert under contention: overlapping concurrent batches, zero duplicate keys") {
+  test("lockedUpsertBucketed under contention: overlapping concurrent batches, zero duplicate keys") {
     val path = tmpDir("goldlock2") + "/gold"
     // seed the table so both contenders take the existing-keys anti-join path
-    GoldWriter.lockedUpsert(spark, Seq(("c0", 0)).toDF("crash_record_id", "v"), path)
+    GoldWriter.lockedUpsertBucketed(spark, Seq(("c0", 0)).toDF("crash_record_id", "v"), path)
     val overlapping = Seq(
       Seq(("c0", 10), ("c1", 11), ("c2", 12)),
       Seq(("c1", 21), ("c2", 22), ("c3", 23)))
@@ -167,7 +162,7 @@ class GoldWriterSpec extends SparkSpec {
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = overlapping.map { rows =>
       new Thread(() =>
-        try reports.add(GoldWriter.lockedUpsert(
+        try reports.add(GoldWriter.lockedUpsertBucketed(
           spark, rows.toDF("crash_record_id", "v"), path))
         catch { case t: Throwable => errors.add(t) })
     }
@@ -180,7 +175,7 @@ class GoldWriterSpec extends SparkSpec {
     assert(table.groupBy("crash_record_id").count().where($"count" > 1).count() == 0L,
       "the lock must prevent the double-insert race on overlapping keys")
     // first-write-wins held for the seeded key regardless of interleaving
-    assert(table.where($"crash_record_id" === "c0").collect()(0).getInt(1) == 0)
+    assert(table.where($"crash_record_id" === "c0").collect()(0).getAs[Int]("v") == 0)
   }
 
   test("a stale lock from a crashed writer is broken and the upsert proceeds") {

@@ -35,4 +35,19 @@ class GraftSessionSpec extends SparkSpec {
       .map(root.relativize(_).toString).toSeq.sorted
     assert(offenders.isEmpty, offenders.mkString(", "))
   }
+
+  test("src/main defines exactly five entry points: Bench, Verify, Probe, ScaleUp and ReplicaGen") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val kept = Set("graft/Bench.scala", "graft/Verify.scala", "graft/tools/Probe.scala",
+      "graft/tools/ScaleUp.scala", "graft/tools/ReplicaGen.scala")
+    val mains = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter { p =>
+        val src = Files.readString(p)
+        src.contains("def main(") || src.contains("extends App")
+      }
+      .map(root.relativize(_).toString).toSet
+    assert(mains == kept, s"unexpected: ${(mains -- kept).toSeq.sorted}; missing: ${(kept -- mains).toSeq.sorted}")
+  }
 }

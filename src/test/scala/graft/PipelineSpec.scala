@@ -207,6 +207,53 @@ class PipelineSpec extends SparkSpec {
     assert(jobs.size <= 26, s"${jobs.size} jobs: $byLayer")
   }
 
+  test("an op that lands nothing reports Gold as it stands, with no listing job, and changes nothing") {
+    val data = weekly(weeks = 2, perWeek = 60, seed = 13)
+    val base = tmpDir("empty-op")
+    (0 to 1).foreach(w => assert(streamWeek(data, base, w).report.insertedRows == 60))
+    val gold = new java.io.File(s"$base/gold")
+    def files = gold.listFiles().toSeq.flatMap(d => Option(d.listFiles()).toSeq.flatten.map(_.getPath)).sorted
+    val buckets = gold.list().count(_.startsWith(s"${graft.gold.GoldWriter.bucketCol}="))
+    // more bucket directories than Spark's parallel-discovery threshold, so
+    // a plain spark.read.parquet of Gold would start a listing job
+    assert(buckets > 32, s"Gold spans $buckets bucket directories")
+    val (goldBefore, wmBefore) = (files, graft.ingest.Ingest.loadWatermark(s"$base/watermarks/last.txt"))
+
+    // week 1 again, under a new run id: the watermark filters every row out
+    val end = week0.plusDays(14L)
+    val (res, jobs) = jobsOf(Pipeline.run(spark, streamingJob, rawBefore(data, end), base,
+      "replay", end.toLocalDate))
+    assert(res.silverRows == 0)
+    assert(res.report == graft.gold.GoldWriter.IntegrityReport(120L, 0L, 0L, 0L), res.report.toString)
+    assert(res.watermark == wmBefore && wmBefore.nonEmpty)
+    assert(graft.ingest.Ingest.loadWatermark(s"$base/watermarks/last.txt") == wmBefore)
+    assert(files == goldBefore, "an empty op must not write Gold")
+    val listing = jobs.filter(_.startsWith("Listing leaf files"))
+    assert(listing.isEmpty, s"the empty op's integrity check listed files as jobs: $listing")
+  }
+
+  test("a run reads its Bronze without a streaming-sink metadata warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("pipeline-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.contains("FileStreamSink"))
+          warnings.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    val res =
+      try Pipeline.run(spark, JobSpec.parse(backfillJson), rawData, tmpDir("no-warn"), "run-1",
+        java.time.LocalDate.parse("2024-02-01"))
+      finally { root.removeAppender(capture); capture.stop() }
+    assert(res.report.insertedRows == 2)
+    assert(warnings.isEmpty, warnings.toString)
+  }
+
   test("a new week's medians and timestamps reuse the cleaner's generated classes") {
     val data = weekly(weeks = 3, perWeek = 60, seed = 12)
     val base = tmpDir("recompile")

@@ -188,8 +188,8 @@ class PqSpec extends SparkSpec {
       m2.codebooks.map(_.map(_.toSeq).toSeq).toSeq, "codebooks must be seed-deterministic")
     // recall@1 against exact squared-L2 ground truth: the trained index must
     // resolve the 5 planted clusters; a random-constant model of the same
-    // budget is the floor the PqRecallProbe tool measures (~0.03 at replica
-    // scale) — here we pin the trained side's absolute quality instead
+    // budget is the floor SCALE.md records (~0.03 recall at replica scale) —
+    // here we pin the trained side's absolute quality instead
     val encoded = Pq.ivfPqEncode(df, "id", "v", c1, m1).cache()
     val queries = df.where(col("id") < 20)
     val approx = Pq.ivfPqTopK(encoded, queries, "id", "v", c1, m1, nprobe = 2, k = 1)

@@ -46,9 +46,9 @@ class PropertiesSpec extends SparkSpec {
       if (rows.nonEmpty) {
         val path = tmpDir("prop-gold") + "/gold"
         val batch = rows.toDF("crash_record_id", "v")
-        GoldWriter.upsert(spark, batch, path)
+        GoldWriter.upsertBucketed(spark, batch, path)
         val after1 = spark.read.parquet(path).orderBy("crash_record_id", "v").collect().toSeq
-        val r2 = GoldWriter.upsert(spark, batch, path)
+        val r2 = GoldWriter.upsertBucketed(spark, batch, path)
         val after2 = spark.read.parquet(path).orderBy("crash_record_id", "v").collect().toSeq
         assert(r2.insertedRows == 0)
         assert(after1 == after2)

@@ -118,29 +118,6 @@ class ScaleOpsSpec extends SparkSpec {
     assert(refined == got)
   }
 
-  test("bucketed tables join with zero shuffle exchanges") {
-    val db = "graft_test"
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    try {
-      val orders = (1 to 1000).map(i => (i.toLong, s"status${i % 3}")).toDF("k", "status")
-      val items = (1 to 3000).map(i => ((i % 1000 + 1).toLong, i * 1.0)).toDF("k", "amt")
-      ScaleOps.writeBucketed(orders, s"$db.orders_b", "k", buckets = 8)
-      ScaleOps.writeBucketed(items, s"$db.items_b", "k", buckets = 8)
-
-      val joined = ScaleOps.bucketedJoin(spark, s"$db.orders_b", s"$db.items_b", "k")
-      assert(joined.count() == 3000)
-
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ, plan:\n$plan")
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join must not shuffle, plan:\n$plan")
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $db.orders_b")
-      spark.sql(s"DROP TABLE IF EXISTS $db.items_b")
-      spark.sql(s"DROP DATABASE IF EXISTS $db")
-    }
-  }
-
   test("quotaSampleByGroup == row_number semantics on random data (small groups, zero quotas)") {
     import spark.implicits._
     // 400 rows over 5 groups with unique string rank keys; quotas include a

@@ -42,7 +42,7 @@ class StreamingSpec extends SparkSpec {
 
     val q = Incremental.fileStream(spark, dir, schema, "crash_date",
       "crash_record_id", chk) { (batch, _) =>
-      graft.gold.GoldWriter.upsert(spark, batch, out)
+      graft.gold.GoldWriter.upsertBucketed(spark, batch, out)
       ()
     }
     q.awaitTermination(120000)
@@ -53,7 +53,7 @@ class StreamingSpec extends SparkSpec {
     // Second pass over the same directory: checkpoint offsets make it a no-op.
     val q2 = Incremental.fileStream(spark, dir, schema, "crash_date",
       "crash_record_id", chk) { (batch, _) =>
-      graft.gold.GoldWriter.upsert(spark, batch, out)
+      graft.gold.GoldWriter.upsertBucketed(spark, batch, out)
       ()
     }
     q2.awaitTermination(120000)

@@ -7,8 +7,8 @@ import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
   * manifest-planning claim: at 10⁵ segments the cost that kills object-
   * store planners is not bytes but `listStatus`/`getFileStatus`
   * round-trips, so the claim "planning makes zero data-tree metadata
-  * calls" must be assertable, not asserted ([[ScanSkipProbe]] reports the
-  * meter beside files-opened; ManifestZeroListingSpec pins it).
+  * calls" must be assertable, not asserted (ManifestZeroListingSpec and
+  * ManifestSqlSpec pin it).
   *
   * Register with `fs.countfs.impl = graft.tools.CountingFs` in the
   * session's hadoopConfiguration and address paths as `countfs:/...`.
