@@ -83,13 +83,20 @@ object Pipeline {
       step("ingest", s"enrich:$alias") {
         selected.write.mode("append").option("compression", "gzip").json(dir)
       }
-      if (Ingest.landed(dir)) Some(alias -> Ingest.inferredSchema(selected.schema)) else None
+      if (Ingest.landed(dir)) Some(alias -> Ingest.inferredSchema(selected.schema))
+      else {
+        // The write left only empty part files and _SUCCESS: remove them so
+        // no later listing or reader meets them.
+        val p = new org.apache.hadoop.fs.Path(dir)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+        None
+      }
     }.toMap
 
     // ---- transform: partition-pruned read of this run, silver merge (A1-A3,
     //      J2/J3, F13). An enrich that landed nothing (its semi-join kept no
-    //      rows, so only _SUCCESS was written) reads as an empty frame, the
-    //      way the reference tolerates empty pages (transformer.py:201-252
+    //      rows, and its landing was removed above) reads as an empty frame,
+    //      the way the reference tolerates empty pages (transformer.py:201-252
     //      is_empty guards).
     def readEnrich(i: Int): DataFrame =
       job.enrich.lift(i).map(e => e.alias.getOrElse(e.id)).flatMap(a =>
@@ -102,9 +109,9 @@ object Pipeline {
     step("silver", "write")(silver.write.mode("overwrite").option("header", "true").csv(silverPath))
 
     // ---- clean: rule chain + idempotent Gold upsert (P5-F10, J5, A13/A14).
-    // Bucketed layout, same as the streaming path: the conflict anti-join
-    // prunes to the key-hash partitions each run touches. The Silver CSV
-    // reads back with every column a string, as a header-only read gives it.
+    // Bucketed layout: the conflict anti-join prunes to the key-hash
+    // partitions each run touches. The Silver CSV reads back with every
+    // column a string, as a header-only read gives it.
     val silverBack = spark.read.option("header", "true")
       .schema(StructType(silver.columns.map(StructField(_, StringType))))
       .csv(silverPath)

@@ -26,9 +26,8 @@ object ExtensionQueries {
     */
   private val tokExpr = "array_distinct(split(lower(text), ' '))"
 
-  /** Spark-side shingle/minhash expressions live in [[graft.ext.MinHash]]
-    * (shared with the incremental [[graft.ext.DedupStore]]); the SQL below is
-    * the DuckDB mirror of the same 3-gram shingle rule.
+  /** Spark-side shingle/minhash expressions live in [[graft.ext.MinHash]];
+    * the SQL below is the DuckDB mirror of the same 3-gram shingle rule.
     */
   private val shingleSql =
     """CASE WHEN len(string_split(lower(text), ' ')) < 3 THEN [lower(text)]

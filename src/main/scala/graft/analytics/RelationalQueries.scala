@@ -915,7 +915,7 @@ object RelationalQueries {
     // ----------------------------------------------------- streaming (batch analog)
     Q(
       "st1_tumbling_window",
-      "Event-time tumbling 1h window aggregate — batch analog of the incremental watermark flow (extractor/main.go:583-599; Structured Streaming variant in graft.streaming)",
+      "Event-time tumbling 1h window aggregate — batch analog of the incremental watermark flow (extractor/main.go:583-599)",
       (s, d) =>
         events(s, d)
           .groupBy(date_trunc("hour", col("ts")).as("win"), col("event_type"))

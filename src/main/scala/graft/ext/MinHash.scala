@@ -3,9 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Shared MinHash-LSH signature computation (the d2/d6 pipeline's core,
-  * also consumed by [[DedupStore]] for incremental dedup): 3-gram word
-  * shingles -> 8 MinHash permutations -> 4 LSH bands.
+/** Shared MinHash-LSH signature computation (the d2/d6 pipeline's core):
+  * 3-gram word shingles -> 8 MinHash permutations -> 4 LSH bands.
   *
   * Unigram token sets are degenerate on a small shared vocabulary (every
   * document contains the globally-min-hashing token, so MinHash buckets

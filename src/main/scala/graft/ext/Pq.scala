@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -275,62 +275,6 @@ object Pq {
     qRows
   }
 
-  /** Probe a cell-partitioned IVFPQ code store (see
-    * [[graft.streaming.Incremental.streamingVectorIndex]]): the union of the
-    * query batch's probe cells becomes a PARTITION filter on the store scan,
-    * so a probe reads ~nprobe/nCells of the index FILES — the sub-linear
-    * scan-volume story survives the filesystem layout, not just the
-    * in-memory plan. Scoring then proceeds exactly as [[ivfPqTopK]] (whose
-    * per-query probe rule re-filters within the unioned set); the query
-    * batch is collected ONCE and shared between probe-set computation and
-    * scoring.
-    */
-  def probeIndex(indexPath: String, queries: DataFrame, idCol: String, vecCol: String,
-      coarse: Array[Array[Float]], model: Model, nprobe: Int, k: Int): DataFrame = {
-    require(nprobe >= 1 && nprobe <= coarse.length,
-      s"nprobe $nprobe out of range for ${coarse.length} cells")
-    val spark = queries.sparkSession
-    val qRows = collectQueries(queries, idCol, vecCol, model, "probeIndex")
-    val probed = qRows.flatMap { case (_, qv) =>
-      val d = cellDistances(qv, coarse)
-      val thr = d.sorted.apply(nprobe - 1)
-      d.indices.filter(c => d(c) <= thr)
-    }.distinct.sorted
-    val encoded = spark.read.parquet(indexPath)
-      .where(col("cell").isin(probed.map(Integer.valueOf): _*))
-    ivfPqTopKRows(encoded, qRows, coarse, model, nprobe, k)
-  }
-
-  /** Fold a [[graft.streaming.Incremental.streamingVectorIndex]] store's
-    * `batch=<id>/cell=<c>` micro-batch directories into ONE consolidated
-    * `batch=-1/cell=<c>` tree: after a year of 5-minute ticks the probe's
-    * file listing walks ~10^5 batch directories whose per-dir overhead
-    * dominates the (cell-pruned) scan itself; consolidation makes the
-    * listing O(cells) again. The sentinel batch id keeps the directory
-    * depth uniform — a RESTARTED stream lays new `batch=<id>` directories
-    * beside it and partition discovery still works (a flat `cell=<c>`
-    * layout would conflict with them); real micro-batch ids are >= 0, so
-    * the replay-overwrite contract never collides with the sentinel, and
-    * the next maintenance window simply folds again.
-    *
-    * STOPPED-STREAM ONLY, like every compaction of this store
-    * ([[graft.streaming.Incremental]]): consolidating a batch directory the
-    * checkpoint has not committed turns its replay into a duplicate append,
-    * and the rename-aside swap has a reader-visible gap
-    * ([[graft.ops.ScaleOps.compactParquet]]).
-    * [[probeIndex]] results are bitwise identical before/after
-    * (StreamingSpec pins this): scoring reads only (id, cell, codes) and
-    * the TopK re-rank is order-independent.
-    *
-    * Returns (files before, files after).
-    */
-  def consolidateIndex(spark: SparkSession, indexPath: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): (Long, Long) =
-    graft.ops.ScaleOps.compactParquet(spark, indexPath, targetFileBytes,
-      partitionBy = Seq("batch", "cell"),
-      transform = df => df.select(col("id"), col("codes"),
-        lit(-1).as("batch"), col("cell")))
-
   /** ADC top-k over an IVFPQ index: per query rank the coarse cells by
     * squared distance, keep every cell within the `nprobe`-th smallest
     * distance (the tie-stable probe rule), build one residual LUT per
@@ -363,10 +307,10 @@ object Pq {
     val scored = encoded.select(col("id"), col("cell"), col("codes")).mapPartitions { it =>
       val ds = model.subDim
       // Residual LUTs build LAZILY per (query, cell) on first encounter in
-      // this partition: a cell-partitioned store (partition pruning, or a
-      // consolidated index) pays nQueries x |cells present| LUT builds per
-      // partition, not nQueries x all-probed-cells. `probed` alone answers
-      // the cheap membership test.
+      // this partition: a cell-partitioned store (partition pruning) pays
+      // nQueries x |cells present| LUT builds per partition, not
+      // nQueries x all-probed-cells. `probed` alone answers the cheap
+      // membership test.
       val qstate = qB.value.map { case (qid, qv) =>
         val cellD = cellDistances(qv, coarse)
         val thr = cellD.sorted.apply(nprobe - 1)

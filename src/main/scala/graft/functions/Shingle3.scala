@@ -20,10 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * short-doc fallback joins all tokens with a single space, skipping nulls
   * (`concat_ws` semantics).
   *
-  * Why: the shingle projection runs under every near-dup operator (d2/d4/d6,
-  * DedupStore) and the lambda chain interprets two lambdas and allocates an
-  * intermediate gram per position before deduplication — with [[MinHash8]]
-  * it is the dedup family's hot path.
+  * Why: the shingle projection runs under every near-dup operator (d2/d4/d6)
+  * and the lambda chain interprets two lambdas and allocates an intermediate
+  * gram per position before deduplication — with [[MinHash8]] it is the
+  * dedup family's hot path.
   */
 case class Shingle3(child: Expression) extends UnaryExpression {
 

@@ -113,25 +113,20 @@ object Cleaner {
   /** The full rule chain P5 -> F2-F8 -> F9 (median/constant impute) -> F10
     * (caps), in the reference's order — order matters: is_weekend/hour_bin are
     * derived BEFORE their source columns are median-imputed.
-    *
-    * `passthrough` names extra columns (e.g. the Silver merge's veh_/ppl_
-    * roll-up aggregates) carried through the chain untouched by any rule —
-    * the streaming 3-entity path uses it so enrich columns survive into Gold.
     */
-  def cleanData(silver: DataFrame, passthrough: Seq[String] = Nil): DataFrame = {
+  def cleanData(silver: DataFrame): DataFrame = {
     // P5: keep-list + missing-column null patch (cleaning_rules.py:31-51),
     // with the numeric casts (the pandas cleaner receives CSV-inferred
-    // numerics). Column order: present, passthrough, patched.
+    // numerics). Column order: present, patched.
     val numericDouble = Set(
       "beat_of_occurrence", "crash_day_of_week", "crash_hour", "num_units",
       "injuries_total", "latitude", "longitude", "posted_speed_limit")
     val present = reqCols.filter(silver.columns.contains)
     val absent  = reqCols.filterNot(silver.columns.contains)
-    val pass    = passthrough.filter(silver.columns.contains).filterNot(reqCols.contains)
     def typedCol(c: String, src: Column): Column =
       (if (numericDouble(c)) src.cast("double") else src).as(c)
     val typed = silver.select(
-      present.map(c => typedCol(c, col(c))) ++ pass.map(col) ++
+      present.map(c => typedCol(c, col(c))) ++
         absent.map(c => typedCol(c, lit(null).cast("string"))): _*)
 
     // P6-F9a in one projection over the typed, pre-imputation values:
@@ -139,8 +134,8 @@ object Cleaner {
     // F7 grid id ("nan" replicates pandas str(NaN)), F8 whitelist recodes
     // (null -> OTHER), F9a injuries_total -> 0. The filters drop null dates
     // (P6, before and after normalization) and apply the bbox (P7, null
-    // passthrough); the projection is deterministic, so filtering after it
-    // keeps the same rows.
+    // coordinates pass); the projection is deterministic, so filtering after
+    // it keeps the same rows.
     val latBin = round(col("latitude"), 2)
     val lngBin = round(col("longitude"), 2)
     val rules: Map[String, Column] =
@@ -198,8 +193,7 @@ object Cleaner {
     * metadata (reference: cleaner/duckdb_writer.py:57-103 DDL + :119-131
     * corr_id/inserted_at/updated_at).
     */
-  def toGold(cleaned: DataFrame, corrId: String, now: java.sql.Timestamp,
-      passthrough: Seq[String] = Nil): DataFrame = {
+  def toGold(cleaned: DataFrame, corrId: String, now: java.sql.Timestamp): DataFrame = {
     val intCols = Set(
       "crash_day_of_week", "crash_hour", "is_weekend", "beat_of_occurrence",
       "num_units", "posted_speed_limit", "hit_and_run_i",
@@ -212,8 +206,7 @@ object Cleaner {
     val meta = Map(
       "corr_id" -> lit(corrId), "inserted_at" -> col("__now"), "updated_at" -> col("__now"))
     val declared = graft.model.Schemas.gold.fieldNames.toSeq
-    val extras = passthrough.filter(cleaned.columns.contains).filterNot(declared.contains)
-    cleaned.crossJoin(stamp.hint("shuffle_replicate_nl")).select((declared ++ extras).map { c =>
+    cleaned.crossJoin(stamp.hint("shuffle_replicate_nl")).select(declared.map { c =>
       meta.getOrElse(c, if (intCols(c)) col(c).cast("int") else col(c)).as(c)
     }: _*)
   }

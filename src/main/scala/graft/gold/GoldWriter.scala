@@ -124,9 +124,9 @@ object GoldWriter {
       toInsert.write.mode(SaveMode.Append).partitionBy(bucketCol).parquet(path)
     deduped.unpersist()
 
-    // First micro-batch whose keys are all null: nothing was ever written,
-    // so the report scans below would throw AnalysisException (and, in the
-    // streaming sink, kill the query). Report an empty table instead.
+    // First batch whose keys are all null: nothing was ever written, so the
+    // report scans below would throw AnalysisException. Report an empty
+    // table instead.
     val after = listBuckets(spark, path, None)
     if (after.isEmpty) return IntegrityReport(0L, 0L, 0L, 0L)
 

@@ -9,9 +9,9 @@ import org.apache.spark.sql.types._
   * MANIFEST listing the table's live segments; readers resolve every scan
   * through the latest manifest. This is the unification the maintenance
   * family previously approximated one-off — [[graft.gold.GoldWriter]]'s
-  * check-then-append window, [[ScaleOps.compactParquet]] /
-  * [[ScaleOps.deleteKeys]]' rename-aside swaps, and the advisory writer
-  * lock each defended their own crash window; here ONE protocol covers all
+  * check-then-append window, [[ScaleOps.deleteKeys]]' rename-aside swap,
+  * and the advisory writer lock each defended their own crash window;
+  * here ONE protocol covers all
   * of them (the mini table-format discipline of Delta/Iceberg commit logs,
   * re-derived for this engine's needs):
   *
@@ -647,10 +647,9 @@ object ManifestStore {
   /** Fail fast when a commit's columns diverge from the table's: a
     * multi-segment read resolves its schema from ONE segment's files, so a
     * mismatched segment would silently null-fill (or break) every column
-    * the two sides don't share — the DedupStore pinned-schema posture,
-    * applied at the only place new files can enter the table. Types are
-    * compared by column NAME set + per-name dataType; nullability is not a
-    * conflict (parquet unions it fine).
+    * the two sides don't share. The check runs at the only place new files
+    * can enter the table. Types are compared by column NAME set + per-name
+    * dataType; nullability is not a conflict (parquet unions it fine).
     */
   private def requireCompatible(spark: SparkSession, path: String,
       snap: Snapshot, df: DataFrame, allowNew: Boolean = false): Unit = {
@@ -1446,9 +1445,8 @@ object ManifestStore {
     * version: the staged segment is RENAMED into
     * `quarantineDir/batch=<id>/` (zero re-write — it holds exactly the
     * batch's rows) with an `_expectations.txt` sidecar listing the
-    * failing checks, re-drivable after repair exactly like
-    * [[graft.streaming.Incremental.withDeadLetter]]'s layout. An empty
-    * batch trivially passes (no-op commit).
+    * failing checks, re-drivable after repair. An empty batch trivially
+    * passes (no-op commit).
     */
   def appendChecked(spark: SparkSession, df: DataFrame, path: String,
       checks: Seq[Expectations.Check], quarantineDir: String,
@@ -1550,10 +1548,12 @@ object ManifestStore {
       var attempt = 0
       while (attempt < MaxRetries) {
         val base = current(spark, path).getOrElse(Snapshot(0L, Nil))
-        val fresh =
+        // on an empty table the batch itself is fresh: it is already cached,
+        // and unpersisting it here would drop the cache a retry reuses
+        val freshC =
           if (base.segments.isEmpty) deduped
           else deduped.join(readAt(spark, path, base).select(key), Seq(key), "left_anti")
-        val freshC = fresh.cache()
+            .cache()
         try {
           val nFresh = freshC.count()
           if (nFresh == 0L)
@@ -1569,7 +1569,7 @@ object ManifestStore {
               return UpsertReport(nFresh, nDropped, nBatch - nFresh, base.version + 1)
             case _ => () // lost the race: recompute against the winner
           }
-        } finally freshC.unpersist()
+        } finally if (freshC ne deduped) freshC.unpersist()
         attempt += 1
       }
       throw new IllegalStateException(
@@ -1667,166 +1667,6 @@ object ManifestStore {
     val snap = current(spark, path).get
     val after = if (snap.segments.isEmpty) 0L else readAt(spark, path, snap).count()
     (before - after, after)
-  }
-
-  /** Change data feed, derived from manifest diffs alone — no change
-    * files, no format additions: for every version in `(fromExclusive,
-    * toInclusive]` the consecutive snapshots are diffed, and MONOTONE
-    * commits stream as events — segments added ([[append]]/[[upsert]])
-    * emit their rows as `insert`s, delete sidecars added
-    * ([[deleteKeysMergeOnRead]]) emit their keys as `delete`s (non-key
-    * columns null — a key-only sidecar carries no row payload). Columns:
-    * the table's, plus `_change_type` and `_commit_version`. A version
-    * that REMOVED a segment (merge/compact/cluster/COW delete — any
-    * rewrite) cannot be expressed as row events from the manifest and
-    * THROWS with the version number: the consumer full-refreshes from
-    * that snapshot and resumes the feed after it (the same contract as a
-    * Delta table without CDF enabled). Versions must still resolve —
-    * [[vacuum]]'s grace period bounds how far back a feed can start.
-    *
-    * Scale shape: the feed reads ONLY the segments/sidecars the range
-    * added — cost tracks the change volume, never the table.
-    */
-  def changes(spark: SparkSession, path: String,
-      fromExclusive: Long, toInclusive: Long): DataFrame = {
-    require(fromExclusive < toInclusive,
-      s"empty change range ($fromExclusive, $toInclusive]")
-    val root = new Path(path)
-    def snapOf(v: Long): Snapshot =
-      if (v == 0L) Snapshot(0L, Nil) // before the first commit: empty table
-      else snapshotAt(spark, path, v).getOrElse(
-        throw new IllegalStateException(
-          s"version $v at $path is not resolvable — vacuumed past retention? " +
-            "The change feed needs every version in range."))
-    val feedSnap = snapOf(toInclusive)
-    val schema = feedSnap.schema.map(visible)
-      .getOrElse(readAt(spark, path, feedSnap).schema)
-    // every per-version frame is null-padded to the feed's OWN schema (the
-    // toInclusive one): a range spanning a mergeSchema append reads early
-    // versions under their narrower schemas, and a strict union across
-    // them would otherwise throw on the column-set mismatch — evolution is
-    // a monotone commit the feed supports, so pad exactly like the
-    // delete branch always has
-    def padTo(df: DataFrame): DataFrame =
-      schema.fields.foldLeft(df) { (d, f) =>
-        if (d.columns.contains(f.name)) d
-        else d.withColumn(f.name, lit(null).cast(f.dataType))
-      }.select(schema.fieldNames.map(col): _*)
-    val perVersion = (fromExclusive until toInclusive).map { v0 =>
-      val (a, b) = (snapOf(v0), snapOf(v0 + 1))
-      val aNames = a.entries.map(_.name).toSet
-      val removed = aNames -- b.entries.map(_.name).toSet
-      require(removed.isEmpty,
-        s"version ${v0 + 1} at $path rewrote segments (${removed.take(3).mkString(", ")}…) — " +
-          "row-level changes are not derivable from the manifest; full-refresh " +
-          s"from snapshot ${v0 + 1} and resume the feed after it")
-      val addedSegs = b.entries.filterNot(e => aNames(e.name))
-      val aDels = a.deletes.map(_.name).toSet
-      val addedDels = b.deletes.filterNot(d => aDels(d.name))
-      // every frame is read under the FEED snapshot's schema, not the
-      // per-version one: physical names are stable across renames, so the
-      // feed-final mapping reads any in-range segment correctly (renamed
-      // columns alias, widened types promote, later-added columns
-      // null-fill) and a rename/widen commit itself is pure metadata —
-      // zero added segments, an EMPTY change frame, feed uninterrupted
-      val inserts =
-        if (addedSegs.isEmpty) Nil
-        else Seq(padTo(
-          readSegs(spark, feedSnap, addedSegs.map(e => new Path(root, e.name).toString)))
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_commit_version", lit(v0 + 1)))
-      val rev = p2l(feedSnap.schema)
-      val deletes = addedDels.map { d =>
-        // the sidecar column is physical; surface it under the feed's
-        // logical name
-        padTo(spark.read.parquet(new Path(root, d.name).toString)
-            .select(col(d.keyCol).as(rev.getOrElse(d.keyCol, d.keyCol))))
-          .withColumn("_change_type", lit("delete"))
-          .withColumn("_commit_version", lit(v0 + 1))
-      }
-      inserts ++ deletes
-    }
-    val all = perVersion.flatten
-    if (all.isEmpty)
-      readAt(spark, path, snapOf(toInclusive)).where(lit(false))
-        .withColumn("_change_type", lit(""))
-        .withColumn("_commit_version", lit(0L))
-    else all.reduce(_ unionByName _)
-  }
-
-  /** Cursor-tracked incremental consumption of the [[changes]] feed (one
-    * consumer per cursor): reads the last-consumed version, applies the
-    * pending change batch, then advances the cursor by CREATING a new
-    * generation file `<cursor>.g<n>` — the previous generation is never
-    * touched until the new one is durable, so there is no torn-advance
-    * window at all: a crash mid-advance leaves a garbage/absent new
-    * generation and the reader falls back to the previous one
-    * (re-delivery, never a reset to version 0 — which, after early
-    * versions vacuum, would permanently wedge the consumer). A flat
-    * `cursorPath` file, when present, OVERRIDES the generation chain: it
-    * is either a pre-migration legacy cursor or an explicit operator
-    * action (full-refresh reset, deliberate rollback for redelivery) —
-    * the next successful poll folds it into a new generation and removes
-    * it. At-least-once by construction: a
-    * crash AFTER apply but BEFORE the advance re-delivers the same batch —
-    * `apply` must be idempotent (the foreachBatch contract every sink in
-    * this engine already meets). Returns the versions consumed (empty =
-    * nothing new). A rewrite in range propagates [[changes]]' loud
-    * failure: reset the cursor to the rewrite version after
-    * full-refreshing downstream.
-    */
-  def pollChanges(spark: SparkSession, path: String, cursorPath: String)(
-      apply: DataFrame => Unit): Seq[Long] = {
-    val cur = new Path(cursorPath)
-    val fs = fsOf(spark, cur)
-    val parent = cur.getParent
-    val base = cur.getName
-    def genOf(name: String): Option[Long] =
-      if (name.startsWith(base + ".g"))
-        scala.util.Try(name.stripPrefix(base + ".g").toLong).toOption
-      else None
-    def readLong(p: Path): Option[Long] =
-      try {
-        val in = fs.open(p)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        scala.util.Try(s.toLong).toOption
-      } catch { case _: java.io.IOException => None }
-    val gens: Seq[(Long, Path)] =
-      if (parent == null || !fs.exists(parent)) Nil
-      else fs.listStatus(parent).toSeq
-        .flatMap(st => genOf(st.getPath.getName).map(_ -> st.getPath))
-    // newest PARSEABLE generation: a torn advance's garbage file is skipped
-    val genVal = gens.sortBy(-_._1).iterator
-      .map { case (_, p) => readLong(p) }
-      .collectFirst { case Some(v) => v }
-    val legacy = if (fs.exists(cur)) readLong(cur) else None
-    // an explicit flat cursor (legacy, or an operator reset/rollback) wins
-    val from = legacy.orElse(genVal).getOrElse(0L)
-    val to = current(spark, path).map(_.version).getOrElse(0L)
-    // every poll pins the cursor in the table's registry so [[vacuum]]
-    // keeps the consumer's unread range resolvable (retention floor)
-    val regName = cursorRegistryName(cursorPath)
-    if (to <= from) {
-      registerCursor(spark, path, regName, from)
-      return Nil
-    }
-    apply(changes(spark, path, from, to))
-    val nextGen = gens.map(_._1).maxOption.getOrElse(0L) + 1L
-    val np = new Path(parent, s"$base.g$nextGen")
-    val out = fs.create(np, false)
-    try out.write(to.toString.getBytes(Utf8)) finally out.close()
-    // best-effort trim AFTER the new generation is durable: keep the
-    // superseded generation as the torn-write fallback, drop older ones
-    // and the migrated legacy flat file
-    val prevGen = gens.map(_._1).maxOption.getOrElse(0L)
-    gens.filter(_._1 < prevGen).foreach { case (_, p) =>
-      try fs.delete(p, false) catch { case _: java.io.IOException => () }
-    }
-    if (legacy.isDefined)
-      try fs.delete(cur, false) catch { case _: java.io.IOException => () }
-    registerCursor(spark, path, regName, to)
-    ((from + 1) to to)
   }
 
   /** Merge-on-read key deletion — [[deleteKeys]]' O(batch) sibling: the
@@ -2261,64 +2101,6 @@ object ManifestStore {
       s"ManifestStore.restore: lost the publish race $MaxRetries times at $path")
   }
 
-  private val CursorsDirName = "_cursors" // lives under _manifest/
-
-  /** Registered change-feed cursors: name → last-consumed version. These
-    * are [[vacuum]]'s retention FLOOR — a lagging consumer's range stays
-    * resolvable instead of failing later as a read error mid-feed.
-    * [[pollChanges]] registers its cursor automatically on every poll;
-    * [[unregisterCursor]] releases a retired consumer so vacuum can move
-    * on (a dead-but-registered cursor otherwise pins history forever,
-    * which is the intended fail-safe direction).
-    */
-  def cursors(spark: SparkSession, path: String): Map[String, Long] = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val dir = new Path(root, s"$ManifestDir/$CursorsDirName")
-    if (!fs.exists(dir)) return Map.empty
-    fs.listStatus(dir).toSeq.flatMap { st =>
-      try {
-        val in = fs.open(st.getPath)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        scala.util.Try(s.toLong).toOption.map(st.getPath.getName -> _)
-      } catch { case _: java.io.IOException => None }
-    }.toMap
-  }
-
-  /** Pin `name`'s consumed-through version in the table's cursor registry
-    * (idempotent overwrite — the value only ever advances under normal
-    * consumption, but an operator rollback may legitimately lower it).
-    */
-  def registerCursor(spark: SparkSession, path: String, name: String,
-      version: Long): Unit = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val dir = new Path(root, s"$ManifestDir/$CursorsDirName")
-    fs.mkdirs(dir)
-    val out = fs.create(new Path(dir, name), true)
-    try out.write(version.toString.getBytes(Utf8)) finally out.close()
-  }
-
-  /** Drop `name` from the cursor registry, releasing its retention pin. */
-  def unregisterCursor(spark: SparkSession, path: String, name: String): Unit = {
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    try fs.delete(new Path(root, s"$ManifestDir/$CursorsDirName/$name"), false)
-    catch { case _: java.io.IOException => () }
-  }
-
-  /** The registry name [[pollChanges]] files its cursor under: the cursor
-    * file's base name plus a short digest of its full path (two consumers
-    * may reuse a base name under different directories).
-    */
-  def cursorRegistryName(cursorPath: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(cursorPath.getBytes(Utf8))
-    new Path(cursorPath).getName + "-" +
-      md.take(4).map(b => f"${b & 0xff}%02x").mkString
-  }
-
   /** Reclaim invisible data: segment directories not referenced by any
     * RETAINED manifest version (crashed or race-losing writers' orphans,
     * superseded rewrite inputs), crashed [[cluster]] staging trees,
@@ -2326,34 +2108,22 @@ object ManifestStore {
     * all only when older than `graceMs`, which must exceed any plausible
     * in-flight reader's runtime (their snapshots reference those files).
     *
-    * The retention floor is the OLDEST of: the newest `minVersionsToKeep`
-    * committed versions, and (when `respectCursors`, the default) the
-    * smallest version a registered change-feed cursor ([[cursors]]) still
-    * needs — so a lagging [[pollChanges]] consumer's unread range stays
-    * resolvable instead of surfacing later as a read error mid-feed, and a
-    * frozen `versionAsOf` view can pin itself by registering a cursor at
-    * its version. Every segment or delete sidecar referenced by ANY
-    * retained version is live; `graceMs` remains the [[readVersion]]
-    * time-travel window for versions below the floor. Returns the number
-    * of segment directories removed.
+    * The retention floor is the newest `minVersionsToKeep` committed
+    * versions. Every segment or delete sidecar referenced by ANY retained
+    * version is live; `graceMs` remains the [[readVersion]] time-travel
+    * window for versions below the floor. Returns the number of segment
+    * directories removed.
     */
   def vacuum(spark: SparkSession, path: String, graceMs: Long,
-      minVersionsToKeep: Int = 1, respectCursors: Boolean = true): Int = {
+      minVersionsToKeep: Int = 1): Int = {
     val root = new Path(path)
     val fs = fsOf(spark, root)
     val versions = listVersions(fs, root).sorted
     if (versions.isEmpty) return 0
-    val byCount = versions.takeRight(math.max(1, minVersionsToKeep)).head
-    // changes(cursor, to) resolves snapshots cursor..to, so the floor is
-    // the smallest registered cursor value (version 0 needs no manifest)
-    val byCursor =
-      if (!respectCursors) Long.MaxValue
-      else cursors(spark, path).values.minOption
-        .map(c => math.max(1L, c)).getOrElse(Long.MaxValue)
-    val keepFrom = math.min(byCount, byCursor)
+    val keepFrom = versions.takeRight(math.max(1, minVersionsToKeep)).head
     // live = everything ANY retained version references — a time-travel
-    // read or lagging consumer of a retained version must keep resolving
-    // its segments and delete sidecars, not just the latest snapshot's
+    // read of a retained version must keep resolving its segments and
+    // delete sidecars, not just the latest snapshot's
     val live = versions.filter(_ >= keepFrom).flatMap { v =>
       val (es, _, ds) = readManifest(fs, manifestPath(root, v))
       es.map(_.name) ++ ds.map(_.name)

@@ -1130,136 +1130,23 @@ object ScaleOps {
     } finally pairs.unpersist(blocking = false)
   }
 
-  /** Small-files compaction for a parquet table directory — the operational
-    * counterpart of `DedupStore.compact` for general sinks. Long-lived
-    * streaming writers (`streamingGold`, `streamingVectorIndex`) append a
-    * few files per micro-batch; a year of 5-minute ticks is ~10^5 files
-    * whose listing/open overhead dominates scan cost long before data size
-    * does. Rewrites the tree to ~`targetFileBytes`-sized files (per
-    * partition directory when `partitionBy` is given, preserving
-    * partition-pruning layout), validates the rewrite by row count, then
-    * swaps rename-aside — a crash at any point leaves the old or the new
-    * layout reachable, never a mix and never a missing directory.
-    *
-    * `transform` (default identity) rewrites the table body before the
-    * compaction — e.g. dropping a replay-key partition column when folding
-    * a streaming store ([[graft.ext.Pq.consolidateIndex]]). It MUST be
-    * row-count-preserving, and that is ENFORCED, not trusted: the row-count
-    * validation compares the rewritten table against the PRE-transform
-    * count, so a transform that drops (or fabricates) rows aborts the swap
-    * with the original untouched instead of validating against its own
-    * output and silently losing data.
-    *
-    * SINGLE-WRITER, NO CONCURRENT READERS: the publish swap has an
-    * unavoidable window between `rename(root, bak)` and `rename(tmp, root)`
-    * where the live directory does not exist — a query racing the swap
-    * fails transiently with path-not-found (crash recovery restores the
-    * backup, so no data is ever lost, but the reader sees the gap). Callers
-    * own the exclusion: streaming stores compact only while the stream is
-    * STOPPED ([[graft.streaming.Incremental]] documents the contract), and
-    * probe/query paths must not race a compaction.
-    * [[ManifestStore.compact]] is the no-gap alternative for
-    * manifest-resolved tables: readers keep their snapshot through the
-    * commit, at the cost of manifest-aware reads.
-    *
-    * Returns (files before, files after).
-    */
-  def compactParquet(spark: SparkSession, path: String,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      partitionBy: Seq[String] = Nil,
-      transform: DataFrame => DataFrame = identity): (Long, Long) = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact_tmp")
-    val bak = new org.apache.hadoop.fs.Path(path + ".compact_old")
-    // Crash recovery BEFORE any cleanup (the DedupStore.recover discipline):
-    // a kill between the two publish renames leaves the live dir missing and
-    // the data only in the backup — restore it first; deleting the backup
-    // unconditionally here would destroy the only surviving copy.
-    if (!fs.exists(root) && fs.exists(bak) && !fs.rename(bak, root))
-      throw new java.io.IOException(
-        s"compactParquet: restore of crashed swap $bak -> $path failed")
-    // Remaining leftovers: tmp is unpublished by definition (the swap below
-    // is the only publisher) — drop it; a backup alongside a LIVE dir means
-    // the previous swap completed, so the live dir is authoritative.
-    fs.delete(tmp, true)
-    fs.delete(bak, true)
-
-    def parquetFiles(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile && f.getPath.getName.endsWith(".parquet")) buf += f
-      }
-      buf.toSeq
-    }
-    val before = parquetFiles(root)
-    val totalBytes = before.map(_.getLen).sum
-    val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-
-    // expected = the RAW table's count, taken before `transform` runs — the
-    // validation must not be self-referential (a dropping transform counted
-    // on its own output would always "pass")
-    val raw = spark.read.parquet(path)
-    val expected = raw.count()
-    val df = transform(raw)
-    val writer =
-      (if (partitionBy.nonEmpty) {
-        // Honor the size target INSIDE each partition directory too: hashing
-        // on the partition columns alone would fold every row of a hot
-        // partition value into one task and one arbitrarily large file. A
-        // content-hash salt bounded by ceil(nFiles / nDirs) splits each
-        // directory into ~target-sized slices while still co-locating each
-        // (dir, slice) in one task.
-        val nDirs = math.max(1L, df.select(partitionBy.map(col): _*).distinct().count())
-        val perDir = math.max(1, math.ceil(nFiles.toDouble / nDirs).toInt)
-        val salted = df.withColumn("__compact_salt",
-          pmod(xxhash64(struct(df.columns.map(col): _*)), lit(perDir)))
-        salted
-          .repartition(nFiles, (partitionBy.map(col) :+ col("__compact_salt")): _*)
-          .drop("__compact_salt")
-      } else df.repartition(nFiles))
-        .write.mode("overwrite")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(tmp.toString)
-    val got = spark.read.parquet(tmp.toString).count()
-    if (got != expected) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"compactParquet: rewrite of $path has $got rows, expected $expected " +
-          "(either the rewrite lost rows or the caller's transform is not " +
-          "row-count-preserving) — aborted, original untouched")
-    }
-    if (!fs.rename(root, bak))
-      throw new java.io.IOException(s"compactParquet: rename $path aside failed")
-    if (!fs.rename(tmp, root)) {
-      fs.rename(bak, root) // restore rather than leaving the table headless
-      throw new java.io.IOException(s"compactParquet: publish of compacted $path failed")
-    }
-    fs.delete(bak, true)
-    (before.size.toLong, parquetFiles(root).size.toLong)
-  }
-
   /** Targeted key deletion from a parquet store — the "right to be
     * forgotten" rewrite a lakehouse without ACID tables still owes its
-    * users. The complement of [[compactParquet]]'s row-preserving contract:
-    * here the EXPECTED row delta is computed up front (raw count minus the
+    * users. The EXPECTED row delta is computed up front (raw count minus the
     * store's exact key-match count, via a left-semi join on the key
     * column), the anti-join rewrite lands in a `.compact_tmp` sibling, and
     * the swap publishes only if the rewrite's count equals that
     * pre-computed expectation — a rewrite that lost or kept the wrong rows
-    * aborts with the original untouched. Same rename-aside tmp/bak
-    * protocol and suffixes as [[compactParquet]], so a crash at any point
-    * is recovered by either method's next invocation.
+    * aborts with the original untouched. The swap renames the live
+    * directory aside to `.compact_old` before publishing, and the next
+    * invocation restores that backup if a crash left the live directory
+    * missing.
     *
     * `keys` co-partitions against the store on the key column (broadcast
     * when small — Catalyst's choice); the rewrite is one scan + one
-    * anti-join. SINGLE-WRITER, like compaction —
-    * [[ManifestStore.deleteKeys]] is the snapshot-isolated variant for
-    * manifest-resolved tables.
+    * anti-join. SINGLE-WRITER, NO CONCURRENT READERS: a query racing the
+    * swap can find the directory missing. [[ManifestStore.deleteKeys]] is
+    * the snapshot-isolated variant for manifest-resolved tables.
     *
     * Returns (rows deleted, rows remaining).
     */
@@ -1302,7 +1189,7 @@ object ScaleOps {
   }
 
   // ------------------------------------------------------------------------
-  // Incremental distinct counting: persistable, mergeable HLL sketches.
+  // Distinct counting across runs: persistable, mergeable HLL sketches.
   //
   // Spark's `approx_count_distinct` answers "distinct within THIS job"; a
   // 100 TB ingest needs "distinct users/urls/docs across all runs so far"
@@ -1345,43 +1232,6 @@ object ScaleOps {
     spark.read.parquet(dir)
       .groupBy("g")
       .agg(expr("hll_sketch_estimate(hll_union_agg(sketch, true))").as("n_distinct"))
-      .orderBy("g")
-
-  // ------------------------------------------------------------------------
-  // Incremental aggregate maintenance: the EXACT-statistics sibling of the
-  // HLL store above. count/sum are algebraic — a run's contribution reduces
-  // to one (count, decimal sum) row per group, and folding rows across runs
-  // is exact and order-independent (DECIMAL addition). So a dashboard's
-  // per-group totals over everything-ingested-so-far cost O(runs x groups)
-  // state rows to maintain and read, never a re-scan of history — the
-  // materialized-view-maintenance discipline without a warehouse.
-  // ------------------------------------------------------------------------
-
-  /** Append one run's per-group algebraic state (count, exact DECIMAL(38,6)
-    * sum of `valueCol`) to `dir`. Partial aggregation reduces each partition
-    * to one row per group before the exchange; the store grows by
-    * (groups) rows per run.
-    */
-  def writeAggState(df: DataFrame, groupCol: String, valueCol: String,
-      dir: String, runId: String): Unit =
-    df.selectExpr(s"CAST($groupCol AS STRING) AS g",
-      s"CAST($valueCol AS DECIMAL(30, 6)) AS v")
-      .groupBy("g")
-      .agg(count(col("v")).as("cnt"), sum(col("v")).cast(org.apache.spark.sql.types.DecimalType(38, 6)).as("sm"))
-      .withColumn("run_id", lit(runId))
-      .coalesce(1)
-      .write.mode("append").parquet(dir)
-
-  /** Fold every run's states in `dir` to exact running totals per group:
-    * (g, cnt, sum, avg). count/sum fold losslessly; avg is the one final
-    * division over exact components.
-    */
-  def readAggState(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
-      .groupBy("g")
-      .agg(sum("cnt").cast("long").as("cnt"),
-        sum("sm").cast(org.apache.spark.sql.types.DecimalType(38, 6)).as("sm"))
-      .withColumn("avg", col("sm").cast("double") / col("cnt").cast("double"))
       .orderBy("g")
 
   // ------------------------------------------------------------------------

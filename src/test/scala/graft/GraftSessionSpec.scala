@@ -50,4 +50,20 @@ class GraftSessionSpec extends SparkSpec {
       .map(root.relativize(_).toString).toSet
     assert(mains == kept, s"unexpected: ${(mains -- kept).toSeq.sorted}; missing: ${(kept -- mains).toSeq.sorted}")
   }
+
+  test("src/main has one streaming lane: no source uses Structured Streaming") {
+    // streaming mode is Pipeline.run's watermark-driven micro-batch; a
+    // second lane on readStream/writeStream would duplicate it
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val markers = Seq("readStream", "writeStream", "org.apache.spark.sql.streaming")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter { p =>
+        val src = Files.readString(p)
+        markers.exists(src.contains)
+      }
+      .map(root.relativize(_).toString).toSeq.sorted
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
 }

@@ -10,9 +10,8 @@ import graft.ops.ManifestStore.Publisher
   * must hold on `file://` — where Hadoop's RawLocalFileSystem.rename is
   * POSIX rename(2) and silently REPLACES, i.e. is NOT a CAS — and on
   * stores with no atomic rename at all (the claim-marker protocol),
-  * including that protocol's crash windows. Plus the round-11 ADVICE
-  * fixes: the change feed across schema evolution, CDC event ordering via
-  * merge's seqCol, and the torn-cursor-advance hazard in pollChanges.
+  * including that protocol's crash windows. Plus CDC event ordering via
+  * merge's seqCol, and what a lost publish race costs an upsert's retry.
   */
 class ManifestPublisherSpec extends SparkSpec {
   import spark.implicits._
@@ -126,27 +125,6 @@ class ManifestPublisherSpec extends SparkSpec {
     } finally ManifestStore.publisherOverride = None
   }
 
-  test("changes() across a mergeSchema append in range: evolved frames null-pad, the feed never throws") {
-    val path = tmpDir("pubEvoFeed") + "/t"
-    ManifestStore.append(spark, Seq((1L, "a")).toDF("k", "v"), path)
-    ManifestStore.append(spark, Seq((2L, "b", 1.5)).toDF("k", "v", "score"),
-      path, mergeSchema = true)
-    // the range spans the evolution: v1's frame lacks `score`, v2's has it —
-    // strict union used to throw AnalysisException here and wedge pollChanges
-    val feed = ManifestStore.changes(spark, path, 0L, 2L)
-      .orderBy("_commit_version").collect()
-    assert(feed.length == 2)
-    assert(feed.map(_.getAs[String]("_change_type")).toSeq == Seq("insert", "insert"))
-    assert(feed(0).isNullAt(feed(0).fieldIndex("score")),
-      "the pre-evolution insert must null-pad the evolved column")
-    assert(feed(1).getDouble(feed(1).fieldIndex("score")) == 1.5)
-    // and the cursor-driven consumer rides through the evolution too
-    val cursor = tmpDir("pubEvoFeed") + "/cur"
-    var rows = 0L
-    val consumed = ManifestStore.pollChanges(spark, path, cursor)(df => rows = df.count())
-    assert(consumed == Seq(1L, 2L) && rows == 2L)
-  }
-
   test("merge seqCol: the LAST event per key by sequence wins (update-then-delete deletes; delete-then-update keeps)") {
     val path = tmpDir("pubSeq") + "/t"
     ManifestStore.append(spark,
@@ -181,41 +159,32 @@ class ManifestPublisherSpec extends SparkSpec {
       "the seq=8 delete outranks the sequence-less event")
   }
 
-  test("pollChanges cursor: generation-file advance survives a torn write (falls back, never resets to 0)") {
-    val path = tmpDir("pubCursor") + "/t"
-    val cursor = tmpDir("pubCursor") + "/cur"
-    val fs = fsFor(cursor)
-    ManifestStore.append(spark, Seq((1L, "a")).toDF("k", "v"), path)
-    var seen = Seq.empty[Long]
-    ManifestStore.pollChanges(spark, path, cursor)(df =>
-      seen = df.select("k").as[Long].collect().toSeq.sorted)
-    assert(seen == Seq(1L))
-    ManifestStore.append(spark, Seq((2L, "b")).toDF("k", "v"), path)
-    assert(ManifestStore.pollChanges(spark, path, cursor)(df =>
-      seen = df.select("k").as[Long].collect().toSeq.sorted) == Seq(2L))
-    assert(seen == Seq(2L))
-    // the cursor is generation files now, not a flat file
-    val parent = new Path(cursor).getParent
-    val gens = fs.listStatus(parent).map(_.getPath.getName)
-      .filter(_.startsWith("cur.g")).sorted.toSeq
-    assert(gens.nonEmpty, s"expected generation files, got ${fs.listStatus(parent).map(_.getPath.getName).toSeq}")
-    // TORN ADVANCE: a garbage newest generation must fall back to the
-    // previous one — re-delivery of v2's batch, NOT a restart from 0
-    // (which after vacuum would wedge the consumer permanently)
-    val maxGen = gens.map(_.stripPrefix("cur.g").toLong).max
-    write(fs, new Path(parent, s"cur.g${maxGen + 1}"), "NOT A NUMBER")
-    ManifestStore.append(spark, Seq((3L, "c")).toDF("k", "v"), path)
-    val consumed = ManifestStore.pollChanges(spark, path, cursor)(df =>
-      seen = df.select("k").as[Long].collect().toSeq.sorted)
-    assert(consumed == Seq(3L), s"fallback must resume after v2, got $consumed")
-    assert(seen == Seq(3L))
-    // legacy flat cursor files still migrate: plant one AHEAD of the gens
-    val flat = new Path(cursor)
-    val out = fs.create(flat, true)
-    try out.write(ManifestStore.current(spark, path).get.version.toString.getBytes("UTF-8"))
-    finally out.close()
-    assert(ManifestStore.pollChanges(spark, path, cursor)(_ => ()).isEmpty,
-      "flat cursor at head => nothing to consume")
+  test("upsert retry after a lost publish reuses the cached batch: no extra source scan") {
+    // each run counts how many times its source rows are computed; a retry
+    // that lost its batch cache recomputes the dedup from the source
+    def sourceScans(loseFirstPublish: Boolean): Long = {
+      val path = tmpDir(s"pubRetry$loseFirstPublish") + "/t"
+      val scans = spark.sparkContext.longAccumulator
+      val batch = spark.range(0L, 200L).as[Long]
+        .map { i => scans.add(1L); (i % 150L, s"v$i") }.toDF("k", "v")
+      val lose = new java.util.concurrent.atomic.AtomicBoolean(loseFirstPublish)
+      ManifestStore.publisherOverride = Some(new Publisher {
+        def publish(fs: org.apache.hadoop.fs.FileSystem, tmp: Path, target: Path): Boolean =
+          if (lose.getAndSet(false)) { fs.delete(tmp, false); false }
+          else Publisher.forScheme(fs).publish(fs, tmp, target)
+      })
+      try {
+        val rep = ManifestStore.upsert(spark, batch, path, "k")
+        assert(rep.inserted == 150L && rep.version == 1L, s"report: $rep")
+        assert(!lose.get(), "the first publish must have been lost")
+      } finally ManifestStore.publisherOverride = None
+      assert(ManifestStore.read(spark, path).count() == 150L)
+      scans.value
+    }
+    val wonFirst = sourceScans(loseFirstPublish = false)
+    val lostThenWon = sourceScans(loseFirstPublish = true)
+    assert(lostThenWon <= wonFirst,
+      s"a lost-then-won upsert scanned its source $lostThenWon times, a first-try win $wonFirst")
   }
 
   test("ExclusiveMarker: a claim winner whose install fails transiently ABORTS the intent — no duplicate commit at N and N+1") {

@@ -44,30 +44,6 @@ class ManifestStoreModelSpec extends SparkSpec {
         ManifestStore.read(spark, path)
           .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       else Map.empty
-    // a change-feed replica rides along: synced after every op, full-
-    // refreshed (per the documented contract) when a rewrite breaks the
-    // feed — so changes()/pollChanges() are model-checked across the same
-    // interleavings as the table verbs
-    val cursor = tmpDir("mstoreModel") + "/cursor"
-    val replica = scala.collection.mutable.Map.empty[Long, String]
-    def syncReplica(): Unit =
-      if (ManifestStore.current(spark, path).isDefined) {
-        try ManifestStore.pollChanges(spark, path, cursor) { df =>
-          df.orderBy("_commit_version").collect().foreach { r =>
-            if (r.getString(2) == "insert") replica(r.getLong(0)) = r.getString(1)
-            else replica.remove(r.getLong(0))
-          }
-        } catch {
-          case e: IllegalArgumentException if e.getMessage.contains("full-refresh") =>
-            replica.clear(); replica ++= table()
-            val fs = new org.apache.hadoop.fs.Path(cursor)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val v = ManifestStore.current(spark, path).get.version
-            val out = fs.create(new org.apache.hadoop.fs.Path(cursor), true)
-            out.write(v.toString.getBytes("UTF-8")); out.close()
-        }
-      }
-
     // model state per committed version, so a restore's expected content
     // is replayable from the model's own history
     val modelHistory = scala.collection.mutable.Map.empty[Long, Map[Long, String]]
@@ -140,9 +116,6 @@ class ManifestStoreModelSpec extends SparkSpec {
         val snap = ManifestStore.current(spark, path).get
         assert(ManifestStore.describe(spark, path).count() == snap.entries.size)
       }
-      syncReplica()
-      assert(replica.toMap == model.toMap,
-        s"change-feed replica diverged at step $step: replica=${replica.toMap} model=$model")
     }
     // the sweep must have actually exercised the MOR machinery at least once
     assert(step == 30)

@@ -256,70 +256,6 @@ class ManifestStoreSpec extends SparkSpec {
     assert(ManifestStore.current(spark, path).get.version == 8L, "versions are dense")
   }
 
-  test("change feed: monotone commits replay exactly; rewrites break it loudly") {
-    val path = tmpDir("mstoreCdf") + "/t"
-    ManifestStore.append(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path) // v1
-    ManifestStore.upsert(spark, Seq((3L, "c"), (2L, "dup")).toDF("k", "v"), path, "k") // v2
-    ManifestStore.deleteKeysMergeOnRead(spark, path, "k", Seq(1L).toDF("k")) // v3
-    ManifestStore.upsert(spark, Seq((1L, "A2")).toDF("k", "v"), path, "k") // v4 re-insert
-    val feed = ManifestStore.changes(spark, path, fromExclusive = 1L, toInclusive = 4L)
-      .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3))).sorted
-    //            (k, _change_type, _commit_version); v is column 1
-    assert(feed.toSeq == Seq((1L, "delete", 3L), (1L, "insert", 4L), (3L, "insert", 2L)),
-      s"feed: ${feed.toSeq}")
-    // a consumer folding the feed onto snapshot v1 reconstructs read()
-    val base = scala.collection.mutable.Map(
-      ManifestStore.readVersion(spark, path, 1L)
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq: _*)
-    ManifestStore.changes(spark, path, 1L, 4L)
-      .orderBy("_commit_version")
-      .collect().foreach { r =>
-        if (r.getString(2) == "insert") base(r.getLong(0)) = r.getString(1)
-        else base.remove(r.getLong(0))
-      }
-    val now = ManifestStore.read(spark, path)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(base.toMap == now, s"fold=${base.toMap} table=$now")
-    // a rewrite inside the range breaks the feed with the version named
-    ManifestStore.compact(spark, path, partitions = 1) // v5
-    val ex = intercept[IllegalArgumentException] {
-      ManifestStore.changes(spark, path, 4L, 5L).collect()
-    }
-    assert(ex.getMessage.contains("version 5") && ex.getMessage.contains("full-refresh"))
-    // and the feed resumes cleanly after the rewrite snapshot
-    ManifestStore.upsert(spark, Seq((9L, "z")).toDF("k", "v"), path, "k") // v6
-    val after = ManifestStore.changes(spark, path, 5L, 6L)
-      .collect().map(r => (r.getLong(0), r.getString(2)))
-    assert(after.toSeq == Seq((9L, "insert")))
-  }
-
-  test("pollChanges: cursor-tracked incremental consumption, crash redelivery, no-op drain") {
-    val path = tmpDir("mstorePoll") + "/t"
-    val cursor = tmpDir("mstorePoll") + "/cursor"
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    def drain(): Seq[Long] = ManifestStore.pollChanges(spark, path, cursor) { df =>
-      seen ++= df.collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3)))
-    }
-    ManifestStore.append(spark, Seq((1L, "a")).toDF("k", "v"), path) // v1
-    ManifestStore.upsert(spark, Seq((2L, "b")).toDF("k", "v"), path, "k") // v2
-    assert(drain() == Seq(1L, 2L))
-    assert(seen.sorted.toSeq == Seq((1L, "insert", 1L), (2L, "insert", 2L)))
-    assert(drain().isEmpty, "nothing new => no-op, apply not called")
-    ManifestStore.deleteKeysMergeOnRead(spark, path, "k", Seq(1L).toDF("k")) // v3
-    assert(drain() == Seq(3L))
-    assert(seen.last == ((1L, "delete", 3L)))
-    // crash between apply and cursor advance = redelivery: simulate by
-    // rolling the cursor back one version
-    val fs = new org.apache.hadoop.fs.Path(cursor)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(cursor), false)
-    val out = fs.create(new org.apache.hadoop.fs.Path(cursor), true)
-    out.write("2".getBytes("UTF-8")); out.close()
-    val n0 = seen.size
-    assert(drain() == Seq(3L), "rolled-back cursor redelivers the batch")
-    assert(seen.size == n0 + 1 && seen.last == ((1L, "delete", 3L)))
-  }
-
   test("merge-on-read delete: O(batch) publish, sequence-correct re-inserts, compaction materializes") {
     val path = tmpDir("mstoreMor") + "/t"
     ManifestStore.append(spark, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), path)
@@ -766,65 +702,11 @@ class ManifestStoreSpec extends SparkSpec {
     assert(ManifestStore.read(spark, p2).collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
-  test("scheduledReplica: the CDC daemon keeps a replica exact across upserts and MOR deletes") {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = tmpDir("mstoreReplica")
-    val primary = base + "/p"; val replica = base + "/r"
-    val cursor = base + "/cursor"
-    def data(path: String) = ManifestStore.read(spark, path)
-      .select("k", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    def tick(n: Int): Unit = {
-      val q = graft.streaming.Incremental.scheduledReplica(spark, primary,
-        replica, cursor, checkpoint = base + s"/ckpt$n", interval = "1 second",
-        key = "k", statsCols = Seq("k"), trigger = Some(Trigger.AvailableNow()))
-      q.awaitTermination(60000)
-    }
-    // wave 1: plain inserts
-    ManifestStore.upsert(spark, (1L to 5L).map(i => (i, s"v$i")).toDF("k", "v"),
-      primary, "k", statsCols = Seq("k"))
-    tick(1)
-    assert(data(replica) == data(primary))
-    // wave 2: more inserts + a merge-on-read delete, one poll applies both
-    ManifestStore.upsert(spark, (6L to 8L).map(i => (i, s"v$i")).toDF("k", "v"),
-      primary, "k", statsCols = Seq("k"))
-    ManifestStore.deleteKeysMergeOnRead(spark, primary, "k", Seq(1L, 2L).toDF("k"))
-    tick(2)
-    assert(data(replica) == data(primary))
-    assert(data(replica) == (3L to 8L).map(i => (i, s"v$i")).toSet)
-    // replica rows carry commit provenance
-    assert(ManifestStore.read(spark, replica).columns.contains("_commit_version"))
-  }
-
-  test("scheduledMaintain: the maintenance daemon compacts drifted layout and vacuums orphans") {
-    import org.apache.spark.sql.streaming.Trigger
-    val base = tmpDir("mstoreDaemon")
-    val path = base + "/t"
-    // 6 tiny segments: over the maxSegments=3 budget below
-    (1 to 6).foreach(i => ManifestStore.append(spark,
-      Seq((i.toLong, s"v$i")).toDF("k", "v"), path))
-    // plus an aged orphan segment (a crashed writer's leftovers)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path, "seg-orphan-crashed"))
-    Thread.sleep(30)
-    val q = graft.streaming.Incremental.scheduledMaintain(spark, path,
-      checkpoint = base + "/ckpt", interval = "1 second",
-      targetSegmentBytes = 1L << 30, maxSegments = 3, graceMs = 10,
-      trigger = Some(Trigger.AvailableNow()))
-    q.awaitTermination(60000)
-    val snap = ManifestStore.current(spark, path).get
-    assert(snap.entries.size < 6, s"daemon must compact: ${snap.entries.size}")
-    assert(ManifestStore.read(spark, path).count() == 6, "content unchanged")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path, "seg-orphan-crashed")),
-      "daemon must vacuum aged orphans")
-  }
-
   test("emptied table (all rows deleted) stays fully operational: read/readWhere/readForKeys/merge from the recorded schema") {
     val path = tmpDir("mstoreEmptied") + "/t"
     ManifestStore.append(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path,
       statsCols = Seq("k"))
-    // merge that deletes EVERY row publishes an empty-segment manifest —
-    // the state the round-12 ADVICE found wedging the CDC replica daemon
+    // merge that deletes EVERY row publishes an empty-segment manifest
     val rep = ManifestStore.merge(spark,
       Seq((1L, "x"), (2L, "y")).toDF("k", "v"), path, "k",
       deleteWhen = Some(lit(true)), insertWhen = Some(lit(false)))
@@ -841,8 +723,6 @@ class ManifestStoreSpec extends SparkSpec {
       ManifestStore.append(spark, Seq((1, 2.0)).toDF("wrong", "shape"), path)
     }
     // a merge into the emptied table treats all source rows as inserts
-    // (this exact shape — delete-everything frame then an insert frame —
-    // permanently wedged scheduledReplica before the fix)
     val rep2 = ManifestStore.merge(spark,
       Seq((5L, "fresh")).toDF("k", "v"), path, "k")
     assert(rep2.inserted == 1L && rep2.updated == 0L && rep2.deleted == 0L)
@@ -850,55 +730,16 @@ class ManifestStoreSpec extends SparkSpec {
       == Seq(5L))
   }
 
-  test("vacuum retention floor: registered cursors and minVersionsToKeep pin history; unregister releases it") {
+  test("vacuum retention floor: minVersionsToKeep pins history") {
     val path = tmpDir("mstoreVacRet") + "/t"
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     (1 to 5).foreach(i =>
       ManifestStore.append(spark, Seq((i.toLong, s"v$i")).toDF("k", "v"), path))
-    // a consumer polls after v2 existed, then lags while v3..v5 commit:
-    // simulate by registering the cursor the way pollChanges does
-    ManifestStore.registerCursor(spark, path, "lagger", 2L)
-    Thread.sleep(30)
-    ManifestStore.vacuum(spark, path, graceMs = 10L)
-    val left = ManifestStore.history(spark, path)
-    assert(left == Seq(2L, 3L, 4L, 5L),
-      s"cursor at 2 must keep versions >= 2, got $left")
-    // the lagging consumer's whole unread range still resolves and replays
-    val feed = ManifestStore.changes(spark, path, 2L, 5L)
-    assert(feed.where(col("_change_type") === "insert").count() == 3L)
-    // a kept NON-latest version's segments survived too (time travel)
-    assert(ManifestStore.readVersion(spark, path, 3L).count() == 3L)
-    // release the pin: minVersionsToKeep=2 becomes the floor
-    ManifestStore.unregisterCursor(spark, path, "lagger")
     Thread.sleep(30)
     ManifestStore.vacuum(spark, path, graceMs = 10L, minVersionsToKeep = 2)
     val after = ManifestStore.history(spark, path)
     assert(after == Seq(4L, 5L), s"minVersionsToKeep=2 keeps the newest two, got $after")
+    // a kept NON-latest version's segments survived too (time travel)
     assert(ManifestStore.readVersion(spark, path, 4L).count() == 4L)
     assert(ManifestStore.read(spark, path).count() == 5L)
-  }
-
-  test("pollChanges auto-registers its cursor; vacuum under a lagging consumer leaves its range readable end-to-end") {
-    val path = tmpDir("mstorePollReg") + "/t"
-    val cursor = tmpDir("mstorePollRegCur") + "/cur"
-    ManifestStore.append(spark, Seq((1L, "a")).toDF("k", "v"), path)
-    ManifestStore.append(spark, Seq((2L, "b")).toDF("k", "v"), path)
-    var seen = Seq.empty[Long]
-    assert(ManifestStore.pollChanges(spark, path, cursor)(df =>
-      seen = df.select("k").as[Long].collect().toSeq.sorted) == Seq(1L, 2L))
-    val regs = ManifestStore.cursors(spark, path)
-    assert(regs.values.toSeq == Seq(2L), s"poll must register consumed-through=2, got $regs")
-    // consumer lags; three more commits + an aggressive vacuum
-    (3 to 5).foreach(i =>
-      ManifestStore.append(spark, Seq((i.toLong, s"v$i")).toDF("k", "v"), path))
-    Thread.sleep(30)
-    ManifestStore.vacuum(spark, path, graceMs = 10L)
-    // the consumer resumes cleanly across the vacuum — nothing in its
-    // range was reclaimed
-    assert(ManifestStore.pollChanges(spark, path, cursor)(df =>
-      seen = df.select("k").as[Long].collect().toSeq.sorted) == Seq(3L, 4L, 5L))
-    assert(seen == Seq(3L, 4L, 5L))
-    assert(ManifestStore.cursors(spark, path).values.toSeq == Seq(5L))
   }
 }

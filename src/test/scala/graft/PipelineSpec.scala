@@ -232,6 +232,49 @@ class PipelineSpec extends SparkSpec {
     assert(listing.isEmpty, s"the empty op's integrity check listed files as jobs: $listing")
   }
 
+  test("replays and backfills insert nothing already in Gold, and the watermark never moves back") {
+    import graft.ingest.Ingest
+    val data = weekly(weeks = 2, perWeek = 40, seed = 14)
+    val base = tmpDir("replay-safe")
+    val wmFile = s"$base/watermarks/last.txt"
+    def wmBytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(wmFile)).toSeq
+    assert(streamWeek(data, base, 0).report.insertedRows == 40)
+    val wm0 = Ingest.loadWatermark(wmFile).get
+    assert(streamWeek(data, base, 1).report.insertedRows == 40)
+    val wm1 = wmBytes
+
+    // ST3: a backfill over both weeks finds every key present and leaves
+    // the watermark as it was, byte for byte
+    val end = week0.plusDays(14L)
+    val backfill = streamingJob.copy(mode = "backfill", sinceDays = None,
+      dateRange = Some(graft.model.DateRange("crash_date", week0.format(weekFmt), end.format(weekFmt))))
+    val bf = Pipeline.run(spark, backfill, rawBefore(data, end), base, "backfill", end.toLocalDate)
+    assert(bf.silverRows == 80 && bf.report.insertedRows == 0 && bf.report.totalRows == 80, bf.toString)
+    assert(wmBytes == wm1)
+
+    // ST4: week 1 replayed as after a crash between its Gold commit and its
+    // watermark commit: every row passes the predicate, none is inserted
+    Ingest.saveWatermark(wmFile, wm0, "streaming")
+    assert(wmBytes == wm1, "an older watermark must not lower the stored one")
+    java.nio.file.Files.write(java.nio.file.Paths.get(wmFile), wm0.getBytes("UTF-8"))
+    val replay = Pipeline.run(spark, streamingJob, rawBefore(data, end), base, "op1-replay", end.toLocalDate)
+    assert(replay.silverRows == 40 && replay.report.insertedRows == 0 && replay.report.totalRows == 80,
+      replay.toString)
+    assert(wmBytes == wm1, "the replay advances the watermark to where week 1 left it")
+  }
+
+  test("an enrich whose semi-join keeps no rows leaves no part file behind") {
+    val base = tmpDir("empty-enrich")
+    val raw = rawData.updated("people", Seq(("zz", "DRIVER")).toDF("crash_record_id", "person_type"))
+    val res = Pipeline.run(spark, JobSpec.parse(backfillJson), raw, base, "run-1",
+      java.time.LocalDate.parse("2024-02-01"))
+    assert(res.report.insertedRows == 2)
+    val parts = Option(new java.io.File(s"$base/people/corr=run-1").listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("part-"))
+    assert(parts.isEmpty, s"the empty landing left ${parts.mkString(", ")}")
+    assert(graft.ingest.Ingest.landed(s"$base/vehicles/corr=run-1"), "the matching enrich still lands")
+  }
+
   test("a run reads its Bronze without a streaming-sink metadata warning") {
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, Logger}
@@ -338,7 +381,7 @@ class PipelineSpec extends SparkSpec {
     // duplicate enrich keys and a duplicate row
     "vehicles" -> Seq(("c1", "FORD", 1999), ("c1", "FORD", 1999), ("c1", "AUDI", 2001),
       ("c2", "FORD", 1995), ("zz", "BMW", 2000)).toDF("crash_record_id", "make", "vehicle_year"),
-    // no key matches: the semi-join keeps nothing and only _SUCCESS lands
+    // no key matches: the semi-join keeps nothing, so no people rows land
     "people" -> Seq(("zz", "DRIVER"), ("yy", "PASSENGER")).toDF("crash_record_id", "person_type"))
 
   test("schema read-backs give the Silver and Gold of inference reads: typed columns, duplicate keys, an empty enrich") {

@@ -255,100 +255,6 @@ class ScaleOpsSpec extends SparkSpec {
       "bounded-state selection must not window")
   }
 
-  test("compactParquet: many small files collapse to few, content byte-identical") {
-    val dir = tmpDir("compact") + "/t"
-    val df = (1 to 1000).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-    df.repartition(40).write.parquet(dir)
-    // a stranded tmp dir from a "crashed" earlier run must be swept, not merged
-    (1 to 5).map(i => (-i.toLong, "junk")).toDF("k", "v")
-      .write.parquet(dir + ".compact_tmp")
-    val before = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    val (nb, na) = ScaleOps.compactParquet(spark, dir, targetFileBytes = 1L << 30)
-    assert(nb >= 40 && na <= 2, s"compaction must shrink the file count: $nb -> $na")
-    val after = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    assert(after == before, "compaction must not change table content")
-  }
-
-  test("compactParquet rejects a row-dropping transform (validates against the pre-transform count)") {
-    import spark.implicits._
-    val dir = tmpDir("compactt") + "/t"
-    val df = (1 to 300).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-    df.repartition(6).write.parquet(dir)
-    val before = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    // a filtering transform violates the row-count-preserving contract; the
-    // validation must compare against the RAW count (counting the transformed
-    // frame would be self-referential and always pass)
-    val e = intercept[java.io.IOException] {
-      ScaleOps.compactParquet(spark, dir, targetFileBytes = 1L << 30,
-        transform = _.where(col("k") > 100))
-    }
-    assert(e.getMessage.contains("expected 300"), s"raw-count validation expected: ${e.getMessage}")
-    assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq == before,
-      "aborted compaction must leave the original untouched")
-  }
-
-  test("compactParquet recovers a crash between the publish renames (live dir missing)") {
-    val dir = tmpDir("compactr") + "/t"
-    val df = (1 to 200).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-    df.repartition(8).write.parquet(dir)
-    val before = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate a kill between rename(root, bak) and rename(tmp, root): the
-    // live dir is gone, the data survives only in the backup, tmp is partial
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".compact_old")))
-    (1 to 3).map(i => (-i.toLong, "partial")).toDF("k", "v")
-      .write.parquet(dir + ".compact_tmp")
-    val (_, na) = ScaleOps.compactParquet(spark, dir, targetFileBytes = 1L << 30)
-    assert(na <= 2, "recovered table must still get compacted")
-    assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq == before,
-      "recovery must restore the backup, not the partial tmp")
-  }
-
-  test("compactParquet splits a hot partition value across files (size target honored)") {
-    val dir = tmpDir("compacth") + "/t"
-    // p=0 holds ~90% of rows: hashing on the partition column alone would
-    // fold it into one arbitrarily large file
-    val df = (1 to 2000).map(i => (i.toLong, if (i <= 1800) 0 else i % 3, s"v$i"))
-      .toDF("k", "p", "v")
-    df.repartition(10).write.partitionBy("p").parquet(dir)
-    val before = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    val total = {
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
-      var s = 0L
-      while (it.hasNext) { val f = it.next(); if (f.getPath.getName.endsWith(".parquet")) s += f.getLen }
-      s
-    }
-    // target ~ total/6 -> nFiles ~ 6 over 3 dirs -> 2 salt slices per dir
-    ScaleOps.compactParquet(spark, dir, targetFileBytes = total / 6, partitionBy = Seq("p"))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hot = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/p=0"))
-      .count(_.getPath.getName.endsWith(".parquet"))
-    assert(hot >= 2, s"hot partition must split across files, got $hot")
-    assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq == before)
-  }
-
-  test("compactParquet preserves a partitioned layout (one file per partition dir)") {
-    val dir = tmpDir("compactp") + "/t"
-    val df = (1 to 900).map(i => (i.toLong, i % 3, s"v$i")).toDF("k", "p", "v")
-    df.repartition(12).write.partitionBy("p").parquet(dir)
-    val before = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    val (nb, na) = ScaleOps.compactParquet(spark, dir,
-      targetFileBytes = 1L << 30, partitionBy = Seq("p"))
-    assert(nb > 3 && na == 3, s"one file per partition dir expected: $nb -> $na")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (0 to 2).foreach { p =>
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/p=$p")),
-        s"partition dir p=$p must survive compaction")
-    }
-    assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq == before)
-  }
-
   test("distinct-sketch store: union across runs == one-shot == exact (coupon regime)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -460,30 +366,6 @@ class ScaleOpsSpec extends SparkSpec {
     }
     assert(zOpens.max < xFiles,
       s"z worst axis ${zOpens.max} must beat the unpruned layout's $xFiles")
-  }
-
-  test("aggState store: fold across runs == one-shot recompute, exactly") {
-    import spark.implicits._
-    val dir = tmpDir("aggstate") + "/s"
-    val rnd = new scala.util.Random(3)
-    val rows = (1 to 2000).map(i => (i, s"g${i % 5}", rnd.nextDouble() * 100))
-    val df = rows.toDF("i", "g", "v")
-    // ingest in three uneven waves
-    ScaleOps.writeAggState(df.where(col("i") <= 700), "g", "v", dir, "run1")
-    ScaleOps.writeAggState(df.where(col("i") > 700 && col("i") <= 1500), "g", "v", dir, "run2")
-    ScaleOps.writeAggState(df.where(col("i") > 1500), "g", "v", dir, "run3")
-    val got = ScaleOps.readAggState(spark, dir).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDecimal(2), r.getDouble(3)))
-    val want = df.selectExpr("g", "CAST(v AS DECIMAL(30, 6)) AS v")
-      .groupBy("g")
-      .agg(count("v").as("cnt"),
-        sum("v").cast(org.apache.spark.sql.types.DecimalType(38, 6)).as("sm"))
-      .withColumn("avg", col("sm").cast("double") / col("cnt").cast("double"))
-      .orderBy("g").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDecimal(2), r.getDouble(3)))
-    assert(got.sameElements(want),
-      s"folded store must equal the one-shot totals:\n${got.toSeq}\n${want.toSeq}")
-    assert(got.map(_._2).sum == 2000L, "every wave row accounted")
   }
 
   test("weightedMedianByGroup: descent == window recomputation, forced multi-pass") {
