@@ -361,18 +361,4 @@ object Dashboard {
       .append("</body></html>\n")
     sb.toString
   }
-
-  /** Render [[reportHtml]] and write it through the Hadoop FS (works on
-    * local, HDFS, object-store paths alike). Returns the byte count.
-    */
-  def writeReport(spark: SparkSession, gold: DataFrame, outPath: String,
-      generatedAt: String): Long = {
-    val bytes = reportHtml(gold, generatedAt)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(bytes) finally out.close()
-    bytes.length.toLong
-  }
 }

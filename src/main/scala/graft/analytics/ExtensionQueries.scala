@@ -468,13 +468,6 @@ object ExtensionQueries {
     Array.fill(sdK, sdDim)(rng.nextFloat() * 0.6f - 0.3f)
   }
 
-  /** d9's fixed centroids as (cell, cv) pairs — SimilaritySpec pins the
-    * `Similarity.semDedup` library call equal to the d9 oracle query when
-    * fed these exact centroids.
-    */
-  private[graft] def semDedupCentroids: Seq[(Int, Seq[Double])] =
-    sdCent.zipWithIndex.map { case (c, i) => (i, c.map(_.toDouble).toSeq) }.toSeq
-
   /** `|v[0:16] - centroid c|^2`, f32 products widened to DOUBLE, left-assoc
     * sum — one generator for both dialects (Spark brackets are 0-based,
     * DuckDB's 1-based; float literals round-trip via CAST('…' AS FLOAT/REAL)).
@@ -746,10 +739,7 @@ object ExtensionQueries {
         // NOTE: this registered query keeps the plain id-join verify on
         // purpose — its fixed 16-bit signature is the documented SATURATION
         // regime (SCALE.md), where candidates are a large corpus fraction
-        // and a candidate-id filter would cost without filtering. The
-        // production entry is Similarity.cosineNearDupPairs (width
-        // parameterized), which carries the d2/d17 candidate-bounded verify
-        // discipline behind its broadcast-size decision.
+        // and a candidate-id filter would cost without filtering.
         val cands = bands.as("x")
           .join(bands.as("y"), expr("x.band = y.band AND x.bkey = y.bkey AND x.id < y.id"))
           .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
@@ -3137,7 +3127,7 @@ object ExtensionQueries {
     // -------------------------------------------------------- multimodal ops
     Q(
       "m1_multimodal_meta",
-      "Opaque binary payload + typed JSON metadata plumbing: byte length + extracted metadata key, grouped. The batched decode legs in graft.ext.Multimodal are REAL for PNG/JPEG/BMP (javax.imageio pixels) and RIFF/WAVE PCM (pure byte parse) behind magic-byte dispatch; only formats the JVM cannot decode (video, compressed audio) fall to the deterministic StubCodec",
+      "Opaque binary payload + typed JSON metadata plumbing: byte length + extracted metadata key, grouped. The real container parse of those payloads (RIFF/WAVE PCM, ISO-BMFF, RIFF-AVI headers in graft.ext.Multimodal) runs in m2",
       (s, d) =>
         // One from_json with an explicit schema (r1: get_json_object +
         // binary cast ran 15x slower than the other events queries).
@@ -3228,10 +3218,7 @@ object ExtensionQueries {
         "heap (never a global sort) and the per-term ranking runs through " +
         "the k-bounded TopK aggregator (t12's discipline — at most k " +
         "rows per term per partition cross the exchange, no posting-list " +
-        "window). TextPipeline.writeInvertedIndex persists the same " +
-        "postings hash-bucketed by term so a production lookup prunes to " +
-        "one bucket directory (spec-pinned); this query gates the ranking " +
-        "semantics that layout serves",
+        "window)",
       (s, d) => {
         val tf = documents(s, d)
           .selectExpr("doc_id", "explode(split(lower(text), ' ')) AS term")

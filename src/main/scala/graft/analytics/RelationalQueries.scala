@@ -1194,13 +1194,13 @@ object RelationalQueries {
       "f22_zorder_index",
       "Morton (Z-order) key construction over (user_id, minute-of-window) " +
         "— the two-axis data-layout primitive behind lakehouse file " +
-        "pruning (ScaleOps.zOrderColumn / zOrdered): sorting by one column " +
+        "pruning (ScaleOps.zOrderColumnN, ManifestStore.cluster): sorting by one column " +
         "leaves the other axis full-width per file; interleaving the bits " +
         "bounds BOTH axes per z-range, so parquet min/max stats prune on " +
         "either predicate. This row gates the 16-bit interleave bitwise " +
         "over every event (bucket histogram + per-bucket z extents, exact " +
-        "integers end to end); the layout win itself is ScaleOpsSpec-" +
-        "pinned (z-layout bbox mass vs single-column sort)",
+        "integers end to end); the layout win itself is ManifestStoreSpec-" +
+        "pinned (ManifestStore.cluster prunes segments on every axis)",
       (s, d) => {
         val mi = "(unix_micros(ts) div 60000000 - 28401120)" // minutes since 2024-01-01 UTC
         val z = (0 until 16).map(i =>
@@ -1231,8 +1231,8 @@ object RelationalQueries {
         "i*n + j, here three axes (user_id, minute-of-window, low event_id " +
         "bits) into one 48-bit key — so each z-range bounds a " +
         "hyper-RECTANGLE and file min/max stats prune a selective " +
-        "predicate on ANY of the three axes (the per-axis skipped-file " +
-        "demonstration vs a single-column sort is ScaleOpsSpec-pinned; " +
+        "predicate on ANY of the three axes (the per-axis segment pruning " +
+        "of ManifestStore.cluster is ManifestStoreSpec-pinned; " +
         "this row gates the interleave arithmetic bitwise over every " +
         "event). Exact integer shifts end to end",
       (s, d) => {
@@ -1412,9 +1412,8 @@ object RelationalQueries {
         "partial aggregation reduces every partition to one <= 2^lgK-byte " +
         "register array per group BEFORE the exchange (an exact distinct " +
         "shuffles every distinct key), and the binary sketch persists + " +
-        "unions across runs (ScaleOps.writeDistinctSketches / " +
-        "estimateDistinct — incremental distinct without re-scanning " +
-        "history). Oracle-gated in the exact regime, t15's discipline: the " +
+        "unions across runs (hll_union_agg — incremental distinct without " +
+        "re-scanning history). Oracle-gated in the exact regime, t15's discipline: the " +
         "gated cardinality (active days) is bounded by the fixture's time " +
         "window at ANY corpus size, so the Datasketches coupon path is " +
         "collision-free and the estimate EQUALS DuckDB's exact " +

@@ -1,32 +1,20 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal column handling for a training-data pipeline: image/audio/video
-  * as opaque `binary` columns plus a typed metadata struct, with decode /
-  * feature-extract / resize / frame-sample as *batched partition-level*
-  * transforms (`mapPartitions` — the Scala analog of `mapInPandas`: one
-  * iterator per partition, amortizing per-batch decoder setup).
+  * as opaque `binary` columns plus a typed metadata struct, and the
+  * frame-sampling path registry query m2 runs over them.
   *
-  * Codec dispatch: PNG/JPEG/BMP payloads (sniffed by magic bytes) decode for
-  * REAL through the JDK's `javax.imageio` ([[ImageCodec]] — pixel dimensions,
-  * mean luminance, grid-pooled pixel features, resample + re-encode),
-  * RIFF/WAVE PCM audio decodes for real through [[AudioCodec]] (pure byte
-  * parsing — sample rate, duration, RMS, zero-crossing rate from the actual
-  * samples), and MJPEG-in-AVI VIDEO decodes real frame pixels through
-  * [[VideoCodec.mjpegFrames]] (RIFF chunk walk + per-frame imageio —
-  * [[decodeVideoFramesBatched]] emits per-frame dims + perceptual aHash, so
-  * video frames feed the same near-dup machinery as stills). Formats the
-  * JVM cannot decode (inter-frame-compressed video, compressed audio,
-  * exotic containers) fall back to [[StubCodec]], a deterministic fake
-  * standing in for ffmpeg.
-  * Everything Spark-side is shared between the two: the schema contract, the
-  * partition batching, null/corrupt-row tolerance, and the deterministic
-  * feature shapes. Swapping [[StubCodec]] for a JNI/JavaCPP codec changes no
-  * plan shape.
+  * [[withParsedDurations]] reads each payload's real duration from its
+  * container headers alone — RIFF/WAVE PCM ([[AudioCodec]]), ISO-BMFF MP4/MOV
+  * and RIFF-AVI ([[VideoCodec]]) — as a batched partition-level transform
+  * (`mapPartitions`, the Scala analog of `mapInPandas`); [[sampleFrames]]
+  * then explodes each duration into frame offsets. No sample is decoded:
+  * duration is the only input frame sampling needs.
   *
   * Scale: media blobs dominate row size, so the partitioning rule is
   * rows-per-partition (not bytes of metadata): repartition upstream by
@@ -45,167 +33,11 @@ object Multimodal {
       StructField("height", IntegerType),
       StructField("duration_ms", IntegerType))))))
 
-  /** STUB codec — deterministic fakes standing in for libjpeg/ffmpeg. A real
-    * deployment replaces only this object.
-    */
-  object StubCodec {
-    /** "Decode" = byte statistics; stands in for pixel decode. */
-    def decode(bytes: Array[Byte]): (Int, Double) = {
-      var sum = 0L
-      var i = 0
-      while (i < bytes.length) { sum += bytes(i) & 0xff; i += 1 }
-      (bytes.length, if (bytes.isEmpty) 0.0 else sum.toDouble / bytes.length)
-    }
-
-    /** "Feature-extract" = deterministic dim-d embedding from a rolling hash
-      * of the content; stands in for a vision encoder forward pass.
-      */
-    def features(bytes: Array[Byte], dim: Int): Array[Float] = {
-      val out = new Array[Float](dim)
-      var h = 1125899906842597L
-      var i = 0
-      while (i < bytes.length) {
-        h = 31 * h + (bytes(i) & 0xff)
-        out(i % dim) += ((h % 1000).toFloat / 1000.0f)
-        i += 1
-      }
-      out
-    }
-  }
-
-  /** REAL image codec over the JDK's pure-JVM `javax.imageio` readers —
-    * PNG, JPEG and BMP need no native library (every JDK ships a JPEG
-    * reader). Corrupt payloads that carry a valid magic are tolerated
-    * (`read` returns None), matching the PERMISSIVE posture of the batched
-    * transforms.
-    */
-  object ImageCodec {
-    private val pngMagic = Array(0x89, 0x50, 0x4e, 0x47).map(_.toByte)
-
-    /** Magic-byte sniff: the dispatch key for real-vs-stub decode. */
-    def sniff(bytes: Array[Byte]): Option[String] =
-      if (bytes == null) None
-      else if (bytes.length >= 8 && bytes.view.take(4).toArray.sameElements(pngMagic))
-        Some("image/png")
-      else if (bytes.length >= 3 && (bytes(0) & 0xff) == 0xff &&
-        (bytes(1) & 0xff) == 0xd8 && (bytes(2) & 0xff) == 0xff)
-        Some("image/jpeg")
-      else if (bytes.length >= 2 && bytes(0) == 'B'.toByte && bytes(1) == 'M'.toByte)
-        Some("image/bmp")
-      else None
-
-    def read(bytes: Array[Byte]): Option[java.awt.image.BufferedImage] =
-      sniff(bytes).flatMap { _ =>
-        // NonFatal, not just IOException: the JDK readers throw
-        // IllegalArgument/ArrayIndexOutOfBounds on some malformed headers,
-        // and one hostile blob must not kill the task (PERMISSIVE contract)
-        try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-        catch { case scala.util.control.NonFatal(_) => None }
-      }
-
-    /** (width, height, mean luminance in [0,255]) of the decoded pixels. */
-    def decode(img: java.awt.image.BufferedImage): (Int, Int, Double) = {
-      val (w, h) = (img.getWidth, img.getHeight)
-      var sum = 0.0
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = img.getRGB(x, y)
-          sum += (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3.0
-          x += 1
-        }
-        y += 1
-      }
-      (w, h, sum / (w.toLong * h))
-    }
-
-    /** Grid-pooled pixel features: pixels in raster order are mean-pooled
-      * into `dim` cells of normalized luminance — a real (if tiny) vision
-      * feature, deterministic, same shape as the stub's.
-      */
-    def features(img: java.awt.image.BufferedImage, dim: Int): Array[Float] = {
-      val (w, h) = (img.getWidth, img.getHeight)
-      val n = w.toLong * h
-      val sums = new Array[Double](dim)
-      val counts = new Array[Long](dim)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = img.getRGB(x, y)
-          val luma = (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / (3.0 * 255.0)
-          val cell = (((y.toLong * w + x) * dim) / n).toInt.min(dim - 1)
-          sums(cell) += luma
-          counts(cell) += 1
-          x += 1
-        }
-        y += 1
-      }
-      Array.tabulate(dim)(i => if (counts(i) == 0) 0.0f else (sums(i) / counts(i)).toFloat)
-    }
-
-    /** 64-bit average hash (aHash): bilinear-downsample to 8x8 luminance,
-      * threshold each cell against the mean — bit i set iff cell i is
-      * brighter than average. The standard cheap perceptual fingerprint:
-      * stable under resizing/re-encoding/small noise, so near-duplicate
-      * images land within a few bits of Hamming distance. Deterministic
-      * (fixed interpolation, raster bit order).
-      */
-    def aHash64(img: java.awt.image.BufferedImage): Long = {
-      val small = new java.awt.image.BufferedImage(8, 8, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g = small.createGraphics()
-      try {
-        g.setRenderingHint(
-          java.awt.RenderingHints.KEY_INTERPOLATION,
-          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g.drawImage(img, 0, 0, 8, 8, null)
-      } finally g.dispose()
-      val luma = new Array[Double](64)
-      var i = 0
-      while (i < 64) {
-        val rgb = small.getRGB(i % 8, i / 8)
-        luma(i) = (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3.0
-        i += 1
-      }
-      val mean = luma.sum / 64.0
-      var bits = 0L
-      i = 0
-      while (i < 64) {
-        if (luma(i) > mean) bits |= (1L << i)
-        i += 1
-      }
-      bits
-    }
-
-    /** Real resample (area-smooth) + PNG re-encode. */
-    def resize(img: java.awt.image.BufferedImage, w: Int, h: Int): Array[Byte] = {
-      val scaled = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g = scaled.createGraphics()
-      try {
-        g.setRenderingHint(
-          java.awt.RenderingHints.KEY_INTERPOLATION,
-          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g.drawImage(img, 0, 0, w, h, null)
-      } finally g.dispose()
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(scaled, "png", out)
-      out.toByteArray
-    }
-  }
-
-  /** REAL audio codec for RIFF/WAVE PCM — container + sample parsing needs
-    * no library at all (a WAV is a fixed chunk walk plus interleaved PCM
-    * frames), so the audio leg of the dispatch is as real as the image one:
-    * sample rate, channel count, duration, RMS amplitude and zero-crossing
-    * rate come from the actual samples. Non-PCM encodings (compressed WAV,
-    * mp3, ogg) still fall to [[StubCodec]].
+  /** RIFF/WAVE PCM header reader — a WAV is a fixed chunk walk, so its
+    * duration needs no library and no sample decode. Non-PCM encodings
+    * (compressed WAV, mp3, ogg) read as None.
     */
   object AudioCodec {
-    /** Mono-mixed samples normalized to [-1, 1]. */
-    final case class Wav(sampleRate: Int, channels: Int, bitsPerSample: Int,
-        frames: Int, samples: Array[Double])
-
     def sniff(bytes: Array[Byte]): Boolean =
       bytes != null && bytes.length >= 12 &&
         bytes(0) == 'R' && bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == 'F' &&
@@ -216,17 +48,15 @@ object Multimodal {
       (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) | ((b(o + 2) & 0xff) << 16) |
         ((b(o + 3) & 0xff) << 24)
 
-    /** Shared RIFF chunk walk: PCM format tuple + data-chunk location for a
-      * valid uncompressed 8/16-bit WAV, None for anything else — the header
-      * parse both the full decode ([[read]]) and the header-only
-      * [[durationMs]] run.
+    /** RIFF chunk walk: (channels, sample rate, bits per sample, data-chunk
+      * length) for a valid uncompressed 8/16-bit WAV, None for anything else.
       */
-    private def pcmChunks(bytes: Array[Byte]): Option[((Int, Int, Int, Int), (Int, Int))] = {
+    private def pcmChunks(bytes: Array[Byte]): Option[(Int, Int, Int, Int)] = {
       if (!sniff(bytes)) return None
       try {
         var off = 12
         var fmt: Option[(Int, Int, Int, Int)] = None // audioFormat, channels, rate, bits
-        var data: Option[(Int, Int)] = None          // payload offset, length
+        var data: Option[Int] = None                 // payload length
         while (off + 8 <= bytes.length && (fmt.isEmpty || data.isEmpty)) {
           val id = new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
           val sz = le32(bytes, off + 4)
@@ -234,24 +64,24 @@ object Multimodal {
           if (id == "fmt " && sz >= 16)
             fmt = Some((le16(bytes, off + 8), le16(bytes, off + 10),
               le32(bytes, off + 12), le16(bytes, off + 22)))
-          else if (id == "data") data = Some((off + 8, sz))
+          else if (id == "data") data = Some(sz)
           off += 8 + sz + (sz & 1) // RIFF chunks are word-aligned
         }
         for {
-          f @ (af, ch, rate, bits) <- fmt
+          (af, ch, rate, bits) <- fmt
           if af == 1 && (bits == 8 || bits == 16) && ch >= 1 && rate > 0
-          d <- data
-        } yield (f, d)
+          dLen <- data
+        } yield (ch, rate, bits, dLen)
       } catch { case scala.util.control.NonFatal(_) => None }
     }
 
-    /** Container-metadata duration WITHOUT sample decode: data-chunk frame
+  /** Container-metadata duration WITHOUT sample decode: data-chunk frame
       * count over the sample rate, straight from the chunk headers. This is
       * the read a frame-sampling pass does at corpus scale — per-chunk-header
-      * cost, not per-sample — and the rounding matches [[features]] exactly.
+      * cost, not per-sample.
       */
     def durationMs(bytes: Array[Byte]): Option[Int] =
-      pcmChunks(bytes).flatMap { case ((_, ch, rate, bits), (_, dLen)) =>
+      pcmChunks(bytes).flatMap { case (ch, rate, bits, dLen) =>
         val frames = dLen / (ch * (bits / 8))
         val ms = math.round(frames.toDouble * 1000.0 / rate)
         // a pathological low-rate header can claim > Int.MaxValue ms —
@@ -259,60 +89,14 @@ object Multimodal {
         if (ms > Int.MaxValue) None else Some(ms.toInt)
       }
 
-    /** Chunk-walk the RIFF container; uncompressed PCM 8/16-bit only —
-      * anything else (or any malformed header) is None, never a throw.
-      */
-    def read(bytes: Array[Byte]): Option[Wav] = {
-      try {
-        for {
-          ((_, ch, rate, bits), (dOff, dLen)) <- pcmChunks(bytes)
-        } yield {
-          val bytesPerFrame = ch * (bits / 8)
-          val frames = dLen / bytesPerFrame
-          val mono = new Array[Double](frames)
-          var f = 0
-          while (f < frames) {
-            var acc = 0.0
-            var c = 0
-            while (c < ch) {
-              val o = dOff + f * bytesPerFrame + c * (bits / 8)
-              acc += (if (bits == 16) le16(bytes, o).toShort.toDouble / 32768.0
-                      else ((bytes(o) & 0xff) - 128).toDouble / 128.0)
-              c += 1
-            }
-            mono(f) = acc / ch
-            f += 1
-          }
-          Wav(rate, ch, bits, frames, mono)
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
-
-    /** (duration_ms, RMS amplitude, zero-crossing rate per frame step). */
-    def features(w: Wav): (Int, Double, Double) = {
-      val n = w.samples.length
-      var sq = 0.0
-      var zc = 0
-      var i = 0
-      while (i < n) {
-        val s = w.samples(i)
-        sq += s * s
-        if (i > 0 && ((s >= 0) != (w.samples(i - 1) >= 0))) zc += 1
-        i += 1
-      }
-      val dur = math.round(n.toDouble * 1000.0 / w.sampleRate).toInt
-      (dur, if (n == 0) 0.0 else math.sqrt(sq / n),
-        if (n <= 1) 0.0 else zc.toDouble / (n - 1))
-    }
   }
 
   /** Minimal ISO-BMFF (MP4/MOV) container-metadata reader: a box walk to
     * `moov/mvhd`, whose timescale + duration fields give the presentation
     * duration without touching a single sample — the video leg of the
     * header-only duration dispatch ([[AudioCodec.durationMs]] is the audio
-    * leg). Sample DECODE stays out of scope (no JVM codec; [[StubCodec]]
-    * stands in) — but duration, the input frame sampling actually needs,
-    * is pure box arithmetic.
+    * leg) — plus the RIFF-AVI main header. Duration, the input frame
+    * sampling actually needs, is pure box arithmetic.
     */
   object VideoCodec {
     private def be32(b: Array[Byte], o: Int): Long =
@@ -391,36 +175,31 @@ object Multimodal {
         bytes(0) == 'R' && bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == 'F' &&
         bytes(8) == 'A' && bytes(9) == 'V' && bytes(10) == 'I' && bytes(11) == ' '
 
-    /** Walk the AVI's top-level chunks; returns (avih body offset, movi
-      * LIST body range). Either part may be absent in a malformed file.
+    /** Walk the AVI's top-level chunks to the `hdrl` LIST's `avih` main
+      * header; its body offset, or None in a malformed file.
       */
-    private def aviChunks(bytes: Array[Byte]): (Option[Int], Option[(Int, Int)]) = {
-      var avih: Option[Int] = None
-      var movi: Option[(Int, Int)] = None
+    private def aviHeader(bytes: Array[Byte]): Option[Int] = {
       var off = 12
       while (off + 8 <= bytes.length) {
         val id = new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
         val sz = le32(bytes, off + 4)
-        if (sz < 0 || off + 8 + sz > bytes.length) return (avih, movi)
-        if (id == "LIST" && sz >= 4) {
-          val listType = new String(bytes, off + 8, 4, java.nio.charset.StandardCharsets.US_ASCII)
-          if (listType == "movi") movi = Some((off + 12, off + 8 + sz.toInt))
-          else if (listType == "hdrl") {
-            // children of hdrl: the first is avih
-            var c = off + 12
-            val end = off + 8 + sz.toInt
-            while (c + 8 <= end && avih.isEmpty) {
-              val cid = new String(bytes, c, 4, java.nio.charset.StandardCharsets.US_ASCII)
-              val csz = le32(bytes, c + 4)
-              if (csz < 0 || c + 8 + csz > end) return (avih, movi)
-              if (cid == "avih") avih = Some(c + 8)
-              c += 8 + csz.toInt + (csz.toInt & 1)
-            }
+        if (sz < 0 || off + 8 + sz > bytes.length) return None
+        if (id == "LIST" && sz >= 4 &&
+            new String(bytes, off + 8, 4, java.nio.charset.StandardCharsets.US_ASCII) == "hdrl") {
+          // children of hdrl: the first is avih
+          var c = off + 12
+          val end = off + 8 + sz.toInt
+          while (c + 8 <= end) {
+            val cid = new String(bytes, c, 4, java.nio.charset.StandardCharsets.US_ASCII)
+            val csz = le32(bytes, c + 4)
+            if (csz < 0 || c + 8 + csz > end) return None
+            if (cid == "avih") return Some(c + 8)
+            c += 8 + csz.toInt + (csz.toInt & 1)
           }
         }
         off += 8 + sz.toInt + (sz.toInt & 1) // RIFF chunks are word-aligned
       }
-      (avih, movi)
+      None
     }
 
     /** AVI duration from the avih header: usPerFrame x totalFrames (fields
@@ -429,7 +208,7 @@ object Multimodal {
       */
     def aviDurationMs(bytes: Array[Byte]): Option[Int] = {
       if (!sniffAvi(bytes)) return None
-      try aviChunks(bytes)._1.flatMap { a =>
+      try aviHeader(bytes).flatMap { a =>
         if (a + 20 > bytes.length) None
         else {
           val usPerFrame = le32(bytes, a)
@@ -443,60 +222,6 @@ object Multimodal {
           else Some((usPerFrame * totalFrames / 1000L).toInt)
         }
       } catch { case scala.util.control.NonFatal(_) => None }
-    }
-
-    /** REAL video frame decode — MJPEG-in-AVI, the one mainstream video
-      * format a bare JVM decodes end to end (RIFF chunk walk + javax.imageio
-      * JPEG frames; no native codecs). Walks the `movi` LIST — recursing
-      * into `rec ` grouping LISTs, the interleaved layout most muxers emit —
-      * and decodes every `..dc`/`..db` video chunk whose payload
-      * [[ImageCodec]] can read. `keepFrame` gates the EXPENSIVE imageio
-      * decode per frame index (the cheap chunk walk still advances the
-      * index), so an every-Nth sampler pays only for the frames it keeps;
-      * frames beyond `maxFrames` are not visited (bounded work per row);
-      * malformed containers yield the frames parsed so far. Nesting of
-      * `rec ` lists is DEPTH-CAPPED at 16 (real muxers emit depth 1): a
-      * crafted container with thousands of nested 12-byte rec headers would
-      * otherwise overflow the JVM stack, and StackOverflowError is not
-      * NonFatal — the permissive-posture catch below would let it kill the
-      * executor task. Chunks below the cap are skipped, not fatal.
-      * Inter-frame-compressed codecs (H.264 etc.) return Nil here and stay
-      * on the header-parse + stub path.
-      */
-    def mjpegFrames(bytes: Array[Byte], maxFrames: Int = 64,
-        keepFrame: Int => Boolean = _ => true): List[(Int, java.awt.image.BufferedImage)] = {
-      if (!sniffAvi(bytes)) return Nil
-      try {
-        aviChunks(bytes)._2 match {
-          case None => Nil
-          case Some((from, until)) =>
-            val out = List.newBuilder[(Int, java.awt.image.BufferedImage)]
-            var idx = 0
-            def walk(from0: Int, until0: Int, depth: Int): Boolean = { // false = stop
-              var off = from0
-              while (off + 8 <= until0 && idx < maxFrames) {
-                val id = new String(bytes, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-                val sz = le32(bytes, off + 4)
-                if (sz < 0 || off + 8 + sz > until0) return false
-                if (id == "LIST" && sz >= 4 &&
-                    new String(bytes, off + 8, 4,
-                      java.nio.charset.StandardCharsets.US_ASCII) == "rec ") {
-                  if (depth < 16 && !walk(off + 12, off + 8 + sz.toInt, depth + 1)) return false
-                } else if (id.length == 4 && (id.endsWith("dc") || id.endsWith("db"))) {
-                  if (keepFrame(idx)) {
-                    val payload = java.util.Arrays.copyOfRange(bytes, off + 8, off + 8 + sz.toInt)
-                    ImageCodec.read(payload).foreach(img => out += ((idx, img)))
-                  }
-                  idx += 1
-                }
-                off += 8 + sz.toInt + (sz.toInt & 1)
-              }
-              true
-            }
-            walk(from, until, 0)
-            out.result()
-        }
-      } catch { case scala.util.control.NonFatal(_) => Nil }
     }
   }
 
@@ -522,7 +247,7 @@ object Multimodal {
     * [[sampleFrames]] for an audio/video table, replacing whatever duration
     * the row declared. Unparseable payloads keep their declared duration
     * (the [[asMedia]] default or a caller column) — the PERMISSIVE posture
-    * of the decode legs.
+    * of the codec family.
     *
     * The registered m2 query routes through this (so its oracle gates the
     * production plan): on the fixture's media-less payloads every parse
@@ -545,134 +270,6 @@ object Multimodal {
     }(enc)
   }
 
-  private val decodedSchema = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("n_bytes", IntegerType),
-    StructField("mean_byte", DoubleType),
-    StructField("mime", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("mean_luma", DoubleType)))
-
-  /** Batched decode: one codec "instance" per partition, corrupt/null rows
-    * tolerated as nulls (PERMISSIVE-style), never a per-row setup cost.
-    * PNG/BMP payloads decode for real (sniffed mime wins over the declared
-    * one; width/height/mean_luma come from actual pixels); other formats get
-    * the stub's byte statistics with null pixel columns.
-    */
-  def decodeBatched(media: DataFrame): DataFrame = {
-    val enc = RowEncoder.encoderFor(decodedSchema)
-    media.select("media_id", "content", "meta.mime").mapPartitions { it =>
-      // per-partition decoder setup happens here (ImageIO readers are
-      // per-call; stub: nothing to open)
-      it.map { r =>
-        val id = r.getLong(0)
-        val bytes = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        if (bytes == null) Row(id, null, null, r.getString(2), null, null, null)
-        else {
-          val (n, mean) = StubCodec.decode(bytes)
-          ImageCodec.read(bytes) match {
-            case Some(img) =>
-              val (w, h, luma) = ImageCodec.decode(img)
-              Row(id, n, mean, ImageCodec.sniff(bytes).get, w, h, luma)
-            case None =>
-              Row(id, n, mean, r.getString(2), null, null, null)
-          }
-        }
-      }
-    }(enc)
-  }
-
-  private val videoFrameSchema = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("frame_idx", IntegerType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("ahash64", LongType)))
-
-  /** Batched REAL video frame decode — MJPEG-in-AVI payloads decode to
-    * actual frame pixels ([[VideoCodec.mjpegFrames]]: RIFF walk +
-    * javax.imageio per frame), each kept frame emitting one row with its
-    * dimensions and perceptual aHash (the same 64-bit hash the m-family's
-    * image near-dup pipeline banding consumes — so video frames feed the
-    * SAME dedup machinery as stills). `everyNth` samples the decoded frame
-    * sequence; `maxFrames` bounds decode work per row. Non-AVI /
-    * inter-frame-compressed payloads yield zero rows and stay on the
-    * header-parse + stub path (the honest boundary: a bare JVM has no
-    * H.264 decoder).
-    */
-  def decodeVideoFramesBatched(media: DataFrame, everyNth: Int = 1,
-      maxFrames: Int = 64): DataFrame = {
-    require(everyNth >= 1, s"everyNth must be >= 1, got $everyNth")
-    val enc = RowEncoder.encoderFor(videoFrameSchema)
-    media.select("media_id", "content").mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        // sampling gates the imageio decode itself, not just the output —
-        // everyNth=8 pays for 1/8th of the frames, not all of them
-        VideoCodec.mjpegFrames(bytes, maxFrames, idx => idx % everyNth == 0)
-          .iterator.map { case (idx, img) =>
-            Row(r.getLong(0), idx, img.getWidth, img.getHeight,
-              ImageCodec.aHash64(img))
-          }
-      }
-    }(enc)
-  }
-
-  private val audioSchema = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("sample_rate", IntegerType),
-    StructField("channels", IntegerType),
-    StructField("duration_ms", IntegerType),
-    StructField("rms", DoubleType),
-    StructField("zero_cross_rate", DoubleType)))
-
-  /** Batched audio decode: PCM WAV rows get sample-derived stats
-    * ([[AudioCodec]]); every other payload yields null stats, keeping the
-    * row (the PERMISSIVE posture of [[decodeBatched]]).
-    */
-  def decodeAudioBatched(media: DataFrame): DataFrame = {
-    val enc = RowEncoder.encoderFor(audioSchema)
-    media.select("media_id", "content").mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val bytes = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        AudioCodec.read(bytes) match {
-          case Some(w) =>
-            val (dur, rms, zcr) = AudioCodec.features(w)
-            Row(id, w.sampleRate, w.channels, dur, rms, zcr)
-          case None => Row(id, null, null, null, null, null)
-        }
-      }
-    }(enc)
-  }
-
-  private def featureSchema(dim: Int) = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("embedding", ArrayType(FloatType))))
-
-  /** Batched feature extraction -> fixed-dim Float embedding column, the
-    * input shape the similarity-search operators consume. Decodable images
-    * yield REAL grid-pooled pixel features; everything else the stub's
-    * rolling-hash fake — identical shape, so downstream ANN is agnostic.
-    */
-  def extractFeatures(media: DataFrame, dim: Int = 16): DataFrame = {
-    val enc = RowEncoder.encoderFor(featureSchema(dim))
-    media.select("media_id", "content").mapPartitions { it =>
-      it.flatMap { r =>
-        if (r.isNullAt(1)) None
-        else {
-          val bytes = r.getAs[Array[Byte]](1)
-          val fs = ImageCodec.read(bytes) match {
-            case Some(img) => ImageCodec.features(img, dim)
-            case None      => StubCodec.features(bytes, dim)
-          }
-          Some(Row(r.getLong(0), fs.toSeq))
-        }
-      }
-    }(enc)
-  }
-
   /** Frame sampling: one output row per sampled frame index at `everyMs`
     * granularity of `meta.duration_ms` — a generator (UDTF-shaped) transform.
     */
@@ -687,70 +284,4 @@ object Multimodal {
           .otherwise(array().cast("array<int>")))
         .as("frame_ms"))
 
-  /** Resize: decodable images are REALLY resampled (bilinear) and re-encoded
-    * as PNG; other payloads pass through with only the metadata rewrite (the
-    * plan-side contract of a resize — dims change, payload re-encoded).
-    */
-  def resize(media: DataFrame, w: Int, h: Int): DataFrame = {
-    media.select("media_id", "content", "meta.mime", "meta.duration_ms")
-      .mapPartitions { it =>
-        it.map { r =>
-          val id = r.getLong(0)
-          val bytes = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-          val (outBytes, outMime) = ImageCodec.read(bytes) match {
-            case Some(img) => (ImageCodec.resize(img, w, h), "image/png")
-            case None      => (bytes, if (r.isNullAt(2)) null else r.getString(2))
-          }
-          val dur: Any = if (r.isNullAt(3)) null else r.getInt(3)
-          Row(id, outBytes, Row(outMime, w, h, dur))
-        }
-      }(RowEncoder.encoderFor(StructType(mediaSchema.fields.toSeq)))
-  }
-
-  private val hashSchema = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("ahash", LongType)))
-
-  /** Perceptual hashes for every decodable image row ([[ImageCodec.aHash64]];
-    * undecodable/null payloads drop — a hash of garbage is noise, not
-    * signal). One scan, one 8-byte output per image: the projection that
-    * turns a petabyte image corpus into a joinable fingerprint table.
-    */
-  def imageHashes(media: DataFrame): DataFrame =
-    media.select("media_id", "content").mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        ImageCodec.read(bytes).map(img => Row(r.getLong(0), ImageCodec.aHash64(img)))
-      }
-    }(RowEncoder.encoderFor(hashSchema))
-
-  /** Near-duplicate image pairs by aHash Hamming distance, banded — the n9
-    * binary-ANN discipline on the image leg: the 64-bit hash splits into 4
-    * disjoint 16-bit bands; a pair within Hamming distance <= 3 differs in
-    * at most 3 bands, so BY PIGEONHOLE it collides on at least one — the
-    * band equi-join is candidate-COMPLETE for `maxHamming` <= 3 and
-    * O(collisions), never all-pairs. Exact `bit_count(xor)` verify; the cap
-    * guards a degenerate corpus (all-black thumbnails) from a quadratic
-    * bucket, same contract as [[Similarity.capBuckets]].
-    */
-  def imageNearDupPairs(hashes: DataFrame, maxHamming: Int = 3,
-      maxBucket: Int = 10000): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"banding is candidate-complete only for maxHamming <= 3, got $maxHamming")
-    val banded = Similarity.capBuckets(
-      hashes.selectExpr("media_id", "ahash",
-        "explode(array(0, 1, 2, 3)) AS band")
-        .selectExpr("media_id", "ahash", "band",
-          "(ahash >> (band * 16)) & 65535 AS bkey"),
-      Seq("band", "bkey"), maxBucket)
-    banded.as("a")
-      .join(banded.as("b").hint("merge"), expr(
-        "a.band = b.band AND a.bkey = b.bkey AND a.media_id < b.media_id"))
-      .select(
-        col("a.media_id").as("id_a"), col("b.media_id").as("id_b"),
-        expr("bit_count(a.ahash ^ b.ahash)").as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
-      .orderBy("id_a", "id_b")
-  }
 }

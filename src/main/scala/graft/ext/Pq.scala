@@ -57,28 +57,28 @@ object Pq {
       if (sampleFraction < 1.0)
         corpus.where(pmod(h, lit(1000000L)) < lit(math.round(sampleFraction * 1000000L)))
       else corpus
-    val sampled = collectSample(thinned, vecCol, seed, maxSample)
-    trainBlocks(sampled, m, k, seed, iters)
-  }
-
-  /** The content-stable bounded sample fetch [[train]] and [[trainIvfPq]]
-    * share (see [[train]]'s determinism note).
-    */
-  private def collectSample(corpus: DataFrame, vecCol: String, seed: Long,
-      maxSample: Int): Array[Array[Float]] = {
-    val sampled = corpus
-      .where(col(vecCol).isNotNull)
-      .select(col(vecCol))
-      .orderBy(xxhash64(col(vecCol), lit(seed)), col(vecCol))
+    val sampled = thinned
+      .where(vc.isNotNull)
+      .select(vc)
+      .orderBy(h, vc)
       .limit(maxSample).collect()
       .map(_.getSeq[Float](0).toArray)
     require(sampled.nonEmpty, "PQ training sample is empty")
-    sampled
+    val dim = sampled.head.length
+    require(dim % m == 0, s"dim $dim must divide into m=$m blocks")
+    val ds = dim / m
+    val rng = new scala.util.Random(seed)
+    val codebooks = Array.tabulate(m) { j =>
+      val block = sampled.map(v => java.util.Arrays.copyOfRange(v, j * ds, (j + 1) * ds))
+      // deterministic init: k distinct-ish rows at seeded positions
+      val cents = Array.tabulate(k)(i => block(((rng.nextInt(Int.MaxValue).toLong + i) % block.length).toInt).clone())
+      lloyd(block, cents, iters)
+    }
+    Model(m, k, dim, codebooks)
   }
 
-  /** Deterministic driver Lloyd over one flat set of vectors — the k-means
-    * kernel shared by the per-block codebook trainer and the coarse-cell
-    * trainer (empty cells keep their centroid: deterministic, no resample).
+  /** Deterministic driver Lloyd over one block of subvectors (empty cells
+    * keep their centroid: deterministic, no resample).
     */
   private def lloyd(block: Array[Array[Float]], cents: Array[Array[Float]],
       iters: Int): Array[Array[Float]] = {
@@ -105,54 +105,6 @@ object Pq {
       it += 1
     }
     cents
-  }
-
-  /** Per-block codebook training over an in-driver sample (the tail of
-    * [[train]], reusable on residual samples by [[trainIvfPq]]).
-    */
-  private def trainBlocks(sampled: Array[Array[Float]], m: Int, k: Int,
-      seed: Long, iters: Int): Model = {
-    val dim = sampled.head.length
-    require(dim % m == 0, s"dim $dim must divide into m=$m blocks")
-    val ds = dim / m
-    val rng = new scala.util.Random(seed)
-    val codebooks = Array.tabulate(m) { j =>
-      val block = sampled.map(v => java.util.Arrays.copyOfRange(v, j * ds, (j + 1) * ds))
-      // deterministic init: k distinct-ish rows at seeded positions
-      val cents = Array.tabulate(k)(i => block(((rng.nextInt(Int.MaxValue).toLong + i) % block.length).toInt).clone())
-      lloyd(block, cents, iters)
-    }
-    Model(m, k, dim, codebooks)
-  }
-
-  /** Train the FULL IVFPQ model from the corpus (the trained counterpart of
-    * the registered n4/n6 rows' fixed seeded constants — those stay
-    * constants because their DuckDB oracles must be static SQL, but a
-    * deployment trains on its own data): sampled k-means coarse cells over
-    * the full vectors, then residual codebooks over (v − cell centroid) of
-    * the SAME content-stable sample — the FAISS-IVFPQ training recipe.
-    * Returns (coarse centroids, residual PQ model) ready for
-    * [[ivfPqEncode]]/[[ivfPqTopK]]. One bounded sample collect total;
-    * everything else is driver arithmetic.
-    */
-  def trainIvfPq(corpus: DataFrame, vecCol: String, nCells: Int, m: Int,
-      k: Int, seed: Long = 42L, iters: Int = 10,
-      maxSample: Int = 16384): (Array[Array[Float]], Model) = {
-    val sampled = collectSample(corpus, vecCol, seed, maxSample)
-    val dim = sampled.head.length
-    require(dim % m == 0, s"dim $dim must divide into m=$m blocks")
-    val rng = new scala.util.Random(seed)
-    val init = Array.tabulate(nCells)(i =>
-      sampled(((rng.nextInt(Int.MaxValue).toLong + i) % sampled.length).toInt).clone())
-    val coarse = lloyd(sampled, init, iters)
-    val residuals = sampled.map { v =>
-      val c = nearest(coarse, v)
-      val res = new Array[Float](dim)
-      var t = 0
-      while (t < dim) { res(t) = v(t) - coarse(c)(t); t += 1 }
-      res
-    }
-    (coarse, trainBlocks(residuals, m, k, seed, iters))
   }
 
   private def nearest(cents: Array[Array[Float]], v: Array[Float]): Int = {

@@ -313,120 +313,6 @@ object Similarity {
     topKByQuery(scored, k)
   }
 
-  /** ANN index evaluation: per-query recall of an approximate result
-    * against the exact reference, both in the family's (qid, rank, id, …)
-    * output shape. recall = |approx ∩ exact| / |exact| per qid; queries the
-    * approximate path missed entirely score 0 (left join). State is
-    * k-bounded end to end — both inputs are top-k tables, so the
-    * collect_set buffers hold at most k ids. The index-quality probe every
-    * production ANN deployment runs before trusting a parameter choice
-    * (nlist/nprobe, bits/bands, PQ m).
-    */
-  def recallAtK(approx: DataFrame, exact: DataFrame): DataFrame =
-    exact.groupBy("qid").agg(collect_set(col("id")).as("__ref"))
-      .join(approx.groupBy("qid").agg(collect_set(col("id")).as("__got")), Seq("qid"), "left")
-      .selectExpr("qid",
-        "CAST(size(array_intersect(coalesce(__got, array()), __ref)) AS DOUBLE) / size(__ref) AS recall")
-      .orderBy("qid")
-
-  /** Cell assignment against a DRIVER-HELD centroid list as one shuffle-free
-    * projection: per cell, `||x - c||^2` ranks as `c.c - 2 x.c` (the `|x|^2`
-    * term is constant per row), and the argmin with ties to the lowest cell
-    * id is a `least` over `(dist, cell)` structs — exactly the broadcast
-    * assignment `KMeansModel.transform` does, expressed in columns. The
-    * centroid list is bounded driver state (k x dim doubles, the
-    * query-batch-broadcast discipline); for centroid tables too large to
-    * inline, train/assign through [[ivfIndex]] instead.
-    */
-  def assignCellExpr(cents: Seq[(Int, Seq[Double])], vecCol: String):
-      org.apache.spark.sql.Column = {
-    require(cents.nonEmpty, "need at least one centroid")
-    val scored = cents.sortBy(_._1).map { case (cell, cv) =>
-      // typed lits, not SQL-text literals: a bare "0.25" in SQL parses as
-      // DECIMAL and fails array_dot's (double[], double[]) signature
-      val dot = call_function("array_dot", col(vecCol), array(cv.map(lit(_)): _*))
-      val cc = cv.map(x => x * x).sum
-      struct((lit(cc) - lit(2.0) * dot).as("d"), lit(cell).as("c"))
-    }
-    val best = if (scored.size == 1) scored.head else least(scored: _*)
-    best.getField("c")
-  }
-
-  /** SemDeDup (semantic dedup over embedding clusters): coarse cells block
-    * the corpus, then within each cell every member with an earlier
-    * (lower-id) cell-mate at cosine >= `threshold` is dropped — the
-    * join-shaped one-pass dominance rule of the registered `d9_semdedup`
-    * query, composed with a TRAINED quantizer as a single library call.
-    *
-    * `vectors` is a [[prepare]]d table `(id, v, nrm)`. With `centroids`
-    * empty, cells come from [[ivfIndex]]'s sampled k-means over `v` (the
-    * production path; increments [[kmeansFits]]). With `centroids` given
-    * (`cell`, `cv` rows — e.g. a previously trained index, or d9's fixed
-    * oracle centroids), assignment is the shuffle-free [[assignCellExpr]]
-    * projection over `assignVec` (defaults to `v`; d9 assigns on a prefix
-    * slice while cosine uses the full vector, so the two are separable).
-    *
-    * Output: `(id, cell, kept)` — every surviving row of the corpus with its
-    * blocking cell; `kept = false` marks dominance-dropped near-duplicates.
-    *
-    * Scale: pair generation is cell-blocked (k grows with the corpus,
-    * capping cell width), never corpus-global; assignment is a broadcast
-    * projection; the only shuffles are the dominance self-join on `cell`
-    * (and, on the trained path, k-means' own sampled fit).
-    *
-    * `maxCellWidth` guards the self-join against a degenerate embedding
-    * distribution (or bad centroids) collapsing the corpus into one cell and
-    * silently re-creating the O(n^2) join cell-blocking exists to avoid.
-    * Unlike the LSH family's [[capBuckets]] (where dropping a
-    * non-discriminative bucket only trades recall), skipping an oversized
-    * CELL here would silently leave its members UN-deduplicated — so the
-    * guard fails loudly instead: the fix is a larger `k` (more, narrower
-    * cells) or retrained centroids, and the operator must choose it. The
-    * check is one narrow (cell, count) aggregate over the assignment —
-    * cheap, and it pre-materializes the checkpoint the join reads anyway.
-    */
-  def semDedup(vectors: DataFrame, k: Int, threshold: Double,
-      centroids: Option[DataFrame] = None, assignVec: String = "v",
-      seed: Long = 42L, trainFraction: Double = 1.0,
-      maxCellWidth: Int = 1 << 20): DataFrame = {
-    val spark = vectors.sparkSession
-    GraftFunctions.register(spark)
-    val assigned = centroids match {
-      case Some(c) =>
-        val cents = c.selectExpr("CAST(cell AS INT) AS cell", "CAST(cv AS ARRAY<DOUBLE>) AS cv")
-          .collect()
-          .map(r => r.getInt(0) -> r.getSeq[Double](1))
-          .toSeq
-        vectors.withColumn("cell", assignCellExpr(cents, assignVec))
-      case None =>
-        require(assignVec == "v",
-          "the trained path clusters on the similarity vector itself")
-        ivfIndex(vectors, k, seed, trainFraction)._1
-    }
-    // the cell table feeds both sides of the dominance join — cut lineage so
-    // assignment (and on the trained path the k-means transform) runs once
-    val a = assigned.select(col("id"), col("cell"), col("v"), col("nrm"))
-      .localCheckpoint(eager = false)
-    val hot = a.groupBy("cell").agg(count(lit(1)).as("__w"))
-      .where(col("__w") > maxCellWidth).limit(1).collect()
-    hot.headOption.foreach { r =>
-      throw new IllegalStateException(
-        s"semDedup: cell ${r.get(0)} holds ${r.getLong(1)} members (> maxCellWidth " +
-          s"$maxCellWidth) — the dominance self-join would go quadratic. Raise k " +
-          "(narrower cells), retrain centroids, or raise maxCellWidth deliberately.")
-    }
-    val dropped = a.as("a")
-      .join(a.as("b"), expr(
-        s"a.cell = b.cell AND b.id < a.id AND " +
-          s"array_dot(a.v, b.v) / (a.nrm * b.nrm) >= $threshold"),
-        "left_semi")
-      .select(col("id"))
-      .withColumn("__drop", lit(1))
-    a.select("id", "cell")
-      .join(dropped, Seq("id"), "left")
-      .select(col("id"), col("cell"), col("__drop").isNull.as("kept"))
-  }
-
   /** Bucket-size guard for the LSH family: drop band buckets holding more
     * than `maxBucket` members before any bucket self/probe join. A band key
     * shared by a large fraction of the corpus is non-discriminative (it
@@ -449,59 +335,6 @@ object Similarity {
       .where(col("__n") > maxBucket)
       .select(keyCols.map(col): _*)
     bandTable.join(broadcast(oversized), keyCols, "left_anti")
-  }
-
-  /** Embedding-cosine near-duplicate pairs — the library form of the
-    * registered `d5_dedup_embedding_cosine` query with the SIGNATURE WIDTH
-    * exposed: sign-LSH bands generate candidates (bucket self-join, capped
-    * by [[capBuckets]]), an exact cosine >= `threshold` join verifies them.
-    * Output: (id_a, id_b, score) with id_a < id_b, ordered.
-    *
-    * Why `bits`/`bands` are parameters and not constants: a b-bit band has
-    * 2^b possible keys, and once a corpus's cluster count saturates that key
-    * space, bucket width — and with it candidate-pair volume — grows
-    * linearly with corpus size (measured: SCALE.md round-6, 455k -> 7.28M
-    * candidates for 4x rows at the registered query's fixed 16-bit/4-band
-    * setting). The operational rule is bits-per-band ~ log2(expected cluster
-    * count), adding bands to recover recall (a pair must agree on ALL bits
-    * of SOME band, so wider bands are more selective but miss more; more
-    * bands compensate). The registered query pins 16/4 only because its
-    * DuckDB oracle must stay one static SQL string across scale factors.
-    */
-  def cosineNearDupPairs(prepared: DataFrame, threshold: Double,
-      bits: Int = 16, bands: Int = 4, maxBucket: Int = 1 << 20,
-      broadcastPairBound: Long = 4000000L): DataFrame = {
-    val spark = prepared.sparkSession
-    GraftFunctions.register(spark)
-    val banded = capBuckets(
-      signBands(prepared, bits, bands).select("id", "band", "bkey"),
-      Seq("band", "bkey"), maxBucket)
-    // eager + count: the d2/d17 verify discipline (SCALE.md session-9) —
-    // near-dup candidates are a small corpus fraction, so the verify should
-    // exchange CANDIDATE vectors only, with the id set broadcast decided at
-    // initial planning (AQE's late SMJ->BHJ conversion ships the corpus-side
-    // vector exchange first)
-    val cands = banded.as("x")
-      .join(banded.as("y"), expr("x.band = y.band AND x.bkey = y.bkey AND x.id < y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-      .localCheckpoint(eager = true)
-    val small = cands.count() <= broadcastPairBound
-    val candIds = cands.select(col("id_a").as("id"))
-      .union(cands.select(col("id_b").as("id")))
-    // semi-filter ONLY on the broadcast path: above the bound the candidate
-    // set is saturation-regime (a large corpus fraction — d5's documented
-    // fixed-width collapse), where a shuffled semi-join filters little and
-    // just adds an exchange; the plain id joins are then the right plan
-    val cv0 = prepared.select(col("id"), col("v"), col("nrm"))
-    val cv = if (small) cv0.join(broadcast(candIds), Seq("id"), "left_semi") else cv0
-    cands
-      .join(cv.selectExpr("id AS id_a", "v AS va", "nrm AS na"), Seq("id_a"))
-      .join(cv.selectExpr("id AS id_b", "v AS vb", "nrm AS nb"), Seq("id_b"))
-      .withColumn("score", expr("array_dot(va, vb) / (na * nb)"))
-      .where(col("score") >= threshold)
-      .select("id_a", "id_b", "score")
-      .orderBy("id_a", "id_b")
   }
 
   /** LSH-bucketed ANN: candidates share at least one band with the query;

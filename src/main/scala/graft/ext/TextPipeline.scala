@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-pipeline scrubbing operators beyond the reference's surface: PII
@@ -32,44 +32,4 @@ object TextPipeline {
   /** 1 if the column matches the i-th PII pattern (pre-redaction hit flag). */
   def hit(text: Column, i: Int): Column =
     when(text.rlike(piiPatterns(i)._1), 1).otherwise(0)
-
-  /** Build an on-disk inverted index: postings `(term, doc_id, tf)` from
-    * whitespace tokens, laid out as `bucket=<pmod(hash(term), buckets)>/`
-    * partition directories. A term lookup then prunes to ONE directory —
-    * O(postings / buckets) read instead of a full index scan — using plain
-    * partition pruning (no metastore, no bucketed-table catalog state; the
-    * layout travels with the files, which is what a 1000-executor job
-    * restarted against object storage actually needs).
-    *
-    * The partition key is Spark's Murmur3 `hash` of the term, computed by
-    * the SAME expression at write and lookup time, so pruning can never
-    * disagree with placement. Postings shuffle once (the tf groupBy);
-    * within a bucket directory files hold term-sorted rows so a reader's
-    * `term = ?` filter also row-group-prunes via parquet min/max.
-    */
-  def writeInvertedIndex(docs: DataFrame, dir: String, buckets: Int): Unit = {
-    require(buckets > 0, "buckets must be positive")
-    docs
-      .selectExpr("doc_id", "explode(split(lower(text), ' ')) AS term")
-      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .withColumn("bucket", pmod(hash(col("term")), lit(buckets)))
-      // bucket leads the sort: partitionBy(bucket) requires bucket-clustered
-      // rows, and pre-satisfying that ordering means the file writer adds no
-      // sort of its own — term order inside each bucket file is therefore
-      // guaranteed (parquet min/max row-group pruning on term), not an
-      // artifact of the writer's sort stability
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "term", "doc_id")
-      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
-  }
-
-  /** Postings for one term from a [[writeInvertedIndex]] layout. The bucket
-    * predicate is a literal equality on the partition column -> Catalyst
-    * prunes every other directory at planning time (spec-pinned: the scan's
-    * selected partition count is 1).
-    */
-  def lookupTerm(spark: SparkSession, dir: String, term: String, buckets: Int): DataFrame =
-    spark.read.parquet(dir)
-      .where(col("bucket") === pmod(hash(lit(term)), lit(buckets)) && col("term") === term)
-      .select("term", "doc_id", "tf")
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1537,18 +1538,28 @@ object ManifestStore {
     val root = new Path(path)
     val fs = fsOf(spark, root)
     val tiebreak = batch.columns.filter(_ != key).sorted.map(col).toSeq
-    val deduped = graft.silver.Transformer
-      .dedupKeepFirst(batch.where(col(key).isNotNull), key, tiebreak)
+    // keep-first per key (Transformer.dedupKeepFirst's order), each kept
+    // row carrying its key group's size, so the one pass that fills the
+    // cache also counts the source; null keys form one group, dropped below
+    val w = Window.partitionBy(key).orderBy(tiebreak: _*)
+    val wholeGroup = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val kept = batch
+      .select(col("*"), row_number().over(w).as("__rn"),
+        count(lit(1)).over(wholeGroup).as("__n"))
+      .where(col("__rn") === 1)
+      .drop("__rn")
       .cache()
+    val deduped = kept.where(col(key).isNotNull).drop("__n")
     try {
       current(spark, path).foreach(requireCompatible(spark, path, _, batch))
-      val nBatch = deduped.count()
-      // dropped = within-batch duplicate keys + null-key rows (one count)
-      val nDropped = batch.count() - nBatch
+      val counts = kept.agg(coalesce(sum("__n"), lit(0L)), count(col(key))).head()
+      val nBatch = counts.getLong(1)
+      // dropped = within-batch duplicate keys + null-key rows
+      val nDropped = counts.getLong(0) - nBatch
       var attempt = 0
       while (attempt < MaxRetries) {
         val base = current(spark, path).getOrElse(Snapshot(0L, Nil))
-        // on an empty table the batch itself is fresh: it is already cached,
+        // on an empty table the batch itself is fresh: it reads the cache,
         // and unpersisting it here would drop the cache a retry reuses
         val freshC =
           if (base.segments.isEmpty) deduped
@@ -1574,7 +1585,7 @@ object ManifestStore {
       }
       throw new IllegalStateException(
         s"ManifestStore.upsert: lost the publish race $MaxRetries times at $path")
-    } finally deduped.unpersist()
+    } finally kept.unpersist()
   }
 
   /** Full-table rewrite commit — the primitive under [[compact]] and
@@ -1972,8 +1983,7 @@ object ManifestStore {
     * plain range cluster), record `statsCols` min/max per segment, and
     * publish ONE manifest. Each segment then covers a bounded
     * hyper-rectangle of EVERY axis, so [[readWhere]] on ANY clustered
-    * column prunes most of the table from the manifest alone — the
-    * manifest-level twin of the f25 file-level pruning pin, and the layout
+    * column prunes most of the table from the manifest alone — the layout
     * maintenance job a 100 TB table runs beside [[compact]]. Slice
     * assignment is `floor(rank * segments / total)` over the exact global
     * z-key rank ([[ScaleOps.groupedGlobalRowNumber]] — range exchange +

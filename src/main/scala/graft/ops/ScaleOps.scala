@@ -486,8 +486,7 @@ object ScaleOps {
     * — derived from the same driver-side offset table, so callers that need
     * ntile/percent_rank denominators skip a second full pass + join.
     *
-    * `maxOffsetRows` guards the bounded-driver-state contract (the
-    * [[graft.ext.Similarity.semDedup]] `maxCellWidth` discipline): the
+    * `maxOffsetRows` guards the bounded-driver-state contract: the
     * offset table is O(partitions x groups) and is collected + broadcast,
     * which is the POINT for low-cardinality ranking groups (w14's shape) —
     * but a caller passing a high-cardinality group column would silently
@@ -1189,52 +1188,6 @@ object ScaleOps {
   }
 
   // ------------------------------------------------------------------------
-  // Distinct counting across runs: persistable, mergeable HLL sketches.
-  //
-  // Spark's `approx_count_distinct` answers "distinct within THIS job"; a
-  // 100 TB ingest needs "distinct users/urls/docs across all runs so far"
-  // without re-scanning history. The Spark-native answer is the
-  // Datasketches HLL surface (`hll_sketch_agg` / `hll_union_agg` /
-  // `hll_sketch_estimate`): each run reduces to one tiny binary sketch per
-  // group (<= ~2^lgK bytes), sketches land in a parquet store, and the
-  // union across runs is associative/commutative/idempotent-ish (re-adding
-  // a value never inflates the count) — the same fold-across-batches
-  // discipline as the Misra-Gries store, for cardinality instead of
-  // frequency. In the small-cardinality regime the Datasketches coupon
-  // path makes the estimate EXACT, which is what lets `a20_sketch_distinct`
-  // gate against a DuckDB COUNT(DISTINCT) oracle (the t15 exact-regime
-  // discipline).
-  // ------------------------------------------------------------------------
-
-  /** Append one run's per-group HLL sketches to `dir` (one row per group:
-    * group string, sketch binary, run tag). Input shuffles only the partial
-    * sketches — partial aggregation reduces each partition to one sketch
-    * per group before the exchange.
-    */
-  def writeDistinctSketches(
-      df: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      dir: String,
-      runId: String,
-      lgK: Int = 12): Unit =
-    df.selectExpr(s"CAST($groupCol AS STRING) AS g", valueCol)
-      .groupBy("g")
-      .agg(expr(s"hll_sketch_agg($valueCol, $lgK)").as("sketch"))
-      .withColumn("run_id", lit(runId))
-      .coalesce(1)
-      .write.mode("append").parquet(dir)
-
-  /** Fold every run's sketches in `dir` to one estimate per group. Cost is
-    * O(runs x groups) sketch rows, independent of the data ever ingested.
-    */
-  def estimateDistinct(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
-      .groupBy("g")
-      .agg(expr("hll_sketch_estimate(hll_union_agg(sketch, true))").as("n_distinct"))
-      .orderBy("g")
-
-  // ------------------------------------------------------------------------
   // Z-order (Morton) data layout: multi-dimensional clustering for min/max
   // file pruning. Sorting 100 TB by ONE column makes that column's file
   // min/max ranges narrow and every other column's ranges full-width —
@@ -1242,6 +1195,7 @@ object ScaleOps {
   // of two dimensions into one sort key bounds BOTH dimensions per file
   // (each file covers a z-curve segment ~ a small rectangle), which is how
   // lakehouse tables serve selective queries on two axes from one layout.
+  // `ManifestStore.cluster` lays a table out on this key.
   // ------------------------------------------------------------------------
 
   /** Bit-interleaved Morton key of N >= 2 non-negative integer expressions:
@@ -1262,27 +1216,4 @@ object ScaleOps {
       s"shiftleft(shiftright($c, $i) & 1, ${i * n + j})")
       .mkString("(", " + ", ")"))
   }
-
-  /** The 2-D special case of [[zOrderColumnN]] (`x` even bits, `y` odd). */
-  def zOrderColumn(x: String, y: String, bits: Int = 16): org.apache.spark.sql.Column =
-    zOrderColumnN(Seq(x, y), bits)
-
-  /** Lay `df` out in Z-order on N columns: range-partition then sort by the
-    * Morton key, so each output partition/file covers a bounded
-    * hyper-rectangle of EVERY interleaved dimension (ScaleOpsSpec pins the
-    * per-axis stats-pruning win vs a single-column sort). Write the result
-    * with any sink; file/row-group min/max stats then prune a selective
-    * predicate on ANY of the axes.
-    */
-  def zOrderedN(df: DataFrame, cols: Seq[String],
-      bits: Int = 16, partitions: Int = 32): DataFrame =
-    df.withColumn("__z", zOrderColumnN(cols, bits))
-      .repartitionByRange(partitions, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-
-  /** The 2-D special case of [[zOrderedN]]. */
-  def zOrdered(df: DataFrame, x: String, y: String,
-      bits: Int = 16, partitions: Int = 32): DataFrame =
-    zOrderedN(df, Seq(x, y), bits, partitions)
 }

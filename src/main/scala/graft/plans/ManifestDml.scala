@@ -50,8 +50,7 @@ import graft.sources.ManifestTable
   * subquery predicates) fails LOUDLY with the supported grammar in the
   * message — never silently approximated.
   *
-  * Install: `spark.sql.extensions=graft.GraftExtensions` (config path), or
-  * [[ManifestDml.install]] on a driver-owned session (the
+  * Install: [[ManifestDml.install]] on a driver-owned session (the
   * `experimental.extraStrategies` runtime seam; idempotent).
   */
 object ManifestDml {

@@ -36,12 +36,6 @@ class DashboardSpec extends SparkSpec {
       "cell text must be HTML-escaped")
     assert(html.contains("CLEAR") && html.contains("RAIN"), "rate section rendered")
     assert(html.contains("crash_record_id: string"), "schema listed")
-    // write-through: bytes land at the path and round-trip
-    val out = tmpDir("report") + "/report.html"
-    val n = Dashboard.writeReport(spark, g, out, "2026-08-14 12:00:00")
-    val back = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(out)), "UTF-8")
-    assert(back == html && n == html.getBytes("UTF-8").length.toLong)
   }
 
   test("rateBy computes sum/count -> percentage per dimension (A5 workhorse)") {

@@ -182,6 +182,9 @@ class ManifestPublisherSpec extends SparkSpec {
       scans.value
     }
     val wonFirst = sourceScans(loseFirstPublish = false)
+    // the pass that fills the dedup cache also yields the dropped-row count
+    assert(wonFirst == 200L,
+      s"a first-try win must compute its 200 source rows once, computed $wonFirst")
     val lostThenWon = sourceScans(loseFirstPublish = true)
     assert(lostThenWon <= wonFirst,
       s"a lost-then-won upsert scanned its source $lostThenWon times, a first-try win $wonFirst")

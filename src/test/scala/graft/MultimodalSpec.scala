@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.ext.Multimodal
 
-/** Multimodal plumbing: schema contract, batched decode, feature shape,
-  * frame generation (decode itself is the documented stub).
+/** Multimodal plumbing: schema contract, header-only container durations
+  * (WAV, MP4, AVI) and the frame generator registry query m2 runs.
   */
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
@@ -21,151 +19,10 @@ class MultimodalSpec extends SparkSpec {
     assert(meta.fieldNames.toSeq == Seq("mime", "width", "height", "duration_ms"))
   }
 
-  test("decodeBatched runs per-partition, tolerates null payloads as null rows") {
-    val out = Multimodal.decodeBatched(media).orderBy("media_id").collect()
-    assert(out(0).getInt(1) == 11 && out(0).getDouble(2) > 0) // "hello world"
-    assert(out(2).isNullAt(1), "null payload -> null decode, row preserved")
-  }
-
-  test("extractFeatures emits fixed-dim float embeddings, deterministic") {
-    val f1 = Multimodal.extractFeatures(media, dim = 8).orderBy("media_id").collect()
-    val f2 = Multimodal.extractFeatures(media, dim = 8).orderBy("media_id").collect()
-    assert(f1.length == 2, "null-payload row dropped from features")
-    assert(f1(0).getSeq[Float](1).length == 8)
-    assert(f1(0).getSeq[Float](1) == f2(0).getSeq[Float](1))
-  }
-
   test("sampleFrames generates one row per frame step (UDTF shape)") {
     val frames = Multimodal.sampleFrames(media, everyMs = 250)
     assert(frames.count() == 12) // 3 rows x 4 frames (0,250,500,750) of 1000ms
     assert(frames.where($"media_id" === 1).count() == 4)
-  }
-
-  test("resize rewrites metadata dims, preserves non-image payload") {
-    val r = Multimodal.resize(media, 32, 32)
-      .select($"meta.width", $"meta.height", $"content").orderBy("media_id").collect()
-    assert(r.forall(x => x.getInt(0) == 32 && x.getInt(1) == 32))
-    assert(new String(r(0).getAs[Array[Byte]](2), "UTF-8") == "hello world",
-      "undecodable payload passes through unchanged")
-  }
-
-  // ------------------------------------------------------- real image decode
-
-  /** A 2x2 PNG with known pixels: white, black, red, blue. */
-  private def tinyPng(): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(2, 2, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    img.setRGB(0, 0, 0xffffff); img.setRGB(1, 0, 0x000000)
-    img.setRGB(0, 1, 0xff0000); img.setRGB(1, 1, 0x0000ff)
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", out)
-    out.toByteArray
-  }
-
-  test("decodeBatched decodes a real PNG: sniffed mime, pixel dims, exact mean luminance") {
-    val png = tinyPng()
-    val m = Multimodal.asMedia(Seq((7L, "not an image")).toDF("id", "payload"), "id", "payload")
-      .union(spark.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(8L, png, org.apache.spark.sql.Row("application/octet-stream", 64, 64, 1000))),
-        Multimodal.mediaSchema))
-    val out = Multimodal.decodeBatched(m).orderBy("media_id").collect()
-    val stub = out(0)
-    assert(stub.isNullAt(stub.fieldIndex("width")), "non-image rows carry null pixel columns")
-    val real = out(1)
-    assert(real.getAs[String]("mime") == "image/png", "sniffed mime wins over declared")
-    assert(real.getAs[Int]("width") == 2 && real.getAs[Int]("height") == 2)
-    // mean luma of white(255) + black(0) + red(85) + blue(85) = 106.25
-    assert(math.abs(real.getAs[Double]("mean_luma") - 106.25) < 1e-9)
-    assert(real.getAs[Int]("n_bytes") == png.length, "payload byte stats still present")
-  }
-
-  test("decodeBatched decodes a real JPEG (FF D8 FF magic -> JDK reader, not the stub)") {
-    // a solid-color image: JPEG is lossy, but a uniform field survives DCT
-    // quantization near-exactly, so dims are exact and luma is close
-    val img = new java.awt.image.BufferedImage(6, 4, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 4; x <- 0 until 6) img.setRGB(x, y, 0x808080)
-    val out = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "jpg", out), "JDK must ship a JPEG writer")
-    val jpeg = out.toByteArray
-    assert(jpeg.take(3).map(_ & 0xff).toSeq == Seq(0xff, 0xd8, 0xff), "fixture is a real JPEG")
-
-    val m = spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(
-        10L, jpeg, org.apache.spark.sql.Row("application/octet-stream", 64, 64, 1000))),
-      Multimodal.mediaSchema)
-    val real = Multimodal.decodeBatched(m).collect()(0)
-    assert(real.getAs[String]("mime") == "image/jpeg", "sniffed mime wins over declared")
-    assert(real.getAs[Int]("width") == 6 && real.getAs[Int]("height") == 4,
-      "pixel dims must come from a real decode — the stub has no dims")
-    assert(math.abs(real.getAs[Double]("mean_luma") - 128.0) < 4.0,
-      s"uniform mid-gray must decode to ~128 luma, got ${real.getAs[Double]("mean_luma")}")
-  }
-
-  test("real-image resize re-encodes: decoding the output yields the new dimensions") {
-    val m = spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(9L, tinyPng(), org.apache.spark.sql.Row("image/png", 2, 2, null))),
-      Multimodal.mediaSchema)
-    val resized = Multimodal.resize(m, 4, 4)
-    val decoded = Multimodal.decodeBatched(resized).collect()(0)
-    assert(decoded.getAs[Int]("width") == 4 && decoded.getAs[Int]("height") == 4,
-      "output payload must be a real re-encoded 4x4 image, not a metadata-only rewrite")
-  }
-
-  test("real PNG pixels drive the media -> embedding -> ANN path end to end") {
-    // Two visually identical PNGs (same pixels, written independently) and
-    // one inverted image: grid-pooled pixel features must rank the identical
-    // image first with cosine ~1, the inverted one clearly lower.
-    def gradient(invert: Boolean): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(8, 8, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 8; x <- 0 until 8) {
-        val v = ((x + y * 8) * 255) / 63
-        val g = if (invert) 255 - v else v
-        img.setRGB(x, y, (g << 16) | (g << 8) | g)
-      }
-      val out = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", out)
-      out.toByteArray
-    }
-    val rows = java.util.List.of(
-      org.apache.spark.sql.Row(0L, gradient(false), org.apache.spark.sql.Row("image/png", 8, 8, null)),
-      org.apache.spark.sql.Row(1L, gradient(false), org.apache.spark.sql.Row("image/png", 8, 8, null)),
-      org.apache.spark.sql.Row(2L, gradient(true), org.apache.spark.sql.Row("image/png", 8, 8, null)))
-    val m = spark.createDataFrame(rows, Multimodal.mediaSchema)
-    val emb = Multimodal.extractFeatures(m, dim = 16)
-    val prepared = graft.ext.Similarity.prepare(emb, "media_id", "embedding")
-    val out = graft.ext.Similarity
-      .bruteForceTopK(prepared, prepared.where(col("id") === 0), k = 2)
-      .collect()
-    assert(out(0).getAs[Long]("id") == 1, "pixel-identical PNG is the top neighbor")
-    assert(out(0).getAs[Double]("score") > 0.9999)
-    assert(out(1).getAs[Long]("id") == 2)
-    assert(out(1).getAs[Double]("score") < out(0).getAs[Double]("score") - 1e-4)
-  }
-
-  test("media -> embedding -> ANN top-k end to end over a true binary parquet fixture") {
-    // Genuine binary payloads (seeded random bytes, NOT UTF-8-cast text),
-    // round-tripped through parquet so the corpus scan reads a real
-    // BinaryType column; a planted byte-identical payload of media 0 at
-    // id 99 must surface as its top neighbor after feature extraction.
-    val rnd = new scala.util.Random(3)
-    val rows: Seq[(Long, Array[Byte])] = (0L until 40L).map { i =>
-      val b = new Array[Byte](256 + rnd.nextInt(64)); rnd.nextBytes(b); (i, b)
-    }
-    val planted = rows :+ ((99L, rows.head._2.clone()))
-    val path = tmpDir("media-ann") + "/media"
-    Multimodal.asMedia(planted.toDF("id", "payload"), "id", "payload")
-      .write.parquet(path)
-
-    val mediaPq = spark.read.parquet(path)
-    assert(mediaPq.schema("content").dataType.typeName == "binary")
-    val emb = Multimodal.extractFeatures(mediaPq, dim = 16)
-    val prepared = graft.ext.Similarity.prepare(emb, "media_id", "embedding")
-    val out = graft.ext.Similarity
-      .bruteForceTopK(prepared, prepared.where(col("id") === 0), k = 3)
-      .collect()
-    assert(out.length == 3)
-    assert(out(0).getAs[Long]("id") == 99, "byte-identical payload must be the top hit")
-    assert(out(0).getAs[Double]("score") > 0.9999)
-    assert(out(1).getAs[Double]("score") < 0.99, "random payloads stay clearly below the dup")
   }
 
   /** 16-bit mono PCM WAV of a sine wave, built byte by byte. */
@@ -188,23 +45,6 @@ class MultimodalSpec extends SparkSpec {
     bb.array()
   }
 
-  test("decodeAudioBatched decodes real PCM WAV: rate, duration, RMS, zero-cross rate") {
-    import spark.implicits._
-    val wav = sineWav(rate = 8000, freqHz = 440.0, amp = 0.5, secs = 0.25)
-    val junk = Array.fill[Byte](64)(0x41)
-    val media = Multimodal.asMedia(
-      Seq((1L, wav), (2L, junk)).toDF("id", "payload"), "id", "payload")
-    val rows = Multimodal.decodeAudioBatched(media).collect()
-      .map(r => r.getAs[Long]("media_id") -> r).toMap
-    val w = rows(1L)
-    assert(w.getAs[Int]("sample_rate") == 8000 && w.getAs[Int]("channels") == 1)
-    assert(w.getAs[Int]("duration_ms") == 250, s"2000 frames at 8 kHz: $w")
-    // sine RMS = amp/sqrt(2); zero crossings = 2 per cycle = 2*440/8000 per frame
-    assert(math.abs(w.getAs[Double]("rms") - 0.5 / math.sqrt(2)) < 0.01, s"RMS off: $w")
-    assert(math.abs(w.getAs[Double]("zero_cross_rate") - 2 * 440.0 / 8000) < 0.005, s"ZCR off: $w")
-    assert(rows(2L).isNullAt(1), "non-WAV payload keeps its row with null stats")
-  }
-
   test("sampleFrames over REAL WAV container durations (parsed headers, not declared meta)") {
     import spark.implicits._
     // 3.2 s of 8 kHz PCM -> 3200 ms from the data-chunk/byte-rate headers;
@@ -222,12 +62,10 @@ class MultimodalSpec extends SparkSpec {
       s"frame grid must follow the PARSED duration: $frames")
   }
 
-  test("AudioCodec.durationMs is header-only and agrees with the full sample decode") {
+  test("AudioCodec.durationMs reads the duration from the RIFF headers alone") {
+    // sineWav writes 2000 frames at 8 kHz: 250 ms
     val wav = sineWav(8000, 440.0, 0.5, 0.25)
     assert(Multimodal.AudioCodec.durationMs(wav).contains(250))
-    val full = Multimodal.AudioCodec.read(wav).map(Multimodal.AudioCodec.features(_)._1)
-    assert(Multimodal.AudioCodec.durationMs(wav) == full,
-      "header-derived duration must equal the sample-decoded one")
     assert(Multimodal.AudioCodec.durationMs(Array.fill[Byte](64)(0x41)).isEmpty)
     assert(Multimodal.AudioCodec.durationMs(null).isEmpty)
     assert(Multimodal.AudioCodec.durationMs(wav.take(30)).isEmpty, "truncated header")
@@ -281,66 +119,17 @@ class MultimodalSpec extends SparkSpec {
 
   test("AudioCodec tolerates truncated/hostile RIFF payloads as None, never a throw") {
     val wav = sineWav(8000, 440.0, 0.5, 0.1)
-    assert(Multimodal.AudioCodec.read(wav.take(30)).isEmpty, "truncated header")
+    assert(Multimodal.AudioCodec.durationMs(wav.take(30)).isEmpty, "truncated header")
     val lying = wav.clone
     // corrupt the data-chunk size to point past the payload
     lying(43) = 0x7f.toByte
-    assert(Multimodal.AudioCodec.read(lying).isEmpty, "chunk size past buffer")
+    assert(Multimodal.AudioCodec.durationMs(lying).isEmpty, "chunk size past buffer")
     val nonPcm = wav.clone
     nonPcm(20) = 3 // audioFormat = IEEE float: not parsed, not crashed
-    assert(Multimodal.AudioCodec.read(nonPcm).isEmpty, "non-PCM format falls to the stub")
+    assert(Multimodal.AudioCodec.durationMs(nonPcm).isEmpty, "non-PCM format is not parsed")
   }
 
-  test("aHash image dedup: re-encodes and resizes collide, distinct images do not") {
-    def gradient(w: Int, h: Int, invert: Boolean): java.awt.image.BufferedImage = {
-      val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) {
-        // high-contrast half-planes so bilinear resampling can't flip bits
-        val v0 = if (x * h + y * w < w * h) 230 else 20
-        val v = if (invert) 250 - v0 else v0
-        img.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      img
-    }
-    def enc(img: java.awt.image.BufferedImage, fmt: String): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(img, fmt, out), s"JDK must write $fmt")
-      out.toByteArray
-    }
-    val base = gradient(32, 32, invert = false)
-    val rows = Seq(
-      1L -> enc(base, "png"),
-      2L -> enc(base, "bmp"),                         // same pixels, other container
-      3L -> enc(gradient(64, 64, invert = false), "png"), // resized -> near-dup
-      4L -> enc(gradient(32, 32, invert = true), "png"),  // inverted -> far
-      5L -> "not an image".getBytes)                  // undecodable -> dropped
-    val media = Multimodal.asMedia(rows.toDF("id", "payload"), "id", "payload")
-    val hashes = Multimodal.imageHashes(media)
-    val h = hashes.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(h.keySet == Set(1L, 2L, 3L, 4L), s"only decodable images hash: ${h.keySet}")
-    assert(h(1L) == h(2L), "container re-encode must not change the aHash")
-    assert(java.lang.Long.bitCount(h(1L) ^ h(4L)) > 3,
-      s"inversion must be far in Hamming space: ${java.lang.Long.bitCount(h(1L) ^ h(4L))} bits")
-
-    val pairs = Multimodal.imageNearDupPairs(hashes, maxHamming = 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 2L)), s"exact pixel dup must pair: $pairs")
-    assert(pairs.contains((1L, 3L)) && pairs.contains((2L, 3L)),
-      s"the resize must land within 3 bits of its source: $pairs")
-    assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L),
-      s"the inverted image must not pair with anything: $pairs")
-
-    // banded completeness cross-check: banding finds exactly the pairs a
-    // brute-force all-pairs Hamming scan finds at this threshold
-    val ids = h.keys.toSeq.sorted
-    val brute = (for {
-      i <- ids; j <- ids if i < j
-      if java.lang.Long.bitCount(h(i) ^ h(j)) <= 3
-    } yield (i, j)).toSet
-    assert(pairs == brute, s"banding must be candidate-complete: $pairs vs $brute")
-  }
-
-  /** A real MJPEG-AVI: RIFF('AVI ', LIST(hdrl, avih), LIST(movi, 00dc...)). */
+  /** An MJPEG-AVI: RIFF('AVI ', LIST(hdrl, avih), LIST(movi, 00dc...)). */
   private def mjpegAvi(frames: Seq[Array[Byte]], usPerFrame: Int): Array[Byte] = {
     def le32(v: Long): Array[Byte] = Array(
       (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
@@ -359,87 +148,22 @@ class MultimodalSpec extends SparkSpec {
     "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
   }
 
-  /** Half-split pattern (vertical for even `shade`, horizontal for odd) so
-    * frames carry aHash-distinguishable structure — a UNIFORM frame's aHash
-    * is all-zero regardless of shade (every pixel equals the mean).
-    */
-  private def jpegOf(shade: Int, w: Int = 8, h: Int = 6): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w) {
-      val on = if (shade % 2 == 0) x < w / 2 else y < h / 2
-      val v = if (on) 230 else 25
-      img.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", out)
-    out.toByteArray
-  }
-
-  test("MJPEG-AVI: REAL frame pixels decode; avih drives the container duration") {
-    val frames = Seq(jpegOf(32), jpegOf(128), jpegOf(224), jpegOf(16))
+  test("MJPEG-AVI: avih drives the container duration through withParsedDurations") {
+    import org.apache.spark.sql.Row
+    val frames = Seq.tabulate(4)(i => Array.fill[Byte](5 + i)(i.toByte))
     val avi = mjpegAvi(frames, usPerFrame = 40000) // 25 fps, 4 frames = 160 ms
     assert(Multimodal.VideoCodec.sniffAvi(avi))
     assert(Multimodal.VideoCodec.aviDurationMs(avi).contains(160))
-    val decoded = Multimodal.VideoCodec.mjpegFrames(avi)
-    assert(decoded.map(_._1) == List(0, 1, 2, 3))
-    assert(decoded.forall { case (_, img) => img.getWidth == 8 && img.getHeight == 6 },
-      "frame dims must come from real pixel decode")
-    // decoded frames are the same pixels imageio reads from the raw JPEGs
-    decoded.zip(frames).foreach { case ((_, img), jpeg) =>
-      val direct = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(jpeg))
-      assert(Multimodal.ImageCodec.aHash64(img) == Multimodal.ImageCodec.aHash64(direct))
-    }
-    // hostile inputs: truncated container and non-AVI bytes are Nil, no throw
-    assert(Multimodal.VideoCodec.mjpegFrames(avi.take(30)) == Nil)
-    assert(Multimodal.VideoCodec.mjpegFrames("not an avi".getBytes) == Nil)
+    // hostile inputs: a truncated container is None, no throw
     assert(Multimodal.VideoCodec.aviDurationMs(avi.take(16)).isEmpty)
-  }
-
-  test("mjpegFrames: hostile deep 'rec ' nesting is depth-capped — parses, no stack overflow") {
-    def le32(v: Long): Array[Byte] = Array(
-      (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    def chunk(id: String, body: Array[Byte]): Array[Byte] = {
-      val pad: Array[Byte] = if (body.length % 2 == 1) Array(0.toByte) else Array.empty
-      id.getBytes("US-ASCII") ++ le32(body.length) ++ body ++ pad
-    }
-    def rec(inner: Array[Byte]): Array[Byte] =
-      chunk("LIST", "rec ".getBytes("US-ASCII") ++ inner)
-    def avi(moviBody: Array[Byte]): Array[Byte] = {
-      val hdrl = chunk("LIST",
-        "hdrl".getBytes("US-ASCII") ++ chunk("avih", new Array[Byte](56)))
-      val movi = chunk("LIST", "movi".getBytes("US-ASCII") ++ moviBody)
-      val body = "AVI ".getBytes("US-ASCII") ++ hdrl ++ movi
-      "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-    }
-    val frame = chunk("00dc", jpegOf(100))
-    // depth 3 (within the 16-level cap): the frame decodes
-    val nested3 = (1 to 3).foldLeft(frame)((b, _) => rec(b))
-    assert(Multimodal.VideoCodec.mjpegFrames(avi(nested3)).map(_._1) == List(0))
-    // 5000 nested rec headers (~60 KB of container): a recursive walk would
-    // StackOverflowError — which NonFatal does NOT catch — and kill the
-    // task; the depth cap skips the over-deep subtree and returns normally
-    val deep = (1 to 5000).foldLeft(frame)((b, _) => rec(b))
-    assert(Multimodal.VideoCodec.mjpegFrames(avi(deep)) == Nil)
-  }
-
-  test("decodeVideoFramesBatched: per-frame rows with real aHashes; everyNth samples; non-AVI rows yield none") {
-    import org.apache.spark.sql.Row
-    val avi = mjpegAvi(Seq(jpegOf(40), jpegOf(91), jpegOf(150), jpegOf(211)), 33333)
+    assert(Multimodal.VideoCodec.aviDurationMs("not an avi".getBytes).isEmpty)
+    // the parsed-duration chain picks the avih duration for AVI payloads
     val m = spark.createDataFrame(
       java.util.List.of(
-        Row(1L, avi, Row("video/avi", 0, 0, 0)),
+        Row(1L, mjpegAvi(frames, 33333), Row("video/avi", 0, 0, 0)),
         Row(2L, "garbage".getBytes, Row("text/plain", 0, 0, 0)),
         Row(3L, null, Row("video/avi", 0, 0, 0))),
       Multimodal.mediaSchema)
-    val all = Multimodal.decodeVideoFramesBatched(m).collect()
-    assert(all.length == 4 && all.forall(_.getAs[Long]("media_id") == 1L))
-    assert(all.map(_.getAs[Int]("frame_idx")).sorted.toSeq == Seq(0, 1, 2, 3))
-    assert(all.map(_.getAs[Long]("ahash64")).distinct.length >= 2,
-      "distinct shades must hash differently")
-    val sampled = Multimodal.decodeVideoFramesBatched(m, everyNth = 2).collect()
-    assert(sampled.map(_.getAs[Int]("frame_idx")).sorted.toSeq == Seq(0, 2))
-    // the parsed-duration chain picks the avih duration for AVI payloads
     val withDur = Multimodal.withParsedDurations(m).collect()
       .map(r => r.getAs[Long]("media_id") -> r.getStruct(2).getInt(3)).toMap
     assert(withDur(1L) == 133, s"4 frames x 33.333 ms = 133 ms: $withDur")

@@ -255,68 +255,8 @@ class ScaleOpsSpec extends SparkSpec {
       "bounded-state selection must not window")
   }
 
-  test("distinct-sketch store: union across runs == one-shot == exact (coupon regime)") {
+  test("zOrderColumnN: the 3-axis interleave is injective; n*bits > 63 fails loudly") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val dir = tmpDir("hll") + "/sketches"
-    // two overlapping ingest waves: values 0..599 and 400..999 over 3 groups
-    val wave1 = (0 until 600).map(i => (s"g${i % 3}", i.toLong)).toDF("grp", "v")
-    val wave2 = (400 until 1000).map(i => (s"g${i % 3}", i.toLong)).toDF("grp", "v")
-    graft.ops.ScaleOps.writeDistinctSketches(wave1, "grp", "v", dir, runId = "r1")
-    graft.ops.ScaleOps.writeDistinctSketches(wave2, "grp", "v", dir, runId = "r2")
-    val est = graft.ops.ScaleOps.estimateDistinct(spark, dir).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val exact = wave1.union(wave2).distinct()
-      .groupBy("grp").agg(countDistinct("v").as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // ~333 distinct per group is far inside the lgK=12 coupon regime:
-    // the estimate is exact, and re-ingesting the 400..599 overlap in the
-    // second wave must not inflate it (sketch union is idempotent per value)
-    assert(est == exact, s"sketch store diverged: $est vs $exact")
-    // one-shot sketch over the unioned data agrees with the folded store
-    val oneShot = wave1.union(wave2)
-      .groupBy("grp")
-      .agg(expr("hll_sketch_estimate(hll_sketch_agg(v, 12))").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(oneShot == est, "fold-across-runs must equal the one-shot sketch")
-  }
-
-  test("zOrdered: both axes cluster per partition; a single-column sort leaves one full-width") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // full 64x64 grid, shuffled arrival order
-    val pts = scala.util.Random.shuffle(
-      (for (x <- 0 until 64; y <- 0 until 64) yield (x.toLong, y.toLong)).toList)
-      .toDF("x", "y")
-    // the Morton key is a bijection on the grid
-    val zDistinct = pts.select(ScaleOps.zOrderColumn("x", "y", 16).as("z"))
-      .distinct().count()
-    assert(zDistinct == 64L * 64, "interleave must be injective on the grid")
-    // min/max pruning simulation: how many partitions must a point
-    // predicate on EACH axis open? (This is what parquet row-group stats
-    // do with the layout.)
-    def touched(df: org.apache.spark.sql.DataFrame, xa: Long, yb: Long): (Long, Long) = {
-      val bounds = df.withColumn("p", spark_partition_id())
-        .groupBy("p")
-        .agg(min("x").as("x0"), max("x").as("x1"), min("y").as("y0"), max("y").as("y1"))
-        .collect()
-      (bounds.count(r => r.getAs[Long]("x0") <= xa && xa <= r.getAs[Long]("x1")).toLong,
-        bounds.count(r => r.getAs[Long]("y0") <= yb && yb <= r.getAs[Long]("y1")).toLong)
-    }
-    val (zx, zy) = touched(ScaleOps.zOrdered(pts, "x", "y", partitions = 16), 37, 11)
-    val (xx, xy) = touched(
-      pts.repartitionByRange(16, col("x")).sortWithinPartitions("x"), 37, 11)
-    // x-sort answers x-predicates from ~1 partition but y-predicates need
-    // ALL 16 (every strip spans y fully). The z-layout bounds BOTH axes:
-    // its worst axis opens ~sqrt(16) partitions, not 16.
-    assert(xy == 16, s"sanity: x-sorted layout must leave y unpruned, got $xy")
-    assert(math.max(zx, zy) < math.max(xx, xy) / 2,
-      s"z-layout worst-axis fan-in must beat single-column sort: z=($zx,$zy) x=($xx,$xy)")
-  }
-
-  test("zOrderedN: 3-axis parquet layout — file min/max stats prune on EVERY axis") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
     // full 32^3 grid, shuffled arrival order
     val pts = scala.util.Random.shuffle(
       (for (x <- 0 until 32; y <- 0 until 32; w <- 0 until 32)
@@ -329,43 +269,6 @@ class ScaleOpsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       ScaleOps.zOrderColumnN(Seq("x", "y", "w"), 22)
     }
-    val zdir = tmpDir("zordernd") + "/z"
-    val xdir = tmpDir("zordernd") + "/x"
-    ScaleOps.zOrderedN(pts, Seq("x", "y", "w"), bits = 5, partitions = 16)
-      .write.parquet(zdir)
-    pts.repartitionByRange(16, col("x")).sortWithinPartitions("x")
-      .write.parquet(xdir)
-    // per-FILE min/max stats (what a27/parquet footers expose): how many
-    // files must a point predicate on each axis open?
-    def stats(dir: String): (Long, Map[String, Long => Long]) = {
-      val rows = spark.read.parquet(dir)
-        .groupBy(input_file_name().as("f"))
-        .agg(min("x").as("x0"), max("x").as("x1"),
-          min("y").as("y0"), max("y").as("y1"),
-          min("w").as("w0"), max("w").as("w1"))
-        .collect()
-      val open = Seq("x", "y", "w").map(a => a -> ((v: Long) =>
-        rows.count(r => r.getAs[Long](s"${a}0") <= v &&
-          v <= r.getAs[Long](s"${a}1")).toLong)).toMap
-      (rows.length.toLong, open)
-    }
-    val (zFiles, zOpen) = stats(zdir)
-    val (xFiles, xOpen) = stats(xdir)
-    // the x-sorted layout prunes x but reads EVERY file for y/w predicates
-    assert(xOpen("y")(11L) == xFiles && xOpen("w")(23L) == xFiles,
-      "sanity: single-column sort must leave the other axes unpruned")
-    // the z layout skips files on ALL THREE axes: each file covers a
-    // bounded box (~half of x/y, ~quarter of w at 16 files over 15 z bits,
-    // plus range-boundary straddle), so a point predicate opens at most
-    // ~3/4 of the files on the worst axis instead of all of them
-    val zOpens = Seq("x" -> 7L, "y" -> 11L, "w" -> 23L).map { case (a, v) =>
-      val opened = zOpen(a)(v)
-      assert(opened <= zFiles * 3 / 4,
-        s"axis $a: z-layout must skip files ($opened of $zFiles opened)")
-      opened
-    }
-    assert(zOpens.max < xFiles,
-      s"z worst axis ${zOpens.max} must beat the unpruned layout's $xFiles")
   }
 
   test("weightedMedianByGroup: descent == window recomputation, forced multi-pass") {

@@ -189,157 +189,6 @@ class SimilaritySpec extends SparkSpec {
     assert(!plan.contains("Window"), s"k-bounded aggregation expected:\n${plan.take(2000)}")
   }
 
-  test("recallAtK: exact self-recall 1.0, missing query scores 0, partial overlap fractional") {
-    import spark.implicits._
-    val exact = Seq((1L, 1L, 10L), (1L, 2L, 11L), (1L, 3L, 12L),
-      (2L, 1L, 20L), (2L, 2L, 21L)).toDF("qid", "rank", "id")
-    assert(Similarity.recallAtK(exact, exact).collect()
-      .forall(_.getAs[Double]("recall") == 1.0), "self-recall must be 1")
-    // approx: qid 1 finds 2 of 3, qid 2 absent entirely
-    val approx = Seq((1L, 1L, 10L), (1L, 2L, 12L)).toDF("qid", "rank", "id")
-    val r = Similarity.recallAtK(approx, exact).collect()
-      .map(x => x.getLong(0) -> x.getDouble(1)).toMap
-    assert(math.abs(r(1L) - 2.0 / 3) < 1e-15 && r(2L) == 0.0, s"$r")
-    // the real pipeline: LSH vs brute force on the planted fixture
-    val q = prepared.where(col("id") === 0)
-    val rec = Similarity.recallAtK(
-      Similarity.lshTopK(prepared, q, k = 1),
-      Similarity.bruteForceTopK(prepared, q, k = 1)).collect()
-    assert(rec.length == 1 && rec(0).getAs[Double]("recall") == 1.0,
-      "LSH finds the planted top-1 exactly")
-  }
-
-  test("cosineNearDupPairs == brute-force pairs above threshold (planted fixture)") {
-    graft.functions.GraftFunctions.register(spark)
-    val got = Similarity.cosineNearDupPairs(prepared, threshold = 0.9)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // brute-force reference over the 20-vector fixture
-    val vs = prepared.collect()
-      .map(r => (r.getAs[Long]("id"), r.getSeq[Double](1).toArray, r.getAs[Double]("nrm")))
-    val want = (for {
-      (ia, va, na) <- vs; (ib, vb, nb) <- vs if ia < ib
-      cos = va.zip(vb).map { case (x, y) => x * y }.sum / (na * nb)
-      if cos >= 0.9
-    } yield (ia, ib)).toSet
-    assert(want.contains((0L, 19L)), "fixture sanity: planted dup is above threshold")
-    assert(got == want, s"LSH-verified pairs diverge from brute force: got $got want $want")
-  }
-
-  test("cosineNearDupPairs: wider bands shrink candidate volume on saturated data, same pairs") {
-    graft.functions.GraftFunctions.register(spark)
-    // 40 tight clusters of 5 in 32 dims: cluster count saturates a 4-bit
-    // band key space (16 values) so narrow bands merge clusters into wide
-    // buckets; 8-bit bands (256 values) separate them. Intra-cluster pairs
-    // share signs in EVERY dim, so any banding finds them — recall is
-    // unchanged while candidate volume drops.
-    val rnd = new scala.util.Random(31)
-    val rows = (0 until 40).flatMap { c =>
-      val cent = Array.fill(32)(rnd.nextDouble() * 2 - 1)
-      (0 until 5).map { m =>
-        val v = cent.map(x => (x + (rnd.nextDouble() - 0.5) * 0.02 * math.signum(x)).toFloat)
-        ((c * 5 + m).toLong, v.toSeq)
-      }
-    }
-    val prep = Similarity.prepare(rows.toDF("vec_id", "embedding"), "vec_id", "embedding")
-      .localCheckpoint()
-    def candidates(bits: Int): Long = {
-      val b = Similarity.signBands(prep, bits, bands = 4).select("id", "band", "bkey")
-      b.as("x").join(b.as("y"),
-        expr("x.band = y.band AND x.bkey = y.bkey AND x.id < y.id"))
-        .select("x.id", "y.id").distinct().count()
-    }
-    val narrow = candidates(16)
-    val wide = candidates(32)
-    assert(wide < narrow,
-      s"wider band keys must de-merge saturated buckets: $wide !< $narrow")
-    val pNarrow = Similarity.cosineNearDupPairs(prep, 0.95, bits = 16, bands = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pWide = Similarity.cosineNearDupPairs(prep, 0.95, bits = 32, bands = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pNarrow == pWide, "verified pair set must survive the width change")
-    assert(pWide.size >= 40 * 10, "intra-cluster pairs are all above threshold")
-  }
-
-  test("semDedup with d9's fixed centroids reproduces the d9 oracle rollup exactly") {
-    graft.functions.GraftFunctions.register(spark)
-    val sf = "/root/testdata/sf0.001"
-    // the d9 shape: assignment on the 16-dim prefix slice, cosine on the
-    // full vector — fed through the library call with the same centroids
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-      .selectExpr("vec_id AS id",
-        "CAST(embedding AS ARRAY<DOUBLE>) AS v",
-        "CAST(slice(embedding, 1, 16) AS ARRAY<DOUBLE>) AS av")
-      .selectExpr("id", "v", "av", "sqrt(array_dot(v, v)) AS nrm")
-    val cents = graft.analytics.ExtensionQueries.semDedupCentroids.toDF("cell", "cv")
-    val rollup = Similarity
-      .semDedup(e, k = 8, threshold = 0.35, centroids = Some(cents), assignVec = "av")
-      .groupBy("cell")
-      .agg(count(lit(1)).as("members"),
-        sum(when(col("kept"), 1).otherwise(0)).cast("long").as("kept"),
-        sum(when(!col("kept"), 1).otherwise(0)).cast("long").as("dropped"))
-      .orderBy("cell").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val d9 = graft.analytics.Registry.byName("d9_semdedup").fn(spark, sf).collect()
-      .map(r => (r.getAs[Int]("cluster"), r.getAs[Long]("members"),
-        r.getAs[Long]("kept"), r.getAs[Long]("dropped"))).toSeq
-    assert(rollup == d9, s"library call diverged from the oracle query:\n$rollup\nvs\n$d9")
-  }
-
-  test("semDedup dominance is cell-blocked: cross-cell near-duplicates both survive") {
-    graft.functions.GraftFunctions.register(spark)
-    // vectors 1 and 2 are near-identical (cosine ~0.98) but straddle the
-    // cell boundary; 3 is a within-cell near-dup of 1 with a later id
-    val vs = Seq(
-      (1L, Seq(0.1, 1.0)), (2L, Seq(-0.1, 1.0)), (3L, Seq(0.09, 0.9)))
-      .toDF("id", "v")
-      .selectExpr("id", "v", "sqrt(array_dot(v, v)) AS nrm")
-    val cents = Seq((0, Seq(1.0, 0.0)), (1, Seq(-1.0, 0.0))).toDF("cell", "cv")
-    val out = Similarity.semDedup(vs, k = 2, threshold = 0.95, centroids = Some(cents))
-      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getBoolean(2)))).toMap
-    assert(out(1L) == ((0, true)))
-    assert(out(2L) == ((1, true)), "cross-cell near-dup must NOT be dropped (blocked dominance)")
-    assert(out(3L) == ((0, false)), "within-cell later near-dup must drop")
-  }
-
-  test("semDedup refuses a degenerate one-cell corpus instead of going quadratic") {
-    import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    // every vector lands in cell 0 (the centroid layout guarantees it) —
-    // the dominance self-join over that cell would be O(n^2). Unlike
-    // capBuckets (a recall trade), skipping the cell would silently leave
-    // it UN-deduplicated, so the guard must fail loudly and name the fix.
-    val vs = (0 until 40).map(i => (i.toLong, Seq(1.0, 0.001 * i)))
-      .toDF("id", "v")
-      .selectExpr("id", "v", "sqrt(array_dot(v, v)) AS nrm")
-    val cents = Seq((0, Seq(1.0, 0.0)), (1, Seq(-1.0, 0.0))).toDF("cell", "cv")
-    val e = intercept[IllegalStateException] {
-      Similarity.semDedup(vs, k = 2, threshold = 0.95, centroids = Some(cents),
-        maxCellWidth = 10)
-    }
-    assert(e.getMessage.contains("maxCellWidth") && e.getMessage.contains("Raise k"),
-      s"guard must name the cause and the fix: ${e.getMessage}")
-    // a healthy distribution under the same cap is untouched
-    val ok = Similarity.semDedup(vs, k = 2, threshold = 0.95, centroids = Some(cents),
-      maxCellWidth = 64)
-    assert(ok.count() == 40)
-  }
-
-  test("semDedup trained path fits k-means once; the earliest member of every cell survives") {
-    val before = Similarity.kmeansFits.get()
-    val res = Similarity.semDedup(prepared, k = 4, threshold = 0.99).collect()
-    assert(Similarity.kmeansFits.get() == before + 1, "exactly one quantizer fit")
-    assert(res.length == 20, "every corpus row appears with a verdict")
-    res.groupBy(_.getInt(1)).foreach { case (_, rs) =>
-      val minId = rs.map(_.getLong(0)).min
-      assert(rs.find(_.getLong(0) == minId).get.getBoolean(2),
-        "the lowest id in a cell has no earlier cell-mate — must be kept")
-    }
-    val by = res.map(r => r.getLong(0) -> ((r.getInt(1), r.getBoolean(2)))).toMap
-    assert(by(0L)._2, "id 0 has no earlier mate anywhere")
-    if (by(19L)._1 == by(0L)._1)
-      assert(!by(19L)._2, "the planted dup sharing id 0's cell must be dominance-dropped")
-  }
-
   test("knnGraph == lshTopK with the whole corpus as queries (broadcast-free sibling)") {
     // Semantics parity: knnGraph exists because a corpus-sized query set must
     // not broadcast — its results must be exactly lshTopK's with
@@ -588,15 +437,6 @@ class SimilaritySpec extends SparkSpec {
     assert(payload == brutePairs(0.5))
     assert(postingBroadcast == payload)
     assert(postingShuffled == payload)
-  }
-
-  test("cosineNearDupPairs: the saturation fallback (no candidate filter) equals the broadcast path") {
-    val a = Similarity.cosineNearDupPairs(prepared, threshold = 0.9, broadcastPairBound = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Similarity.cosineNearDupPairs(prepared, threshold = 0.9)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b)
-    assert(a.contains((0L, 19L)), "planted near-dup pair must verify on both paths")
   }
 
   test("minHashNearDupPairs finds exactly the >=0.8 pairs LSH can propose, both bound branches") {

@@ -48,38 +48,4 @@ class TextPipelineSpec extends SparkSpec {
         r.getInt(2) == r.getInt(6) && r.getInt(3) == r.getInt(7), r.toString)
     }
   }
-
-  test("inverted index: lookup prunes to one bucket directory and matches a full scan") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val dir = java.nio.file.Files.createTempDirectory("invidx").toString + "/idx"
-    val docs = graft.analytics.Tables.documents(spark, "/root/testdata/sf0.001")
-    TextPipeline.writeInvertedIndex(docs, dir, buckets = 8)
-
-    // pick a real term from the corpus
-    val term = docs.selectExpr("explode(split(lower(text), ' ')) AS t")
-      .groupBy("t").count().orderBy(org.apache.spark.sql.functions.desc("count"), col("t"))
-      .head.getString(0)
-    val lookup = TextPipeline.lookupTerm(spark, dir, term, buckets = 8)
-    val got = lookup.collect().map(r => (r.getLong(1), r.getLong(2))).sorted
-
-    // parity: the pruned read returns exactly the full-scan postings
-    val want = spark.read.parquet(dir).where(col("term") === term)
-      .select("doc_id", "tf").collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    assert(got.sameElements(want) && got.nonEmpty, s"pruned lookup diverged for '$term'")
-
-    // the plan must prune to exactly one bucket partition
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case f: FileSourceScanExec    => Seq(f)
-      case other => (other.children ++ other.subqueries).flatMap(scans)
-    }
-    lookup.collect()
-    val scan = scans(lookup.queryExecution.executedPlan).head
-    val parts = scan.metadata.get("PartitionFilters")
-    assert(parts.exists(_.contains("bucket")), s"bucket predicate must be a partition filter: $parts")
-    assert(scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters).size == 1,
-      "lookup must read exactly one bucket directory")
-  }
 }
