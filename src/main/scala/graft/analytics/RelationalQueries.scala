@@ -2637,7 +2637,7 @@ object RelationalQueries {
     Q(
       "s17_catalyst_manifest_scan",
       "Planner-integrated manifest read end-to-end " +
-        "(ManifestRead.readCatalyst): per-customer order stats land in a " +
+        "(ManifestStore.read): per-customer order stats land in a " +
         "scratch manifest table, get z-order clustered into 4 key-range " +
         "slices with stats, and are read back through the custom " +
         "FileIndex with a PLAIN where() — the manifest's min/max prune " +
@@ -2647,7 +2647,7 @@ object RelationalQueries {
         "the pruned physical path must agree with the declarative " +
         "semantics row for row",
       (s, d) => {
-        import graft.ops.{ManifestRead, ManifestStore}
+        import graft.ops.ManifestStore
         val target = orders(s, d)
           .groupBy("o_custkey")
           .agg(count(lit(1)).as("n_ord"),
@@ -2658,7 +2658,7 @@ object RelationalQueries {
         ManifestStore.append(s, target, scratch)
         ManifestStore.cluster(s, scratch, axes = Seq("o_custkey"),
           segments = 4, statsCols = Seq("o_custkey"))
-        ManifestRead.readCatalyst(s, scratch)
+        ManifestStore.read(s, scratch)
           .where(col("o_custkey") >= 100L && col("o_custkey") <= 700L)
           .select("o_custkey", "n_ord", "total")
           .orderBy("o_custkey")
@@ -2789,7 +2789,7 @@ object RelationalQueries {
         "the raw parquet, so restore's snapshot semantics must agree " +
         "with declarative set semantics row for row",
       (s, d) => {
-        import graft.ops.{ManifestRead, ManifestStore}
+        import graft.ops.ManifestStore
         val scratch = java.nio.file.Files
           .createTempDirectory("graft-sql4-").toString + "/t"
         val n = nation(s, d).select("n_nationkey", "n_name", "n_regionkey")
@@ -2797,7 +2797,7 @@ object RelationalQueries {
         ManifestStore.append(s, n.where(col("n_regionkey") >= 2), scratch) // v2
         ManifestStore.restore(s, scratch, 1L) // v3 = v1's content
         ManifestStore.append(s, n.where(col("n_regionkey") === 4), scratch) // v4
-        ManifestRead.readCatalyst(s, scratch)
+        ManifestStore.read(s, scratch)
           .orderBy("n_nationkey")
       },
       Some("""SELECT n_nationkey, n_name, n_regionkey FROM nation

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo,
-  Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull,
+  Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull,
   LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   HadoopFsRelation, PartitionDirectory, PartitioningAwareFileIndex,
@@ -13,71 +13,50 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-import ManifestStore.Snapshot
+import ManifestStore.{Bound, Snapshot}
 
-/** Catalyst-integrated manifest scan: [[readCatalyst]] plans a
-  * ManifestStore table through a custom [[FileIndex]], so an ORDINARY
-  * DataFrame filter — `readCatalyst(...).where($"k" > 5)` — prunes
-  * segments from the manifest's recorded min/max stats INSIDE the
-  * planner, with no special readWhere call site. Spark's own vectorized
-  * parquet reader, predicate pushdown, and column pruning all apply
-  * unchanged; the only custom piece is file LISTING, which is where
-  * manifest-level skipping belongs. `readWhere` remains for callers that
-  * want explicit bounds; this is the path a SQL view over the table
-  * would use.
+/** The ONE planner of a manifest scan: [[readCatalystAt]] plans a
+  * ManifestStore snapshot through a custom [[FileIndex]], so an ORDINARY
+  * DataFrame filter — `ManifestStore.read(...).where($"k" > 5)` — prunes
+  * segments from the manifest's recorded min/max/null-count stats INSIDE
+  * the planner. Spark's own vectorized parquet reader, predicate
+  * pushdown, and column pruning all apply unchanged; the only custom
+  * piece is file LISTING, which is where manifest-level skipping belongs.
+  * Every read of a table — [[ManifestStore.read]]/[[ManifestStore.readAt]],
+  * time travel, the commit verbs' conflict scans, the SQL provider —
+  * plans here.
   *
-  * Pruning is CONSERVATIVE by construction, mirroring
-  * [[ManifestStore.prunedEntries]]: only simple comparisons against
-  * literals (`= > >= < <= IN` and conjunctions) on stats-bearing columns
-  * tighten the interval; anything else contributes no bound. Because the
-  * listing only ever SHRINKS the file set for predicates Spark still
-  * re-evaluates row-by-row (they remain dataFilters), a missed bound
-  * costs I/O, never correctness. One-sided predicates keep the other end
-  * unbounded — the interval logic here is Option-ended where
-  * readWhere's public API takes closed intervals.
+  * Pruning is CONSERVATIVE by construction ([[ManifestStore.prunedEntries]]
+  * is the rule): only simple comparisons against literals
+  * (`= > >= < <= IN`, `IS [NOT] NULL` and conjunctions) on stats-bearing
+  * columns tighten a [[Bound]]; anything else contributes none. Because
+  * the listing only ever SHRINKS the file set for predicates Spark still
+  * re-evaluates row-by-row (they remain dataFilters), a missed bound costs
+  * I/O, never correctness.
   *
-  * The index makes ZERO filesystem metadata calls for v5 manifests: each
-  * segment's file names and sizes were stamped into the manifest at
-  * commit time ([[ManifestStore.SegmentEntry.files]]), so constructing
-  * the index and planning a query cost O(segments) in-memory work and no
-  * object-store round-trips at all — the coefficient that otherwise
-  * dominates planning at 10⁵ segments. Pre-v5 entries (older commits)
-  * fall back to one lazy `listStatus` per segment, paid only for the
-  * segments a query actually keeps after pruning.
+  * The index makes ZERO filesystem metadata calls: each segment's file
+  * names and sizes were stamped into the manifest at commit time
+  * ([[ManifestStore.SegmentEntry.files]]) and the schema is recorded
+  * there too, so constructing the index and planning a query cost
+  * O(segments) in-memory work and no object-store round-trips at all —
+  * the coefficient that otherwise dominates planning at 10⁵ segments.
   */
 object ManifestRead {
 
-  /** The table at its latest snapshot as a Catalyst-planned DataFrame
-    * with manifest-stats file skipping. Snapshot-isolated like every
-    * manifest read: the plan holds vN's file list even if vN+1 commits.
+  /** `snap` as a Catalyst-planned DataFrame with manifest-stats file
+    * skipping: the recorded schema's visible columns under their logical
+    * names, outstanding merge-on-read deletes applied by the sequence
+    * rule. Snapshot-isolated: the plan holds `snap`'s file list even if a
+    * later version commits. A snapshot with no entries is the
+    * schema-correct empty relation.
     */
-  def readCatalyst(spark: SparkSession, path: String): DataFrame =
-    readCatalystAt(spark, path, ManifestStore.current(spark, path).getOrElse(
-      throw new IllegalStateException(s"no manifest at $path — not a ManifestStore table")))
-
-  /** [[readCatalyst]] pinned to a specific resolvable version — planner-
-    * integrated time travel.
-    */
-  def readCatalystVersion(spark: SparkSession, path: String, version: Long): DataFrame =
-    readCatalystAt(spark, path, ManifestStore.snapshotAt(spark, path, version).getOrElse(
-      throw new IllegalStateException(
-        s"version $version at $path is not resolvable — never committed, or " +
-          "vacuumed past the retention window")))
-
-  /** Register the table as a temp view, so plain `spark.sql` queries get
-    * the planner-integrated manifest scan (and its segment skipping).
-    */
-  def registerView(spark: SparkSession, path: String, viewName: String): Unit =
-    readCatalyst(spark, path).createOrReplaceTempView(viewName)
-
-  private def readCatalystAt(spark: SparkSession, path: String,
+  private[ops] def readCatalystAt(spark: SparkSession, path: String,
       snap: Snapshot): DataFrame = {
     // top-level nullable: segments written before a schema evolution lack
     // the evolved columns, and the vectorized reader null-fills a missing
     // column only when the data schema doesn't mark it required
     val schema = StructType(
-      snap.schema.getOrElse(ManifestStore.readAt(spark, path, snap).schema)
-        .fields.map(_.copy(nullable = true)))
+      snap.recordedSchema.fields.map(_.copy(nullable = true)))
     // a renamed table's files spell columns PHYSICALLY: plan the relation
     // under the physical schema and alias to logical at the top — Catalyst
     // pushes user filters through the alias projection into the scan (and
@@ -175,94 +154,32 @@ object ManifestRead {
       inner.listFiles(partitionFilters, dataFilters)
   }
 
-  /** Per-column prune state, conjunction-tightened: an Option-ended
-    * interval plus an optional IN-list value set (point-set pruning, the
-    * readForKeys semantics inside the planner), plus the two null-shape
-    * probes `IS NULL` / `IS NOT NULL` (pruned against the v5 per-column
-    * null counts / all-NULL encodings).
-    */
-  private final case class Bound(lo: Option[Any] = None, hi: Option[Any] = None,
-      in: Option[Seq[Any]] = None, isNull: Boolean = false,
-      notNull: Boolean = false)
-
   final class ManifestFileIndex(spark: SparkSession, tablePath: String,
       snap: Snapshot) extends FileIndex {
     private val root = new Path(tablePath)
     private val hfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // pre-v5 fallback only: entries without a recorded file list pay one
-    // lazy listStatus each, and only when a query actually keeps them
-    private val legacyFiles =
-      scala.collection.concurrent.TrieMap.empty[String, Array[FileStatus]]
-    private[ops] def statusesOf(e: ManifestStore.SegmentEntry): Array[FileStatus] =
-      filesOf(e)
-    private def filesOf(e: ManifestStore.SegmentEntry): Array[FileStatus] =
-      if (e.files.nonEmpty) {
-        val segDir = new Path(root, e.name)
-        e.files.map { case (name, len) =>
-          new FileStatus(len, false, 1, 128L << 20, 0L,
-            hfs.makeQualified(new Path(segDir, name)))
-        }.toArray
-      } else legacyFiles.getOrElseUpdate(e.name,
-        hfs.listStatus(new Path(root, e.name)).filter(s => s.isFile && {
-          val n = s.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }))
+    private[ops] def statusesOf(e: ManifestStore.SegmentEntry): Array[FileStatus] = {
+      val segDir = new Path(root, e.name)
+      e.files.map { case (name, len) =>
+        new FileStatus(len, false, 1, 128L << 20, 0L,
+          hfs.makeQualified(new Path(segDir, name)))
+      }.toArray
+    }
 
     override def rootPaths: Seq[Path] = Seq(root)
     override def partitionSchema: StructType = new StructType()
     override def inputFiles: Array[String] =
-      snap.entries.flatMap(e => filesOf(e)).map(_.getPath.toString).toArray
+      snap.entries.flatMap(statusesOf).map(_.getPath.toString).toArray
     override def refresh(): Unit = ()
-    override def sizeInBytes: Long =
-      snap.entries.map(e =>
-        if (e.files.nonEmpty) e.files.map(_._2).sum
-        else filesOf(e).map(_.getLen).sum).sum
+    override def sizeInBytes: Long = snap.entries.map(_.files.map(_._2).sum).sum
 
     override def listFiles(partitionFilters: Seq[Expression],
         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
       val bounds = scala.collection.mutable.Map.empty[String, Bound]
       dataFilters.foreach(collect(_, bounds))
-      val kept =
-        if (bounds.isEmpty) snap.entries
-        else snap.entries.filter { e =>
-          bounds.forall { case (c, b) =>
-            e.stats.get(c) match {
-              case None => true // no stats — cannot prune
-              case Some(st) =>
-                val allNull = st.min.isEmpty && st.max.isEmpty
-                // value constraints (interval / IN-list): an all-NULL
-                // column satisfies none of them
-                val valueOk =
-                  if (b.lo.isEmpty && b.hi.isEmpty && b.in.isEmpty) true
-                  else if (allNull) false
-                  else overlaps(st.typ, st.min, st.max, b.lo, b.hi) &&
-                    b.in.forall(vs => vs.exists(v =>
-                      overlaps(st.typ, st.min, st.max, Some(v), Some(v))))
-                // IS NULL: a segment with a recorded null count of ZERO
-                // cannot produce a row (conservative: unknown count keeps)
-                val isNullOk = !b.isNull || !st.nulls.contains(0L)
-                // IS NOT NULL: an all-NULL column cannot produce a row
-                val notNullOk = !b.notNull || !allNull
-                valueOk && isNullOk && notNullOk
-            }
-          }
-        }
       Seq(PartitionDirectory(InternalRow.empty,
-        kept.flatMap(e => filesOf(e)).toArray))
+        ManifestStore.prunedEntries(snap, bounds.toMap).flatMap(statusesOf).toArray))
     }
-
-    /** [lo,hi] (Option-ended) intersects the segment's recorded [mn,mx]?
-      * Conversion failures (a bound value the stats type can't key) keep
-      * the segment — never prune on a shaky comparison.
-      */
-    private def overlaps(typ: String, mn: Option[String], mx: Option[String],
-        lo: Option[Any], hi: Option[Any]): Boolean =
-      try {
-        val loK = lo.map(v => ManifestStore.boundKey(typ, v))
-        val hiK = hi.map(v => ManifestStore.boundKey(typ, v))
-        hiK.forall(h => mn.forall(m => ManifestStore.leq(ManifestStore.statKey(typ, m), h))) &&
-          loK.forall(l => mx.forall(m => ManifestStore.leq(l, ManifestStore.statKey(typ, m))))
-      } catch { case scala.util.control.NonFatal(_) => true }
 
     /** Catalyst literal → the external value space [[ManifestStore.boundKey]]
       * accepts. Dates/timestamps ride as their internal integers (boundKey
@@ -319,6 +236,11 @@ object ManifestRead {
         // in its [min,max] — evaluated per segment in the stats key space
         tighten(bounds, a.name,
           in = Some(vs.collect { case Literal(v, _) => ext(v) }))
+      // the optimizer rewrites an IN of more than
+      // spark.sql.optimizer.inSetConversionThreshold literals into InSet:
+      // the same point set, so the same rule
+      case InSet(a: Attribute, hset) if hset.nonEmpty && !hset.contains(null) =>
+        tighten(bounds, a.name, in = Some(hset.toSeq.map(ext)))
       case _ => () // no bound — the row-level filter still applies
     }
   }

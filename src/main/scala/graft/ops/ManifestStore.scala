@@ -8,13 +8,10 @@ import org.apache.spark.sql.types._
 
 /** Atomic-commit parquet table: write-new-files, then atomically publish a
   * MANIFEST listing the table's live segments; readers resolve every scan
-  * through the latest manifest. This is the unification the maintenance
-  * family previously approximated one-off — [[graft.gold.GoldWriter]]'s
-  * check-then-append window, [[ScaleOps.deleteKeys]]' rename-aside swap,
-  * and the advisory writer lock each defended their own crash window;
-  * here ONE protocol covers all
-  * of them (the mini table-format discipline of Delta/Iceberg commit logs,
-  * re-derived for this engine's needs):
+  * through the latest manifest. ONE protocol covers the crash windows that
+  * [[graft.gold.GoldWriter]]'s check-then-append and its advisory writer
+  * lock each defend on their own (the mini table-format discipline of
+  * Delta/Iceberg commit logs, re-derived for this engine's needs):
   *
   *  - **Crash atomicity**: data files land under fresh UUID segment
   *    directories that no manifest references yet; the commit is a single
@@ -47,66 +44,66 @@ import org.apache.spark.sql.types._
   *    mutate or delete referenced files — [[vacuum]] only deletes segments
   *    unreferenced by the LATEST manifest and older than a grace period
   *    (choose it to exceed any plausible query runtime).
+  *  - **One scan planner**: every read — [[read]], [[readVersion]] and the
+  *    conflict scans inside [[upsert]], [[merge]], [[rewriteAll]] and the
+  *    predicate DML verbs — plans through [[ManifestRead]]'s file index,
+  *    from the manifest's recorded schema and per-segment file lists: no
+  *    data-tree listing, no footer schema inference.
   *  - **Manifest-level data skipping**: a commit may record per-segment
-  *    min/max stats for declared columns (`statsCols`); [[readWhere]]
-  *    prunes non-overlapping segments from the manifest ALONE — zero
-  *    filesystem reads for the skipped data, not even the parquet footers
-  *    a file-level stats prune still opens. At 100 TB the difference is a
-  *    planner that touches O(segments) manifest lines vs O(files) footer
-  *    round-trips; combined with [[cluster]]'s Z-order layout a selective
-  *    predicate on ANY clustered axis skips most of the table before Spark
-  *    ever lists a data file. Stat-less segments (older commits, undeclared
-  *    columns) are NEVER pruned — skipping is always conservative.
+  *    min/max/null-count stats for declared columns (`statsCols`); an
+  *    ordinary `read(...).where(...)` prunes non-overlapping segments from
+  *    the manifest ALONE ([[prunedEntries]]) — zero filesystem reads for
+  *    the skipped data, not even the parquet footers a file-level stats
+  *    prune still opens. Combined with [[cluster]]'s Z-order layout a
+  *    selective predicate on ANY clustered axis skips most of the table.
+  *    Segments without stats on a column (undeclared at commit) are NEVER
+  *    pruned on it — skipping is always conservative.
+  *
+  * The on-disk format is `graft-manifest v5` only: a header line, a
+  * `schema` line, then `seg`/`del` lines (see [[fmtEntry]]). Any other
+  * header fails loudly in [[current]].
   *
   * Scale notes: a manifest is O(segments) lines of text — compaction keeps
-  * it short, and the coefficient is MEASURED (SCALE.md session-13): at
-  * 10 000 live segments the manifest is
-  * ~2 MB, `current()` parses it in ~16 ms, planning stays flat (~40 ms,
-  * zero data-tree FS calls with v5 recorded file lists) and commit
+  * it short, and the coefficient is MEASURED (SCALE.md): at 10 000 live
+  * segments the manifest is ~2 MB, `current()` parses it in ~16 ms,
+  * planning stays flat (~40 ms, zero data-tree FS calls) and commit
   * latency is dominated by the segment write, not the manifest rewrite —
   * flat is fine to 10⁴ segments, and [[maintain]]'s default
   * `maxSegments = 64` advises compaction ~150× below that bound. If a
   * deployment needs 10⁵+ live segments, chunk at the
   * `readManifest`/`tryPublish` seam (one header version bump). The
-  * commit path adds zero Spark jobs beyond the data write
-  * plus, when `statsCols` is declared, ONE column-pruned aggregation over
-  * the freshly written segment (reads only the stats columns, hot in the
-  * page cache); [[upsert]]'s conflict scan reads only the key column of
-  * the manifest-resolved files (Catalyst prunes), identical cost to the
-  * path-based upsert it hardens.
+  * commit path adds zero Spark jobs beyond the data write (stats ride the
+  * write itself, see [[statsAggs]]); [[upsert]]'s conflict scan reads only
+  * the key column of the manifest-resolved files (Catalyst prunes).
   */
 object ManifestStore {
 
   private val ManifestDir = "_manifest"
-  private val Header = "graft-manifest v1"
-  private val HeaderV2 = "graft-manifest v2"
-  private val HeaderV3 = "graft-manifest v3" // v2 + a `schema<TAB>b64(json)` line
-  private val HeaderV4 = "graft-manifest v4" // v3 + seq-stamped seg/del lines
-  private val HeaderV5 = "graft-manifest v5" // v4 + per-segment file lists,
-  // row counts and per-column null counts (rows:/files: fields, 5-part stats)
+  private val Header = "graft-manifest v5"
   private val MaxRetries = 50
+  private val MaxBloomBytes = 1 << 17 // per-column bloom bitset cap, see writeSegment
   private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
 
   /** Per-segment, per-column min/max in a type-tagged string encoding
     * (`typ` in long/double/decimal/string/date/ts — the normalization
     * [[statsTyp]] applies at write). `None` min/max = the column is
     * entirely NULL in that segment, which any interval predicate excludes.
-    * `nulls` (v5+) is the column's null count — nulls=0 prunes `IS NULL`
-    * probes from the manifest alone.
+    * `nulls` is the column's null count — nulls=0 prunes `IS NULL` probes
+    * from the manifest alone.
     */
   final case class ColStats(typ: String, min: Option[String], max: Option[String],
       nulls: Option[Long] = None)
 
   /** One live segment: directory name (relative to the table root) plus
     * whatever stats its committing writer declared (possibly none), and
-    * `seq` — the manifest version that first committed it (0 for pre-v4
-    * manifests). Sequence numbers decide which merge-on-read delete files
-    * apply to which segments. v5 manifests additionally stamp the
-    * segment's data `files` (name + byte length, relative to the segment
-    * dir) at commit time — planning a read then makes ZERO filesystem
-    * metadata calls on the data tree (the listing was already paid, once,
-    * by the committer whose page cache was hot) — and `rows`, the segment
-    * row count ([[describe]]'s physical view without a footer job).
+    * `seq` — the manifest version that first committed it. Sequence
+    * numbers decide which merge-on-read delete files apply to which
+    * segments. `files` are the segment's data files (name + byte length,
+    * relative to the segment dir), stamped at commit time — planning a
+    * read makes ZERO filesystem metadata calls on the data tree (the
+    * listing was already paid, once, by the committer whose page cache was
+    * hot) — and `rows` is the segment row count, recorded when stats are
+    * declared ([[describe]]'s physical view without a count job).
     */
   final case class SegmentEntry(name: String, stats: Map[String, ColStats],
       seq: Long = 0L, files: Seq[(String, Long)] = Nil,
@@ -122,13 +119,25 @@ object ManifestStore {
   final case class DeleteFile(name: String, keyCol: String, seq: Long)
 
   /** One resolved table state: dense `version`, the segment entries that
-    * constitute it, and any outstanding merge-on-read delete files.
+    * constitute it, the recorded table schema and any outstanding
+    * merge-on-read delete files. Every manifest records its schema
+    * ([[readManifest]] enforces it); only the no-table placeholder
+    * `Snapshot(0L, Nil)` a first commit starts from has none.
     * `segments` keeps the original name-only view.
     */
   final case class Snapshot(version: Long, entries: Seq[SegmentEntry],
       schema: Option[StructType] = None,
       deletes: Seq[DeleteFile] = Nil) {
     def segments: Seq[String] = entries.map(_.name)
+
+    /** The recorded schema, tombstones and physical-name metadata included
+      * (empty for the placeholder).
+      */
+    def recordedSchema: StructType = schema.getOrElse(new StructType())
+
+    /** The columns a read serves: the visible fields, nullable. */
+    def logicalSchema: StructType =
+      StructType(visible(recordedSchema).fields.map(_.copy(nullable = true)))
   }
 
   /** What a [[merge]] did: row counts per MERGE verb, plus the
@@ -188,7 +197,7 @@ object ManifestStore {
     else {
       val v = versions.max
       val (entries, schema, deletes) = readManifest(fs, manifestPath(root, v))
-      Some(Snapshot(v, entries, schema, deletes))
+      Some(Snapshot(v, entries, Some(schema), deletes))
     }
   }
 
@@ -197,11 +206,10 @@ object ManifestStore {
   private def unb64(s: String): String =
     new String(java.util.Base64.getDecoder.decode(s), Utf8)
 
-  /** Entry line: `name<TAB>field…` where a field is either
-    * `rows:<n>` (v5), `files:<b64(name)>|<len>[,…]` (v5), or a stats block
-    * `b64(col)|typ|b64(min)|b64(max)[|nulls]` (4 parts pre-v5, 5 in v5) —
-    * the prefixes are unambiguous because base64 has no `:`. A bare name
-    * (v1, or a stats-free commit) parses to an entry with empty stats.
+  /** Entry line: `name<TAB>field…` where a field is either `rows:<n>`,
+    * `files:<b64(name)>|<len>[,…]`, or a stats block
+    * `b64(col)|typ|b64(min)|b64(max)|nulls` — the prefixes are unambiguous
+    * because base64 has no `:`. A stats-free commit has no stats blocks.
     */
   private def fmtEntry(e: SegmentEntry): String = {
     val rowF = e.rows.map(r => s"rows:$r").toSeq
@@ -229,42 +237,38 @@ object ManifestStore {
           (unb64(n), l.toLong)
         }
       else {
-        val a = f.split("\\|", -1) // 4 parts pre-v5, 5 from v5 on
-        stats += unb64(a(0)) -> ColStats(a(1),
-          Some(a(2)).filter(_.nonEmpty).map(unb64),
-          Some(a(3)).filter(_.nonEmpty).map(unb64),
-          if (a.length > 4 && a(4).nonEmpty) Some(a(4).toLong) else None)
+        val Array(c, typ, mn, mx, nulls) = f.split("\\|", -1)
+        stats += unb64(c) -> ColStats(typ,
+          Some(mn).filter(_.nonEmpty).map(unb64),
+          Some(mx).filter(_.nonEmpty).map(unb64),
+          Some(nulls).filter(_.nonEmpty).map(_.toLong))
       }
     }
     SegmentEntry(parts.head, stats.result(), 0L, files, rows)
   }
 
   private def readManifest(fs: FileSystem, p: Path)
-      : (Seq[SegmentEntry], Option[StructType], Seq[DeleteFile]) = {
+      : (Seq[SegmentEntry], StructType, Seq[DeleteFile]) = {
     val in = fs.open(p)
     val lines = try
       scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
     finally in.close()
     val header = lines.headOption
-    require(header.exists(h =>
-      h == Header || h == HeaderV2 || h == HeaderV3 || h == HeaderV4 ||
-        h == HeaderV5),
-      s"$p is not a graft manifest (header $header)")
+    require(header.contains(Header),
+      s"$p is not a $Header manifest (header ${header.getOrElse("<empty>")})")
     val body = lines.tail.filter(_.nonEmpty)
-    val (schemaLines, rest) = body.partition(_.startsWith("schema\t"))
-    val schema = schemaLines.headOption.map(l =>
-      DataType.fromJson(unb64(l.split("\t", 2)(1))).asInstanceOf[StructType])
-    if (header.contains(HeaderV4) || header.contains(HeaderV5)) {
-      val segs = rest.filter(_.startsWith("seg\t")).map { l =>
-        val Array(_, seq, e) = l.split("\t", 3)
-        parseEntry(e).copy(seq = seq.toLong)
-      }
-      val dels = rest.filter(_.startsWith("del\t")).map { l =>
-        val Array(_, seq, kc, name) = l.split("\t", 4)
-        DeleteFile(name, unb64(kc), seq.toLong)
-      }
-      (segs, schema, dels)
-    } else (rest.map(parseEntry), schema, Nil) // pre-v4: seq 0, no deletes
+    val schema = body.collectFirst { case l if l.startsWith("schema\t") =>
+      DataType.fromJson(unb64(l.split("\t", 2)(1))).asInstanceOf[StructType]
+    }.getOrElse(throw new IllegalArgumentException(s"$p records no schema"))
+    val segs = body.filter(_.startsWith("seg\t")).map { l =>
+      val Array(_, seq, e) = l.split("\t", 3)
+      parseEntry(e).copy(seq = seq.toLong)
+    }
+    val dels = body.filter(_.startsWith("del\t")).map { l =>
+      val Array(_, seq, kc, name) = l.split("\t", 4)
+      DeleteFile(name, unb64(kc), seq.toLong)
+    }
+    (segs, schema, dels)
   }
 
   /** The ONE filesystem operation the whole commit protocol's exclusivity
@@ -461,18 +465,16 @@ object ManifestStore {
     * retries.
     */
   private def tryPublish(fs: FileSystem, root: Path, v: Long,
-      entries: Seq[SegmentEntry], schema: Option[StructType] = None,
+      entries: Seq[SegmentEntry], schema: StructType,
       deletes: Seq[DeleteFile] = Nil): Boolean = {
     val target = manifestPath(root, v)
     if (fs.exists(target)) return false // cheap pre-check; the publisher decides
     val tmp = new Path(root,
       s"$ManifestDir/.tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, false)
-    // always v5 going forward (v1-v4 manifests stay readable); every
-    // entry rides with the seq its committer stamped
-    val lines = HeaderV5 +:
-      (schema.map(sch => s"schema\t${b64(sch.json)}").toSeq ++
-        entries.map(e => s"seg\t${e.seq}\t${fmtEntry(e)}") ++
+    // every entry rides with the seq its committer stamped
+    val lines = Seq(Header, s"schema\t${b64(schema.json)}") ++
+      (entries.map(e => s"seg\t${e.seq}\t${fmtEntry(e)}") ++
         deletes.map(d => s"del\t${d.seq}\t${b64(d.keyCol)}\t${d.name}"))
     try out.write(lines.mkString("", "\n", "\n").getBytes(Utf8))
     finally out.close()
@@ -590,11 +592,8 @@ object ManifestStore {
       case _: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression => true
       case _ => false
     }
-    // graft.write.rebalance=false opts a session out (a pipeline whose
-    // upstream already right-sizes its partitions saves the exchange).
     val rebalance =
-      spark.conf.get("graft.write.rebalance", "true").toBoolean &&
-        !explicitlyPartitioned && spark.sessionState.conf.adaptiveExecutionEnabled
+      !explicitlyPartitioned && spark.sessionState.conf.adaptiveExecutionEnabled
     val pdf = if (rebalance) pdf0.hint("rebalance") else pdf0
     val pStats = statsCols.map(c => rename.getOrElse(c, c))
     val seg = s"seg-${java.util.UUID.randomUUID()}"
@@ -606,11 +605,9 @@ object ManifestStore {
     // parquet's default is a FIXED 1 MiB bitset per column per file when
     // the writer gets no NDV hint — measured as 34 MB of bloom bytes on a
     // 1 MB segment. Prefer the adaptive writer (sizes the bitset from the
-    // observed NDV; parquet-mr 1.14+) and cap the worst case at 128 KiB
-    // (~100k distinct keys at the default fpp — beyond that the filter
-    // degrades gracefully, it never lies). graft.bloom.maxBytes overrides
-    // for tables whose per-file key cardinality is measured higher.
-    val maxBloomBytes = spark.conf.get("graft.bloom.maxBytes", (1 << 17).toString)
+    // observed NDV; parquet-mr 1.14+) and cap the worst case at
+    // MaxBloomBytes = 128 KiB (~100k distinct keys at the default fpp —
+    // beyond that the filter degrades gracefully, it never lies).
     // Stats fold into the write job itself (r13, guide §1.2/§5 job-count):
     // observe() attaches the statsAggs aggregates to the write's own tasks,
     // so the old dedicated post-write stats job (a full re-read of the
@@ -625,7 +622,7 @@ object ManifestStore {
     val withBlooms = pStats.foldLeft(observed.write) { (w, c) =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true")
     }.option("parquet.bloom.filter.adaptive.enabled", "true")
-      .option("parquet.bloom.filter.max.bytes", maxBloomBytes)
+      .option("parquet.bloom.filter.max.bytes", MaxBloomBytes.toString)
     withBlooms.parquet(segPath)
     val metrics = obs.get
     // Emptiness is probed AFTER the write (r12): the old `df.isEmpty`
@@ -645,19 +642,17 @@ object ManifestStore {
     Some(SegmentEntry(seg, stats, 0L, files, rows))
   }
 
-  /** Fail fast when a commit's columns diverge from the table's: a
-    * multi-segment read resolves its schema from ONE segment's files, so a
-    * mismatched segment would silently null-fill (or break) every column
-    * the two sides don't share. The check runs at the only place new files
+  /** Fail fast when a commit's columns diverge from the table's: a read
+    * serves the recorded schema over every segment, so a mismatched
+    * segment would silently null-fill (or break) every column the two
+    * sides don't share. The check runs at the only place new files
     * can enter the table. Types are compared by column NAME set + per-name
     * dataType; nullability is not a conflict (parquet unions it fine).
     */
-  private def requireCompatible(spark: SparkSession, path: String,
-      snap: Snapshot, df: DataFrame, allowNew: Boolean = false): Unit = {
-    // an EMPTIED table still has its recorded schema — enforce it (only a
-    // schema-less pre-v5 empty snapshot accepts any shape)
-    if (snap.segments.isEmpty && snap.schema.isEmpty) return
-    val existing = visible(tableSchema(spark, path, snap))
+  private def requireCompatible(path: String, snap: Snapshot, df: DataFrame,
+      allowNew: Boolean = false): Unit = {
+    // an EMPTIED table still has its recorded schema — enforce it
+    val existing = visible(snap.recordedSchema)
     val have = existing.fields.map(f => f.name -> f.dataType).toMap
     val incoming = df.schema.fields.map(f => f.name -> f.dataType).toMap
     val sharedOk = incoming.forall { case (n, t) => have.get(n).forall(_ == t) }
@@ -690,12 +685,6 @@ object ManifestStore {
       }
     }
 
-  /** The table's authoritative schema at `snap`: the manifest-recorded one
-    * when present, else resolved from the segment footers.
-    */
-  private def tableSchema(spark: SparkSession, path: String, snap: Snapshot): StructType =
-    snap.schema.getOrElse(readAt(spark, path, snap).schema)
-
   // --- schema evolution: stable PHYSICAL column names ------------------------
   //
   // Rename and type-widening are METADATA-ONLY commits (Iceberg answers this
@@ -707,8 +696,9 @@ object ManifestStore {
   // names; a field whose physical name diverged carries it in field
   // metadata under [[PhysicalKey]]. Translation happens at exactly two
   // seams: [[writeSegment]] renames logical→physical on the way in, and
-  // [[readSegs]] aliases physical→logical on the way out. Tables that never
-  // evolved have identity mappings and take the untouched fast paths.
+  // [[ManifestRead.readCatalystAt]] aliases physical→logical on the way
+  // out. Tables that never evolved have identity mappings and take the
+  // untouched fast paths.
   // Type widening records the WIDER logical type in the schema while old
   // segments keep their narrower parquet type — Spark 4's vectorized reader
   // promotes (int→long, float→double, int→double) at scan time. Full
@@ -769,94 +759,24 @@ object ManifestStore {
     StructType(schema.fields.map(f =>
       StructField(physicalName(f), f.dataType, nullable = true, cleanMeta(f))))
 
-  /** Read the table at its latest snapshot (empty-schema error only for a
-    * table that was never initialized with data — commit something first).
-    */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val snap = current(spark, path).getOrElse(
-      throw new IllegalStateException(s"no manifest at $path — not a ManifestStore table"))
-    readAt(spark, path, snap)
-  }
+  /** Read the table at its latest snapshot. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    readAt(spark, path, current(spark, path).getOrElse(
+      throw new IllegalStateException(s"no manifest at $path — not a ManifestStore table")))
 
-  /** Read a SPECIFIC snapshot (time travel / in-flight consistency). A
-    * snapshot that records a table schema (a [[append]] `mergeSchema`
-    * commit) is read THROUGH it: segments written before a column existed
-    * null-fill it, and the schema is deterministic instead of resolved
-    * from whichever segment's footer Spark samples first.
-    *
+  /** Read a SPECIFIC snapshot (time travel / in-flight consistency) through
+    * [[ManifestRead]]'s file index: the recorded schema is served (segments
+    * written before a column existed null-fill it), ordinary `where()`
+    * filters prune segments from the recorded stats, and outstanding
+    * merge-on-read deletes apply by the sequence rule. A raw scan of some
+    * segments is `readAt(spark, path, snap.copy(entries = es, deletes = Nil))`.
     * An EMPTIED table (every row deleted — a state [[merge]] and
-    * [[rewriteAll]] can legally publish) reads as the schema-correct
-    * empty relation when the snapshot records a schema (every v5 commit
-    * does); only a schema-less pre-v5 empty snapshot still fails, because
-    * there is genuinely nothing to resolve a schema from. Serving the
-    * empty relation instead of throwing is what keeps [[readWhere]] /
-    * [[readForKeys]] / [[merge]] / the CDC replica daemon alive across a
-    * delete-everything commit.
+    * [[rewriteAll]] can legally publish) reads as the schema-correct empty
+    * relation, which keeps `where()` probes, [[merge]] and the CDC replica
+    * daemon alive across a delete-everything commit.
     */
-  def readAt(spark: SparkSession, path: String, snap: Snapshot): DataFrame = {
-    if (snap.segments.isEmpty)
-      return snap.schema
-        .map(sch => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], visible(sch)))
-        .getOrElse(throw new IllegalArgumentException(
-          s"manifest v${snap.version} at $path lists no segments and records " +
-            "no schema (pre-v5 empty table) — commit something first"))
-    assemble(spark, new Path(path), snap, snap.entries)
-  }
-
-  /** Scan `paths` under `snap`'s recorded schema when it has one. RAW:
-    * merge-on-read deletes are NOT applied — use [[assemble]] for the
-    * logical table view. A schema with renamed columns reads the files
-    * under their PHYSICAL names and aliases back to the logical ones (the
-    * alias projection is transparent to Catalyst: filters push through it
-    * into the scan as physical-named predicates, which is exactly what the
-    * stats-pruning index keys on).
-    */
-  private def readSegs(spark: SparkSession, snap: Snapshot,
-      paths: Seq[String]): DataFrame = snap.schema match {
-    case Some(sch) if hasMapping(sch) =>
-      // visible fields only: a dropped column's data stays on disk but is
-      // neither read (absent from the scan schema) nor served
-      val vis = visible(sch)
-      spark.read.schema(physSchema(vis)).parquet(paths: _*)
-        .select(vis.fields.toSeq.map(f =>
-          col(physicalName(f)).as(f.name, cleanMeta(f))): _*)
-    case Some(sch) => spark.read.schema(sch).parquet(paths: _*)
-    case None => spark.read.parquet(paths: _*)
-  }
-
-  /** The LOGICAL view of `entries` under `snap`: recorded schema applied,
-    * merge-on-read delete files anti-joined by the sequence rule — a
-    * delete at seq D suppresses keys only in segments with seq < D, so
-    * segments grouped by their position among the delete seqs each get
-    * exactly their applicable delete set (re-inserted keys in newer
-    * segments survive). With no outstanding deletes this is exactly the
-    * raw scan.
-    */
-  private def assemble(spark: SparkSession, root: Path, snap: Snapshot,
-      entries: Seq[SegmentEntry]): DataFrame = {
-    def paths(es: Seq[SegmentEntry]) = es.map(e => new Path(root, e.name).toString)
-    if (snap.deletes.isEmpty || entries.isEmpty)
-      return readSegs(spark, snap, paths(entries))
-    // sidecar files and recorded keyCols carry PHYSICAL names (stable for
-    // the table's lifetime); [[readSegs]] serves the LOGICAL view, so the
-    // anti-join runs under the key's logical alias
-    val rev = p2l(snap.schema)
-    val delSeqs = snap.deletes.map(_.seq).distinct.sorted
-    entries.groupBy(e => delSeqs.count(_ > e.seq)).toSeq
-      .map { case (_, es) =>
-        val applicable = snap.deletes.filter(d => es.head.seq < d.seq)
-        applicable.groupBy(_.keyCol).foldLeft(readSegs(spark, snap, paths(es))) {
-          case (df, (kc, ds)) =>
-            val lkc = rev.getOrElse(kc, kc)
-            val keys = ds.map(d => spark.read
-                .parquet(new Path(root, d.name).toString).select(col(kc).as(lkc)))
-              .reduce(_ unionByName _).distinct()
-            df.join(keys, Seq(lkc), "left_anti")
-        }
-      }
-      .reduce(_ unionByName _)
-  }
+  def readAt(spark: SparkSession, path: String, snap: Snapshot): DataFrame =
+    ManifestRead.readCatalystAt(spark, path, snap)
 
   /** Every committed version still resolvable, ascending. Superseded
     * versions remain readable until [[vacuum]] trims their manifests (and
@@ -883,7 +803,7 @@ object ManifestStore {
     if (!fs.exists(p)) Publisher.completeClaim(fs, Publisher.claimOf(p), p)
     if (!fs.exists(p)) None else {
       val (entries, schema, deletes) = readManifest(fs, p)
-      Some(Snapshot(version, entries, schema, deletes))
+      Some(Snapshot(version, entries, Some(schema), deletes))
     }
   }
 
@@ -924,7 +844,7 @@ object ManifestStore {
       i.getEpochSecond * 1000000L + i.getNano / 1000L
     case ("ts", n: java.lang.Number) => n.longValue
     case _ => throw new IllegalArgumentException(
-      s"readWhere bound ${v.getClass.getName} is not convertible to stats type $typ")
+      s"bound ${v.getClass.getName} is not convertible to stats type $typ")
   }
 
   /** `a <= b` in the typed key space; strings compare as unsigned UTF-8
@@ -948,122 +868,79 @@ object ManifestStore {
     case _ => throw new IllegalStateException(s"incomparable stats keys $a / $b")
   }
 
-  /** The segments a conjunction of closed intervals `(col, lo, hi)` can
-    * touch, decided from manifest stats alone. Conservative by
-    * construction: a segment with no stats for a bounded column is always
-    * kept; one whose recorded `[min,max]` misses the interval — or whose
-    * column is entirely NULL — is skipped.
+  /** One column's constraint for [[prunedEntries]], conjunction-tightened
+    * by [[ManifestRead]]'s planner: an Option-ended interval, an optional
+    * IN-list value set (keep a segment iff at least one value can sit in
+    * its range), and the null-shape probes `IS NULL` / `IS NOT NULL`.
+    * Values are in the external space [[boundKey]] accepts.
     */
-  def prunedEntries(snap: Snapshot, bounds: Seq[(String, Any, Any)]): Seq[SegmentEntry] = {
-    // stats are keyed by PHYSICAL column name; bounds arrive logical
-    val rename = l2p(snap.schema)
-    val pBounds = bounds.map { case (c, lo, hi) => (rename.getOrElse(c, c), lo, hi) }
+  final case class Bound(lo: Option[Any] = None, hi: Option[Any] = None,
+      in: Option[Seq[Any]] = None, isNull: Boolean = false,
+      notNull: Boolean = false)
+
+  /** THE stats-pruning rule: the segments whose recorded stats can hold a
+    * row satisfying every `bounds` constraint, keyed by PHYSICAL column
+    * name (what the stats are keyed on). Conservative by construction: a
+    * segment without stats on a bounded column is kept, and so is one
+    * whose bound cannot be converted to the stats type; one whose recorded
+    * `[min,max]` misses the interval or every IN value, whose column is
+    * entirely NULL under a value or `IS NOT NULL` constraint, or whose
+    * null count is zero under `IS NULL`, is skipped.
+    */
+  def prunedEntries(snap: Snapshot, bounds: Map[String, Bound]): Seq[SegmentEntry] =
     snap.entries.filter { e =>
-      pBounds.forall { case (c, lo, hi) =>
-        e.stats.get(c) match {
-          case None => true // no stats recorded — cannot prune
-          case Some(ColStats(_, None, None, _)) => false // all-NULL column
-          case Some(ColStats(typ, mn, mx, _)) =>
-            val (l, h) = (boundKey(typ, lo), boundKey(typ, hi))
-            mn.forall(m => leq(statKey(typ, m), h)) &&
-              mx.forall(m => leq(l, statKey(typ, m)))
+      bounds.forall { case (c, b) =>
+        e.stats.get(c).forall { st =>
+          val allNull = st.min.isEmpty && st.max.isEmpty
+          def holds(lo: Option[Any], hi: Option[Any]): Boolean =
+            try {
+              hi.forall(h => st.min.forall(m =>
+                leq(statKey(st.typ, m), boundKey(st.typ, h)))) &&
+                lo.forall(l => st.max.forall(m =>
+                  leq(boundKey(st.typ, l), statKey(st.typ, m))))
+            } catch { case scala.util.control.NonFatal(_) => true }
+          val valueOk =
+            if (b.lo.isEmpty && b.hi.isEmpty && b.in.isEmpty) true
+            else !allNull && holds(b.lo, b.hi) &&
+              b.in.forall(_.exists(v => holds(Some(v), Some(v))))
+          valueOk && !(b.isNull && st.nulls.contains(0L)) &&
+            !(b.notNull && allNull)
         }
       }
     }
-  }
-
-  /** Stats-pruned scan: keep only the segments whose manifest min/max
-    * overlap EVERY `(col, lo, hi)` closed interval, then apply the exact
-    * `BETWEEN` predicates to the survivors — so the result is exactly
-    * `read(path).where(conjunction)`, but segments the manifest rules out
-    * cost nothing (no listing, no footer read). Returns the table's empty
-    * slice (schema intact) when every segment is pruned.
-    */
-  def readWhere(spark: SparkSession, path: String,
-      bounds: Seq[(String, Any, Any)]): DataFrame = {
-    require(bounds.nonEmpty, "readWhere needs at least one (col, lo, hi) bound")
-    val snap = current(spark, path).getOrElse(
-      throw new IllegalStateException(s"no manifest at $path — not a ManifestStore table"))
-    val kept = prunedEntries(snap, bounds)
-    val pred = bounds.map { case (c, lo, hi) => col(c).between(lit(lo), lit(hi)) }
-      .reduce(_ && _)
-    if (kept.isEmpty) readAt(spark, path, snap).where(lit(false))
-    else assemble(spark, new Path(path), snap, kept).where(pred)
-  }
-
-  /** Stats-pruned point lookup: the rows whose `keyCol` is in `values`,
-    * reading ONLY the segments whose recorded [min,max] could contain at
-    * least one requested value (no stats on a segment => it is always
-    * read, conservative like [[readWhere]]). On a [[cluster]]-ed table a
-    * k-key lookup touches O(k) segments of a 100 TB table from the
-    * manifest alone — the reader-side twin of [[merge]]'s touched-set
-    * probe. `values` rides an isin literal list, so keep it
-    * driver-bounded (thousands, not millions — join against [[read]] for
-    * bulk probes).
-    */
-  def readForKeys(spark: SparkSession, path: String, keyCol: String,
-      values: Seq[Any]): DataFrame = {
-    require(values.nonEmpty, "readForKeys needs at least one value")
-    val snap = current(spark, path).getOrElse(
-      throw new IllegalStateException(s"no manifest at $path — not a ManifestStore table"))
-    val pKey = l2p(snap.schema).getOrElse(keyCol, keyCol) // stats keyed physically
-    val kept = snap.entries.filter { e =>
-      e.stats.get(pKey) match {
-        case None => true // no stats recorded — cannot prune
-        case Some(ColStats(_, None, None, _)) => false // all-NULL column
-        case Some(ColStats(typ, mn, mx, _)) => values.exists { v =>
-          val k = boundKey(typ, v)
-          mn.forall(m => leq(statKey(typ, m), k)) &&
-            mx.forall(m => leq(k, statKey(typ, m)))
-        }
-      }
-    }
-    val pred = col(keyCol).isin(values: _*)
-    if (kept.isEmpty) readAt(spark, path, snap).where(lit(false))
-    else assemble(spark, new Path(path), snap, kept).where(pred)
-  }
 
   /** Table health introspection — the maintenance dashboard's one-stop
-    * view: one row per live segment with its row count (ONE parquet
-    * footer-metadata job over the whole table, grouped by file's parent
-    * segment — no column pages read), on-disk bytes and file count (FS
-    * metadata), and which stats columns the segment recorded (the
-    * [[readWhere]]/[[merge]] prunability signal: a segment listed with
-    * empty `stats_cols` is never skippable). Drives the compact/cluster
-    * decision the way a27's catalog stats drive query planning.
+    * view: one row per live segment with its row count (recorded in the
+    * manifest when the segment declared stats; ONE count job over the
+    * remaining segments otherwise, grouped by file's parent segment),
+    * on-disk bytes and file count (from the recorded file lists), and
+    * which stats columns the segment recorded (the [[prunedEntries]]
+    * prunability signal: a segment listed with empty `stats_cols` is never
+    * skippable). Drives the compact/cluster decision the way a27's catalog
+    * stats drive query planning.
     */
   def describe(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val snap = current(spark, path).getOrElse(
       throw new IllegalStateException(s"no manifest at $path — not a ManifestStore table"))
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
     val meta = snap.entries.map { e =>
-      // v5 entries carry their file list and row count — zero FS calls;
-      // pre-v5 entries fall back to a content summary per segment
-      val (bytes, nFiles) =
-        if (e.files.nonEmpty) (e.files.map(_._2).sum, e.files.size.toLong)
-        else {
-          val sum = fs.getContentSummary(new Path(root, e.name))
-          (sum.getLength, sum.getFileCount)
-        }
       // stats are keyed physically; report them under the logical names
       // (a dropped column's stats keep showing under its physical name)
       val rev = p2l(snap.schema.map(visible))
       val nulls = e.stats.toSeq.map { case (c, st) => (rev.getOrElse(c, c), st) }
         .sortBy(_._1)
         .flatMap { case (c, st) => st.nulls.map(n => s"$c=$n") }.mkString(",")
-      (e.name, bytes, nFiles,
+      (e.name, e.files.map(_._2).sum, e.files.size.toLong,
         e.stats.keys.toSeq.map(c => rev.getOrElse(c, c)).sorted.mkString(","),
         e.rows, nulls)
     }.toDF("segment", "bytes", "files", "stats_cols", "manifest_rows", "null_counts")
     // PHYSICAL layout view: raw per-file rows — outstanding MOR deletes
     // are layout debt, not data, so they do not shrink these counts. Only
-    // segments WITHOUT a recorded row count pay the footer job.
+    // segments WITHOUT a recorded row count pay the count job.
     val need = snap.entries.filter(_.rows.isEmpty)
     val footer =
       if (need.isEmpty) Seq.empty[(String, Long)].toDF("segment", "footer_rows")
-      else readSegs(spark, snap, need.map(e => new Path(root, e.name).toString))
+      else readAt(spark, path, snap.copy(entries = need, deletes = Nil))
         .groupBy(regexp_extract(input_file_name(), "/(seg-[^/]+)/[^/]*$", 1).as("segment"))
         .agg(count(lit(1)).as("footer_rows"))
     meta.join(footer, Seq("segment"), "left")
@@ -1079,16 +956,16 @@ object ManifestStore {
       segmentsBefore: Int, segmentsAfter: Int, applied: Boolean)
 
   /** Maintenance advisor + executor — the j11/w20 router pattern applied
-    * to table layout: decide from O(segments) MANIFEST + FS metadata (no
-    * data reads) whether the table needs compaction, and optionally run
+    * to table layout: decide from O(segments) MANIFEST metadata (no FS
+    * calls, no data reads) whether the table needs compaction, and optionally run
     * it. Advises `compact` when the live segment count exceeds
     * `maxSegments` or the MEDIAN segment falls below
     * `targetSegmentBytes / 4` (a small-file table wastes a task +
     * footer round-trip per tiny file at every scan); sizes the rewrite at
     * `ceil(totalBytes / targetSegmentBytes)` partitions. Advises `none`
     * otherwise. Stats columns are re-declared on the rewrite so
-    * compaction never DOWNGRADES prunability ([[merge]]/[[readWhere]]
-    * keep working); pair with [[cluster]] when orderedness on specific
+    * compaction never DOWNGRADES prunability ([[merge]] and filtered reads
+    * keep pruning); pair with [[cluster]] when orderedness on specific
     * axes matters more than file count — this advisor never silently
     * destroys a clustered layout (it reports `cluster-risk` instead of
     * compacting when every segment carries stats on the same columns and
@@ -1099,11 +976,7 @@ object ManifestStore {
       apply: Boolean = false, statsCols: Seq[String] = Nil): MaintenanceReport = {
     val snap = current(spark, path).getOrElse(
       throw new IllegalStateException(s"no manifest at $path — not a ManifestStore table"))
-    val root = new Path(path)
-    val fs = fsOf(spark, root)
-    val sizes = snap.entries.map(e =>
-      if (e.files.nonEmpty) e.files.map(_._2).sum
-      else fs.getContentSummary(new Path(root, e.name)).getLength).sorted
+    val sizes = snap.entries.map(_.files.map(_._2).sum).sorted
     val n = snap.entries.size
     if (n == 0)
       return MaintenanceReport("none", "empty table", 0, 0, applied = false)
@@ -1160,8 +1033,8 @@ object ManifestStore {
     * the winner's list and re-publishes with its own segment added.
     */
   /** Initialize an EMPTY table: publish v1 with zero segments and the
-    * declared schema recorded (the v5 empty-table state [[readAt]] already
-    * serves as a schema-correct empty relation). This is what a catalog
+    * declared schema recorded (the empty-table state [[readAt]] serves as
+    * a schema-correct empty relation). This is what a catalog
     * CREATE TABLE maps to — the schema persists in the manifest itself, so
     * a later `loadTable` resolves it with no data files and no sidecar
     * metadata store. Fails if the path already holds a manifest (CREATE
@@ -1175,7 +1048,7 @@ object ManifestStore {
     require(current(spark, path).isEmpty,
       s"createEmpty: a manifest table already exists at $path")
     val relaxed = StructType(schema.fields.map(_.copy(nullable = true)))
-    if (!tryPublish(fs, root, 1L, Nil, Some(relaxed), Nil))
+    if (!tryPublish(fs, root, 1L, Nil, relaxed))
       throw new IllegalStateException(
         s"createEmpty: lost the create race at $path — table already exists")
     Snapshot(1L, Nil, Some(relaxed), Nil)
@@ -1195,10 +1068,9 @@ object ManifestStore {
     while (attempt < MaxRetries) {
       val base = current(spark, path).getOrElse(
         throw new IllegalStateException(s"no manifest at $path — not a ManifestStore table"))
-      val cur = StructType(tableSchema(spark, path, base)
-        .fields.map(_.copy(nullable = true)))
+      val cur = StructType(base.recordedSchema.fields.map(_.copy(nullable = true)))
       val next = f(cur, base)
-      if (tryPublish(fs, root, base.version + 1, base.entries, Some(next),
+      if (tryPublish(fs, root, base.version + 1, base.entries, next,
           base.deletes))
         return Snapshot(base.version + 1, base.entries, Some(next), base.deletes)
       attempt += 1
@@ -1234,7 +1106,7 @@ object ManifestStore {
     * commit before or after the rename reads/writes the same parquet
     * column. Renaming back to the physical name drops the mapping entry.
     * Time travel is exact: each version resolves under ITS recorded
-    * logical names. A mapped table reads through [[readSegs]]' alias
+    * logical names. A mapped table reads through [[readAt]]'s alias
     * projection (SQL scans take the shimmed path) until the next full
     * rewrite ([[rewriteAll]]/[[compact]]/[[cluster]]) re-baselines the
     * files to logical names and restores the native columnar scan.
@@ -1334,7 +1206,7 @@ object ManifestStore {
     val fs = fsOf(spark, root)
     val base = current(spark, path)
     base.foreach { s =>
-      requireCompatible(spark, path, s, df, allowNew = mergeSchema)
+      requireCompatible(path, s, df, allowNew = mergeSchema)
       if (mergeSchema) requireNoPhysicalCollision(s, df)
     }
     writeSegment(spark, root, df, statsCols, base.flatMap(_.schema)) match {
@@ -1391,28 +1263,26 @@ object ManifestStore {
             "to the physical name(s) the staged segment was written under. " +
             "Re-run the append against the current schema.")
       }
-      // EVERY commit records the table schema (v5 discipline): the
-      // union schema — table columns first, new ones appended (only
-      // mergeSchema admits new ones past requireCompatible) — so reads
-      // never resolve schema from data-file footers: combined with the
-      // recorded file lists, planning a read makes zero data-tree FS
-      // calls. nullable: evolved columns are ABSENT in older segments,
-      // so the recorded schema must allow the null-fill (a required
-      // column would make the vectorized reader refuse those files).
+      // EVERY commit records the table schema: the union schema — table
+      // columns first, new ones appended (only mergeSchema admits new ones
+      // past requireCompatible) — so reads never resolve schema from
+      // data-file footers: combined with the recorded file lists, planning
+      // a read makes zero data-tree FS calls. nullable: evolved columns
+      // are ABSENT in older segments, so the recorded schema must allow
+      // the null-fill (a required column would make the vectorized reader
+      // refuse those files).
       val schema = {
-        val existing =
-          if (base.entries.isEmpty) base.schema.getOrElse(new StructType())
-          else tableSchema(spark, path, base)
+        val existing = base.recordedSchema
         val known = existing.fieldNames.toSet
-        Some(StructType((existing.fields ++
+        StructType((existing.fields ++
           dfSchema.fields.filterNot(f => known(f.name)))
-          .map(_.copy(nullable = true))))
+          .map(_.copy(nullable = true)))
       }
       val stamped = entry.copy(seq = base.version + 1)
       if (tryPublish(fs, root, base.version + 1, base.entries :+ stamped,
           schema, base.deletes))
         return Snapshot(base.version + 1, base.entries :+ stamped,
-          schema, base.deletes)
+          Some(schema), base.deletes)
       attempt += 1
     }
     throw new IllegalStateException(
@@ -1457,7 +1327,7 @@ object ManifestStore {
     val fs = fsOf(spark, root)
     val base = current(spark, path)
     base.foreach { s =>
-      requireCompatible(spark, path, s, df, allowNew = mergeSchema)
+      requireCompatible(path, s, df, allowNew = mergeSchema)
       if (mergeSchema) requireNoPhysicalCollision(s, df)
     }
     writeSegment(spark, root, df, statsCols, base.flatMap(_.schema)) match {
@@ -1551,7 +1421,7 @@ object ManifestStore {
       .cache()
     val deduped = kept.where(col(key).isNotNull).drop("__n")
     try {
-      current(spark, path).foreach(requireCompatible(spark, path, _, batch))
+      current(spark, path).foreach(requireCompatible(path, _, batch))
       val counts = kept.agg(coalesce(sum("__n"), lit(0L)), count(col(key))).head()
       val nBatch = counts.getLong(1)
       // dropped = within-batch duplicate keys + null-key rows
@@ -1569,10 +1439,10 @@ object ManifestStore {
           val nFresh = freshC.count()
           if (nFresh == 0L)
             return UpsertReport(0L, nDropped, nBatch, base.version)
-          // v5: every commit records the table schema (first commit: the
+          // every commit records the table schema (first commit: the
           // batch's, nullable-relaxed) so reads never touch data footers
-          val schema = base.schema.orElse(Some(StructType(
-            freshC.schema.fields.map(_.copy(nullable = true)))))
+          val schema = base.schema.getOrElse(StructType(
+            freshC.schema.fields.map(_.copy(nullable = true))))
           writeSegment(spark, root, freshC, statsCols, base.schema) match {
             case Some(entry) if tryPublish(fs, root, base.version + 1,
                 base.entries :+ entry.copy(seq = base.version + 1),
@@ -1609,15 +1479,15 @@ object ManifestStore {
       val entry = writeSegment(spark, root, made, statsCols)
         .map(_.copy(seq = base.version + 1))
       // a rewrite replaces every segment, so the rewrite OUTPUT's schema is
-      // authoritative — always recorded (v5), nullable-relaxed (make may
+      // authoritative — always recorded, nullable-relaxed (make may
       // legitimately migrate the schema, e.g. a column drop)
-      val schema = Some(StructType(made.schema.fields.map(_.copy(nullable = true))))
+      val schema = StructType(made.schema.fields.map(_.copy(nullable = true)))
       // an empty rewrite result (e.g. deleteKeys removed every row) commits
       // an empty segment list — readers then see an explicitly empty table.
       // readAt applied any outstanding merge-on-read deletes, so the
       // rewrite MATERIALIZES them: publish with none.
       if (tryPublish(fs, root, base.version + 1, entry.toSeq, schema))
-        return Snapshot(base.version + 1, entry.toSeq, schema)
+        return Snapshot(base.version + 1, entry.toSeq, Some(schema))
       attempt += 1
     }
     throw new IllegalStateException(
@@ -1653,13 +1523,13 @@ object ManifestStore {
     val root = new Path(path)
     val fs = fsOf(spark, root)
     val entry = writeSegment(spark, root, df, statsCols)
-    val schema = Some(StructType(df.schema.fields.map(_.copy(nullable = true))))
+    val schema = StructType(df.schema.fields.map(_.copy(nullable = true)))
     var attempt = 0
     while (attempt < MaxRetries) {
       val base = current(spark, path).getOrElse(Snapshot(0L, Nil))
       val stamped = entry.map(_.copy(seq = base.version + 1)).toSeq
       if (tryPublish(fs, root, base.version + 1, stamped, schema))
-        return Snapshot(base.version + 1, stamped, schema)
+        return Snapshot(base.version + 1, stamped, Some(schema))
       attempt += 1 // slot taken: re-read and re-condition, segment stays valid
     }
     throw new IllegalStateException(
@@ -1675,8 +1545,7 @@ object ManifestStore {
     val keyVals = keys.select(col(keys.columns.head).as(keyCol)).distinct()
     rewriteAll(spark, path, df =>
       df.join(broadcast(keyVals), Seq(keyCol), "left_anti"))
-    val snap = current(spark, path).get
-    val after = if (snap.segments.isEmpty) 0L else readAt(spark, path, snap).count()
+    val after = read(spark, path).count()
     (before - after, after)
   }
 
@@ -1692,8 +1561,8 @@ object ManifestStore {
     * re-insert of a deleted key — [[upsert]] or [[merge]] — is visible,
     * not swallowed. The trade is per-read anti-join cost while deletes
     * are outstanding ([[maintain]]'s compaction clears the debt);
-    * [[ManifestRead.readCatalyst]] keeps planner-integrated segment
-    * pruning UNDER the anti-joins (one pruned relation per
+    * [[readAt]] keeps planner-integrated segment pruning UNDER the
+    * anti-joins (one pruned relation per
     * sequence-group, sidecars broadcast).
     */
   def deleteKeysMergeOnRead(spark: SparkSession, path: String, keyCol: String,
@@ -1715,7 +1584,7 @@ object ManifestStore {
         throw new IllegalStateException(s"no manifest at $path"))
       val v = base.version + 1
       val dels = base.deletes :+ DeleteFile(name, pKey, v)
-      if (tryPublish(fs, root, v, base.entries, base.schema, dels))
+      if (tryPublish(fs, root, v, base.entries, base.recordedSchema, dels))
         return Snapshot(v, base.entries, base.schema, dels)
       attempt += 1 // CAS lost: the sidecar is still valid, re-stamp and retry
     }
@@ -1733,13 +1602,12 @@ object ManifestStore {
 
   /** Shared copy-on-write core of [[deleteWhere]]/[[updateWhere]] —
     * [[merge]]'s touched-set discipline applied to an arbitrary predicate:
-    * (1) ONE column-pruned probe finds the segments that hold a matching
-    * row (with no outstanding MOR deletes the probe rides the
-    * planner-integrated manifest scan, so the predicate's pushable
-    * conjuncts prune segments from recorded stats before any file opens;
-    * with deletes outstanding it falls back to the raw scan — a
-    * MOR-suppressed match can then only cause a harmless extra rewrite,
-    * because the rewrite always starts from the assembled LOGICAL view);
+    * (1) ONE column-pruned probe of the RAW segments (deletes not applied,
+    * so segment identity survives to `input_file_name`) finds the segments
+    * that hold a matching row — the predicate's pushable conjuncts prune
+    * segments from recorded stats before any file opens, and a
+    * MOR-suppressed match can only cause a harmless extra rewrite, because
+    * the rewrite always starts from the LOGICAL view of the touched set);
     * (2) only touched segments are rewritten — one new segment carries
     * their transformed rows, every untouched entry is republished
     * verbatim (zero data I/O); (3) one CAS publish conditioned on the
@@ -1758,18 +1626,14 @@ object ManifestStore {
       val base = current(spark, path).getOrElse(
         throw new IllegalStateException(s"no manifest at $path — not a ManifestStore table"))
       if (base.entries.isEmpty) return DmlReport(0L, 0, 0, base.version)
-      val probe =
-        if (base.deletes.isEmpty)
-          ManifestRead.readCatalystVersion(spark, path, base.version)
-        else readSegs(spark, base,
-          base.entries.map(e => new Path(root, e.name).toString))
-      val touched: Set[String] = probe.where(matchPred)
+      val touched: Set[String] = readAt(spark, path, base.copy(deletes = Nil))
+        .where(matchPred)
         .select(regexp_extract(input_file_name(), "/(seg-[^/]+)/[^/]*$", 1)
           .as("__seg"))
         .distinct().collect().map(_.getString(0)).toSet
       val (touchedE, untouchedE) = base.entries.partition(e => touched(e.name))
       if (touchedE.isEmpty) return DmlReport(0L, 0, base.entries.size, base.version)
-      val touchedRows = assemble(spark, root, base, touchedE).cache()
+      val touchedRows = readAt(spark, path, base.copy(entries = touchedE)).cache()
       try {
         val affected = touchedRows.where(matchPred).count()
         val newData = rewrite(touchedRows, matchPred)
@@ -1779,7 +1643,8 @@ object ManifestStore {
         val entry = writeSegment(spark, root, newData, statsCols, base.schema)
           .map(_.copy(seq = base.version + 1))
         val next = untouchedE ++ entry.toSeq
-        if (tryPublish(fs, root, base.version + 1, next, base.schema, base.deletes))
+        if (tryPublish(fs, root, base.version + 1, next, base.recordedSchema,
+            base.deletes))
           return DmlReport(affected, touchedE.size, base.entries.size,
             base.version + 1)
       } finally touchedRows.unpersist()
@@ -1895,7 +1760,7 @@ object ManifestStore {
           val toInsert = sourceD.where(insPred)
           val snap = append(spark, toInsert, path, statsCols)
           return MergeReport(0L, 0L, toInsert.count(), 0, 0, snap.version)
-        case Some(s) => requireCompatible(spark, path, s, source)
+        case Some(s) => requireCompatible(path, s, source)
       }
       var attempt = 0
       while (attempt < MaxRetries) {
@@ -1909,20 +1774,20 @@ object ManifestStore {
           else {
             val r = sourceD.agg(min(col(key)), max(col(key))).head()
             if (r.isNullAt(0)) Seq.empty[SegmentEntry]
-            else prunedEntries(Snapshot(base.version, base.entries, base.schema),
-              Seq((key, r.get(0), r.get(1))))
+            else prunedEntries(base,
+              Map(pKey -> Bound(Some(r.get(0)), Some(r.get(1)))))
           }
         // (2) exact probe: which candidate segments hold a matched key
-        val candPaths = candidates.map(e => new Path(root, e.name).toString)
         val touched: Set[String] =
-          if (candPaths.isEmpty) Set.empty
+          if (candidates.isEmpty) Set.empty
           // segment identity = the data file's immediate parent directory
           // (anchored to end-of-path — NOT a bare first-match, which a
           // "seg-" substring in the TABLE's own path would fool, and not a
           // fixed-width uuid pattern, which cluster's `seg-<uuid>-<k>`
-          // names would silently fail)
-          else readSegs(spark, base, candPaths) // recorded schema: a key
-            // column added by evolution null-fills in older segments
+          // names would silently fail); the raw candidates under the
+          // recorded schema: a key column added by evolution null-fills in
+          // older segments
+          else readAt(spark, path, base.copy(entries = candidates, deletes = Nil))
             .select(col(key),
               regexp_extract(input_file_name(), "/(seg-[^/]+)/[^/]*$", 1).as("__seg"))
             .join(sourceD.select(key), Seq(key), "left_semi")
@@ -1931,16 +1796,10 @@ object ManifestStore {
         // LOGICAL view: outstanding merge-on-read deletes apply, so a
         // MOR-deleted key is correctly unmatched (the source row inserts).
         // No touched segments (including the emptied-table state, where
-        // base.entries itself is empty) => schema-correct empty relation
-        // built WITHOUT any data read — every source row is an unmatched
+        // base.entries itself is empty) => the schema-correct empty
+        // relation, no data read — every source row is an unmatched
         // insert candidate
-        val touchedRows =
-          if (touchedE.nonEmpty) assemble(spark, root, base, touchedE)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            base.schema.map(visible).getOrElse(
-              if (base.entries.nonEmpty) visible(tableSchema(spark, path, base))
-              else StructType(sourceD.schema.fields.map(_.copy(nullable = true)))))
+        val touchedRows = readAt(spark, path, base.copy(entries = touchedE))
         // matched keys can only live in touched segments, so every join
         // below runs against the touched slice, never the whole table
         val tk = touchedRows.select(col(key)).distinct().withColumn("__m", lit(1))
@@ -1966,7 +1825,8 @@ object ManifestStore {
           // outstanding MOR deletes stay published: they still filter the
           // untouched segments, and the new segment's seq exceeds every
           // delete seq so rewritten/inserted rows are immune
-          if (tryPublish(fs, root, base.version + 1, next, base.schema, base.deletes))
+          if (tryPublish(fs, root, base.version + 1, next, base.recordedSchema,
+              base.deletes))
             return MergeReport(m - del, del, ins, touchedE.size,
               base.entries.size, base.version + 1)
         } finally s2.unpersist()
@@ -1982,8 +1842,8 @@ object ManifestStore {
     * `axes` ([[ScaleOps.zOrderColumnN]]; a single axis degenerates to a
     * plain range cluster), record `statsCols` min/max per segment, and
     * publish ONE manifest. Each segment then covers a bounded
-    * hyper-rectangle of EVERY axis, so [[readWhere]] on ANY clustered
-    * column prunes most of the table from the manifest alone — the layout
+    * hyper-rectangle of EVERY axis, so a filtered [[read]] on ANY
+    * clustered column prunes most of the table from the manifest alone — the layout
     * maintenance job a 100 TB table runs beside [[compact]]. Slice
     * assignment is `floor(rank * segments / total)` over the exact global
     * z-key rank ([[ScaleOps.groupedGlobalRowNumber]] — range exchange +
@@ -2059,14 +1919,12 @@ object ManifestStore {
         }
       try fs.delete(stage, true) catch { case _: java.io.IOException => () }
       require(entries.nonEmpty, s"cluster: staged write produced no segments at $path")
-      // v5: record the schema even when the base predates schema recording.
       // The staged tree was written from the LOGICAL view, so the recorded
       // schema is the logical one — a full rewrite re-baselines any rename
       // mapping away (the clustered files spell columns logically again)
-      val schema = Some(StructType(
-        df.schema.fields.map(_.copy(nullable = true))))
+      val schema = StructType(df.schema.fields.map(_.copy(nullable = true)))
       if (tryPublish(fs, root, base.version + 1, entries, schema))
-        return Snapshot(base.version + 1, entries, schema)
+        return Snapshot(base.version + 1, entries, Some(schema))
       attempt += 1 // CAS lost: promoted segments are invisible; vacuum reclaims
     }
     throw new IllegalStateException(
@@ -2102,9 +1960,9 @@ object ManifestStore {
         throw new IllegalStateException(s"no manifest at $path"))
       if (base.version == version) return base
       if (tryPublish(fs, root, base.version + 1, target.entries,
-          target.schema.orElse(base.schema), target.deletes))
-        return Snapshot(base.version + 1, target.entries,
-          target.schema.orElse(base.schema), target.deletes)
+          target.recordedSchema, target.deletes))
+        return Snapshot(base.version + 1, target.entries, target.schema,
+          target.deletes)
       attempt += 1
     }
     throw new IllegalStateException(

@@ -1129,64 +1129,6 @@ object ScaleOps {
     } finally pairs.unpersist(blocking = false)
   }
 
-  /** Targeted key deletion from a parquet store — the "right to be
-    * forgotten" rewrite a lakehouse without ACID tables still owes its
-    * users. The EXPECTED row delta is computed up front (raw count minus the
-    * store's exact key-match count, via a left-semi join on the key
-    * column), the anti-join rewrite lands in a `.compact_tmp` sibling, and
-    * the swap publishes only if the rewrite's count equals that
-    * pre-computed expectation — a rewrite that lost or kept the wrong rows
-    * aborts with the original untouched. The swap renames the live
-    * directory aside to `.compact_old` before publishing, and the next
-    * invocation restores that backup if a crash left the live directory
-    * missing.
-    *
-    * `keys` co-partitions against the store on the key column (broadcast
-    * when small — Catalyst's choice); the rewrite is one scan + one
-    * anti-join. SINGLE-WRITER, NO CONCURRENT READERS: a query racing the
-    * swap can find the directory missing. [[ManifestStore.deleteKeys]] is
-    * the snapshot-isolated variant for manifest-resolved tables.
-    *
-    * Returns (rows deleted, rows remaining).
-    */
-  def deleteKeys(spark: SparkSession, path: String, keyCol: String,
-      keys: DataFrame): (Long, Long) = {
-    require(keys.columns.contains(keyCol), s"keys frame must carry '$keyCol'")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact_tmp")
-    val bak = new org.apache.hadoop.fs.Path(path + ".compact_old")
-    if (!fs.exists(root) && fs.exists(bak) && !fs.rename(bak, root))
-      throw new java.io.IOException(
-        s"deleteKeys: restore of crashed swap $bak -> $path failed")
-    fs.delete(tmp, true)
-    fs.delete(bak, true)
-
-    val raw = spark.read.parquet(path)
-    val ks = keys.select(col(keyCol)).distinct().localCheckpoint(eager = true)
-    val total = raw.count()
-    val hits = raw.join(ks, Seq(keyCol), "left_semi").count()
-    val expected = total - hits
-    raw.join(ks, Seq(keyCol), "left_anti")
-      .write.mode("overwrite").parquet(tmp.toString)
-    val got = spark.read.parquet(tmp.toString).count()
-    if (got != expected) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"deleteKeys: rewrite of $path has $got rows, expected $expected " +
-          s"($total total - $hits key matches) — aborted, original untouched")
-    }
-    if (!fs.rename(root, bak))
-      throw new java.io.IOException(s"deleteKeys: rename $path aside failed")
-    if (!fs.rename(tmp, root)) {
-      fs.rename(bak, root)
-      throw new java.io.IOException(s"deleteKeys: publish of rewritten $path failed")
-    }
-    fs.delete(bak, true)
-    (hits, expected)
-  }
-
   // ------------------------------------------------------------------------
   // Z-order (Morton) data layout: multi-dimensional clustering for min/max
   // file pruning. Sorting 100 TB by ONE column makes that column's file

@@ -36,7 +36,7 @@ import graft.ops.ManifestStore
   * Layout is directory-per-name under the warehouse root:
   * `warehouse/<ns...>/<table>` — a directory IS a table iff it holds a
   * `_manifest` subdirectory, and every other directory is a namespace.
-  * The table's schema lives in the manifest itself (every v5 commit
+  * The table's schema lives in the manifest itself (every commit
   * records it), so `CREATE TABLE` is one [[ManifestStore.createEmpty]]
   * CAS publish and `loadTable` is one manifest read: the catalog adds NO
   * metadata store beside the table format, and therefore no second
@@ -153,11 +153,8 @@ class ManifestCatalog extends TableCatalog with SupportsNamespaces {
       case None => ManifestStore.current(spark, path).getOrElse(
         throw new NoSuchTableException(ident))
     }
-    val schema = StructType(
-      snap.schema.map(ManifestStore.visible)
-        .getOrElse(ManifestStore.readAt(spark, path, snap).schema)
-        .fields.map(_.copy(nullable = true)))
-    new ManifestTable(path, schema, statsColsOf(readProps(dir)), versionAsOf)
+    new ManifestTable(path, snap.logicalSchema, statsColsOf(readProps(dir)),
+      versionAsOf)
   }
 
   override def createTable(ident: Identifier, schema: StructType,

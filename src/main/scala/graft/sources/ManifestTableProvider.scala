@@ -30,18 +30,20 @@ import graft.ops.{ManifestRead, ManifestStore}
   *     OPTIONS (path '/data/t' [, statscols 'k'])
   *   INSERT INTO t SELECT ...        -- ManifestStore.append: one segment
   *                                   -- + one CAS commit, safe under racers
-  *   INSERT OVERWRITE t SELECT ...   -- ManifestStore.rewriteAll
+  *   INSERT OVERWRITE t SELECT ...   -- ManifestStore.overwrite
   *   SELECT ... FROM t WHERE k > 5   -- the zero-listing manifest FileIndex,
   *                                   -- segment-pruned from recorded stats
   * }}}
   *
-  * Implementation shape: a DSv2 [[TableProvider]] whose read and write
-  * both delegate through Spark's V1 shims — [[V1Scan]] hands Catalyst a
-  * filter-pushed DataFrame built on [[ManifestRead.readCatalyst]] (so SQL
-  * reads get the same manifest-stats segment pruning as the API path;
-  * pushed filters are re-applied row-level by Spark, so a missed
-  * translation costs I/O, never correctness), and [[V1Write]] maps
-  * INSERT INTO → `append` and INSERT OVERWRITE → `rewriteAll`, inheriting
+  * Implementation shape: a DSv2 [[TableProvider]]. A read plans through
+  * [[ManifestRead]]'s file index either natively (Spark's own
+  * `ParquetScanBuilder` over [[ManifestRead.ManifestPartitioningIndex]])
+  * or, for the cases one file scan cannot express, through a [[V1Scan]]
+  * shim that hands Catalyst a filter-pushed [[ManifestStore.readAt]]
+  * DataFrame (SQL reads get the same manifest-stats segment pruning as
+  * the API path; pushed filters are re-applied row-level by Spark, so a
+  * missed translation costs I/O, never correctness). [[V1Write]] maps
+  * INSERT INTO → `append` and INSERT OVERWRITE → `overwrite`, inheriting
   * the CAS commit protocol — racing SQL INSERTs serialize exactly like
   * racing API appenders (losers re-read and re-publish; nothing is lost).
   * The `statscols` option declares min/max/null-count stats columns for
@@ -49,12 +51,10 @@ import graft.ops.{ManifestRead, ManifestStore}
   * time-travel view.
   *
   * Read-path cost note: the V1 shim surfaces the scan as an RDD[Row], so
-  * a catalog-table SELECT pays one InternalRow→Row→InternalRow
-  * conversion at the boundary (the pruning/pushdown still happens inside
-  * the wrapped plan). For bulk analytical reads prefer
-  * [[ManifestRead.registerView]] / [[ManifestRead.readCatalyst]] — the
-  * zero-overhead path into the same FileIndex; this provider's job is
-  * the SQL WRITE lifecycle plus catalog persistence.
+  * a shimmed SELECT pays one InternalRow→Row→InternalRow conversion at the
+  * boundary (the pruning/pushdown still happens inside the wrapped plan);
+  * [[ManifestStore.read]] is the zero-overhead API path into the same
+  * FileIndex.
   */
 class ManifestTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-manifest"
@@ -70,12 +70,9 @@ class ManifestTableProvider extends TableProvider with DataSourceRegister {
       case Some(v) => ManifestStore.snapshotAt(spark, path, v.toLong)
       case None => ManifestStore.current(spark, path)
     }
-    // an emptied table still serves its recorded schema (v5 records one on
-    // every commit); only a truly uninitialized path needs declared columns
-    snap.filter(s => s.segments.nonEmpty || s.schema.isDefined)
-      .map(s => StructType(s.schema.map(ManifestStore.visible)
-        .getOrElse(ManifestStore.readAt(spark, path, s).schema)
-        .fields.map(_.copy(nullable = true))))
+    // an emptied table still serves its recorded schema (every commit
+    // records one); only a truly uninitialized path needs declared columns
+    snap.map(_.logicalSchema)
       .getOrElse(throw new IllegalArgumentException(
         s"no manifest table at $path yet — declare columns in CREATE TABLE " +
           "to initialize a new one"))
@@ -152,7 +149,7 @@ final class ManifestTable(val path: String, declared: StructType,
     }
     val forceShim = Option(options.get("v1shim")).exists(_.toBoolean)
     // a renamed (column-mapped) table's files spell columns physically —
-    // the logical alias projection lives in ManifestRead.readCatalyst, so
+    // the logical alias projection lives in ManifestStore.readAt, so
     // such tables read through the shim until a full rewrite re-baselines
     // the mapping (ManifestStore.renameColumn documents the trade)
     val mapped = snap.flatMap(_.schema).exists(graft.ops.ManifestStore.hasMapping)
@@ -203,11 +200,9 @@ final class ManifestTable(val path: String, declared: StructType,
                 case Some(v) => ManifestStore.snapshotAt(spark, path, v)
                 case None => ManifestStore.current(spark, path)
               }
-              val base = snap.filter(_.segments.nonEmpty) match {
-                case Some(s) if versionAsOf.isDefined =>
-                  ManifestRead.readCatalystVersion(spark, path, s.version)
-                case Some(_) => ManifestRead.readCatalyst(spark, path)
-                case None => // created but never written: schema-correct empty
+              val base = snap match {
+                case Some(s) => ManifestStore.readAt(spark, path, s)
+                case None => // no manifest at the path: schema-correct empty
                   spark.createDataFrame(
                     spark.sparkContext.emptyRDD[Row], declared)
               }

@@ -55,12 +55,18 @@ class EvolutionSpec extends SparkSpec {
       statsCols = Seq("k"))
     ManifestStore.renameColumn(spark, path, "k", "id")
     val snap = ManifestStore.current(spark, path).get
-    // prunedEntries takes LOGICAL bounds and translates to physical keys
-    assert(ManifestStore.prunedEntries(snap, Seq(("id", 150L, 300L))).size == 1)
-    val hit = ManifestStore.readWhere(spark, path, Seq(("id", 150L, 300L)))
+    // stats stay keyed by the PHYSICAL name; a filter on the LOGICAL name
+    // reaches them through the read's alias projection
+    val kept = ManifestStore.prunedEntries(snap,
+      Map("k" -> ManifestStore.Bound(Some(150L), Some(300L))))
+    assert(kept.size == 1)
+    val hit = ManifestStore.read(spark, path).where(col("id").between(150L, 300L))
     assert(hit.select("id").as[Long].collect().toSeq == Seq(200L))
-    val byKey = ManifestStore.readForKeys(spark, path, "id", Seq(2L))
+    assert(manifestFilesScanned(hit) == kept.head.files.size)
+    val byKey = ManifestStore.read(spark, path).where(col("id").isin(2L))
     assert(byKey.select("v").as[String].collect().toSeq == Seq("b"))
+    assert(manifestFilesScanned(byKey) ==
+      snap.entries.filterNot(_ == kept.head).map(_.files.size).sum)
   }
 
   test("widenColumn promotes old narrow segments at scan time") {
@@ -82,7 +88,7 @@ class EvolutionSpec extends SparkSpec {
     assert(got.collect().toSeq == Seq(
       Row(1L, 1.5d, 7.0d), Row(2L, 2.5d, 8.0d), Row(3000000000L, 3.5d, 9.5d)))
     // pruning across the int-tagged old segment and long-tagged new one
-    val hit = ManifestStore.readWhere(spark, path, Seq(("k", 10L, 4000000000L)))
+    val hit = ManifestStore.read(spark, path).where(col("k").between(10L, 4000000000L))
     assert(hit.count() == 1)
     // non-lossless widenings refuse loudly
     intercept[IllegalArgumentException] {
@@ -135,8 +141,9 @@ class EvolutionSpec extends SparkSpec {
     assert(ManifestStore.read(spark, path).select("id").as[Long]
       .collect().toSeq == Seq(1L))
     assert(ManifestStore.current(spark, path).get.deletes.forall(_.keyCol == "k"))
-    // the planner-integrated path agrees (physical-space anti-joins)
-    assert(graft.ops.ManifestRead.readCatalyst(spark, path)
+    // the versioned read of the same snapshot agrees (physical-space anti-joins)
+    assert(ManifestStore.readVersion(spark, path,
+      ManifestStore.current(spark, path).get.version)
       .select("id").as[Long].collect().toSeq == Seq(1L))
     // MERGE on the renamed key: updates + inserts, stats-pruned probe
     val rep = ManifestStore.merge(spark,
@@ -194,7 +201,7 @@ class EvolutionSpec extends SparkSpec {
     assert(ManifestStore.read(spark, path).columns.toSeq == Seq("k", "n"))
     assert(ManifestStore.read(spark, path).orderBy("k").collect().toSeq ==
       Seq(Row(1L, 10), Row(2L, 20)))
-    assert(graft.ops.ManifestRead.readCatalyst(spark, path).columns.toSeq ==
+    assert(ManifestStore.readVersion(spark, path, after.version).columns.toSeq ==
       Seq("k", "n"))
     // appends now carry the narrowed shape; the old wide batch is refused
     ManifestStore.append(spark, Seq((3L, 30)).toDF("k", "n"), path)

@@ -110,10 +110,10 @@ class ManifestStoreModelSpec extends SparkSpec {
         s"store diverged from model at step $step: store=${table()} model=$model")
       // the whole READER surface must agree with the model too
       if (ManifestStore.current(spark, path).exists(_.segments.nonEmpty)) {
-        val cat = graft.ops.ManifestRead.readCatalyst(spark, path)
-          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-        assert(cat == model.toMap, s"readCatalyst diverged at step $step: $cat")
         val snap = ManifestStore.current(spark, path).get
+        val cat = ManifestStore.readVersion(spark, path, snap.version)
+          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        assert(cat == model.toMap, s"readVersion diverged at step $step: $cat")
         assert(ManifestStore.describe(spark, path).count() == snap.entries.size)
       }
     }

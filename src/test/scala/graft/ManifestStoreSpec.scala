@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.ManifestStore
+import graft.ops.ManifestStore.Bound
 
 class ManifestStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -145,17 +146,22 @@ class ManifestStoreSpec extends SparkSpec {
       path, statsCols = Seq("k"))
     // values hit segments 1 and 3; segment 2's [10,15] cannot hold them —
     // result identical to a full-scan filter, but only 2 segments read
-    val got = ManifestStore.readForKeys(spark, path, "k", Seq(5L, 20L, 99L))
-      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+    val q = ManifestStore.read(spark, path).where(col("k").isin(5L, 20L, 99L))
+    val got = q.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     assert(got.toSeq == Seq((5L, "b"), (20L, "e")))
     val snap = ManifestStore.current(spark, path).get
-    val kept = snap.entries.count { e =>
+    val keptE = snap.entries.filter { e =>
       val s = e.stats("k")
       Seq(5L, 20L, 99L).exists(v => s.min.get.toLong <= v && v <= s.max.get.toLong)
     }
+    val kept = keptE.size
     assert(kept == 2, "the middle segment must be prunable from stats alone")
+    assert(manifestFilesScanned(q) == keptE.map(_.files.size).sum,
+      "the scan opens only the kept segments' files")
     // no keys in range at all => empty slice, schema intact, zero reads
-    assert(ManifestStore.readForKeys(spark, path, "k", Seq(99L)).count() == 0L)
+    val miss = ManifestStore.read(spark, path).where(col("k").isin(99L))
+    assert(miss.count() == 0L)
+    assert(manifestFilesScanned(miss) == 0L)
   }
 
   test("merge on a CLUSTERED table: cluster's seg-<uuid>-<k> names still resolve the touched set") {
@@ -267,10 +273,10 @@ class ManifestStoreSpec extends SparkSpec {
     assert(snap.deletes.size == 1 && snap.deletes.head.keyCol == "k")
     assert(ManifestStore.read(spark, path).collect().map(_.getLong(0)).sorted.toSeq
       == Seq(1L, 3L), "the deleted key is hidden immediately")
-    // readWhere / readForKeys see the logical view too
-    assert(ManifestStore.readWhere(spark, path, Seq(("k", 1L, 3L)))
+    // filtered reads see the logical view too
+    assert(ManifestStore.read(spark, path).where(col("k").between(1L, 3L))
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L))
-    assert(ManifestStore.readForKeys(spark, path, "k", Seq(2L)).count() == 0L)
+    assert(ManifestStore.read(spark, path).where(col("k").isin(2L)).count() == 0L)
     // sequence rule: re-inserting the deleted key lands in a NEWER segment
     // than the delete, so it is visible — the delete cannot swallow it
     val up = ManifestStore.upsert(spark, Seq((2L, "B")).toDF("k", "v"), path, "k")
@@ -291,12 +297,11 @@ class ManifestStoreSpec extends SparkSpec {
     val rows = ManifestStore.read(spark, path)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(rows == Map(1L -> "A", 2L -> "B", 3L -> "C3"), s"$rows")
-    // readCatalyst with outstanding deletes degrades to the correct
-    // assembled view (and returns to the planner-integrated path after)
+    // a read with outstanding deletes serves the logical view
     val p2 = tmpDir("mstoreMor") + "/t2"
     ManifestStore.append(spark, Seq((1L, "x"), (2L, "y")).toDF("k", "v"), p2)
     ManifestStore.deleteKeysMergeOnRead(spark, p2, "k", Seq(1L).toDF("k"))
-    assert(graft.ops.ManifestRead.readCatalyst(spark, p2)
+    assert(ManifestStore.read(spark, p2)
       .collect().map(_.getLong(0)).toSeq == Seq(2L))
     // vacuum keeps live sidecars, reclaims orphaned ones
     val fs = new org.apache.hadoop.fs.Path(p2)
@@ -338,7 +343,6 @@ class ManifestStoreSpec extends SparkSpec {
   }
 
   test("readCatalyst: ordinary DataFrame filters prune segments inside the planner") {
-    import graft.ops.ManifestRead
     val path = tmpDir("mstoreCat") + "/t"
     ManifestStore.append(spark, Seq((1L, "a"), (5L, "b")).toDF("k", "v"),
       path, statsCols = Seq("k"))
@@ -346,53 +350,85 @@ class ManifestStoreSpec extends SparkSpec {
       path, statsCols = Seq("k"))
     ManifestStore.append(spark, Seq((20L, "e"), (25L, "f")).toDF("k", "v"),
       path, statsCols = Seq("k"))
-    val df = ManifestRead.readCatalyst(spark, path)
+    val df = ManifestStore.read(spark, path)
     assert(df.count() == 6L, "unfiltered read sees the whole table")
-    // a PLAIN where() — no readWhere call — must skip the two segments
+    // a PLAIN where() must skip the two segments
     // whose [min,max] can't hold the interval
     val q = df.where(col("k") >= 10L && col("k") <= 15L)
     val got = q.collect().map(_.getLong(0)).sorted.toSeq
     assert(got == Seq(10L, 15L))
-    val scanNode = q.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.get
-    val allFiles = ManifestRead.readCatalyst(spark, path)
-      .queryExecution.executedPlan.collectLeaves().collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.get
-    q.collect()
-    assert(scanNode.metrics("numFiles").value < allFiles.relation.location.inputFiles.length,
+    val allFiles = manifestFilesScanned(ManifestStore.read(spark, path))
+    assert(manifestFilesScanned(q) < allFiles,
       s"planner-level skipping must read fewer files: " +
-        s"${scanNode.metrics("numFiles").value} of ${allFiles.relation.location.inputFiles.length}")
+        s"${manifestFilesScanned(q)} of $allFiles")
     // unsupported predicates fall back to a full (still correct) scan
-    assert(ManifestRead.readCatalyst(spark, path)
+    assert(ManifestStore.read(spark, path)
       .where(col("v").contains("e")).collect().map(_.getString(1)).toSeq == Seq("e"))
     // equality + one-sided bounds prune too
-    assert(ManifestRead.readCatalyst(spark, path).where(col("k") === 25L).count() == 1L)
-    assert(ManifestRead.readCatalyst(spark, path).where(col("k") > 19L).count() == 2L)
+    assert(ManifestStore.read(spark, path).where(col("k") === 25L).count() == 1L)
+    assert(ManifestStore.read(spark, path).where(col("k") > 19L).count() == 2L)
     // IN-list point-set pruning: values in segments 1 and 3 — the middle
     // segment's [10,15] holds neither, so the scan opens fewer files
-    val inQ = ManifestRead.readCatalyst(spark, path).where(col("k").isin(5L, 20L))
+    val inQ = ManifestStore.read(spark, path).where(col("k").isin(5L, 20L))
     assert(inQ.collect().map(_.getLong(0)).sorted.toSeq == Seq(5L, 20L))
-    val inScan = inQ.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.get
-    inQ.collect()
-    assert(inScan.metrics("numFiles").value <
-      allFiles.relation.location.inputFiles.length,
-      "IN-list pruning must open fewer files")
+    assert(manifestFilesScanned(inQ) < allFiles, "IN-list pruning must open fewer files")
     // planner-integrated time travel + SQL view
-    assert(ManifestRead.readCatalystVersion(spark, path, 1L).count() == 2L)
-    ManifestRead.registerView(spark, path, "mstore_cat_view")
+    assert(ManifestStore.readVersion(spark, path, 1L).count() == 2L)
+    ManifestStore.read(spark, path).createOrReplaceTempView("mstore_cat_view")
     assert(spark.sql("SELECT COUNT(*) FROM mstore_cat_view WHERE k >= 10 AND k <= 15")
       .head().getLong(0) == 2L)
     // an evolved table reads through the recorded schema on this path too
     ManifestStore.append(spark, Seq((30L, "g", 7.5)).toDF("k", "v", "w"), path,
       mergeSchema = true)
-    val evolved = ManifestRead.readCatalyst(spark, path)
+    val evolved = ManifestStore.read(spark, path)
     assert(evolved.columns.toSeq == Seq("k", "v", "w"))
     assert(evolved.where(col("k") === 1L).head().isNullAt(2),
       "pre-evolution segments null-fill through the FileIndex read")
+  }
+
+  test("an IN list above the InSet conversion threshold still prunes segments") {
+    val path = tmpDir("mstoreInSet") + "/t"
+    // four one-file segments; keys 0..10 all sit in the first
+    ManifestStore.append(spark, (0L to 10L).map(k => (k, s"v$k")).toDF("k", "v")
+      .coalesce(1), path, statsCols = Seq("k"))
+    for (base <- Seq(100L, 200L, 300L))
+      ManifestStore.append(spark, (base to base + 10L).map(k => (k, s"v$k"))
+        .toDF("k", "v").coalesce(1), path, statsCols = Seq("k"))
+    assert(ManifestStore.current(spark, path).get.entries.map(_.files.size) ==
+      Seq(1, 1, 1, 1), "fixture wants one file per segment")
+    // 10 literals stay an In; 11 exceed spark.sql.optimizer.inSetConversionThreshold
+    // (default 10) and become an InSet
+    val in10 = ManifestStore.read(spark, path).where(col("k").isin(0L to 9L: _*))
+    assert(in10.count() == 10L)
+    assert(manifestFilesScanned(in10) == 1L)
+    val in11 = ManifestStore.read(spark, path).where(col("k").isin(0L to 10L: _*))
+    assert(in11.queryExecution.optimizedPlan.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+    }.exists(_.find(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.InSet])
+      .isDefined), "fixture wants an InSet filter")
+    assert(in11.count() == 11L)
+    assert(manifestFilesScanned(in11) == 1L,
+      s"an InSet must prune like an In: ${manifestFilesScanned(in11)} of 4 files")
+    // the same through SQL
+    ManifestStore.read(spark, path).createOrReplaceTempView("mstore_inset_view")
+    val sqlQ = spark.sql("SELECT k FROM mstore_inset_view WHERE k IN (" +
+      (0 to 10).mkString(", ") + ")")
+    assert(sqlQ.count() == 11L)
+    assert(manifestFilesScanned(sqlQ) == 1L)
+  }
+
+  test("a manifest with a pre-v5 header fails current() loudly, naming its path") {
+    val path = tmpDir("mstoreOldHeader") + "/t"
+    ManifestStore.append(spark, Seq((1L, "a")).toDF("k", "v"), path)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = fs.create(new org.apache.hadoop.fs.Path(path,
+      f"_manifest/v${2L}%012d.manifest"), false)
+    old.write("graft-manifest v4\nseg\t2\tseg-old\n".getBytes("UTF-8"))
+    old.close()
+    val e = intercept[IllegalArgumentException](ManifestStore.current(spark, path))
+    assert(e.getMessage.contains(path) && e.getMessage.contains("graft-manifest v4"),
+      e.getMessage)
   }
 
   test("describe: per-segment rows/bytes/stats coverage from one metadata job") {
@@ -524,10 +560,19 @@ class ManifestStoreSpec extends SparkSpec {
     Seq((999L, "racer")).toDF("k", "v").write.parquet(s"$path/$racerSeg")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(path,
-      f"_manifest/v${base.version + 1}%012d.manifest")
-    val out = fs.create(target, false)
-    out.write(("graft-manifest v1\n" + (base.segments :+ racerSeg).mkString("\n") + "\n")
+    def manifest(v: Long) = new org.apache.hadoop.fs.Path(path,
+      f"_manifest/v$v%012d.manifest")
+    // the racer's v5 manifest: the base's lines plus one seg line carrying
+    // the racer segment's recorded file list
+    val b64 = (s: String) => java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
+    val racerFiles = fs.listStatus(new org.apache.hadoop.fs.Path(path, racerSeg))
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(st => s"${b64(st.getPath.getName)}|${st.getLen}").mkString(",")
+    val baseIn = fs.open(manifest(base.version))
+    val baseText = try scala.io.Source.fromInputStream(baseIn, "UTF-8").mkString
+      finally baseIn.close()
+    val out = fs.create(manifest(base.version + 1), false)
+    out.write((baseText + s"seg\t${base.version + 1}\t$racerSeg\tfiles:$racerFiles\n")
       .getBytes("UTF-8"))
     out.close()
     // our compaction's FIRST publish attempt targets the taken v(base+1):
@@ -557,32 +602,39 @@ class ManifestStoreSpec extends SparkSpec {
     assert(snap.entries.forall(_.stats.keySet == Set("year", "lane", "d")),
       "every commit declared stats for all three columns")
 
+    def files(es: Seq[ManifestStore.SegmentEntry]): Long = es.map(_.files.size).sum.toLong
     // long bounds: one segment overlaps [2007, 2009]
-    val kept = ManifestStore.prunedEntries(snap, Seq(("year", 2007, 2009)))
+    val kept = ManifestStore.prunedEntries(snap, Map("year" -> Bound(Some(2007), Some(2009))))
     assert(kept.size == 1, s"expected 1 surviving segment, got ${kept.size}")
-    val got = ManifestStore.readWhere(spark, path, Seq(("year", 2007, 2009)))
-      .collect().map(_.getLong(0)).sorted.toSeq
+    val q = ManifestStore.read(spark, path).where(col("year").between(2007, 2009))
+    val got = q.collect().map(_.getLong(0)).sorted.toSeq
     assert(got == Seq(2007L, 2008L, 2009L))
+    assert(manifestFilesScanned(q) == files(kept), "only the kept segment is scanned")
 
     // string bounds prune in UTF-8 binary order
-    assert(ManifestStore.prunedEntries(snap, Seq(("lane", "b", "c"))).size == 1)
-    assert(ManifestStore.readWhere(spark, path, Seq(("lane", "b", "c"))).count() == 6)
+    val lKept = ManifestStore.prunedEntries(snap, Map("lane" -> Bound(Some("b"), Some("c"))))
+    assert(lKept.size == 1)
+    val lq = ManifestStore.read(spark, path).where(col("lane").between("b", "c"))
+    assert(lq.count() == 6)
+    assert(manifestFilesScanned(lq) == files(lKept))
 
     // date bounds via LocalDate
-    val dKept = ManifestStore.prunedEntries(snap,
-      Seq(("d", java.time.LocalDate.of(2012, 1, 1), java.time.LocalDate.of(2017, 12, 31))))
+    val dKept = ManifestStore.prunedEntries(snap, Map("d" -> Bound(
+      Some(java.time.LocalDate.of(2012, 1, 1)), Some(java.time.LocalDate.of(2017, 12, 31)))))
     assert(dKept.size < 3, "date stats must prune at least one segment")
 
     // a conjunction that no segment satisfies → empty result, schema intact
-    val none = ManifestStore.readWhere(spark, path,
-      Seq(("year", 2007, 2009), ("lane", "g", "h")))
+    val none = ManifestStore.read(spark, path)
+      .where(col("year").between(2007, 2009) && col("lane").between("g", "h"))
     assert(none.count() == 0 && none.columns.toSeq == Seq("year", "lane", "d"))
+    assert(manifestFilesScanned(none) == 0L)
 
-    // exactness contract: readWhere == read().where(same predicate)
-    val want = ManifestStore.read(spark, path)
+    // exactness contract: the pruned read == the full-scan filter
+    val want = ManifestStore.read(spark, path).collect()
+      .filter(r => r.getLong(0) >= 2004 && r.getLong(0) <= 2013)
+      .map(_.toString).sorted.toSeq
+    val have = ManifestStore.read(spark, path)
       .where(col("year").between(2004, 2013)).collect().map(_.toString).sorted.toSeq
-    val have = ManifestStore.readWhere(spark, path, Seq(("year", 2004, 2013)))
-      .collect().map(_.toString).sorted.toSeq
     assert(have == want)
   }
 
@@ -600,13 +652,13 @@ class ManifestStoreSpec extends SparkSpec {
     assert(snap.entries.size == 3)
     // bounds that exclude the statted segment: the stat-less one must remain
     // (conservative), the all-NULL one must be skipped (no value can match)
-    val kept = ManifestStore.prunedEntries(snap, Seq(("k", 1, 2)))
+    val kept = ManifestStore.prunedEntries(snap, Map("k" -> Bound(Some(1), Some(2))))
     assert(kept.size == 1 && kept.head.stats.isEmpty,
       s"only the conservative stat-less segment survives: $kept")
-    assert(ManifestStore.readWhere(spark, path, Seq(("k", 1, 2))).count() == 2)
-    assert(ManifestStore.readWhere(spark, path, Seq(("k", 50, 200))).count() == 1)
-    // hand-published v1 manifests (rewriteAll CAS spec writes one) parse as
-    // stat-less entries — covered above by construction of the first append
+    val q = ManifestStore.read(spark, path).where(col("k").between(1, 2))
+    assert(q.count() == 2)
+    assert(manifestFilesScanned(q) == kept.head.files.size)
+    assert(ManifestStore.read(spark, path).where(col("k").between(50, 200)).count() == 1)
   }
 
   test("cluster: z-order layout prunes from the manifest alone on EVERY axis") {
@@ -635,13 +687,15 @@ class ManifestStoreSpec extends SparkSpec {
     // a half-domain slice on EACH axis keeps exactly its 4 octants — the
     // z-order guarantee (a single-column sort prunes only its own axis)
     for (axis <- Seq("x", "y", "z")) {
-      val kept = ManifestStore.prunedEntries(snap, Seq((axis, 0, 2047)))
+      val kept = ManifestStore.prunedEntries(snap, Map(axis -> Bound(Some(0), Some(2047))))
       assert(kept.size == 4, s"axis $axis: kept ${kept.size} of 8 segments")
-      val got = ManifestStore.readWhere(spark, path, Seq((axis, 0, 2047)))
-        .collect().map(_.getLong(0)).sorted.toSeq
-      val want = ManifestStore.read(spark, path)
-        .where(col(axis).between(0, 2047)).collect().map(_.getLong(0)).sorted.toSeq
+      val q = ManifestStore.read(spark, path).where(col(axis).between(0, 2047))
+      val got = q.collect().map(_.getLong(0)).sorted.toSeq
+      val want = ManifestStore.read(spark, path).collect()
+        .filter(r => r.getAs[Long](axis) <= 2047L).map(_.getLong(0)).sorted.toSeq
       assert(got == want, s"axis $axis: pruned read must equal the full-scan filter")
+      assert(manifestFilesScanned(q) == kept.map(_.files.size).sum,
+        s"axis $axis: the scan opens only the kept segments' files")
     }
     // content is identical to the pre-cluster table
     assert(ManifestStore.read(spark, path).collect().map(_.toString).sorted.toSeq ==
@@ -716,8 +770,8 @@ class ManifestStoreSpec extends SparkSpec {
     // every read verb serves the schema-correct empty relation, not a crash
     assert(ManifestStore.read(spark, path).count() == 0L)
     assert(ManifestStore.read(spark, path).columns.toSeq == Seq("k", "v"))
-    assert(ManifestStore.readWhere(spark, path, Seq(("k", 0L, 10L))).count() == 0L)
-    assert(ManifestStore.readForKeys(spark, path, "k", Seq(1L)).count() == 0L)
+    assert(ManifestStore.read(spark, path).where(col("k").between(0L, 10L)).count() == 0L)
+    assert(ManifestStore.read(spark, path).where(col("k").isin(1L)).count() == 0L)
     // the recorded schema is ENFORCED on the emptied table, not forgotten
     intercept[IllegalArgumentException] {
       ManifestStore.append(spark, Seq((1, 2.0)).toDF("wrong", "shape"), path)

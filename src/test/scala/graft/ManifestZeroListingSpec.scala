@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{ManifestRead, ManifestStore}
+import graft.ops.ManifestStore
 import graft.tools.CountingFs
 
 /** Round-11 "manifest at scale" pins: (1) planning a v5 table makes ZERO
@@ -44,7 +44,7 @@ class ManifestZeroListingSpec extends SparkSpec {
       .find(e => e.stats("k").min.contains("10")).get.name
 
     CountingFs.start()
-    val q = ManifestRead.readCatalyst(spark, path)
+    val q = ManifestStore.read(spark, path)
       .where(col("k") >= 10L && col("k") <= 15L)
     val got = q.collect().map(_.getLong(0)).sorted.toSeq
     val calls = CountingFs.stop()
@@ -63,44 +63,10 @@ class ManifestZeroListingSpec extends SparkSpec {
 
     // index construction + size estimation don't list either
     CountingFs.start()
-    ManifestRead.readCatalyst(spark, path).queryExecution.logical.stats
+    ManifestStore.read(spark, path).queryExecution.logical.stats
     val calls2 = CountingFs.stop()
     assert(!calls2.exists(c => c._1 == "listStatus" && c._2.contains("/seg-")),
       "index construction/sizeInBytes must not list segments")
-  }
-
-  test("pre-v5 manifests (no recorded file lists) fall back to lazy per-segment listing") {
-    CountingFs.install(spark)
-    val dir = tmpDir("zeroListLegacy")
-    val path = "countfs:" + dir + "/t"
-    ManifestStore.append(spark, Seq((1L, "a")).toDF("k", "v"), path, statsCols = Seq("k"))
-    ManifestStore.append(spark, Seq((10L, "b")).toDF("k", "v"), path, statsCols = Seq("k"))
-    // strip the v5 fields from the manifest in place — what a table
-    // committed by an older writer looks like
-    val mdir = java.nio.file.Paths.get(dir, "t", "_manifest")
-    val manifests = java.nio.file.Files.list(mdir).iterator()
-    var latest: java.nio.file.Path = null
-    while (manifests.hasNext) {
-      val p = manifests.next()
-      if (p.getFileName.toString.endsWith(".manifest") &&
-        (latest == null || p.getFileName.toString > latest.getFileName.toString))
-        latest = p
-    }
-    val stripped = new String(java.nio.file.Files.readAllBytes(latest), "UTF-8")
-      .linesIterator.map { l =>
-        if (!l.startsWith("seg\t")) l
-        else l.split('\t').filterNot(f =>
-          f.startsWith("files:") || f.startsWith("rows:")).mkString("\t")
-      }.mkString("", "\n", "\n")
-    java.nio.file.Files.write(latest, stripped.getBytes("UTF-8"))
-    // the read still works — via one lazy listStatus per KEPT segment
-    CountingFs.start()
-    val q = ManifestRead.readCatalyst(spark, path).where(col("k") === 10L)
-    val got = q.collect().map(_.getLong(0)).toSeq
-    val calls = CountingFs.stop()
-    assert(got == Seq(10L))
-    assert(calls.exists(c => c._1 == "listStatus" && c._2.contains("/seg-")),
-      "legacy entries must fall back to listing")
   }
 
   test("IS NULL prunes on nulls=0 segments; IS NOT NULL prunes all-NULL segments (manifest alone)") {
@@ -115,22 +81,22 @@ class ManifestZeroListingSpec extends SparkSpec {
     ManifestStore.append(spark,
       Seq((5L, Some(50L)), (6L, None: Option[Long])).toDF("k", "x").coalesce(1),
       path, statsCols = Seq("k", "x")) // x: mixed
-    assert(filesPlanned(ManifestRead.readCatalyst(spark, path)) == 3,
+    assert(filesPlanned(ManifestStore.read(spark, path)) == 3,
       "fixture wants one file per segment")
 
-    val isNullQ = ManifestRead.readCatalyst(spark, path).where(col("x").isNull)
+    val isNullQ = ManifestStore.read(spark, path).where(col("x").isNull)
     assert(isNullQ.collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L, 6L))
     assert(filesPlanned(isNullQ) == 2,
       s"IS NULL must skip the nulls=0 segment: ${filesPlanned(isNullQ)} of 3")
 
-    val notNullQ = ManifestRead.readCatalyst(spark, path).where(col("x").isNotNull)
+    val notNullQ = ManifestStore.read(spark, path).where(col("x").isNotNull)
     assert(notNullQ.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 5L))
     assert(filesPlanned(notNullQ) == 2,
       s"IS NOT NULL must skip the all-NULL segment: ${filesPlanned(notNullQ)} of 3")
 
     // combined with an interval: x IS NOT NULL AND x >= 50 keeps only the
     // mixed segment (the no-null segment's [10,20] misses the bound)
-    val comboQ = ManifestRead.readCatalyst(spark, path)
+    val comboQ = ManifestStore.read(spark, path)
       .where(col("x").isNotNull && col("x") >= 50L)
     assert(comboQ.collect().map(_.getLong(0)).toSeq == Seq(5L))
     assert(filesPlanned(comboQ) == 1,
@@ -183,17 +149,14 @@ class ManifestZeroListingSpec extends SparkSpec {
     ManifestStore.upsert(spark, Seq((5L, "B2")).toDF("k", "v"), path, "k",
       statsCols = Seq("k"))
 
-    // the planner-integrated read agrees with the assembled view exactly
-    val cat = ManifestRead.readCatalyst(spark, path)
+    // the planner-integrated read applies the sequence rule exactly
+    val cat = ManifestStore.read(spark, path)
     val catRows = cat.collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    val refRows = ManifestStore.read(spark, path)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(catRows == refRows)
     assert(catRows == Map(1L -> "a", 10L -> "c", 15L -> "d", 25L -> "f", 5L -> "B2"))
 
     // ordinary where() still prunes segments UNDER the anti-joins: the
     // [10,15] probe must not open the other three segments' files
-    val q = ManifestRead.readCatalyst(spark, path)
+    val q = ManifestStore.read(spark, path)
       .where(col("k") >= 10L && col("k") <= 15L)
     assert(q.collect().map(_.getLong(0)).sorted.toSeq == Seq(10L, 15L))
     val planned = segFilesPlanned(q)
@@ -213,6 +176,6 @@ class ManifestZeroListingSpec extends SparkSpec {
     val snap = ManifestStore.current(spark, path).get
     assert(snap.entries.isEmpty && snap.deletes.nonEmpty,
       s"fixture wants an emptied table with a live sidecar: $snap")
-    assert(ManifestRead.readCatalyst(spark, path).count() == 0L)
+    assert(ManifestStore.read(spark, path).count() == 0L)
   }
 }

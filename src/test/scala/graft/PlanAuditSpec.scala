@@ -570,7 +570,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("renamed (column-mapped) table: stats pruning and column pruning survive the alias projection") {
     import org.apache.spark.sql.functions.col
-    import graft.ops.{ManifestRead, ManifestStore}
+    import graft.ops.ManifestStore
     import spark.implicits._
     val dir = tmpDir("planMapped") + "/t"
     // one file per segment, so files-planned counts segments exactly
@@ -582,7 +582,7 @@ class PlanAuditSpec extends SparkSpec {
     // the logical filter on the RENAMED column pushes through the alias
     // projection as a physical-named predicate, which is what the
     // manifest stats are keyed on: only the second segment's file scans
-    val df = ManifestRead.readCatalyst(spark, dir)
+    val df = ManifestStore.read(spark, dir)
       .where(col("id") >= 100L).select("id")
     // collect THIS dataframe (a derived Dataset would build its own
     // QueryExecution and leave the executed plan unpopulated)

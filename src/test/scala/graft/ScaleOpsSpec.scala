@@ -509,39 +509,4 @@ class ScaleOpsSpec extends SparkSpec {
       ScaleOps.autoJoin(hot, small, "k", joinType = "full")
     }
   }
-
-  test("deleteKeys removes exactly the matched rows, survivors untouched") {
-    import spark.implicits._
-    val dir = tmpDir("delkeys") + "/t"
-    val df = (1 to 500).map(i => (i.toLong, s"v$i", i % 7)).toDF("k", "v", "g")
-    df.repartition(8).write.parquet(dir)
-    // 30 present keys, 10 absent ones (absent must be a no-op, not an error),
-    // and a duplicate in the request (must not double-count)
-    val req = ((1 to 30).map(_.toLong * 10) ++ Seq(9999L, 10001L) ++ Seq(10L))
-      .toDF("k")
-    val survivors = spark.read.parquet(dir)
-      .where(!col("k").isin((1 to 30).map(_.toLong * 10): _*))
-      .collect().map(_.toString).sorted.toSeq
-    val (deleted, remaining) = ScaleOps.deleteKeys(spark, dir, "k", req)
-    assert(deleted == 30 && remaining == 470, s"($deleted, $remaining)")
-    val after = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    assert(after == survivors, "survivors must be byte-identical")
-    assert(spark.read.parquet(dir).where(col("k") % 10 === 0 && col("k") <= 300).count() == 0,
-      "deleted keys must be gone")
-  }
-
-  test("deleteKeys recovers a crashed swap before rewriting") {
-    import spark.implicits._
-    val dir = tmpDir("delcrash") + "/t"
-    (1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v").write.parquet(dir)
-    // simulate a crash between the two publish renames: live dir moved
-    // aside, replacement never landed
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".compact_old")))
-    val (deleted, remaining) = ScaleOps.deleteKeys(spark, dir, "k", Seq(1L, 2L).toDF("k"))
-    assert(deleted == 2 && remaining == 98, s"($deleted, $remaining)")
-    assert(spark.read.parquet(dir).count() == 98)
-  }
 }

@@ -14,6 +14,30 @@ trait SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Data files the manifest scans of `df` opened: runs the query once and
+    * sums the `numFiles` metric of every scan planned through the manifest
+    * file index, unwrapping adaptive plans. Delete-sidecar scans are plain
+    * parquet scans and are not counted. The run is a fresh QueryExecution
+    * over the same query: an action resets the metrics of a plan it
+    * re-runs, and a scan's file listing, computed once, would not set
+    * them again.
+    */
+  def manifestFilesScanned(df: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val fresh = df.where(org.apache.spark.sql.functions.lit(true))
+    fresh.collect()
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(scans)
+    }
+    scans(fresh.queryExecution.executedPlan)
+      .filter(_.relation.location.isInstanceOf[graft.ops.ManifestRead.ManifestFileIndex])
+      .map(_.metrics("numFiles").value).sum
+  }
+
   /** Descriptions of the jobs `body` launches. */
   def jobsOf[T](body: => T): (T, Seq[String]) = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
