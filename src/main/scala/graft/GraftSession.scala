@@ -70,9 +70,10 @@ object GraftSession {
     // spilling. If you cannot bound the values, aggregate under a
     // dedicated session (or reset this conf around the call).
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> (1 << 21).toString,
-    // Dataset.observe metrics ride accumulators, which a speculative
-    // duplicate task attempt can inflate, and the engine takes counts from
-    // them (ManifestStore segment stats).
+    // Spark's default, pinned: Dataset.observe metrics ride accumulators,
+    // which a speculative duplicate task attempt can inflate. The engine
+    // calls no observe (GraftSessionSpec guards that), but a caller's
+    // observed counts on this session stay exact.
     // GraftSessionSpec fails if this is ever turned on.
     "spark.speculation" -> "false",
     // Generated classes (whole-stage and expression code) live in one LRU

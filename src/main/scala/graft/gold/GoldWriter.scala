@@ -1,18 +1,16 @@
 package graft.gold
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
-  BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation,
-  PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
-  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.silver.Transformer
 
@@ -21,40 +19,26 @@ import graft.silver.Transformer
   * DuckDB's `INSERT ... ON CONFLICT (crash_record_id) DO NOTHING`
   * (reference: cleaner/duckdb_writer.py:141-207) has no parquet equivalent,
   * so it is expressed as dedup-within-batch + left-anti against the existing
-  * keys + append — semantically identical under the reference's own
-  * single-writer assumption (one cleaner consumer, prefetch 1;
-  * cleaner/cleaner.py:248). Replays of the same batch are no-ops, which is
+  * keys + append. Gold is one flat directory of parquet files, as the
+  * reference's Gold is one table, and any external reader can scan it with
+  * a plain parquet read. Replays of the same batch are no-ops, which is
   * what makes the at-least-once delivery safe (ST4).
   *
-  * WRITER CONCURRENCY (the contract, stated once and permanently): plain
-  * [[upsertBucketed]] is SINGLE-WRITER per table path — the
-  * conflict check (anti join) and the append are two steps, so two
-  * uncoordinated writers racing the same keys can both observe "absent" and
-  * both insert (GoldWriterSpec pins the serialized interleaving that
-  * prevents this). That matches the reference deployment exactly (its
-  * PK-enforced DuckDB writer sits behind a prefetch-1 queue consumer — one
-  * writer by construction). Deployments that DO need concurrent upserts use
-  * [[lockedUpsertBucketed]]: an advisory filesystem mutex
-  * (atomic exclusive-create of `_graft_gold.lock`, stale-takeover on crash)
-  * serializes cooperating writers on filesystems with atomic
-  * create-no-overwrite (local, HDFS). Object stores without atomic
-  * exclusive-create need an external coordinator (or a transactional table
-  * format) — that is a storage-layer property no parquet-directory protocol
-  * can conjure, and pretending otherwise would be the bug. The engine's
-  * transactional answer is [[graft.ops.ManifestStore]]: manifest-resolved
-  * tables get lock-free first-write-wins upserts (optimistic CAS publish)
-  * and crash-atomic rewrites — use it when the table is born under this
-  * engine; the path-based writer here remains for a plain parquet layout
-  * any external reader can scan directly.
+  * WRITER CONCURRENCY: [[upsertBucketed]] is SINGLE-WRITER per table path.
+  * The conflict check (anti join) and the append are two steps, so two
+  * uncoordinated writers racing the same keys could both observe "absent"
+  * and both insert. `Pipeline.run` is the one writer, as the reference's
+  * PK-enforced DuckDB writer sits behind a prefetch-1 queue consumer
+  * (cleaner/cleaner.py:248). The engine's multi-writer table is
+  * [[graft.ops.ManifestStore]]: lock-free first-write-wins upserts through
+  * an optimistic CAS publish, and crash-atomic rewrites.
   *
   * Scale: the anti join ships only the key column of the existing table
   * (Catalyst prunes to one column) and plans as `BroadcastHashJoin LeftAnti
-  * BuildRight`: the broadcast side is the EXISTING keys of the buckets the
-  * batch touches, and the batch streams past it — no full-table shuffle per
-  * upsert. An n-key batch touches 1 - (63/64)^n of 64 buckets: about 70% at
-  * a weekly 77 keys, where the upsert reads about 1.75x Gold's bytes per
-  * batch (medbench `gold_write.read_frac`, which also counts the batch's own
-  * source read).
+  * BuildRight`: the broadcast side is Gold's keys and the batch streams past
+  * it, so no upsert shuffles the table. Every Gold read is one directory
+  * listed on the driver with the key schema given: no job goes to file
+  * listing or to footer schema inference.
   */
 object GoldWriter {
 
@@ -64,302 +48,100 @@ object GoldWriter {
       nullKeys: Long,
       insertedRows: Long)
 
-  /** The partition column of the bucketed Gold layout. Derived from the KEY
-    * (not an attribute like crash_date), so a given key can only ever live in
-    * one partition directory — which is what makes pruning the conflict scan
-    * sound.
+  /** The partition column of the retired key-bucket layout. Gold no longer
+    * has it; the name stays only for readers that filter it out of Gold's
+    * columns (medbench's `Pipe.goldDigest` does).
     */
   val bucketCol = "__key_bucket"
-  private val bucketSchema = new StructType().add(bucketCol, IntegerType)
 
   /** Dedup the incoming batch (deterministic keep-first by full-row order),
     * skip keys already present, append the rest (reference:
-    * cleaner/duckdb_writer.py:141-207). Gold is laid out as parquet
-    * partitioned by `__key_bucket = pmod(xxhash64(key), buckets)`; each batch
-    * anti-joins only against the bucket directories its own keys hash to, so
-    * per-batch conflict-scan IO is `(touched buckets / buckets) * table`,
-    * independent of total table size for small batches.
+    * cleaner/duckdb_writer.py:141-207), then check the whole table.
     *
-    * Integrity (A13/A14) is likewise scoped to the touched buckets: a
-    * duplicate or null this batch could introduce necessarily lives in a
-    * touched bucket (same key -> same bucket; nulls never pass the insert
-    * filter). `totalRows` stays whole-table — a count(*) answered from
-    * parquet footer metadata, no column scan.
-    *
-    * Every Gold read is planned from bucket directories listed on the
-    * driver, with the key schema known: no Spark job goes to file listing
-    * (which a path-based parquet read runs as a job once a table spans more than
-    * 32 directories) or to footer schema inference, and the insert count
-    * comes from the integrity scan instead of a cached count. In medbench
-    * `incremental` (77-key weeks into a 19k-row, 64-bucket Gold on
-    * local[4]) an upsert runs 11 jobs and 32-35 tasks, where reading Gold
-    * through a path-based parquet read ran 18-20 jobs and 231-295 tasks.
+    * The append is staged in a hidden `_staging-<uuid>` directory under the
+    * table, which no reader lists. Its files' row counts are read from
+    * their parquet footers on the driver: they give the insert count with
+    * no job and no `Dataset.observe`, and only files that hold rows move
+    * into the table, so an upsert that inserts nothing (a replay) adds no
+    * file. One aggregation over Gold's key column then gives the total,
+    * duplicate-key and null-key counts (A13/A14).
     */
   def upsertBucketed(spark: SparkSession, batch: DataFrame, path: String,
-      key: String = "crash_record_id", buckets: Int = 64): IntegrityReport = {
+      key: String = "crash_record_id"): IntegrityReport = {
     val tiebreak = batch.columns.filter(_ != key).sorted.map(col).toSeq
-    val deduped = Transformer
-      .dedupKeepFirst(batch.where(col(key).isNotNull), key, tiebreak)
-      .withColumn(bucketCol, pmod(xxhash64(col(key)), lit(buckets.toLong)).cast("int"))
-      .cache()
-    val touched = deduped.select(bucketCol).distinct().collect().map(_.getInt(0)).toSeq
+    val deduped = Transformer.dedupKeepFirst(batch.where(col(key).isNotNull), key, tiebreak)
     // nullable even though the batch filtered nulls: the integrity scan
     // counts null keys on disk, and a non-nullable read schema would let
     // Catalyst fold that `isNull` to false
     val keyField = deduped.schema(key).copy(nullable = true)
-
-    val exists = tableExists(spark, path)
-    if (exists) requireLayout(spark, path)
-    val before =
-      if (exists) listBuckets(spark, path, Some(touched))
-      else Map.empty[Int, Array[FileStatus]]
+    val existed = flatFiles(spark, path).nonEmpty
     val toInsert =
-      if (exists) deduped.join(keyScan(spark, path, keyField, before), Seq(key), "left_anti")
+      if (existed) deduped.join(keyScan(spark, path, keyField), Seq(key), "left_anti")
       else deduped
 
-    // No cached plan over Gold is alive when the append commits, so the
-    // commit re-lists nothing. A batch of only null keys touches no bucket
-    // and writes nothing.
-    if (touched.nonEmpty)
-      toInsert.write.mode(SaveMode.Append).partitionBy(bucketCol).parquet(path)
-    deduped.unpersist()
-
-    // First batch whose keys are all null: nothing was ever written, so the
-    // report scans below would throw AnalysisException. Report an empty
-    // table instead.
-    val after = listBuckets(spark, path, None)
-    if (after.isEmpty) return IntegrityReport(0L, 0L, 0L, 0L)
-
-    // The insert count is read from disk with the integrity scan: the rows
-    // of the files this append committed, which are the files of touched
-    // buckets that the pre-write listing did not hold. Not Dataset.observe:
-    // it starts the session's ObservationManager, which cannot serialize,
-    // and then closures that capture the session fail (Scoring's logistic
-    // model summary holds one).
-    val old = before.values.flatten.map(_.getPath.getName).toSet
-    val added = touched.flatMap(after.getOrElse(_, Array.empty[FileStatus]))
-      .map(_.getPath.getName).filterNot(old).distinct
-    // one relation over the post-write listing serves both checks
-    val gold = keyScan(spark, path, keyField, after)
-    keyChecks(gold.where(col(bucketCol).isin(touched: _*)), key, added)
-      .copy(totalRows = gold.count())
-  }
-
-  /** The pruned conflict scan as [[upsertBucketed]] plans it, for a string
-    * key: key column of only the touched bucket directories, listed on the
-    * driver — untouched buckets are never listed or read (GoldWriterSpec
-    * pins this via the scan's numFiles metric).
-    */
-  private[graft] def existingKeysScan(spark: SparkSession, path: String,
-      key: String, touched: Seq[Int]): DataFrame =
-    keyScan(spark, path, StructField(key, StringType),
-      listBuckets(spark, path, Some(touched))).select(key)
-
-  /** `key` and `__key_bucket` of Gold, planned over an explicit listing
-    * with a known schema: no listing job and no footer schema-inference
-    * job, however many bucket directories the listing spans.
-    */
-  private def keyScan(spark: SparkSession, path: String, keyField: StructField,
-      files: Map[Int, Array[FileStatus]]): DataFrame =
-    spark.baseRelationToDataFrame(HadoopFsRelation(
-      new BucketFileIndex(new Path(path), files),
-      bucketSchema, new StructType(Array(keyField)), None,
-      new ParquetFileFormat(), Map.empty)(spark))
-
-  /** Data files per bucket directory, listed on the driver: the `only`
-    * buckets, or every `__key_bucket=N` directory. Hidden and `_`/`.`
-    * names are skipped as Spark's own file index skips them.
-    */
-  private def listBuckets(spark: SparkSession, path: String,
-      only: Option[Seq[Int]]): Map[Int, Array[FileStatus]] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def ls(p: Path): Array[FileStatus] =
-      try fs.listStatus(p) catch { case _: java.io.FileNotFoundException => Array.empty }
-    val prefix = s"$bucketCol="
-    val dirs = only match {
-      case Some(bs) => bs.map(b => b -> new Path(root, s"$prefix$b"))
-      case None => ls(root).toSeq.collect {
-        case s if s.isDirectory && s.getPath.getName.startsWith(prefix) =>
-          s.getPath.getName.stripPrefix(prefix).toInt -> s.getPath
-      }
-    }
-    dirs.flatMap { case (b, dir) =>
-      val data = ls(dir).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
-      }
-      if (data.isEmpty) None else Some(b -> data)
-    }.toMap
+    val staged = new Path(root, s"_staging-${java.util.UUID.randomUUID()}")
+    toInsert.write.parquet(staged.toString)
+    val inserted =
+      try fs.listStatus(staged).filter(isData).map { f =>
+        val rows = footer(spark, f).getBlocks.asScala.map(_.getRowCount).sum
+        if (rows > 0 && !fs.rename(f.getPath, new Path(root, f.getPath.getName)))
+          throw new java.io.IOException(s"could not move ${f.getPath} into $path")
+        rows
+      }.sum
+      finally fs.delete(staged, true)
+
+    // A first batch whose keys are all null writes nothing: report an
+    // empty table rather than reading an absent one.
+    if (!existed && inserted == 0L) IntegrityReport(0L, 0L, 0L, 0L)
+    else keyChecks(keyScan(spark, path, keyField), key).copy(insertedRows = inserted)
   }
 
-  /** A [[FileIndex]] over an explicit bucket listing, in the manner of
-    * [[graft.ops.ManifestRead.ManifestFileIndex]]; filters on
-    * `__key_bucket` prune whole buckets at planning time.
+  /** Gold's key column: the table directory listed on the driver (one
+    * path, so no listing job) with the key schema given (no inference job).
     */
-  private final class BucketFileIndex(root: Path, files: Map[Int, Array[FileStatus]])
-      extends FileIndex {
-    override def rootPaths: Seq[Path] = Seq(root)
-    override def partitionSchema: StructType = bucketSchema
-    override def inputFiles: Array[String] =
-      files.values.flatten.map(_.getPath.toString).toArray
-    override def refresh(): Unit = ()
-    override def sizeInBytes: Long = files.values.flatten.map(_.getLen).sum
-    override def listFiles(partitionFilters: Seq[Expression],
-        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-      val keep = partitionFilters.reduceOption(And).map(f => Predicate.createInterpreted(
-        f.transform { case _: AttributeReference => BoundReference(0, IntegerType, true) }))
-      files.toSeq.sortBy(_._1).collect {
-        case (b, fs) if keep.forall(_.eval(InternalRow(b))) =>
-          PartitionDirectory(InternalRow(b), fs)
-      }
-    }
+  private def keyScan(spark: SparkSession, path: String, keyField: StructField): DataFrame =
+    spark.read.schema(StructType(Seq(keyField))).parquet(path)
+
+  private def isData(s: FileStatus): Boolean = {
+    val n = s.getPath.getName
+    s.isFile && !n.startsWith("_") && !n.startsWith(".")
   }
 
-  /** Fail fast when the path holds a flat parquet table: a bucketed append
-    * onto it would silently break the pruning invariant (its keys live
-    * outside their bucket directories, so the pruned conflict scan would
-    * miss them — duplicate keys with no error). Layout is decided by the
-    * presence of the `__key_bucket=N` partition directories, a listing-only
-    * probe.
+  private def footer(spark: SparkSession, f: FileStatus): ParquetMetadata =
+    ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(f, spark.sparkContext.hadoopConfiguration),
+      ParquetMetadataConverter.NO_FILTER)
+
+  /** Gold's data files (none when the path does not exist). Fails fast on
+    * a table in the retired key-bucket layout: its keys live in
+    * `__key_bucket=N` directories that a flat conflict scan would not
+    * read, so a flat append onto it would admit duplicate keys.
     */
-  private def requireLayout(spark: SparkSession, path: String): Unit = {
+  private def flatFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.listStatus(p).exists(s => s.isDirectory && s.getPath.getName.startsWith(s"$bucketCol=")))
+    val all = try fs.listStatus(p).toSeq catch { case _: java.io.FileNotFoundException => Nil }
+    if (all.exists(s => s.isDirectory && s.getPath.getName.startsWith(s"$bucketCol=")))
       throw new IllegalStateException(
-        s"Gold table at $path has a flat layout; GoldWriter writes only the bucketed " +
-          "layout (__key_bucket=N partitions), and appending one onto the other " +
-          "breaks the bucket-pruned conflict scan and can admit duplicate keys.")
+        s"Gold table at $path holds $bucketCol=N directories, the retired key-bucket " +
+          "layout; GoldWriter writes one flat directory, and appending onto the " +
+          "bucketed layout would miss its keys and admit duplicates. Rewrite the " +
+          "table flat first.")
+    all.filter(isData)
   }
-
-  /** The advisory writer mutex behind [[lockedUpsertBucketed]]: acquire via
-    * exclusive-create of `<path parent>/<name>.lock`, run the body, release
-    * in finally. Exclusive-create is atomic on HDFS and on `file://` here
-    * (local paths go through `java.nio` `CREATE_NEW`, an O_EXCL open —
-    * Hadoop's own RawLocalFileSystem implements `create(overwrite=false)`
-    * as a NON-atomic exists-then-create, so it is only the fallback for
-    * other schemes; on S3-like stores with no atomic create this lock is
-    * advisory-best-effort and the idempotent-upsert argument below is the
-    * real safety net). A lock older than `staleMs` is presumed abandoned by
-    * a crashed writer and is broken (rename-aside + retry) — safe because
-    * upserts are idempotent first-write-wins appends: the worst a
-    * broken-then-raced stale writer can do is append rows a replay would
-    * have appended anyway... except duplicates, which is exactly why
-    * `staleMs` should exceed any plausible upsert duration (default 10 min).
-    * Each acquisition writes a per-acquisition UUID into the lock file and
-    * the finally-release deletes ONLY if the content still matches: a
-    * healthy writer that overran `staleMs` and had its lock broken must not
-    * delete the contender's FRESH lock (which would admit a third writer).
-    * Contention waits with bounded sleep up to `waitMs` — defaulted to the
-    * SAME 10 minutes as `staleMs`, because a healthy competing upsert on a
-    * large table legitimately runs for minutes — then fails loudly (a
-    * genuinely stuck queue must page someone, not silently drop batches).
-    */
-  def withTableLock[T](spark: SparkSession, path: String,
-      staleMs: Long = 600000L, waitMs: Long = 600000L)(body: => T): T = {
-    val table = new org.apache.hadoop.fs.Path(path)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lock = new org.apache.hadoop.fs.Path(
-      table.getParent, s".${table.getName}._graft_gold.lock")
-    val token = java.util.UUID.randomUUID().toString
-    val tokenBytes = token.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val isLocal = {
-      val s = lock.toUri.getScheme
-      s == null || s == "file"
-    }
-    // java.nio CREATE_NEW (unlike fs.create) does NOT create missing parent
-    // directories, and its NoSuchFileException would be indistinguishable
-    // from "lock held" below — the very first upsert into a fresh table
-    // root would spin for the full waitMs. Make the parent exist up front.
-    if (isLocal) {
-      val parent = java.nio.file.Paths.get(lock.toUri.getPath).getParent
-      if (parent != null)
-        try java.nio.file.Files.createDirectories(parent)
-        catch { case _: java.io.IOException => () }
-    }
-    def tryCreate(): Boolean =
-      if (isLocal) {
-        // O_EXCL create — atomic on a local filesystem, unlike
-        // RawLocalFileSystem's exists-then-create
-        val p = java.nio.file.Paths.get(lock.toUri.getPath)
-        try {
-          java.nio.file.Files.write(p, tokenBytes,
-            java.nio.file.StandardOpenOption.CREATE_NEW,
-            java.nio.file.StandardOpenOption.WRITE)
-          true
-        } catch { case _: java.io.IOException => false }
-      } else {
-        try {
-          val out = fs.create(lock, false)
-          out.write(tokenBytes); out.close()
-          true
-        } catch { case _: java.io.IOException => false }
-      }
-    def lockContent(): Option[String] =
-      try {
-        val in = fs.open(lock)
-        try {
-          val buf = new Array[Byte](64)
-          var n = 0
-          var r = in.read(buf, 0, buf.length)
-          while (r > 0 && n < buf.length) { n += r; r = in.read(buf, n, buf.length - n) }
-          Some(new String(buf, 0, n, java.nio.charset.StandardCharsets.UTF_8))
-        } finally in.close()
-      } catch { case _: java.io.IOException => None }
-    val deadline = System.currentTimeMillis() + waitMs
-    var held = false
-    while (!held) {
-      if (tryCreate()) held = true
-      else {
-        val age = try System.currentTimeMillis() -
-          fs.getFileStatus(lock).getModificationTime
-        catch { case _: java.io.FileNotFoundException => 0L } // racer released; retry
-        if (age > staleMs) {
-          // break via atomic RENAME, not delete: two contenders that both
-          // observed the stale lock would otherwise both delete — and the
-          // slower delete could remove the faster breaker's FRESH lock,
-          // admitting two concurrent writers. Rename succeeds for exactly
-          // one breaker (the loser's rename fails and it just re-loops).
-          val tomb = new org.apache.hadoop.fs.Path(lock.getParent,
-            s"${lock.getName}.stale.${java.util.UUID.randomUUID()}")
-          try { if (fs.rename(lock, tomb)) fs.delete(tomb, false) }
-          catch { case _: java.io.IOException => () }
-        }
-        else if (System.currentTimeMillis() > deadline)
-          throw new IllegalStateException(
-            s"GoldWriter: could not acquire writer lock $lock within ${waitMs} ms " +
-              "— another upsert holds it (or raise waitMs / check for a stuck writer)")
-        else Thread.sleep(50L)
-      }
-    }
-    try body finally {
-      // release only if we still own the lock: if a contender broke it as
-      // stale while the body overran, the current lock file is THEIRS
-      if (lockContent().contains(token))
-        try fs.delete(lock, false) catch { case _: java.io.IOException => () }
-    }
-  }
-
-  /** [[upsertBucketed]] serialized through [[withTableLock]] — the
-    * multi-writer entry: concurrent cooperating writers upserting
-    * overlapping keys get first-write-wins with zero duplicate keys
-    * (GoldWriterSpec pins the contended interleaving).
-    */
-  def lockedUpsertBucketed(spark: SparkSession, batch: DataFrame, path: String,
-      key: String = "crash_record_id", buckets: Int = 64): IntegrityReport =
-    withTableLock(spark, path)(upsertBucketed(spark, batch, path, key, buckets))
 
   /** Filesystem-agnostic existence probe (a java.io.File check would always
     * say "missing" on hdfs:// or s3a:// paths and silently break the
-    * conflict skip).
+    * conflict skip). A table in the retired key-bucket layout exists too,
+    * so [[integrityCheck]] refuses it instead of reporting it empty.
     */
   def tableExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.listStatus(p).exists { s =>
       s.getPath.getName.endsWith(".parquet") ||
-        // bucketed layout: data lives under __key_bucket=N partition dirs
         (s.isDirectory && s.getPath.getName.startsWith(s"$bucketCol="))
     }
   }
@@ -367,38 +149,30 @@ object GoldWriter {
   /** Post-write checks mirrored from the reference: duplicate-PK grouping and
     * null-PK count (reference: cleaner/duckdb_writer.py:228-288 A13/A14)
     * over the whole table, with `inserted` passed through. Planned like
-    * [[upsertBucketed]]'s reads: every bucket directory listed on the driver
-    * and the key's type read from one file footer there, so no job lists
-    * files or infers a schema, and one aggregation over the key column
-    * answers all three counts.
+    * [[upsertBucketed]]'s reads, with the key's type read from one file
+    * footer on the driver, so no job lists files or infers a schema, and
+    * one aggregation over the key column answers all three counts.
     */
   def integrityCheck(spark: SparkSession, path: String, key: String,
       inserted: Long): IntegrityReport = {
-    requireLayout(spark, path)
-    val files = listBuckets(spark, path, None)
+    val files = flatFiles(spark, path)
     if (files.isEmpty) return IntegrityReport(0L, 0L, 0L, inserted)
-    val footer = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromStatus(files.head._2.head, spark.sparkContext.hadoopConfiguration),
-      ParquetMetadataConverter.SKIP_ROW_GROUPS)
     val keyField = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-      .convert(footer.getFileMetaData.getSchema)(key).copy(nullable = true)
-    keyChecks(keyScan(spark, path, keyField, files), key, Nil).copy(insertedRows = inserted)
+      .convert(footer(spark, files.head).getFileMetaData.getSchema)(key).copy(nullable = true)
+    keyChecks(keyScan(spark, path, keyField), key).copy(insertedRows = inserted)
   }
 
-  /** Rows, duplicated keys, null-key rows and rows of the `added` files among
-    * `rows` (a [[keyScan]]), in one aggregation over the key column.
+  /** Rows, duplicated keys and null-key rows of `rows` (a [[keyScan]]), in
+    * one aggregation over the key column; `insertedRows` is left 0.
     */
-  private def keyChecks(rows: DataFrame, key: String, added: Seq[String]): IntegrityReport = {
-    val r = rows.groupBy(key)
-      .agg(count(lit(1)).as("cnt"),
-        count(when(col("_metadata.file_name").isin(added: _*), 1)).as("added"))
+  private def keyChecks(rows: DataFrame, key: String): IntegrityReport = {
+    val r = rows.groupBy(key).agg(count(lit(1)).as("cnt"))
       .agg(
         sum(col("cnt")),
         sum(when(col("cnt") > 1, 1).otherwise(0)),
-        sum(when(col(key).isNull, col("cnt")).otherwise(0L)),
-        sum(col("added")))
+        sum(when(col(key).isNull, col("cnt")).otherwise(0L)))
       .collect()(0)
     def orZero(i: Int) = Option(r.get(i)).map(_.toString.toLong).getOrElse(0L)
-    IntegrityReport(orZero(0), orZero(1), orZero(2), orZero(3))
+    IntegrityReport(orZero(0), orZero(1), orZero(2), 0L)
   }
 }

@@ -29,7 +29,7 @@ import ManifestStore.{Bound, Snapshot}
   * Pruning is CONSERVATIVE by construction ([[ManifestStore.prunedEntries]]
   * is the rule): only simple comparisons against literals
   * (`= > >= < <= IN`, `IS [NOT] NULL` and conjunctions) on stats-bearing
-  * columns tighten a [[Bound]]; anything else contributes none. Because
+  * columns each yield a [[Bound]]; anything else contributes none. Because
   * the listing only ever SHRINKS the file set for predicates Spark still
   * re-evaluates row-by-row (they remain dataFilters), a missed bound costs
   * I/O, never correctness.
@@ -174,12 +174,9 @@ object ManifestRead {
     override def sizeInBytes: Long = snap.entries.map(_.files.map(_._2).sum).sum
 
     override def listFiles(partitionFilters: Seq[Expression],
-        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-      val bounds = scala.collection.mutable.Map.empty[String, Bound]
-      dataFilters.foreach(collect(_, bounds))
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
       Seq(PartitionDirectory(InternalRow.empty,
-        ManifestStore.prunedEntries(snap, bounds.toMap).flatMap(statusesOf).toArray))
-    }
+        ManifestStore.prunedEntries(snap, dataFilters.flatMap(bounds)).flatMap(statusesOf).toArray))
 
     /** Catalyst literal → the external value space [[ManifestStore.boundKey]]
       * accepts. Dates/timestamps ride as their internal integers (boundKey
@@ -191,57 +188,47 @@ object ManifestRead {
       case other => other
     }
 
-    private def tighten(bounds: scala.collection.mutable.Map[String, Bound],
-        col: String, lo: Option[Any] = None, hi: Option[Any] = None,
-        in: Option[Seq[Any]] = None, isNull: Boolean = false,
-        notNull: Boolean = false): Unit = {
-      // later conjuncts only ever NARROW: fill an unset end/list, keep the
-      // existing one otherwise (comparing typed ends here would need the
-      // stats type; one bound per end is enough for the common shapes)
-      val b = bounds.getOrElse(col, Bound())
-      bounds(col) = Bound(b.lo.orElse(lo), b.hi.orElse(hi), b.in.orElse(in),
-        b.isNull || isNull, b.notNull || notNull)
-    }
-
-    private def collect(e: Expression,
-        bounds: scala.collection.mutable.Map[String, Bound]): Unit = e match {
-      case And(l, r) => collect(l, bounds); collect(r, bounds)
-      case IsNull(a: Attribute) => tighten(bounds, a.name, isNull = true)
-      case IsNotNull(a: Attribute) => tighten(bounds, a.name, notNull = true)
+    /** One `(column, Bound)` per conjunct of `e` that bounds a column;
+      * [[ManifestStore.prunedEntries]] requires every one of them to hold,
+      * so two bounds on one end both narrow the scan.
+      */
+    private def bounds(e: Expression): Seq[(String, Bound)] = e match {
+      case And(l, r) => bounds(l) ++ bounds(r)
+      case IsNull(a: Attribute) => Seq(a.name -> Bound(isNull = true))
+      case IsNotNull(a: Attribute) => Seq(a.name -> Bound(notNull = true))
       case EqualTo(a: Attribute, Literal(v, _)) if v != null =>
-        tighten(bounds, a.name, lo = Some(ext(v)), hi = Some(ext(v)))
+        Seq(a.name -> Bound(lo = Some(ext(v)), hi = Some(ext(v))))
       case EqualTo(Literal(v, _), a: Attribute) if v != null =>
-        tighten(bounds, a.name, lo = Some(ext(v)), hi = Some(ext(v)))
+        Seq(a.name -> Bound(lo = Some(ext(v)), hi = Some(ext(v))))
       case GreaterThan(a: Attribute, Literal(v, _)) if v != null =>
-        tighten(bounds, a.name, lo = Some(ext(v)))
+        Seq(a.name -> Bound(lo = Some(ext(v))))
       case GreaterThanOrEqual(a: Attribute, Literal(v, _)) if v != null =>
-        tighten(bounds, a.name, lo = Some(ext(v)))
+        Seq(a.name -> Bound(lo = Some(ext(v))))
       case LessThan(a: Attribute, Literal(v, _)) if v != null =>
-        tighten(bounds, a.name, hi = Some(ext(v)))
+        Seq(a.name -> Bound(hi = Some(ext(v))))
       case LessThanOrEqual(a: Attribute, Literal(v, _)) if v != null =>
-        tighten(bounds, a.name, hi = Some(ext(v)))
+        Seq(a.name -> Bound(hi = Some(ext(v))))
       case GreaterThan(Literal(v, _), a: Attribute) if v != null =>
-        tighten(bounds, a.name, hi = Some(ext(v)))
+        Seq(a.name -> Bound(hi = Some(ext(v))))
       case GreaterThanOrEqual(Literal(v, _), a: Attribute) if v != null =>
-        tighten(bounds, a.name, hi = Some(ext(v)))
+        Seq(a.name -> Bound(hi = Some(ext(v))))
       case LessThan(Literal(v, _), a: Attribute) if v != null =>
-        tighten(bounds, a.name, lo = Some(ext(v)))
+        Seq(a.name -> Bound(lo = Some(ext(v))))
       case LessThanOrEqual(Literal(v, _), a: Attribute) if v != null =>
-        tighten(bounds, a.name, lo = Some(ext(v)))
+        Seq(a.name -> Bound(lo = Some(ext(v))))
       case In(a: Attribute, vs) if vs.nonEmpty && vs.forall {
         case Literal(v, _) => v != null
         case _ => false
       } =>
         // point-set pruning: keep a segment iff AT LEAST ONE value can sit
         // in its [min,max] — evaluated per segment in the stats key space
-        tighten(bounds, a.name,
-          in = Some(vs.collect { case Literal(v, _) => ext(v) }))
+        Seq(a.name -> Bound(in = Some(vs.collect { case Literal(v, _) => ext(v) })))
       // the optimizer rewrites an IN of more than
       // spark.sql.optimizer.inSetConversionThreshold literals into InSet:
       // the same point set, so the same rule
       case InSet(a: Attribute, hset) if hset.nonEmpty && !hset.contains(null) =>
-        tighten(bounds, a.name, in = Some(hset.toSeq.map(ext)))
-      case _ => () // no bound — the row-level filter still applies
+        Seq(a.name -> Bound(in = Some(hset.toSeq.map(ext))))
+      case _ => Nil // no bound — the row-level filter still applies
     }
   }
 }

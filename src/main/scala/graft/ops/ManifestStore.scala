@@ -1,16 +1,21 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Atomic-commit parquet table: write-new-files, then atomically publish a
   * MANIFEST listing the table's live segments; readers resolve every scan
-  * through the latest manifest. ONE protocol covers the crash windows that
-  * [[graft.gold.GoldWriter]]'s check-then-append and its advisory writer
-  * lock each defend on their own (the mini table-format discipline of
+  * through the latest manifest. ONE protocol covers the crash and
+  * concurrent-writer windows that [[graft.gold.GoldWriter]]'s single-writer
+  * check-then-append leaves open (the mini table-format discipline of
   * Delta/Iceberg commit logs, re-derived for this engine's needs):
   *
   *  - **Crash atomicity**: data files land under fresh UUID segment
@@ -72,8 +77,9 @@ import org.apache.spark.sql.types._
   * `maxSegments = 64` advises compaction ~150× below that bound. If a
   * deployment needs 10⁵+ live segments, chunk at the
   * `readManifest`/`tryPublish` seam (one header version bump). The
-  * commit path adds zero Spark jobs beyond the data write (stats ride the
-  * write itself, see [[statsAggs]]); [[upsert]]'s conflict scan reads only
+  * commit path adds no Spark job beyond the data write, except one
+  * aggregate when stats columns are declared (see [[statsAggs]]);
+  * [[upsert]]'s conflict scan reads only
   * the key column of the manifest-resolved files (Catalyst prunes).
   */
 object ManifestStore {
@@ -359,7 +365,7 @@ object ManifestStore {
         * create-if-absent. Hadoop's RawLocalFileSystem implements
         * `create(overwrite = false)` as a non-atomic exists-then-create,
         * so on `file://` the claim goes through java.nio CREATE_NEW
-        * (O_EXCL) — the GoldWriter lock idiom; other schemes use the
+        * (O_EXCL); other schemes use the
         * filesystem's own exclusive create.
         */
       private def claimExclusive(fs: FileSystem, claim: Path, tmpName: String): Boolean = {
@@ -500,49 +506,39 @@ object ManifestStore {
       s"ManifestStore statsCols: ${f.name} has non-orderable type ${t.simpleString}")
   }
 
-  /** Min/max/null-count/row-count aggregate columns for the segment-stats
-    * observation (r13): the same per-column aggregates [[segmentStatsOf]]
-    * decodes, attached to the WRITE itself via `Dataset.observe` — the
-    * write job's tasks fold them as rows stream to parquet, so a
-    * stats-bearing commit costs ONE Spark job instead of two (the old
-    * post-write `spark.read.parquet(segPath).agg(...)` re-read every
-    * segment it had just written; across the serial commit protocol that
-    * was a whole job per commit). Values are identical by construction:
-    * the identical aggregate expressions over the identical rows, computed
-    * before the parquet round-trip instead of after it (min/max/count are
-    * deterministic and insensitive to partitioning). The row and null
-    * counts assume no speculative task attempts: GraftSession pins
-    * spark.speculation off.
+  /** Min/max/non-null-count aggregate columns over the declared stats
+    * columns, which [[segmentStatsOf]] decodes. Run over the staged
+    * segment before publish, so the recorded stats are those of the rows
+    * on disk.
     */
-  private def statsAggs(schema: StructType, statsCols: Seq[String]): Seq[Column] = {
-    val fields = statsCols.map(c => schema.fields.find(_.name == c).getOrElse(
-      throw new IllegalArgumentException(s"statsCols: no column $c in segment schema")))
-    val typed = fields.map(statsTyp)
-    count(lit(1)).as("rows") +:
-      typed.zipWithIndex.flatMap { case ((_, c), i) =>
-        Seq(min(c).cast(StringType).as(s"mn_$i"), max(c).cast(StringType).as(s"mx_$i"),
-          count(col(statsCols(i))).as(s"nn_$i")) }
-  }
+  private def statsAggs(schema: StructType, statsCols: Seq[String]): Seq[Column] =
+    statsCols.zipWithIndex.flatMap { case (c, i) =>
+      val f = schema.fields.find(_.name == c).getOrElse(
+        throw new IllegalArgumentException(s"statsCols: no column $c in segment schema"))
+      val v = statsTyp(f)._2
+      Seq(min(v).cast(StringType).as(s"mn_$i"), max(v).cast(StringType).as(s"mx_$i"),
+        count(col(c)).as(s"nn_$i"))
+    }
 
-  /** Decode an observed [[statsAggs]] metric map into the manifest's
-    * per-column stats map + the segment row count. `statsCols` empty keeps
-    * the historical contract: no stats, `rows = None` (the observation
-    * still carried the row count for the emptiness check, but the manifest
-    * entry stays byte-identical to the pre-observation format).
+  /** Decode one [[statsAggs]] row into the manifest's per-column stats map,
+    * given the segment's row count.
     */
-  private def segmentStatsOf(metrics: Map[String, Any],
-      statsCols: Seq[String], schema: StructType): (Map[String, ColStats], Option[Long]) = {
-    if (statsCols.isEmpty) return (Map.empty, None)
-    val typed = statsCols.map(c => statsTyp(schema.fields.find(_.name == c).get))
-    val rows = metrics("rows").asInstanceOf[Long]
-    val stats = statsCols.zipWithIndex.map { case (name, i) =>
-      name -> ColStats(typed(i)._1,
-        Option(metrics(s"mn_$i")).map(_.toString),
-        Option(metrics(s"mx_$i")).map(_.toString),
-        Some(rows - metrics(s"nn_$i").asInstanceOf[Long]))
+  private def segmentStatsOf(r: Row, rows: Long,
+      statsCols: Seq[String], schema: StructType): Map[String, ColStats] =
+    statsCols.zipWithIndex.map { case (name, i) =>
+      name -> ColStats(statsTyp(schema.fields.find(_.name == name).get)._1,
+        Option(r.getString(3 * i)), Option(r.getString(3 * i + 1)),
+        Some(rows - r.getLong(3 * i + 2)))
     }.toMap
-    (stats, Some(rows))
-  }
+
+  /** Rows of parquet files, summed from their footers on the driver: no
+    * job reads data.
+    */
+  private def footerRows(fs: FileSystem, files: Seq[Path]): Long =
+    files.map { p =>
+      ParquetFooterReader.readFooter(HadoopInputFile.fromPath(p, fs.getConf),
+        ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+    }.sum
 
   /** The segment's data files (name + length, relative to the segment
     * dir), listed ONCE at commit time while the committer's metadata is
@@ -608,38 +604,31 @@ object ManifestStore {
     // observed NDV; parquet-mr 1.14+) and cap the worst case at
     // MaxBloomBytes = 128 KiB (~100k distinct keys at the default fpp —
     // beyond that the filter degrades gracefully, it never lies).
-    // Stats fold into the write job itself (r13, guide §1.2/§5 job-count):
-    // observe() attaches the statsAggs aggregates to the write's own tasks,
-    // so the old dedicated post-write stats job (a full re-read of the
-    // just-written segment, one extra Spark job per commit across the whole
-    // serial protocol) disappears. The observed row count also replaces the
-    // read-back emptiness probe for statless commits. The counts assume
-    // spark.speculation off (GraftSession pins it): observed metrics ride
-    // accumulators, which a duplicate task attempt can inflate.
-    val obs = org.apache.spark.sql.Observation(s"segstats-$seg")
-    val aggs = statsAggs(pdf.schema, pStats)
-    val observed = pdf.observe(obs, aggs.head, aggs.tail: _*)
-    val withBlooms = pStats.foldLeft(observed.write) { (w, c) =>
+    val withBlooms = pStats.foldLeft(pdf.write) { (w, c) =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true")
     }.option("parquet.bloom.filter.adaptive.enabled", "true")
       .option("parquet.bloom.filter.max.bytes", MaxBloomBytes.toString)
     withBlooms.parquet(segPath)
-    val metrics = obs.get
-    // Emptiness is probed AFTER the write (r12): the old `df.isEmpty`
-    // pre-check was a second full execution of the commit's input per
-    // segment (take(1) on an aggregate materializes every shuffle) — the
-    // common non-empty commit paid its pipeline twice to guard the rare
-    // empty one. An empty write leaves no schema-bearing part files (or
-    // only empty footers); tear the staged dir down and return None
-    // exactly as before — the observed count now answers it for free.
+    // Emptiness is probed AFTER the write (r12): a `df.isEmpty` pre-check
+    // would execute the commit's input a second time. The row count comes
+    // from the footers of the files just listed, on the driver. An empty
+    // write leaves no part files or only empty ones; tear the staged dir
+    // down and return None.
     val fs = fsOf(spark, root)
     val files = listSegmentFiles(fs, new Path(root, seg))
-    if (files.isEmpty || metrics("rows").asInstanceOf[Long] == 0L) {
+    val rows = footerRows(fs, files.map(f => new Path(segPath, f._1)))
+    if (rows == 0L) {
       fs.delete(new Path(root, seg), true)
       return None
     }
-    val (stats, rows) = segmentStatsOf(metrics, pStats, pdf.schema)
-    Some(SegmentEntry(seg, stats, 0L, files, rows))
+    // Declared stats: one aggregate over the staged segment, before publish.
+    // Not Dataset.observe on the write: that starts the session's
+    // ObservationManager, which cannot serialize, and a later closure that
+    // captures the session (a logistic model's training summary) then fails.
+    if (pStats.isEmpty) return Some(SegmentEntry(seg, Map.empty, 0L, files, None))
+    val aggs = statsAggs(pdf.schema, pStats)
+    val r = spark.read.schema(pdf.schema).parquet(segPath).agg(aggs.head, aggs.tail: _*).head()
+    Some(SegmentEntry(seg, segmentStatsOf(r, rows, pStats, pdf.schema), 0L, files, Some(rows)))
   }
 
   /** Fail fast when a commit's columns diverge from the table's: a read
@@ -868,8 +857,8 @@ object ManifestStore {
     case _ => throw new IllegalStateException(s"incomparable stats keys $a / $b")
   }
 
-  /** One column's constraint for [[prunedEntries]], conjunction-tightened
-    * by [[ManifestRead]]'s planner: an Option-ended interval, an optional
+  /** One column's constraint for [[prunedEntries]], one per conjunct of
+    * [[ManifestRead]]'s pushed filters: an Option-ended interval, an optional
     * IN-list value set (keep a segment iff at least one value can sit in
     * its range), and the null-shape probes `IS NULL` / `IS NOT NULL`.
     * Values are in the external space [[boundKey]] accepts.
@@ -880,14 +869,16 @@ object ManifestStore {
 
   /** THE stats-pruning rule: the segments whose recorded stats can hold a
     * row satisfying every `bounds` constraint, keyed by PHYSICAL column
-    * name (what the stats are keyed on). Conservative by construction: a
+    * name (what the stats are keyed on). A column may carry several
+    * constraints, one per conjunct; each must hold, so the tightest end
+    * decides without the planner comparing typed values. Conservative by construction: a
     * segment without stats on a bounded column is kept, and so is one
     * whose bound cannot be converted to the stats type; one whose recorded
     * `[min,max]` misses the interval or every IN value, whose column is
     * entirely NULL under a value or `IS NOT NULL` constraint, or whose
     * null count is zero under `IS NULL`, is skipped.
     */
-  def prunedEntries(snap: Snapshot, bounds: Map[String, Bound]): Seq[SegmentEntry] =
+  def prunedEntries(snap: Snapshot, bounds: Iterable[(String, Bound)]): Seq[SegmentEntry] =
     snap.entries.filter { e =>
       bounds.forall { case (c, b) =>
         e.stats.get(c).forall { st =>

@@ -121,7 +121,7 @@ class DashboardSpec extends SparkSpec {
 
   test("describePath reports bucketed partition dirs and flat roots without reading data") {
     val base = tmpDir("descpath")
-    // bucketed layout (the Gold writer's scale layout)
+    // a partitioned layout, one directory per value
     val bucketed = s"$base/bucketed"
     (1 to 100).map(i => (i.toLong, i % 4)).toDF("k", "__key_bucket")
       .write.partitionBy("__key_bucket").parquet(bucketed)

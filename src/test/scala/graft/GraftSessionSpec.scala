@@ -116,6 +116,16 @@ class GraftSessionSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString(", "))
   }
 
+  test("src/main calls no Dataset.observe") {
+    // observe starts the session's ObservationManager, which cannot
+    // serialize; a later closure that captures the session (a logistic
+    // model's training summary does) then fails with Task not serializable
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val offenders = scalaSources(root).collect { case (f, src) if src.contains(".observe(") => f }
+    assert(offenders.isEmpty, offenders.toSeq.sorted.mkString(", "))
+  }
+
   test("every src/main module but the entry points is named by another src/main or medbench source") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")

@@ -587,6 +587,23 @@ class ManifestStoreSpec extends SparkSpec {
     assert(snap.segments.size == 1)
   }
 
+  test("two bounds on one end of a column: the tighter one prunes, in either order") {
+    val path = tmpDir("mstoreEnds") + "/t"
+    // four one-file segments: [0,10], [100,110], [200,210], [300,310]
+    Seq(0L, 100L, 200L, 300L).foreach(lo => ManifestStore.append(spark,
+      Seq(lo, lo + 10L).toDF("k").coalesce(1), path, statsCols = Seq("k")))
+    val t = ManifestStore.read(spark, path)
+    assert(manifestFilesScanned(t) == 4L)
+    for (q <- Seq(t.where(col("k") > 5L && col("k") > 250L),
+        t.where(col("k") > 250L && col("k") > 5L))) {
+      assert(q.as[Long].collect().sorted.toSeq == Seq(300L, 310L))
+      assert(manifestFilesScanned(q) == 1L, q.queryExecution.optimizedPlan.toString)
+    }
+    val hi = t.where(col("k") < 305L && col("k") < 105L)
+    assert(hi.as[Long].collect().sorted.toSeq == Seq(0L, 10L, 100L))
+    assert(manifestFilesScanned(hi) == 2L)
+  }
+
   test("manifest stats: readWhere prunes non-overlapping segments and matches the full-scan filter") {
     val path = tmpDir("mstore9") + "/t"
     // three segments with disjoint year ranges + a string lane + a date col

@@ -197,14 +197,14 @@ class PipelineSpec extends SparkSpec {
     info(s"jobs per layer: $byLayer")
     // ingest: Bronze write, 2 per enrich (id broadcast, write), watermark 2;
     // silver: one exchange per entity, the CSV write, the count 2;
-    // gold_clean: the one-pass medians; gold_write: the bucketed upsert
+    // gold_clean: the one-pass medians; gold_write: the flat upsert
     val budget = Map("pipeline:ingest" -> 7, "pipeline:silver" -> 6,
-      "pipeline:gold_clean" -> 2, "pipeline:gold_write" -> 11)
+      "pipeline:gold_clean" -> 2, "pipeline:gold_write" -> 6)
     assert(byLayer.keySet.subsetOf(budget.keySet), s"unlabelled or unknown jobs: $byLayer")
     budget.foreach { case (layer, max) =>
       assert(byLayer.getOrElse(layer, 0) <= max, s"$layer ran ${byLayer(layer)} jobs: $byLayer")
     }
-    assert(jobs.size <= 26, s"${jobs.size} jobs: $byLayer")
+    assert(jobs.size <= 21, s"${jobs.size} jobs: $byLayer")
   }
 
   test("an op that lands nothing reports Gold as it stands, with no listing job, and changes nothing") {
@@ -212,11 +212,9 @@ class PipelineSpec extends SparkSpec {
     val base = tmpDir("empty-op")
     (0 to 1).foreach(w => assert(streamWeek(data, base, w).report.insertedRows == 60))
     val gold = new java.io.File(s"$base/gold")
-    def files = gold.listFiles().toSeq.flatMap(d => Option(d.listFiles()).toSeq.flatten.map(_.getPath)).sorted
-    val buckets = gold.list().count(_.startsWith(s"${graft.gold.GoldWriter.bucketCol}="))
-    // more bucket directories than Spark's parallel-discovery threshold, so
-    // a plain spark.read.parquet of Gold would start a listing job
-    assert(buckets > 32, s"Gold spans $buckets bucket directories")
+    // Gold is one flat directory of parquet files
+    def files = gold.listFiles().toSeq.map(_.getPath).sorted
+    assert(gold.listFiles().forall(_.isFile) && files.exists(_.endsWith(".parquet")), files.toString)
     val (goldBefore, wmBefore) = (files, graft.ingest.Ingest.loadWatermark(s"$base/watermarks/last.txt"))
 
     // week 1 again, under a new run id: the watermark filters every row out
@@ -306,8 +304,7 @@ class PipelineSpec extends SparkSpec {
     val compiled = GraftSession.codegenClasses - before
     info(s"classes compiled: $compiled")
     // 10 when medians and run timestamps were literals; stages that still
-    // inline per-batch literals (the batch predicate, the upsert's touched
-    // buckets) account for the rest
+    // inline per-batch literals (the batch predicate) account for the rest
     assert(compiled <= 5, s"a warm op over a new week compiled $compiled classes")
   }
 
@@ -357,7 +354,7 @@ class PipelineSpec extends SparkSpec {
     def silver(base: String) = spark.read.option("header", "true").csv(s"$base/silver/corr=r1")
     def gold(base: String) = {
       val g = spark.read.parquet(s"$base/gold")
-        .drop("corr_id", "inserted_at", "updated_at", graft.gold.GoldWriter.bucketCol)
+        .drop("corr_id", "inserted_at", "updated_at")
       g.select(g.columns.sorted.map(col).toSeq: _*)
     }
     (silver(a), silver(b), gold(a), gold(b))

@@ -89,4 +89,22 @@ class ScoringSpec extends SparkSpec {
     assert(h.map(_.getLong(1)).sum == 200)
     assert(h.forall(r => r.getLong(0) >= 0 && r.getLong(0) <= 19))
   }
+
+  test("a ManifestStore append earlier in the session leaves training and the histogram working") {
+    // a Dataset.observe on the write would start the session's
+    // ObservationManager, which cannot serialize; the logistic model's
+    // training summary captures the session, so the histogram's closure
+    // would then fail to serialize
+    // read from parquet: over a local relation the optimizer evaluates
+    // the scoring projection on the driver and no closure is serialized
+    val dir = tmpDir("scoreGold") + "/gold"
+    gold.write.parquet(dir)
+    val s = spark.newSession()
+    val g = s.read.parquet(dir)
+    graft.ops.ManifestStore.append(s, g.select("crash_record_id", "crash_hour"),
+      tmpDir("scoreAppend") + "/t", statsCols = Seq("crash_hour"))
+    val model = Scoring.train(g)
+    val h = Scoring.probabilityHistogram(Scoring.score(model, g)).collect()
+    assert(h.map(_.getLong(1)).sum == 200)
+  }
 }
